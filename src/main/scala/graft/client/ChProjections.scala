@@ -1,5 +1,7 @@
 package graft.client
 
+import graft.sql.ChLex
+
 /** ClickHouse table PROJECTIONs — pre-aggregated alternates stored with
   * each part and used transparently by matching reads (server surface:
   * `ALTER TABLE ... ADD/MATERIALIZE/DROP PROJECTION`; reads use them
@@ -274,31 +276,17 @@ object ChProjections {
       val colKey: Map[String, Int] = d.keys.zipWithIndex
         .filter(_._1.matches("[A-Za-z_][A-Za-z0-9_]*")).toMap
       val out = new StringBuilder
-      var i = 0
-      var inSq = false
-      while (i < body.length) {
-        val c = body.charAt(i)
-        if (inSq) {
-          out.append(c)
-          if (c == '\\' && i + 1 < body.length) { out.append(body.charAt(i + 1)); i += 1 }
-          else if (c == '\'') inSq = false
-          i += 1
-        } else if (c == '\'') { inSq = true; out.append(c); i += 1 }
-        else if (c == '`') {
-          val e = body.indexOf('`', i + 1)
-          if (e < 0) return None
-          val ident = body.substring(i + 1, e)
-          colKey.get(ident) match {
+      val lx = new ChLex(body)
+      while (lx.next()) lx.kind match {
+        case ChLex.Ident =>
+          if (!lx.closed) return None
+          colKey.get(lx.name) match {
             case Some(ki) => out.append(s"k$ki")
             case None => return None
           }
-          i = e + 1
-        } else if (c.isLetter || c == '_') {
-          var e = i
-          while (e < body.length &&
-            (body.charAt(e).isLetterOrDigit || body.charAt(e) == '_')) e += 1
-          val word = body.substring(i, e)
-          var f = e
+        case ChLex.Word if !lx.char.isDigit =>
+          val word = lx.token
+          var f = lx.end
           while (f < body.length && body.charAt(f).isWhitespace) f += 1
           val isFn = f < body.length && body.charAt(f) == '('
           if (isFn || WhereKeywords.contains(
@@ -307,8 +295,7 @@ object ChProjections {
             case Some(ki) => out.append(s"k$ki")
             case None => return None
           }
-          i = e
-        } else { out.append(c); i += 1 }
+        case _ => out.append(lx.token)
       }
       out.result()
     }

@@ -1,5 +1,7 @@
 package graft.client
 
+import graft.sql.ChLex
+
 /** Translates the ClickHouse-dialect SQL our unparser generates into Spark
   * SQL for the embedded server engine. A real ClickHouse server would
   * execute the SQL as-is; the translator models the server's function
@@ -8,15 +10,42 @@ package graft.client
   *
   * Scope is intentionally the dialect WE generate: backtick quoting is
   * shared by both dialects; lambda syntax `x -> body` is shared by
-  * ClickHouse HOFs and Spark HOFs; so translation is table-reference
-  * rewriting plus a function-name map and a few special forms.
+  * ClickHouse HOFs and Spark HOFs. Translation is a few statement-shape
+  * rewrites (brackets, PREWHERE, scalar WITH, ARRAY JOIN, ASOF, TOTALS,
+  * QUALIFY, SETTINGS, table references, NULL ordering) followed by ONE
+  * walk over the call sites ([[translateCalls]]). Every scanner reads
+  * the text through [[graft.sql.ChLex]], so string literals are opaque
+  * everywhere. The walk translates each call's arguments before the
+  * call and dispatches on the exact, case-sensitive name through one
+  * table ([[rules]]) — 1:1 name swaps and rewrite rules alike; a name
+  * entered twice fails at object init.
   */
 object ChSqlTranslator {
 
   def viewName(db: String, table: String): String = s"__ch_${db}_$table"
 
+  /** One translation rule, keyed by the exact ClickHouse name. */
+  private[graft] sealed trait Rule
+  /** 1:1 name swap: the argument text passes through (translated). */
+  private[graft] final case class Swap(to: String) extends Rule
+  /** `name(args)` → text, over the already-translated arguments. */
+  private[graft] final case class Call(f: Seq[String] => String) extends Rule
+  /** Parameterized aggregate `name(params)(args)`; a call without the
+    * second group passes through.
+    */
+  private[graft] final case class Param(f: (Seq[String], Seq[String]) => String)
+    extends Rule
+
+  /** The rule table; a name entered twice fails here. */
+  private[graft] def ruleTable(entries: Seq[(String, Rule)]): Map[String, Rule] = {
+    val dups = entries.groupBy(_._1).collect { case (n, es) if es.size > 1 => n }
+    require(dups.isEmpty,
+      s"translator rule table: duplicate names ${dups.toSeq.sorted.mkString(", ")}")
+    entries.toMap
+  }
+
   /** ClickHouse function name → Spark equivalent (1:1 name swaps). */
-  private val fnMap: Map[String, String] = Map(
+  private def swaps: Seq[(String, Rule)] = Seq[(String, String)](
     "arrayJoin" -> "explode",
     // ClickHouse length() is polymorphic (strings AND arrays); Spark's is
     // string-only, so the embedded session registers a type-agnostic UDF
@@ -90,7 +119,6 @@ object ChSqlTranslator {
     // Spark substring/char ops are codepoint-based — exactly the UTF8
     // variants' contract
     "substringUTF8" -> "substring",
-    "replaceAll" -> "replace",
     "concatWithSeparator" -> "concat_ws",
     "generateUUIDv4" -> "uuid",
     // CH randCanonical IS Spark's rand: uniform [0, 1) Float64
@@ -102,7 +130,7 @@ object ChSqlTranslator {
     // xxhash64 (internal row layout, seed 42) for the ClickHouse
     // spelling (XXH64 of the raw bytes, seed 0) — the rand() trap.
     // The lowercase internal `xxhash64(...)` the uniq rewrites emit is
-    // untouched (fnMap is case-sensitive by design).
+    // untouched (the rule table is case-sensitive by design).
     "cityHash64" -> "graft_cityhash64",
     "sipHash64" -> "graft_siphash64",
     "xxHash64" -> "graft_xxhash64ch",
@@ -125,7 +153,7 @@ object ChSqlTranslator {
     // and probes never aggregate empty groups)
     "groupBitAnd" -> "bit_and",
     "groupBitOr" -> "bit_or",
-    "groupBitXor" -> "bit_xor")
+    "groupBitXor" -> "bit_xor").map { case (ch, sp) => ch -> Swap(sp) }
 
   // ---- round-14 wave helpers -------------------------------------------
 
@@ -415,125 +443,68 @@ object ChSqlTranslator {
     * backticks are opaque).
     */
   private def rewriteMapLiterals(in: String): String = {
+    if (!in.contains('{')) return in
     val out = new StringBuilder
-    var inSq = false
-    var inBq = false
-    // brace nesting depth → replace ':' with ',' only at brace level
-    var braces = 0
-    var parensSinceBrace = List.empty[Int] // paren depth inside each brace
-    var i = 0
-    while (i < in.length) {
-      val c = in.charAt(i)
-      if (inSq) {
-        out.append(c)
-        if (c == '\\' && i + 1 < in.length) { out.append(in.charAt(i + 1)); i += 1 }
-        else if (c == '\'') inSq = false
-      }
-      else if (inBq) { out.append(c); if (c == '`') inBq = false }
-      else c match {
-        case '\'' => inSq = true; out.append(c)
-        case '`' => inBq = true; out.append(c)
-        case '{' =>
-          braces += 1; parensSinceBrace ::= 0; out.append("map(")
-        case '}' if braces > 0 =>
-          braces -= 1; parensSinceBrace = parensSinceBrace.drop(1)
-          out.append(")")
-        case '(' | '[' if braces > 0 =>
-          parensSinceBrace = (parensSinceBrace.head + 1) :: parensSinceBrace.tail
-          out.append(c)
-        case ')' | ']' if braces > 0 =>
-          parensSinceBrace = (parensSinceBrace.head - 1) :: parensSinceBrace.tail
-          out.append(c)
-        case ':' if braces > 0 && parensSinceBrace.head == 0 =>
-          out.append(',')
-        case _ => out.append(c)
-      }
-      i += 1
+    // nesting (parens + brackets) at each open brace: a ':' at exactly
+    // that nesting separates a key from its value
+    var braces = List.empty[Int]
+    val lx = new ChLex(in)
+    while (lx.next()) {
+      val nest = lx.depth + lx.brackets
+      if (lx.isPunct('{')) { braces ::= nest; out.append("map(") }
+      else if (lx.isPunct('}') && braces.nonEmpty) { braces = braces.tail; out.append(')') }
+      else if (lx.isPunct(':') && braces.headOption.contains(nest)) out.append(',')
+      else out.append(lx.token)
     }
     out.result()
   }
 
   private def rewriteArrayLiterals(in: String): String = {
+    if (!in.contains('[')) return in
     val out = new StringBuilder
-    var inSq = false
-    var inBq = false
     val literalStack = scala.collection.mutable.Stack[Boolean]()
-    var i = 0
-    while (i < in.length) {
-      val c = in.charAt(i)
-      if (inSq) {
-        out.append(c)
-        if (c == '\\' && i + 1 < in.length) { out.append(in.charAt(i + 1)); i += 1 }
-        else if (c == '\'') inSq = false
-      }
-      else if (inBq) { out.append(c); if (c == '`') inBq = false }
-      else c match {
-        case '\'' => inSq = true; out.append(c)
-        case '`' => inBq = true; out.append(c)
-        case '[' =>
-          var j = out.length - 1
-          while (j >= 0 && out.charAt(j).isWhitespace) j -= 1
-          val subscript = j >= 0 && {
-            val p = out.charAt(j)
-            if (p == '`' || p == ')' || p == ']') true
-            else if (p.isLetterOrDigit || p == '_') {
-              // a bare word ends a primary UNLESS it is a keyword that
-              // introduces an expression (`SELECT [1]`, `WHERE x IN [..]`)
-              var k = j
-              while (k >= 0 && (out.charAt(k).isLetterOrDigit || out.charAt(k) == '_')) k -= 1
-              !NonPrimaryWords.contains(
-                out.substring(k + 1, j + 1).toUpperCase(java.util.Locale.ROOT))
-            } else false
-          }
-          literalStack.push(!subscript)
-          out.append(if (subscript) "[" else "array(")
-        case ']' =>
-          val lit = literalStack.nonEmpty && literalStack.pop()
-          out.append(if (lit) ")" else "]")
-        case _ => out.append(c)
-      }
-      i += 1
+    val lx = new ChLex(in)
+    while (lx.next()) {
+      if (lx.isPunct('[')) {
+        var j = out.length - 1
+        while (j >= 0 && out.charAt(j).isWhitespace) j -= 1
+        val subscript = j >= 0 && {
+          val p = out.charAt(j)
+          if (p == '`' || p == ')' || p == ']') true
+          else if (ChLex.isWordChar(p)) {
+            // a bare word ends a primary UNLESS it is a keyword that
+            // introduces an expression (`SELECT [1]`, `WHERE x IN [..]`)
+            var k = j
+            while (k >= 0 && ChLex.isWordChar(out.charAt(k))) k -= 1
+            !NonPrimaryWords.contains(
+              out.substring(k + 1, j + 1).toUpperCase(java.util.Locale.ROOT))
+          } else false
+        }
+        literalStack.push(!subscript)
+        out.append(if (subscript) "[" else "array(")
+      } else if (lx.isPunct(']')) {
+        val lit = literalStack.nonEmpty && literalStack.pop()
+        out.append(if (lit) ")" else "]")
+      } else out.append(lx.token)
     }
     out.result()
   }
 
   private def rewriteSubscripts(in: String): String = {
-    // locate the first '[' outside quotes (after the literal pass, every
-    // remaining bracket is a subscript)
-    var inSq = false
-    var inBq = false
+    // the first '[' outside quotes (after the literal pass, every
+    // remaining bracket is a subscript) and its matching ']'
+    val lx = new ChLex(in)
     var open = -1
-    var i = 0
-    while (i < in.length && open < 0) {
-      val c = in.charAt(i)
-      if (inSq) {
-        if (c == '\\') i += 1 else if (c == '\'') inSq = false
-      }
-      else if (inBq) { if (c == '`') inBq = false }
-      else if (c == '\'') inSq = true
-      else if (c == '`') inBq = true
-      else if (c == '[') open = i
-      i += 1
-    }
-    if (open < 0) return in
-    // matching ']' (quote- and nesting-aware)
-    var depth = 1
     var close = -1
-    i = open + 1
-    inSq = false; inBq = false
-    while (i < in.length && close < 0) {
-      val c = in.charAt(i)
-      if (inSq) { if (c == '\\') i += 1 else if (c == '\'') inSq = false }
-      else if (inBq) { if (c == '`') inBq = false }
-      else if (c == '\'') inSq = true
-      else if (c == '`') inBq = true
-      else if (c == '[') depth += 1
-      else if (c == ']') { depth -= 1; if (depth == 0) close = i }
-      i += 1
-    }
+    var outside = 0
+    while (close < 0 && lx.next())
+      if (open < 0 && lx.isPunct('[')) { open = lx.start; outside = lx.brackets - 1 }
+      else if (open >= 0 && lx.isPunct(']') && lx.brackets == outside) close = lx.start
+    if (open < 0) return in
     require(close > open, s"unbalanced '[' in: $in")
     // primary start: scan backward over an identifier / backtick-quoted /
-    // parenthesized-group chain joined by '.'
+    // parenthesized-group chain joined by '.' (the chars just before a
+    // code token are code, so only groups need the lexer)
     var start = open
     var scanning = true
     while (scanning) {
@@ -542,31 +513,20 @@ object ChSqlTranslator {
       if (j < 0) { scanning = false }
       else in.charAt(j) match {
         case '`' =>
-          var k = j - 1
-          while (k >= 0 && in.charAt(k) != '`') k -= 1
+          val k = in.lastIndexOf('`', j - 1)
           require(k >= 0, s"unbalanced backtick in: $in")
           start = k
         case ')' =>
-          var d = 1
-          var k = j - 1
-          var sq = false
-          while (k >= 0 && d > 0) {
-            val ch = in.charAt(k)
-            if (sq) { if (ch == '\'') sq = false }
-            else if (ch == '\'') sq = true
-            else if (ch == ')') d += 1
-            else if (ch == '(') d -= 1
-            if (d > 0) k -= 1
-          }
+          val k = ChLex.openOf(in, j)
           require(k >= 0, s"unbalanced ')' before subscript in: $in")
           start = k
           // a function name directly before the group belongs to it
           var m = k - 1
-          while (m >= 0 && (in.charAt(m).isLetterOrDigit || in.charAt(m) == '_')) m -= 1
+          while (m >= 0 && ChLex.isWordChar(in.charAt(m))) m -= 1
           if (m < k - 1) start = m + 1
-        case ch if ch.isLetterOrDigit || ch == '_' =>
+        case ch if ChLex.isWordChar(ch) =>
           var k = j
-          while (k >= 0 && (in.charAt(k).isLetterOrDigit || in.charAt(k) == '_')) k -= 1
+          while (k >= 0 && ChLex.isWordChar(in.charAt(k))) k -= 1
           start = k + 1
         case _ => scanning = false
       }
@@ -647,16 +607,79 @@ object ChSqlTranslator {
     // ORDER BY item without an explicit NULLS clause gets the server's
     // default made explicit, so embedded orderings match a real server.
     s = injectNullOrder(s)
-    // special forms first (arg rewrites), then plain name swaps
-    s = translateSpecialForms(s)
-    fnMap.foreach { case (ch, sp) =>
-      s = s.replaceAll(s"\\b${java.util.regex.Pattern.quote(ch)}\\s*\\(", sp + "(")
+    stripOffsetFrames(translateCalls(s))
+  }
+
+  /** The call walk: every call site outside literals — a word or a
+    * backticked name, then `(` — whose exact name is in [[rules]] is
+    * replaced by its rule's text. Arguments are translated before their
+    * call, so a rule sees Spark text and its output is final: a rule
+    * that emits another ClickHouse name dispatches it explicitly through
+    * [[translateCall]]. Unknown names pass through with their arguments
+    * walked in place.
+    */
+  private def translateCalls(s: String): String = {
+    val out = new StringBuilder
+    val lx = new ChLex(s)
+    var copied = 0
+    while (lx.next()) {
+      if (lx.kind == ChLex.Word || lx.kind == ChLex.Ident) {
+        var open = lx.end
+        while (open < s.length && s.charAt(open).isWhitespace) open += 1
+        if (open < s.length && s.charAt(open) == '(') {
+          val name = lx.name
+          rules.get(name) match {
+            case Some(Swap(to)) =>
+              out.append(s.substring(copied, lx.start)).append(to).append('(')
+              copied = open + 1
+            case Some(Call(f)) =>
+              val (args, past) = parseArgs(s, open + 1)
+              out.append(s.substring(copied, lx.start))
+                .append(f(args.map(translateCalls)))
+              copied = past
+            case Some(Param(f)) =>
+              val (params, past) = parseArgs(s, open + 1)
+              if (past < s.length && s.charAt(past) == '(') {
+                val (args, end) = parseArgs(s, past + 1)
+                out.append(s.substring(copied, lx.start))
+                  .append(f(params.map(translateCalls), args.map(translateCalls)))
+                copied = end
+              }
+            case None => rejectOrDefault(name)
+          }
+          // resume after the consumed text (inside the call when the
+          // rule left its arguments to this walk)
+          if (copied > lx.end) lx.seek(copied)
+        }
+      }
     }
-    // ClickHouse case-sensitive names survive quoting: `arrayMap`(...) etc.
-    fnMap.foreach { case (ch, sp) =>
-      s = s.replace(s"`$ch`(", sp + "(")
+    out.append(s.substring(copied)).result()
+  }
+
+  /** `name(args)` through the rule table — the explicit re-dispatch for
+    * rules that emit another ClickHouse name (arguments already
+    * translated).
+    */
+  private def translateCall(name: String, args: Seq[String]): String =
+    rules.get(name) match {
+      case Some(Call(f)) => f(args)
+      case Some(Swap(to)) => s"$to(${args.mkString(", ")})"
+      case _ => s"$name(${args.mkString(", ")})"
     }
-    s
+
+  /** -OrDefault names without a rule: the default is the ARGUMENT type's
+    * zero value, which text cannot derive — reject by name.
+    */
+  private def rejectOrDefault(name: String): Unit = {
+    val base = name.dropRight("OrDefault".length)
+    if (base.nonEmpty && name.toLowerCase(java.util.Locale.ROOT).endsWith("ordefault") &&
+      (base.head.isLetter || base.head == '_'))
+      throw new IllegalArgumentException(
+        s"${base}OrDefault is not supported by the embedded " +
+          "engine: the default is the ARGUMENT type's zero value " +
+          "(0 / '' / 1970-01-01), which the translator cannot derive " +
+          s"from text — write coalesce($base(x), <default>) " +
+          "explicitly or run against a real server")
   }
 
   /** ClickHouse type name → Spark DDL type (for CAST targets). */
@@ -683,13 +706,21 @@ object ChSqlTranslator {
     }
   }
 
-  /** Forms that need more than a name swap. Operates on the nesting our
-    * unparser emits (balanced-paren argument parsing).
+  /** The rule table [[translateCalls]] dispatches through: the 1:1
+    * swaps plus the forms that need more than a name swap.
     */
-  private def translateSpecialForms(in: String): String = {
-    var s = in
+  private val rules: Map[String, Rule] = ruleTable(swaps ++ rewriteRules)
+
+  /** Forms that need more than a name swap, keyed by exact name. Each
+    * rule receives its call's top-level arguments, already translated.
+    */
+  private def rewriteRules: Seq[(String, Rule)] = {
+    val b = Seq.newBuilder[(String, Rule)]
+    def rule(name: String, f: Seq[String] => String): Unit = b += name -> Call(f)
+    def paramRule(name: String, f: (Seq[String], Seq[String]) => String): Unit =
+      b += name -> Param(f)
     // sigmoid(x) → (1.0 / (1.0 + exp(-(x))))
-    s = rewriteCall(s, "sigmoid", args => s"(1.0 / (1.0 + exp(-(${args.head}))))")
+    rule("sigmoid", args => s"(1.0 / (1.0 + exp(-(${args.head}))))")
     // splitByChar('c', s) → split(s, 'c') (argument order swap). The
     // separator lands in split's REGEX position, so it must be a
     // literal and regex-escaped — splitByChar('.', s) used to split at
@@ -697,7 +728,7 @@ object ChSqlTranslator {
     // 3-arg max_substrings form rejects: the server's remainder law is
     // setting-dependent (splitby_max_substrings_includes_remaining
     // _string), not pinnable offline.
-    s = rewriteCall(s, "splitByChar", args => {
+    rule("splitByChar", args => {
       require(args.size == 2,
         "splitByChar takes (separator, string) — the max_substrings " +
           "form's remainder law is server-setting-dependent, not " +
@@ -715,7 +746,7 @@ object ChSqlTranslator {
     // validate literals here so the divergence is an error, never a
     // silent success-with-value. Non-literal from/to pass through (no
     // translate-time check possible).
-    s = rewriteCall(s, "translate", args => {
+    rule("translate", args => {
       require(args.size == 3, "translate takes (string, from, to)")
       (stringLiteral(args(1)), stringLiteral(args(2))) match {
         case (Some(f), Some(t)) => require(f.length == t.length,
@@ -727,7 +758,7 @@ object ChSqlTranslator {
       s"translate(${args.mkString(", ")})"
     })
     // arraySum(x) → aggregate(x, cast(0 as double), (a, v) -> a + v)
-    s = rewriteCall(s, "arraySum",
+    rule("arraySum",
       args => s"aggregate(${args.head}, cast(0 as double), (a, v) -> a + v)")
     // ClickHouse HOFs take the lambda FIRST, Spark takes the array first:
     // arrayMap(x -> f(x), arr) → transform(arr, x -> f(x));
@@ -735,23 +766,23 @@ object ChSqlTranslator {
     // server REQUIRES equal array sizes where zip_with NULL-pads the
     // shorter side — values agree on the defined (equal-length) domain;
     // 3+ arrays have no Spark primitive and reject loudly.
-    s = rewriteCall(s, "arrayMap", args => args.length match {
+    rule("arrayMap", args => args.length match {
       case 2 => s"transform(${args(1)}, ${args(0)})"
       case 3 => s"zip_with(${args(1)}, ${args(2)}, ${args(0)})"
       case n => throw new IllegalArgumentException(
         s"arrayMap over ${n - 1} arrays is not supported by the embedded " +
           "engine (1 or 2 arrays only)")
     })
-    s = rewriteCall(s, "arrayFilter", args => s"filter(${args(1)}, ${args(0)})")
-    s = rewriteCall(s, "arrayExists", args => s"exists(${args(1)}, ${args(0)})")
-    s = rewriteCall(s, "arrayAll", args => s"forall(${args(1)}, ${args(0)})")
+    rule("arrayFilter", args => s"filter(${args(1)}, ${args(0)})")
+    rule("arrayExists", args => s"exists(${args(1)}, ${args(0)})")
+    rule("arrayAll", args => s"forall(${args(1)}, ${args(0)})")
     // arrayFirstIndex(f, arr): 1-based index of the first match, 0 when
     // none — array_position shares BOTH conventions (the indexOf rule)
-    s = rewriteCall(s, "arrayFirstIndex", args =>
+    rule("arrayFirstIndex", args =>
       s"array_position(transform(${args(1)}, ${args(0)}), true)")
     // arrayLastIndex: position in the reversed array maps back as
     // size - p + 1; 0-for-absent survives the CASE
-    s = rewriteCall(s, "arrayLastIndex", args => {
+    rule("arrayLastIndex", args => {
       val bools = s"transform(${args(1)}, ${args(0)})"
       s"(CASE WHEN array_position(reverse($bools), true) = 0 THEN 0 " +
         s"ELSE size(${args(1)}) - array_position(reverse($bools), true) + 1 " +
@@ -760,18 +791,18 @@ object ChSqlTranslator {
     // hasAll/hasAny via Spark's SET operations, which treat NULL
     // elements as equal — exactly ClickHouse's semantics ([NULL] hasAll
     // [NULL] = 1); array_contains/arrays_overlap would go three-valued
-    s = rewriteCall(s, "hasAll",
+    rule("hasAll",
       args => s"(size(array_except(${args(1)}, ${args(0)})) = 0)")
-    s = rewriteCall(s, "hasAny",
+    rule("hasAny",
       args => s"(size(array_intersect(${args(0)}, ${args(1)})) > 0)")
     // distinct elements in both, order unspecified in BOTH engines
-    s = rewriteCall(s, "arrayIntersect",
+    rule("arrayIntersect",
       args => s"array_intersect(${args(0)}, ${args(1)})")
     // range(n) = [0 .. n-1]; range(start, end[, step]) is HALF-OPEN
     // where Spark's sequence is inclusive — the end nudges back one
     // step; empty ranges need the CASE (sequence(0, -1) would emit a
     // DESCENDING ramp)
-    s = rewriteCall(s, "range", args => args.size match {
+    rule("range", args => args.size match {
       case 1 =>
         s"(CASE WHEN ${args(0)} <= 0 THEN array() " +
           s"ELSE sequence(0, ${args(0)} - 1) END)"
@@ -786,13 +817,13 @@ object ChSqlTranslator {
     })
     // arrayFold((acc, x) -> ..., arr, init) → aggregate(arr, init, f):
     // both engines fold left with the same (acc, element) lambda shape
-    s = rewriteCall(s, "arrayFold", args => {
+    rule("arrayFold", args => {
       require(args.size == 3, "arrayFold(lambda, array, init)")
       s"aggregate(${args(1)}, ${args(2)}, ${args(0)})"
     })
     // arrayCount([f,] arr): matching elements; the no-lambda form counts
     // elements != 0 (server semantics)
-    s = rewriteCall(s, "arrayCount", args =>
+    rule("arrayCount", args =>
       if (args.size >= 2) s"size(filter(${args(1)}, ${args(0)}))"
       else s"size(filter(${args.head}, __ac_x -> __ac_x != 0))")
     // arraySort/arrayReverseSort (plain arity): ClickHouse places NULLs
@@ -805,7 +836,7 @@ object ChSqlTranslator {
       val core = if (desc) s"reverse($vals)" else vals
       s"concat($core, filter($a, __as_x -> __as_x IS NULL))"
     }
-    s = rewriteCall(s, "arraySort", args => {
+    rule("arraySort", args => {
       require(args.size == 1,
         "arraySort with a key lambda is not supported by the embedded " +
           "engine (the server's stable equal-key order has no Spark " +
@@ -813,7 +844,7 @@ object ChSqlTranslator {
           "against a real server")
       nullsLastSort(args.head, desc = false)
     })
-    s = rewriteCall(s, "arrayReverseSort", args => {
+    rule("arrayReverseSort", args => {
       require(args.size == 1,
         "arrayReverseSort with a key lambda is not supported by the " +
           "embedded engine; sort a struct-keyed copy explicitly or run " +
@@ -823,7 +854,8 @@ object ChSqlTranslator {
     // arrayCumSum: running prefix sums, same length; arrayDifference:
     // [0, a2-a1, ...]. Both need the ELEMENT type's zero (a text rewrite
     // cannot name it) — try_element_at(a, 1) * 0, the sumArray trick.
-    s = rewriteCall(s, "arrayCumSum", args => {
+    rule("arrayCumSum", args => {
+      require(args.size == 1, "arrayCumSum(arr)")
       val a = args.head
       val zero = s"try_element_at($a, 1) * 0"
       // slice(a, 1, 0) is an EMPTY array of a's own element type — the
@@ -834,7 +866,8 @@ object ChSqlTranslator {
         "(__cs_acc, __cs_v) -> concat(__cs_acc, array(" +
         s"coalesce(try_element_at(__cs_acc, -1), $zero) + __cs_v)))"
     })
-    s = rewriteCall(s, "arrayDifference", args => {
+    rule("arrayDifference", args => {
+      require(args.size == 1, "arrayDifference(arr)")
       val a = args.head
       s"(CASE WHEN size($a) <= 0 THEN $a ELSE concat(" +
         s"array(try_element_at($a, 1) * 0), " +
@@ -843,7 +876,7 @@ object ChSqlTranslator {
     })
     // arrayReduce('agg', arr): literal-name dispatch onto the exact
     // element folds (the sumArray/uniqArray machinery, scalar-shaped)
-    s = rewriteCall(s, "arrayReduce", args => {
+    rule("arrayReduce", args => {
       require(args.size == 2,
         "arrayReduce: exactly ('aggName', array) is supported")
       val name = args.head.trim
@@ -877,16 +910,16 @@ object ChSqlTranslator {
     // is value-identical on its defined domain; anything whose boundary
     // law could not be pinned stays a loud reject ----
     // array surgery
-    s = rewriteCall(s, "arrayPushBack",
+    rule("arrayPushBack",
       args => s"concat(${args(0)}, array(${args(1)}))")
-    s = rewriteCall(s, "arrayPushFront",
+    rule("arrayPushFront",
       args => s"concat(array(${args(1)}), ${args(0)})")
-    s = rewriteCall(s, "arrayPopBack", args =>
+    rule("arrayPopBack", args =>
       s"slice(${args.head}, 1, greatest(size(${args.head}) - 1, 0))")
-    s = rewriteCall(s, "arrayPopFront", args =>
+    rule("arrayPopFront", args =>
       s"(CASE WHEN size(${args.head}) <= 1 THEN slice(${args.head}, 1, 0) " +
         s"ELSE slice(${args.head}, 2, size(${args.head}) - 1) END)")
-    s = rewriteCall(s, "arrayResize", args => {
+    rule("arrayResize", args => {
       require(args.size == 3,
         "arrayResize: only the 3-argument (array, size, pad) form is " +
           "supported — the 2-argument grow pads with the element type's " +
@@ -896,29 +929,29 @@ object ChSqlTranslator {
         s"ELSE concat($a, array_repeat($p, ($n) - size($a))) END)"
     })
     // 1-based access, identical to the `a[i]` subscript rewrite
-    s = rewriteCall(s, "arrayElement",
+    rule("arrayElement",
       args => s"element_at(${args(0)}, ${args(1)})")
     // consecutive-duplicate collapse; <=> matches the server's
     // NULL-equals-NULL collapse
-    s = rewriteCall(s, "arrayCompact", args => {
+    rule("arrayCompact", args => {
       val a = args.head
       s"filter($a, (__ac_x, __ac_i) -> __ac_i = 0 OR " +
         s"NOT (__ac_x <=> element_at($a, __ac_i)))"
     })
-    s = rewriteCall(s, "countEqual", args =>
+    rule("countEqual", args =>
       s"cast(size(filter(${args(0)}, __ce_x -> __ce_x <=> ${args(1)})) as bigint)")
     // (arrayEnumerate already maps below — the indexed-transform rule)
-    s = rewriteCall(s, "arrayUniq", args => {
+    rule("arrayUniq", args => {
       require(args.size == 1,
         "arrayUniq over multiple arrays (distinct TUPLES) is not supported")
       s"cast(size(array_distinct(${args.head})) as bigint)"
     })
-    s = rewriteCall(s, "arrayAvg", args => {
+    rule("arrayAvg", args => {
       val nn = s"filter(${args.head}, __aa_x -> __aa_x IS NOT NULL)"
       s"(aggregate($nn, cast(0 as double), " +
         s"(__aa_acc, __aa_v) -> __aa_acc + __aa_v) / size($nn))"
     })
-    s = rewriteCall(s, "arrayProduct", args => {
+    rule("arrayProduct", args => {
       val nn = s"filter(${args.head}, __ap_x -> __ap_x IS NOT NULL)"
       // Float64 result like the server's; empty folds to the init 1.0
       s"aggregate($nn, cast(1 as double), " +
@@ -926,19 +959,19 @@ object ChSqlTranslator {
     })
     // zip to unnamed tuples (structs — the repo's tuple representation;
     // tupleElement/graft_tuple_at read them positionally)
-    s = rewriteCall(s, "arrayZip", args => {
+    rule("arrayZip", args => {
       require(args.size == 2,
         "arrayZip: exactly two arrays are supported (3+ have no " +
           "equal-size-checked Spark composition)")
       s"zip_with(${args(0)}, ${args(1)}, (__az_a, __az_b) -> " +
         "struct(__az_a, __az_b))"
     })
-    s = rewriteCall(s, "bitPositionsToArray", args =>
+    rule("bitPositionsToArray", args =>
       s"filter(transform(sequence(0, 63), __bp_i -> " +
         s"CASE WHEN (cast(${args.head} as bigint) & shiftleft(1L, __bp_i)) != 0 " +
         "THEN cast(__bp_i as bigint) END), __bp_x -> __bp_x IS NOT NULL)")
     // string family
-    s = rewriteCall(s, "splitByString", args => {
+    rule("splitByString", args => {
       require(args.size == 2, "splitByString takes (separator, string)")
       val lit = stringLiteral(args(0)).getOrElse(throw new IllegalArgumentException(
         "splitByString: the separator must be a string literal"))
@@ -946,9 +979,9 @@ object ChSqlTranslator {
         "splitByString('') splits to characters — spell it split(s, '')")
       s"split(${args(1)}, '${escapeRegexLiteral(lit)}')"
     })
-    s = rewriteCall(s, "splitByRegexp",
+    rule("splitByRegexp",
       args => s"split(${args(1)}, ${args(0)})")
-    s = rewriteCall(s, "extract", args => {
+    rule("extract", args => {
       // SQL-standard EXTRACT(unit FROM x) passes through untouched —
       // only the ClickHouse regex form (haystack, pattern) maps
       if (args.size == 1 &&
@@ -959,11 +992,11 @@ object ChSqlTranslator {
         s"regexp_extract(${args(0)}, ${args(1)}, ${extractGroupIdx(args(1))})"
       }
     })
-    s = rewriteCall(s, "extractAll", args => {
+    rule("extractAll", args => {
       require(args.size == 2, "extractAll takes (haystack, pattern)")
       s"regexp_extract_all(${args(0)}, ${args(1)}, ${extractGroupIdx(args(1))})"
     })
-    s = rewriteCall(s, "replaceOne", args => {
+    rule("replaceOne", args => {
       val (h, n, r) = (args(0), args(1), args(2))
       // char_length, NOT graft_length: locate/substr are codepoint-based,
       // so the needle's length must be codepoints too (graft_length is
@@ -972,53 +1005,53 @@ object ChSqlTranslator {
         s"substr($h, 1, locate($n, $h) - 1), $r, " +
         s"substr($h, locate($n, $h) + char_length($n))) ELSE $h END)"
     })
-    s = rewriteCall(s, "replaceRegexpAll", args => {
+    rule("replaceRegexpAll", args => {
       require(args.size == 3, "replaceRegexpAll takes (haystack, pattern, replacement)")
       s"regexp_replace(${args(0)}, ${args(1)}, ${chReplacementToJava(args(2))})"
     })
     // first-match-only regex replace: Java replaceFirst — also DuckDB's
     // default non-global regexp_replace, which makes it oracle-exact
-    s = rewriteCall(s, "replaceRegexpOne", args => {
+    rule("replaceRegexpOne", args => {
       require(args.size == 3, "replaceRegexpOne takes (haystack, pattern, replacement)")
       s"graft_replace_regexp_one(${args(0)}, ${args(1)}, " +
         s"${chReplacementToJava(args(2), "replaceRegexpOne")})"
     })
-    s = rewriteCall(s, "countSubstrings", args => {
+    rule("countSubstrings", args => {
       val (h, n) = (args(0), args(1))
       // non-overlapping occurrences in both engines
       s"cast((graft_length($h) - graft_length(replace($h, $n, ''))) " +
         s"/ graft_length($n) as bigint)"
     })
-    s = rewriteCall(s, "positionCaseInsensitive",
+    rule("positionCaseInsensitive",
       args => s"locate(lower(${args(1)}), lower(${args(0)}))")
-    s = rewriteCall(s, "notLike",
+    rule("notLike",
       args => s"(NOT (${args(0)} LIKE ${args(1)}))")
-    s = rewriteCall(s, "format", args => {
+    rule("format", args => {
       require(args.size >= 2, "format needs a template and arguments")
       val tpl = stringLiteral(args.head).getOrElse(throw new IllegalArgumentException(
         "format: the template must be a string literal"))
       s"format_string('${chFormatToJava(tpl)}', ${args.tail.mkString(", ")})"
     })
-    s = rewriteCall(s, "base64Decode",
+    rule("base64Decode",
       args => s"cast(unbase64(${args.head}) as string)")
     // null / branch family
-    s = rewriteCall(s, "assumeNotNull", args => {
+    rule("assumeNotNull", args => {
       require(args.size == 1, "assumeNotNull takes one argument")
       // values agree wherever the server's result is defined (NULL input
       // is UNDEFINED there — the engines may differ only off-contract)
       s"(${args.head})"
     })
     // bit ops as operators (codegen'd)
-    s = rewriteCall(s, "bitAnd", args => s"((${args(0)}) & (${args(1)}))")
-    s = rewriteCall(s, "bitOr", args => s"((${args(0)}) | (${args(1)}))")
-    s = rewriteCall(s, "bitXor", args => s"((${args(0)}) ^ (${args(1)}))")
-    s = rewriteCall(s, "bitNot", args => s"(~(${args.head}))")
-    s = rewriteCall(s, "intDivOrZero", args =>
+    rule("bitAnd", args => s"((${args(0)}) & (${args(1)}))")
+    rule("bitOr", args => s"((${args(0)}) | (${args(1)}))")
+    rule("bitXor", args => s"((${args(0)}) ^ (${args(1)}))")
+    rule("bitNot", args => s"(~(${args.head}))")
+    rule("intDivOrZero", args =>
       s"(CASE WHEN (${args(1)}) = 0 THEN 0 ELSE (${args(0)}) DIV (${args(1)}) END)")
-    s = rewriteCall(s, "moduloOrZero", args =>
+    rule("moduloOrZero", args =>
       s"(CASE WHEN (${args(1)}) = 0 THEN 0 ELSE (${args(0)}) % (${args(1)}) END)")
-    s = rewriteCall(s, "exp2", args => s"power(cast(2 as double), ${args.head})")
-    s = rewriteCall(s, "exp10", args => s"power(cast(10 as double), ${args.head})")
+    rule("exp2", args => s"power(cast(2 as double), ${args.head})")
+    rule("exp10", args => s"power(cast(10 as double), ${args.head})")
     // CH trunc/truncate(x[, N]) = toward-zero (at N decimal places);
     // Spark's own trunc is date-only, so both arities map here
     def truncSql(args: Seq[String]): String = {
@@ -1029,17 +1062,13 @@ object ChSqlTranslator {
       val core = s"(CASE WHEN ($x) >= 0 THEN floor($x) ELSE ceiling($x) END)"
       if (args.size == 1) core else s"($core / power(10, ${args(1)}))"
     }
-    s = rewriteCall(s, "trunc", truncSql)
-    s = rewriteCall(s, "truncate", truncSql)
+    rule("trunc", truncSql)
+    rule("truncate", truncSql)
     // CH rand() is a random UInt32 (randCanonical is the [0,1) form) —
     // passing Spark's rand() through would be a silent distribution lie
-    s = rewriteCall(s, "rand", args =>
+    rule("rand", args =>
       "cast(floor(rand() * 4294967296) as bigint)")
     // date/time family
-    // NOTE: these run BEFORE any rule that EMITS Spark-form
-    // date_sub/date_add text (yesterday/toMonday/toStartOfWeek below) —
-    // a later position would rewrite the emitted Spark SQL (the
-    // sequential-rules shadowing law, round 17).
     // dateAdd/dateSub spellings (round 17): the unit-first 3-argument
     // form (identifier or string-literal unit) and the
     // (date, INTERVAL n unit) 2-argument form, both folding onto
@@ -1058,7 +1087,7 @@ object ChSqlTranslator {
       for ((nm, neg) <- Seq("dateAdd" -> false, "date_add" -> false,
         "DATE_ADD" -> false, "dateSub" -> true, "date_sub" -> true,
         "DATE_SUB" -> true))
-        s = rewriteCall(s, nm, args => args.size match {
+        rule(nm, args => args.size match {
           case 3 =>
             val u = unitOf(args(0), nm)
             val v = if (neg) s"-(${args(1)})" else args(1)
@@ -1075,15 +1104,15 @@ object ChSqlTranslator {
             s"$nm takes 2 or 3 arguments (got $n)")
         })
     }
-    s = rewriteCall(s, "yesterday", _ => "date_sub(current_date(), 1)")
-    s = rewriteCall(s, "toDayOfWeek", args => {
+    rule("yesterday", _ => "date_sub(current_date(), 1)")
+    rule("toDayOfWeek", args => {
       require(args.size == 1,
         "toDayOfWeek: mode argument is not supported (default Mon=1..Sun=7)")
       s"(pmod(dayofweek(${args.head}) + 5, 7) + 1)"
     })
-    s = rewriteCall(s, "toMonday", args =>
+    rule("toMonday", args =>
       s"date_sub(to_date(${args.head}), pmod(dayofweek(${args.head}) + 5, 7))")
-    s = rewriteCall(s, "toStartOfWeek", args => {
+    rule("toStartOfWeek", args => {
       val mode = if (args.size >= 2) args(1).trim else "0"
       mode match {
         case "0" => // Sunday-start weeks (the server default)
@@ -1094,7 +1123,7 @@ object ChSqlTranslator {
           s"toStartOfWeek: mode $m is not supported (0 = Sunday, 1 = Monday)")
       }
     })
-    s = rewriteCall(s, "toStartOfQuarter", args =>
+    rule("toStartOfQuarter", args =>
       s"to_date(date_trunc('quarter', ${args.head}))")
     for ((ch, unit) <- Seq(
       "addSeconds" -> "SECOND", "addMinutes" -> "MINUTE",
@@ -1104,12 +1133,12 @@ object ChSqlTranslator {
       // timestampadd: Date inputs widen to timestamp (value-exact; the
       // server keeps Date for day-granularity adds — a TYPE widening,
       // same spirit as the Int128 mapping)
-      s = rewriteCall(s, ch,
+      rule(ch,
         args => s"timestampadd($unit, ${args(1)}, ${args(0)})")
-      s = rewriteCall(s, "subtract" + ch.substring(3),
+      rule("subtract" + ch.substring(3),
         args => s"timestampadd($unit, -(${args(1)}), ${args(0)})")
     }
-    s = rewriteCall(s, "dateDiff", args => {
+    rule("dateDiff", args => {
       require(args.size == 3,
         "dateDiff: (unit, start, end) — the timezone argument is not supported")
       val unit = stringLiteral(args.head).getOrElse(throw new IllegalArgumentException(
@@ -1124,13 +1153,13 @@ object ChSqlTranslator {
       s"timestampdiff(${unit.toUpperCase(java.util.Locale.ROOT)}, " +
         s"date_trunc('$unit', ${args(1)}), date_trunc('$unit', ${args(2)}))"
     })
-    s = rewriteCall(s, "fromUnixTimestamp", args => {
+    rule("fromUnixTimestamp", args => {
       require(args.size == 1,
         "fromUnixTimestamp: the 2-argument (format) form renders with " +
           "server-dialect tokens and is not supported")
       s"timestamp_seconds(${args.head})"
     })
-    s = rewriteCall(s, "formatDateTime", args => {
+    rule("formatDateTime", args => {
       require(args.size == 2,
         "formatDateTime: (datetime, 'format') without timezone is supported")
       val fmt = stringLiteral(args(1)).getOrElse(throw new IllegalArgumentException(
@@ -1149,7 +1178,7 @@ object ChSqlTranslator {
       "parseDateTimeOrZero" -> ((x, f) =>
         s"coalesce(try_to_timestamp($x, '$f'), " +
           "timestamp'1970-01-01 00:00:00')")))
-      s = rewriteCall(s, nm, args => {
+      rule(nm, args => {
         require(args.size == 2,
           s"$nm(string, 'format') — the timezone argument is not supported")
         val fmt = stringLiteral(args(1)).getOrElse(
@@ -1170,11 +1199,11 @@ object ChSqlTranslator {
       s"(CASE WHEN ($x) < 0 THEN raise_error('$nm: negative input — " +
         s"the server law on negatives is not pinnable offline') " +
         s"ELSE $body END)"
-    s = rewriteCall(s, "bitmaskToArray", args => {
+    rule("bitmaskToArray", args => {
       require(args.size == 1, "bitmaskToArray(x)")
       bitmaskGuard(args.head, bitmaskArr(args.head), "bitmaskToArray")
     })
-    s = rewriteCall(s, "bitmaskToList", args => {
+    rule("bitmaskToList", args => {
       require(args.size == 1, "bitmaskToList(x)")
       bitmaskGuard(args.head,
         s"concat_ws(',', transform(${bitmaskArr(args.head)}, " +
@@ -1186,12 +1215,12 @@ object ChSqlTranslator {
       "toInt8OrNull" -> "TINYINT", "toInt16OrNull" -> "SMALLINT",
       "toInt32OrNull" -> "INT", "toInt64OrNull" -> "BIGINT",
       "toFloat32OrNull" -> "FLOAT", "toFloat64OrNull" -> "DOUBLE")) {
-      s = rewriteCall(s, ch, args => s"try_cast(${args.head} AS $t)")
-      s = rewriteCall(s, ch.replace("OrNull", "OrZero"),
+      rule(ch, args => s"try_cast(${args.head} AS $t)")
+      rule(ch.replace("OrNull", "OrZero"),
         args => s"coalesce(try_cast(${args.head} AS $t), 0)")
     }
     // 4-argument transform: literal from/to arrays → a CASE ladder
-    s = rewriteCall(s, "transform", args => {
+    rule("transform", args => {
       if (args.size != 4) args.mkString("transform(", ", ", ")")
       else {
         val from = splitArrayLiteral(args(1)).getOrElse(
@@ -1209,9 +1238,8 @@ object ChSqlTranslator {
       }
     })
 
-    // CAST(x AS <ClickHouse type>) → CAST(x AS <Spark type>)  [round-14
-    // helpers for the wave above live after translate()]
-    s = rewriteCall(s, "CAST", args => {
+    // CAST(x AS <ClickHouse type>) → CAST(x AS <Spark type>)
+    rule("CAST", args => {
       // re-join: the splitter breaks on top-level commas, but Spark
       // composite type names carry them OUTSIDE parens (MAP<STRING,
       // BIGINT>) — args.head alone would truncate the target type
@@ -1225,53 +1253,53 @@ object ChSqlTranslator {
     // byte-offset start form maps since round 16 (GraftBytePositionFrom
     // kernel; start < 1 and empty-needle-with-start stay loud rejects,
     // not pinnable boundaries).
-    s = rewriteCall(s, "position", args => args.size match {
+    rule("position", args => args.size match {
       case 2 => s"graft_position(${args(0)}, ${args(1)})"
       case 3 => s"graft_position_from(${args(0)}, ${args(1)}, ${args(2)})"
       case n => throw new IllegalArgumentException(
         s"position takes 2 or 3 arguments (got $n)")
     })
     // countDistinct(x...) → count(DISTINCT x...)
-    s = rewriteCall(s, "countDistinct", args => s"count(DISTINCT ${args.mkString(", ")})")
+    rule("countDistinct", args => s"count(DISTINCT ${args.mkString(", ")})")
     // positiveModulo → pmod
-    s = rewriteCall(s, "positiveModulo", args => s"pmod(${args.mkString(", ")})")
+    rule("positiveModulo", args => s"pmod(${args.mkString(", ")})")
     // trimBoth → trim, replaceAll → replace
-    s = rewriteCall(s, "trimBoth", args => s"trim(${args.head})")
-    s = rewriteCall(s, "replaceAll", args => s"replace(${args.mkString(", ")})")
+    rule("trimBoth", args => s"trim(${args.head})")
+    rule("replaceAll", args => s"replace(${args.mkString(", ")})")
     // match(haystack, re) → regexp_like (the embedded engine's Java regex
     // stands in for ClickHouse's RE2; shared-subset fidelity)
-    s = rewriteCall(s, "match", args => s"regexp_like(${args.mkString(", ")})")
+    rule("match", args => s"regexp_like(${args.mkString(", ")})")
     // startsWith/endsWith → Spark lowercase names
-    s = rewriteCall(s, "startsWith", args => s"startswith(${args.mkString(", ")})")
-    s = rewriteCall(s, "endsWith", args => s"endswith(${args.mkString(", ")})")
+    rule("startsWith", args => s"startswith(${args.mkString(", ")})")
+    rule("endsWith", args => s"endswith(${args.mkString(", ")})")
     // literal constructors emitted by ChSql.literal
-    s = rewriteCall(s, "toDateTime64", args => s"to_timestamp(${args.head})")
+    rule("toDateTime64", args => s"to_timestamp(${args.head})")
     // date/time family (ClickHouse names → Spark equivalents)
-    s = rewriteCall(s, "toYear", args => s"year(${args.head})")
-    s = rewriteCall(s, "toMonth", args => s"month(${args.head})")
-    s = rewriteCall(s, "toDayOfMonth", args => s"dayofmonth(${args.head})")
-    s = rewriteCall(s, "toHour", args => s"hour(${args.head})")
-    s = rewriteCall(s, "toMinute", args => s"minute(${args.head})")
-    s = rewriteCall(s, "toSecond", args => s"second(${args.head})")
-    s = rewriteCall(s, "toStartOfYear", args => s"date_trunc('year', ${args.head})")
-    s = rewriteCall(s, "toStartOfMonth", args => s"date_trunc('month', ${args.head})")
-    s = rewriteCall(s, "toStartOfDay", args => s"date_trunc('day', ${args.head})")
-    s = rewriteCall(s, "toStartOfHour", args => s"date_trunc('hour', ${args.head})")
-    s = rewriteCall(s, "toStartOfMinute", args => s"date_trunc('minute', ${args.head})")
-    s = rewriteCall(s, "toDate", args => s"to_date(${args.head})")
-    s = rewriteCall(s, "toQuarter", args => s"quarter(${args.head})")
-    s = rewriteCall(s, "toDayOfYear", args => s"dayofyear(${args.head})")
-    s = rewriteCall(s, "toISOWeek", args => s"weekofyear(${args.head})")
+    rule("toYear", args => s"year(${args.head})")
+    rule("toMonth", args => s"month(${args.head})")
+    rule("toDayOfMonth", args => s"dayofmonth(${args.head})")
+    rule("toHour", args => s"hour(${args.head})")
+    rule("toMinute", args => s"minute(${args.head})")
+    rule("toSecond", args => s"second(${args.head})")
+    rule("toStartOfYear", args => s"date_trunc('year', ${args.head})")
+    rule("toStartOfMonth", args => s"date_trunc('month', ${args.head})")
+    rule("toStartOfDay", args => s"date_trunc('day', ${args.head})")
+    rule("toStartOfHour", args => s"date_trunc('hour', ${args.head})")
+    rule("toStartOfMinute", args => s"date_trunc('minute', ${args.head})")
+    rule("toDate", args => s"to_date(${args.head})")
+    rule("toQuarter", args => s"quarter(${args.head})")
+    rule("toDayOfYear", args => s"dayofyear(${args.head})")
+    rule("toISOWeek", args => s"weekofyear(${args.head})")
     // ---- round-15 sweep-2 wave (FnSurfaceProbe round 2) ----------------
     // ISO week-year: Spark's YEAROFWEEK extract carries the same ISO law
-    s = rewriteCall(s, "toISOYear", args =>
+    rule("toISOYear", args =>
       s"extract(YEAROFWEEK FROM ${args.head})")
     // fixed-interval truncations: epoch-second flooring (UTC session —
     // identical to the server's wall-clock truncation law in UTC)
     for ((ch, step) <- Seq(
       "toStartOfFiveMinutes" -> 300, "toStartOfTenMinutes" -> 600,
       "toStartOfFifteenMinutes" -> 900, "timeSlot" -> 1800))
-      s = rewriteCall(s, ch, args =>
+      rule(ch, args =>
         s"timestamp_seconds(floor(unix_timestamp(${args.head}) / $step) * $step)")
     // toStartOfInterval: literal INTERVAL arg. Sub-day + day steps are
     // epoch-second flooring (exact in the UTC session). Calendar steps
@@ -1285,7 +1313,7 @@ object ChSqlTranslator {
     // reject loudly via assert_true; NULL passes through as NULL.
     // Return type is Date for week+ steps, DateTime below — the server
     // law.
-    s = rewriteCall(s, "toStartOfInterval", args => {
+    rule("toStartOfInterval", args => {
       require(args.size == 2,
         "toStartOfInterval: (datetime, INTERVAL n unit) without timezone")
       val m = raw"(?i)^INTERVAL\s+(\d+)\s+(SECOND|MINUTE|HOUR|DAY|WEEK|MONTH|QUARTER|YEAR)S?$$".r
@@ -1332,7 +1360,7 @@ object ChSqlTranslator {
     // rest (type-split law) — graft_round dispatches on the resolved
     // child type; Spark's half-up builtin resolved case-insensitively
     // before round 15 and flipped float .5 ties silently
-    s = rewriteCall(s, "round", args => {
+    rule("round", args => {
       require(args.size == 1 || args.size == 2, "round(x[, N])")
       s"graft_round(${args.mkString(", ")})"
     })
@@ -1341,7 +1369,7 @@ object ChSqlTranslator {
     // 64-bit pattern the server uses); the kernel is the paper-vector-
     // pinned core, so this spelling is pinned DIRECTLY by the
     // published vectors (HashKernelSpec + DifferentialSpec)
-    s = rewriteCall(s, "sipHash64Keyed", args => {
+    rule("sipHash64Keyed", args => {
       require(args.size == 2,
         "sipHash64Keyed((k0, k1), data) — single data argument only " +
           "(multi-argument combine chains are not pinnable offline)")
@@ -1366,40 +1394,17 @@ object ChSqlTranslator {
         s"array_repeat($d, -($n)), slice($a, 1, size($a) + ($n))) " +
         s"ELSE array_repeat($d, size($a)) END)"
     for ((name, neg) <- Seq("arrayShiftLeft" -> false, "arrayShiftRight" -> true))
-      s = rewriteCall(s, name, args => {
+      rule(name, args => {
         require(args.size == 3,
           s"$name(arr, n, filler): the 2-argument form pads with the " +
             "element type's DEFAULT value, which is not derivable from " +
             "text — pass the filler explicitly or run against a real server")
         shiftLeft(args(0), if (neg) s"-(${args(1)})" else args(1), args(2))
       })
-    // arrayDifference: first element 0, then adjacent diffs (the
-    // documented law); arrayCumSum: running prefix sums. Both compose
-    // as index transforms/folds over the element type's own arithmetic
-    // (exact for integrals; NULL elements poison their positions like
-    // the server's Nullable propagation — not pinned).
-    // (empty arrays guard the index ramp — sequence(1, 0) would emit a
-    // DESCENDING ramp, the `range` rule's law)
-    s = rewriteCall(s, "arrayDifference", args => {
-      require(args.size == 1, "arrayDifference(arr)")
-      val a = args.head
-      s"(CASE WHEN size($a) <= 0 THEN ($a) ELSE " +
-        s"transform(sequence(1, size($a)), __ad_i -> " +
-        s"CASE WHEN __ad_i = 1 THEN element_at($a, 1) - element_at($a, 1) " +
-        s"ELSE element_at($a, __ad_i) - element_at($a, __ad_i - 1) END) END)"
-    })
-    s = rewriteCall(s, "arrayCumSum", args => {
-      require(args.size == 1, "arrayCumSum(arr)")
-      val a = args.head
-      s"(CASE WHEN size($a) <= 0 THEN ($a) ELSE " +
-        s"transform(sequence(1, size($a)), __cs_i -> " +
-        s"aggregate(slice($a, 1, __cs_i), element_at($a, 1) - " +
-        s"element_at($a, 1), (__cs_acc, __cs_x) -> __cs_acc + __cs_x)) END)"
-    })
     // arrayCumSumNonNegative: the clamped scan f_i = max(0, f_{i-1} +
     // x_i) (documented example [1,1,-4,1] → [1,2,0,1]) — the clamp
     // lives INSIDE the fold, so each prefix re-folds with greatest()
-    s = rewriteCall(s, "arrayCumSumNonNegative", args => {
+    rule("arrayCumSumNonNegative", args => {
       require(args.size == 1, "arrayCumSumNonNegative(arr)")
       val a = args.head
       val zero = s"element_at($a, 1) - element_at($a, 1)"
@@ -1416,30 +1421,30 @@ object ChSqlTranslator {
       s"(CASE WHEN size($a) <= 0 THEN ($a) ELSE concat(" +
         s"slice($a, $k + 1, size($a) - $k), slice($a, 1, $k)) END)"
     }
-    s = rewriteCall(s, "arrayRotateLeft", args => {
+    rule("arrayRotateLeft", args => {
       require(args.size == 2, "arrayRotateLeft(arr, n)")
       rotateLeft(args(0), args(1))
     })
-    s = rewriteCall(s, "arrayRotateRight", args => {
+    rule("arrayRotateRight", args => {
       require(args.size == 2, "arrayRotateRight(arr, n)")
       rotateLeft(args(0), s"-(${args(1)})")
     })
     // named arithmetic forms (divide is ALWAYS Float64 on the server)
-    s = rewriteCall(s, "plus", args => s"((${args(0)}) + (${args(1)}))")
-    s = rewriteCall(s, "minus", args => s"((${args(0)}) - (${args(1)}))")
-    s = rewriteCall(s, "multiply", args => s"((${args(0)}) * (${args(1)}))")
-    s = rewriteCall(s, "divide", args =>
+    rule("plus", args => s"((${args(0)}) + (${args(1)}))")
+    rule("minus", args => s"((${args(0)}) - (${args(1)}))")
+    rule("multiply", args => s"((${args(0)}) * (${args(1)}))")
+    rule("divide", args =>
       s"(cast((${args(0)}) as double) / (${args(1)}))")
-    s = rewriteCall(s, "negate", args => s"(-(${args.head}))")
+    rule("negate", args => s"(-(${args.head}))")
     // IEEE classification: NaN fails every ordered comparison and
     // Spark's NaN-as-largest ordering never enters (abs(x) <= maxDouble
     // is an ordinary comparison), so NaN → false on both forms, exactly
     // the server's isFinite/isInfinite
-    s = rewriteCall(s, "isFinite", args =>
+    rule("isFinite", args =>
       s"(abs(cast((${args.head}) as double)) <= cast('1.7976931348623157E308' as double))")
-    s = rewriteCall(s, "isInfinite", args =>
+    rule("isInfinite", args =>
       s"(abs(cast((${args.head}) as double)) = cast('Infinity' as double))")
-    s = rewriteCall(s, "ifNotFinite", args =>
+    rule("ifNotFinite", args =>
       s"(CASE WHEN abs(cast((${args(0)}) as double)) <= " +
         s"cast('1.7976931348623157E308' as double) THEN (${args(0)}) " +
         s"ELSE (${args(1)}) END)")
@@ -1449,14 +1454,14 @@ object ChSqlTranslator {
     // spuriously rejects `>>` once the surrounding statement is complex
     // enough (found by FnFuzzSpec round 16 — `((a >> 1) & 1)` parses
     // alone but fails at the tail of a ~2.4KB nested select list).
-    s = rewriteCall(s, "bitTest", args =>
+    rule("bitTest", args =>
       s"((shiftright(${args(0)}, ${args(1)})) & 1)")
-    s = rewriteCall(s, "bitTestAll", args => {
+    rule("bitTestAll", args => {
       require(args.size >= 2, "bitTestAll(a, i1, ...)")
       args.tail.map(i => s"((shiftright(${args.head}, $i)) & 1) = 1")
         .mkString("(CASE WHEN ", " AND ", " THEN 1 ELSE 0 END)")
     })
-    s = rewriteCall(s, "bitTestAny", args => {
+    rule("bitTestAny", args => {
       require(args.size >= 2, "bitTestAny(a, i1, ...)")
       args.tail.map(i => s"((shiftright(${args.head}, $i)) & 1) = 1")
         .mkString("(CASE WHEN ", " OR ", " THEN 1 ELSE 0 END)")
@@ -1464,17 +1469,17 @@ object ChSqlTranslator {
     // roundToExp2 on the integral domain (exact highestOneBit law;
     // float inputs reject at the expression's type check — the server's
     // float law works on the exponent field, not pinnable offline)
-    s = rewriteCall(s, "roundToExp2", args => {
+    rule("roundToExp2", args => {
       require(args.size == 1, "roundToExp2(x)")
       s"graft_rexp2(${args.head})"
     })
     // codepoint-law string forms riding Spark's own codepoint semantics
-    s = rewriteCall(s, "positionUTF8", args => {
+    rule("positionUTF8", args => {
       require(args.size == 2, "positionUTF8: (haystack, needle) only")
       s"locate(${args(1)}, ${args(0)})"
     })
-    s = rewriteCall(s, "leftUTF8", args => s"left(${args.mkString(", ")})")
-    s = rewriteCall(s, "rightUTF8", args => s"right(${args.mkString(", ")})")
+    rule("leftUTF8", args => s"left(${args.mkString(", ")})")
+    rule("rightUTF8", args => s"right(${args.mkString(", ")})")
     // URL family: the server's byte-scan laws as anchored regexes
     // (scheme = RFC 3986 ALPHA *(ALPHA/DIGIT/+/-/.); host chars stop at
     // :/?#@; doc-example boundary values pinned in DifferentialSpec).
@@ -1483,28 +1488,28 @@ object ChSqlTranslator {
     // userinfo may carry ':' (user:pw@) and nest '@' pathologically —
     // the server keeps the host after the LAST '@' before the path
     val urlHost = "'^(?:[A-Za-z][A-Za-z0-9+.-]*://)?(?:[^/@?#]*@)*([A-Za-z0-9._-]+)'"
-    s = rewriteCall(s, "protocol", args =>
+    rule("protocol", args =>
       s"regexp_extract(${args.head}, '^([A-Za-z][A-Za-z0-9+.-]*):', 1)")
-    s = rewriteCall(s, "domainWithoutWWW", args =>
+    rule("domainWithoutWWW", args =>
       s"regexp_replace(regexp_extract(${args.head}, $urlHost, 1), '^www\\\\.', '')")
-    s = rewriteCall(s, "domain", args =>
+    rule("domain", args =>
       s"regexp_extract(${args.head}, $urlHost, 1)")
     // TLD = the last dot-separated label of the host, requiring a letter
     // (the server returns '' for IPs and dotless hosts)
-    s = rewriteCall(s, "topLevelDomain", args =>
+    rule("topLevelDomain", args =>
       s"regexp_extract(regexp_extract(${args.head}, $urlHost, 1), " +
         s"'\\\\.((?=[A-Za-z0-9-]*[A-Za-z])[A-Za-z0-9-]+)$$', 1)")
-    s = rewriteCall(s, "pathFull", args =>
+    rule("pathFull", args =>
       s"regexp_extract(${args.head}, '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*(.*)', 1)")
-    s = rewriteCall(s, "path", args =>
+    rule("path", args =>
       s"regexp_extract(${args.head}, '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*([^?#]*)', 1)")
-    s = rewriteCall(s, "queryString", args =>
+    rule("queryString", args =>
       s"regexp_extract(${args.head}, '\\\\?([^#]*)', 1)")
-    s = rewriteCall(s, "fragment", args =>
+    rule("fragment", args =>
       s"regexp_extract(${args.head}, '#(.*)$$', 1)")
-    s = rewriteCall(s, "cutQueryString", args =>
+    rule("cutQueryString", args =>
       s"regexp_replace(${args.head}, '\\\\?[^#]*', '')")
-    s = rewriteCall(s, "extractURLParameter", args => {
+    rule("extractURLParameter", args => {
       require(args.size == 2, "extractURLParameter(url, 'name')")
       val name = stringLiteral(args(1)).getOrElse(
         throw new IllegalArgumentException(
@@ -1517,7 +1522,7 @@ object ChSqlTranslator {
     // group-free patterns — so does the translator). No match →
     // empty array (chosen instance consistent with extract's
     // ''-default; not spec-pinned).
-    s = rewriteCall(s, "extractGroups", args => {
+    rule("extractGroups", args => {
       require(args.size == 2, "extractGroups(haystack, 'pattern')")
       val lit = stringLiteral(args(1)).getOrElse(
         throw new IllegalArgumentException(
@@ -1537,7 +1542,7 @@ object ChSqlTranslator {
     // NULL haystack propagates. Needles must be a literal array —
     // the bracket dialect may already have rewritten [..] to array(..),
     // so both spellings parse here.
-    s = rewriteCall(s, "multiSearchAny", args => {
+    rule("multiSearchAny", args => {
       require(args.size == 2, "multiSearchAny(haystack, [needles...])")
       val t = args(1).trim
       val inner =
@@ -1559,7 +1564,7 @@ object ChSqlTranslator {
     // non-alphanumeric ASCII separators (the documented tokenizer law);
     // the needle must itself be one alphanumeric token — the server
     // errors otherwise, and so does the translator.
-    s = rewriteCall(s, "hasToken", args => {
+    rule("hasToken", args => {
       require(args.size == 2, "hasToken(haystack, 'token')")
       val tok = stringLiteral(args(1)).getOrElse(
         throw new IllegalArgumentException(
@@ -1582,30 +1587,30 @@ object ChSqlTranslator {
     // unreserved set per the RFC, uppercase hex, UTF-8 bytes; the Form
     // variants add the space↔'+' mapping; malformed %-sequences reject
     // loudly at decode)
-    s = rewriteCall(s, "encodeURLComponent", args => {
+    rule("encodeURLComponent", args => {
       require(args.size == 1, "encodeURLComponent(s)")
       s"graft_encurl(${args.head})"
     })
-    s = rewriteCall(s, "decodeURLComponent", args => {
+    rule("decodeURLComponent", args => {
       require(args.size == 1, "decodeURLComponent(s)")
       s"graft_decurl(${args.head})"
     })
-    s = rewriteCall(s, "encodeURLFormComponent", args => {
+    rule("encodeURLFormComponent", args => {
       require(args.size == 1, "encodeURLFormComponent(s)")
       s"graft_encurlf(${args.head})"
     })
-    s = rewriteCall(s, "decodeURLFormComponent", args => {
+    rule("decodeURLFormComponent", args => {
       require(args.size == 1, "decodeURLFormComponent(s)")
       s"graft_decurlf(${args.head})"
     })
-    s = rewriteCall(s, "cutFragment", args =>
+    rule("cutFragment", args =>
       s"regexp_replace(${args.head}, '#.*$$', '')")
-    s = rewriteCall(s, "cutQueryStringAndFragment", args =>
+    rule("cutQueryStringAndFragment", args =>
       s"regexp_replace(${args.head}, '[?#].*$$', '')")
-    s = rewriteCall(s, "netloc", args =>
+    rule("netloc", args =>
       s"regexp_extract(${args.head}, " +
         s"'^(?:[A-Za-z][A-Za-z0-9+.-]*://)?([^/?#]*)', 1)")
-    s = rewriteCall(s, "port", args => {
+    rule("port", args => {
       require(args.size == 1 || args.size == 2, "port(url[, default])")
       val dflt = if (args.size == 2) {
         require(raw"^\d+$$".r.findFirstIn(args(1).trim).isDefined,
@@ -1616,11 +1621,6 @@ object ChSqlTranslator {
         s"'^(?:[A-Za-z][A-Za-z0-9+.-]*://)?(?:[^/@?#]*@)*" +
         s"[A-Za-z0-9._-]+:(\\\\d+)', 1), ''), '$dflt') as int)"
     })
-    // Remaining JSON forms: JSONExtractString/Int/Float/Bool/JSONHas
-    // already map via get_json_object (round 11, literal-key-validated,
-    // LATER in this pipeline — do NOT re-add them here, the earlier
-    // rule would shadow the mapping: the round-14 ordering law).
-    //
     // simpleJSON*/visitParam* (round 16): the server's DOCUMENTED
     // byte-scanner law as codegen kernels (graft.functions
     // .GraftSimpleJson — needle `"name":`, first occurrence, per-type
@@ -1635,7 +1635,7 @@ object ChSqlTranslator {
       "ExtractRaw" -> "graft_sj_raw",
       "ExtractString" -> "graft_sj_string");
       spelling <- Seq("simpleJSON" + suffix, "visitParam" + suffix))
-      s = rewriteCall(s, spelling, args => {
+      rule(spelling, args => {
         require(args.size == 2, s"$spelling(json, 'name')")
         s"$fn(${args(0)}, ${args(1)})"
       })
@@ -1646,7 +1646,7 @@ object ChSqlTranslator {
     // polymorphic dispatch. Path keys ride the round-11 literal-key
     // get_json_object contract (lenient-parser caveat shared with the
     // whole JSONExtract family).
-    s = rewriteCall(s, "JSONLength", args => {
+    rule("JSONLength", args => {
       require(args.nonEmpty, "JSONLength(json[, keys...])")
       val target =
         if (args.size == 1) args.head
@@ -1662,7 +1662,7 @@ object ChSqlTranslator {
     // JSONExtractKeys: object key list, [] outside the object shape
     // (the simdjson family's empty default; same literal-key path
     // contract as JSONLength)
-    s = rewriteCall(s, "JSONExtractKeys", args => {
+    rule("JSONExtractKeys", args => {
       require(args.nonEmpty, "JSONExtractKeys(json[, keys...])")
       val target =
         if (args.size == 1) args.head
@@ -1678,7 +1678,7 @@ object ChSqlTranslator {
     // string values, so the raw (quote-preserving) form cannot be
     // rebuilt without re-escaping lies — reject loudly. (The scanner
     // law's raw form IS available as simpleJSONExtractRaw.)
-    s = rewriteCall(s, "JSONExtractRaw", _ => throw new IllegalArgumentException(
+    rule("JSONExtractRaw", _ => throw new IllegalArgumentException(
       "JSONExtractRaw is not supported by the embedded engine (" +
         "get_json_object unquotes string values, so the quote-preserving " +
         "raw form is not expressible) — use simpleJSONExtractRaw's " +
@@ -1690,61 +1690,51 @@ object ChSqlTranslator {
     // PSL is only needed by the *Custom variants, which keep rejecting
     // at the unknown-function surface. Host extraction mirrors the
     // domain() law above.
-    s = rewriteCall(s, "firstSignificantSubdomain", args => {
+    rule("firstSignificantSubdomain", args => {
       require(args.size == 1, "firstSignificantSubdomain(url)")
       s"graft_fsd(${args.head}, false)"
     })
-    s = rewriteCall(s, "cutToFirstSignificantSubdomain", args => {
+    rule("cutToFirstSignificantSubdomain", args => {
       require(args.size == 1, "cutToFirstSignificantSubdomain(url)")
       s"graft_fsd(${args.head}, true)"
     })
     // ---- end round-15 sweep-2 wave -------------------------------------
     // extended string family (UTF8 variants = Spark's codepoint semantics)
-    s = rewriteCall(s, "leftPadUTF8", args => s"lpad(${args.mkString(", ")})")
-    s = rewriteCall(s, "rightPadUTF8", args => s"rpad(${args.mkString(", ")})")
-    s = rewriteCall(s, "reverseUTF8", args => s"reverse(${args.head})")
-    s = rewriteCall(s, "leftPad", args => s"lpad(${args.mkString(", ")})")
-    s = rewriteCall(s, "rightPad", args => s"rpad(${args.mkString(", ")})")
-    s = rewriteCall(s, "trimLeft", args => s"ltrim(${args.head})")
-    s = rewriteCall(s, "trimRight", args => s"rtrim(${args.head})")
-    s = rewriteCall(s, "isNaN", args => s"isnan(${args.head})")
+    rule("leftPadUTF8", args => s"lpad(${args.mkString(", ")})")
+    rule("rightPadUTF8", args => s"rpad(${args.mkString(", ")})")
+    rule("reverseUTF8", args => s"reverse(${args.head})")
+    rule("leftPad", args => s"lpad(${args.mkString(", ")})")
+    rule("rightPad", args => s"rpad(${args.mkString(", ")})")
+    rule("trimLeft", args => s"ltrim(${args.head})")
+    rule("trimRight", args => s"rtrim(${args.head})")
+    rule("isNaN", args => s"isnan(${args.head})")
     // -OrNull combinator: NULL when the aggregate accumulated nothing.
     // sum/avg/min/max/any/anyLast already return NULL on an empty or
     // all-NULL input in Spark — the combinator strips to the base
-    // aggregate (whose own rewrites below then apply). count/uniq
-    // return 0 there, so those wrap in nullif.
+    // aggregate, dispatched through its own rule. count/uniq return 0
+    // there, so those wrap in nullif.
+    def combinatorArgs(args: Seq[String]): Seq[String] =
+      if (args.isEmpty) Seq("*") else args
     for (f <- Seq("sum", "avg", "min", "max", "any", "anyLast",
       "argMax", "argMin"))
-      s = rewriteCall(s, f + "OrNull", args => s"$f(${args.mkString(", ")})")
+      rule(f + "OrNull", args => translateCall(f, args))
     for (f <- Seq("count", "uniq", "uniqExact"))
-      s = rewriteCall(s, f + "OrNull", args => s"nullif($f(${
-        if (args.isEmpty) "*" else args.mkString(", ")}), 0)")
+      rule(f + "OrNull",
+        args => s"nullif(${translateCall(f, combinatorArgs(args))}, 0)")
     // -OrDefault: the RETURN TYPE's default when nothing accumulated —
     // derivable from text only where that type is fixed by the function
     // (count/uniq already 0; sum/avg numeric 0). min/max/any carry the
     // argument's type, whose default (''/1970-01-01/0) the translator
-    // cannot know — those reject by name below, never a silent 0.
+    // cannot know — those reject by name in the walk
+    // (rejectOrDefault), never a silent 0.
     for (f <- Seq("count", "uniq", "uniqExact"))
-      s = rewriteCall(s, f + "OrDefault", args => s"$f(${
-        if (args.isEmpty) "*" else args.mkString(", ")})")
-    s = rewriteCall(s, "sumOrDefault",
+      rule(f + "OrDefault", args => translateCall(f, combinatorArgs(args)))
+    rule("sumOrDefault",
       args => s"coalesce(sum(${args.mkString(", ")}), 0)")
-    s = rewriteCall(s, "avgOrDefault",
+    rule("avgOrDefault",
       args => s"coalesce(avg(${args.mkString(", ")}), 0.0)")
-    mapOutsideStrings(s) { seg =>
-      raw"(?i)\b([A-Za-z_][A-Za-z0-9_]*)OrDefault\s*\(".r.findFirstMatchIn(seg)
-        .foreach { m =>
-          throw new IllegalArgumentException(
-            s"${m.group(1)}OrDefault is not supported by the embedded " +
-              "engine: the default is the ARGUMENT type's zero value " +
-              "(0 / '' / 1970-01-01), which the translator cannot derive " +
-              s"from text — write coalesce(${m.group(1)}(x), <default>) " +
-              "explicitly or run against a real server")
-        }
-      seg
-    }
-    // sumMap/minMap/maxMap map since round 16 (ChMapAgg, LATER in this
-    // pipeline). The zero-total ambiguity that used to reject the whole
+    // sumMap/minMap/maxMap map since round 16 (ChMapAgg, below). The
+    // zero-total ambiguity that used to reject the whole
     // family BY NAME (offline docs are ambiguous on whether zero-total
     // keys drop) is now a loud EVAL-TIME reject on exactly the
     // ambiguous instance — a zero folded total — so the common nonzero
@@ -1753,7 +1743,7 @@ object ChSqlTranslator {
     // its law is wrapping at the value's own width (same-type result,
     // no promotion) — ChMapAgg.SumOv wraps the Long fold at the
     // declared-unsigned or resolved element width.
-    s = rewriteCall(s, "sumMapWithOverflow", args => args.size match {
+    rule("sumMapWithOverflow", args => args.size match {
       case 2 => s"graft_summap_ov(${args(0)}, ${args(1)})"
       case 1 => s"graft_summap_ov(map_keys(${args.head}), " +
         s"map_values(${args.head}))"
@@ -1769,7 +1759,7 @@ object ChSqlTranslator {
     // row of a multi-argument aggregate when any argument is NULL, so a
     // NULL x must not contribute its weight (ADVICE r14 — Spark's
     // sum(w) alone would still count that row's weight)
-    s = rewriteCall(s, "avgWeighted", args => {
+    rule("avgWeighted", args => {
       require(args.size == 2, "avgWeighted takes (value, weight)")
       val (x, w) = (args(0), args(1))
       // numerator needs no guard: x*w is NULL (sum-skipped) when either
@@ -1782,15 +1772,15 @@ object ChSqlTranslator {
     // ORDER-dependent, and Spark aggregation order is unspecified: loud
     // reject (the window spelling sum(greatest(x - lag(x), 0)) OVER (...)
     // expresses it deterministically)
-    s = rewriteCall(s, "deltaSum", _ => throw new IllegalArgumentException(
+    rule("deltaSum", _ => throw new IllegalArgumentException(
       "deltaSum is order-dependent and Spark aggregation order is " +
         "unspecified — spell it as sum(greatest(x - lagInFrame(x) OVER " +
         "(ORDER BY ...), 0)) over an explicit ordering"))
     // any/anyLast: the server keeps "some" value — min/max are legal
     // instances, reproducibly (the Summing-representative rule). The
     // quantified-subquery form `= any(SELECT ...)` is NOT the aggregate
-    // — reconstruct it untouched.
-    s = rewriteCall(s, "anyLast", args => s"max(${args.head})")
+    // — it is rebuilt as `any(...)` over its translated subquery.
+    rule("anyLast", args => s"max(${args.head})")
     // a subquery argument — bare `SELECT ...` OR parenthesized
     // `(SELECT ...)` (any depth of wrapping parens) — marks the
     // quantified form; rewriting it to min() would silently turn IN
@@ -1798,40 +1788,22 @@ object ChSqlTranslator {
     // only strip an outer pair when the '(' at index 0 MATCHES the ')'
     // at the end — '(SELECT max(x) FROM t) - (SELECT min(x) FROM t)' is
     // an expression, not a wrapped subquery (advisor r12)
-    def strippable(t: String): Boolean = {
-      if (!(t.startsWith("(") && t.endsWith(")"))) return false
-      var depth = 0
-      var inSq = false
-      var i = 0
-      while (i < t.length) {
-        val c = t.charAt(i)
-        if (inSq) { if (c == '\\') i += 1 else if (c == '\'') inSq = false }
-        else c match {
-          case '\'' => inSq = true
-          case '(' => depth += 1
-          case ')' =>
-            depth -= 1
-            if (depth == 0 && i < t.length - 1) return false
-          case _ => ()
-        }
-        i += 1
-      }
-      depth == 0
-    }
+    def strippable(t: String): Boolean =
+      t.startsWith("(") && ChLex.closeOf(t, 0) == t.length
     def isSubqueryArg(a: String): Boolean = {
       var t = a.trim
       while (strippable(t)) t = t.substring(1, t.length - 1).trim
       t.toUpperCase.startsWith("SELECT")
     }
-    s = rewriteCall(s, "any", args =>
+    rule("any", args =>
       if (args.size == 1 && !isSubqueryArg(args.head))
         s"min(${args.head})"
       else s"any(${args.mkString(", ")})")
     // date partition keys (toYYYYMM and friends — the canonical
     // partition_by expressions): closed-form integer arithmetic
-    s = rewriteCall(s, "toYYYYMM",
+    rule("toYYYYMM",
       args => s"(year(${args.head}) * 100 + month(${args.head}))")
-    s = rewriteCall(s, "toYYYYMMDD",
+    rule("toYYYYMMDD",
       args => s"(year(${args.head}) * 10000 + month(${args.head}) * 100 + " +
         s"dayofmonth(${args.head}))")
     // JSON extraction family → get_json_object with a $.-path built
@@ -1847,29 +1819,29 @@ object ChSqlTranslator {
       }
       "'$." + lits.mkString(".") + "'"
     }
-    s = rewriteCall(s, "JSONExtractString",
+    rule("JSONExtractString",
       args => s"get_json_object(${args.head}, ${jsonPath(args.tail)})")
-    s = rewriteCall(s, "JSONExtractInt",
+    rule("JSONExtractInt",
       args => s"cast(get_json_object(${args.head}, ${jsonPath(args.tail)}) as bigint)")
-    s = rewriteCall(s, "JSONExtractFloat",
+    rule("JSONExtractFloat",
       args => s"cast(get_json_object(${args.head}, ${jsonPath(args.tail)}) as double)")
-    s = rewriteCall(s, "JSONExtractBool",
+    rule("JSONExtractBool",
       args => s"cast(get_json_object(${args.head}, ${jsonPath(args.tail)}) as boolean)")
-    s = rewriteCall(s, "JSONHas",
+    rule("JSONHas",
       args => s"(get_json_object(${args.head}, ${jsonPath(args.tail)}) IS NOT NULL)")
     // -If combinator aggregates → Spark FILTER clauses (identical
     // semantics: the aggregate sees only rows passing the condition)
-    s = rewriteCall(s, "sumIf",
+    rule("sumIf",
       args => s"sum(${args(0)}) FILTER (WHERE ${args(1)})")
-    s = rewriteCall(s, "avgIf",
+    rule("avgIf",
       args => s"avg(${args(0)}) FILTER (WHERE ${args(1)})")
-    s = rewriteCall(s, "minIf",
+    rule("minIf",
       args => s"min(${args(0)}) FILTER (WHERE ${args(1)})")
-    s = rewriteCall(s, "maxIf",
+    rule("maxIf",
       args => s"max(${args(0)}) FILTER (WHERE ${args(1)})")
     // countIf(cond) and countIf(x, cond) — the 2-arg combinator form
     // counts non-NULL x over rows passing cond
-    s = rewriteCall(s, "countIf", args =>
+    rule("countIf", args =>
       if (args.size >= 2) s"count(${args(0)}) FILTER (WHERE ${args(1)})"
       else s"count_if(${args.head})")
     // generic -If combinators beyond the arithmetic four: the LAST
@@ -1882,22 +1854,22 @@ object ChSqlTranslator {
       "anyIf" -> "min", "anyLastIf" -> "max",
       "argMaxIf" -> "max_by", "argMinIf" -> "min_by",
       "groupArrayIf" -> "collect_list", "groupUniqArrayIf" -> "collect_set"))
-      s = rewriteCall(s, ch, args => {
+      rule(ch, args => {
         require(args.size >= 2, s"$ch: needs value args plus a condition")
         s"$spark(${args.init.mkString(", ")}) FILTER (WHERE ${args.last})"
       })
     for (ch <- Seq("uniqIf", "uniqExactIf", "uniqCombinedIf", "uniqHLL12If"))
-      s = rewriteCall(s, ch, args => {
+      rule(ch, args => {
         require(args.size >= 2, s"$ch: needs value args plus a condition")
         s"count(DISTINCT ${args.init.mkString(", ")}) FILTER (WHERE ${args.last})"
       })
     // -Distinct combinator: each value counted once. Identity for
     // min/max; DISTINCT-qualified base for the accumulating aggregates.
-    s = rewriteCall(s, "sumDistinct", args => s"sum(DISTINCT ${args.head})")
-    s = rewriteCall(s, "avgDistinct", args => s"avg(DISTINCT ${args.head})")
-    s = rewriteCall(s, "minDistinct", args => s"min(${args.head})")
-    s = rewriteCall(s, "maxDistinct", args => s"max(${args.head})")
-    s = rewriteCall(s, "groupUniqArrayDistinct",
+    rule("sumDistinct", args => s"sum(DISTINCT ${args.head})")
+    rule("avgDistinct", args => s"avg(DISTINCT ${args.head})")
+    rule("minDistinct", args => s"min(${args.head})")
+    rule("maxDistinct", args => s"max(${args.head})")
+    rule("groupUniqArrayDistinct",
       args => s"collect_set(${args.head})")
     // -Array combinators: the aggregate runs over ALL ELEMENTS of the
     // array arguments across the group. min/max distribute over a
@@ -1907,9 +1879,9 @@ object ChSqlTranslator {
     // are filtered before the fold, matching the base aggregates'
     // NULL-skipping, and an empty array folds to NULL, which the outer
     // aggregate skips — exactly "contributes no elements").
-    s = rewriteCall(s, "minArray",
+    rule("minArray",
       args => s"min(array_min(${args.head}))")
-    s = rewriteCall(s, "maxArray",
+    rule("maxArray",
       args => s"max(array_max(${args.head}))")
     def arrayElemSum(a: String): String = {
       val nn = s"filter($a, __ar_x -> __ar_x IS NOT NULL)"
@@ -1919,33 +1891,33 @@ object ChSqlTranslator {
       s"coalesce(aggregate($nn, try_element_at($nn, 1) * 0, " +
         "(__ar_acc, __ar_v) -> __ar_acc + __ar_v), 0)"
     }
-    s = rewriteCall(s, "sumArray",
+    rule("sumArray",
       args => s"sum(${arrayElemSum(args.head)})")
-    s = rewriteCall(s, "avgArray", args =>
+    rule("avgArray", args =>
       s"(sum(${arrayElemSum(args.head)}) / " +
         s"sum(size(filter(${args.head}, __ar_x -> __ar_x IS NOT NULL))))")
     // uniqArray: distinct elements across the group's arrays — exact
     // (legal instance of the approximate-uniq contract); per-row
     // array_distinct bounds the collected payload at each row's
     // distinct set
-    s = rewriteCall(s, "uniqArray", args =>
+    rule("uniqArray", args =>
       "cast(size(array_distinct(flatten(collect_list(" +
         s"array_distinct(${args.head}))))) as bigint)")
-    s = rewriteCall(s, "uniqExactArray", args =>
+    rule("uniqExactArray", args =>
       "cast(size(array_distinct(flatten(collect_list(" +
         s"array_distinct(${args.head}))))) as bigint)")
     // groupArrayArray: concatenation of the group's arrays (order
     // unspecified under parallel execution in both engines)
-    s = rewriteCall(s, "groupArrayArray",
+    rule("groupArrayArray",
       args => s"flatten(collect_list(${args.head}))")
     // countArray: total element count across the group's arrays
-    s = rewriteCall(s, "countArray",
+    rule("countArray",
       args => s"sum(size(${args.head}))")
     // tuples → structs. tupleElement's index form addresses by POSITION,
     // which Spark SQL text cannot express — the embedded session
     // registers graft_tuple_at (a GetStructField builder); the name form
     // maps to ordinary field access.
-    s = rewriteCall(s, "tupleElement", args => {
+    rule("tupleElement", args => {
       require(args.size == 2,
         "tupleElement: exactly (tuple, index-or-name) is supported")
       val sel = args(1).trim
@@ -1964,20 +1936,20 @@ object ChSqlTranslator {
     // approximate-distinct family members carry the SAME contract
     // ("approximately computes the number of distinct values"), so the
     // exact answer is a legal instance of each — never a silent delta.
-    s = rewriteCall(s, "uniqExact",
+    rule("uniqExact",
       args => s"count(DISTINCT ${args.mkString(", ")})")
-    s = rewriteCall(s, "uniqCombined64",
+    rule("uniqCombined64",
       args => s"count(DISTINCT ${args.mkString(", ")})")
-    s = rewriteCall(s, "uniqCombined",
+    rule("uniqCombined",
       args => s"count(DISTINCT ${args.mkString(", ")})")
-    s = rewriteCall(s, "uniqHLL12",
+    rule("uniqHLL12",
       args => s"count(DISTINCT ${args.mkString(", ")})")
-    s = rewriteCall(s, "uniqTheta",
+    rule("uniqTheta",
       args => s"count(DISTINCT ${args.mkString(", ")})")
-    s = rewriteCall(s, "uniq",
+    rule("uniq",
       args => s"count(DISTINCT ${args.mkString(", ")})")
     // multiIf(c1, v1, ..., [else]) → CASE WHEN chain
-    s = rewriteCall(s, "multiIf", args => {
+    rule("multiIf", args => {
       val pairs = args.grouped(2).toSeq
       val whens = pairs.takeWhile(_.size == 2)
         .map(p => s"WHEN ${p(0)} THEN ${p(1)}").mkString(" ")
@@ -1985,20 +1957,20 @@ object ChSqlTranslator {
       s"(CASE $whens$els END)"
     })
     // empty/notEmpty are polymorphic (strings AND arrays) like length
-    s = rewriteCall(s, "empty", args => s"(graft_length(${args.head}) = 0)")
-    s = rewriteCall(s, "notEmpty", args => s"(graft_length(${args.head}) > 0)")
+    rule("empty", args => s"(graft_length(${args.head}) = 0)")
+    rule("notEmpty", args => s"(graft_length(${args.head}) > 0)")
     // arrayEnumerate(arr) → [1, 2, ..., length] via indexed transform
     // (sequence(1, size(a)) would emit a DESCENDING [1, 0] on empty
     // arrays instead of [])
-    s = rewriteCall(s, "arrayEnumerate",
+    rule("arrayEnumerate",
       args => s"transform(${args.head}, (__ae_x, __ae_i) -> __ae_i + 1)")
     // arrayStringConcat(arr[, sep]) → array_join (server default sep '')
-    s = rewriteCall(s, "arrayStringConcat", args =>
+    rule("arrayStringConcat", args =>
       if (args.size >= 2) s"array_join(${args(0)}, ${args(1)})"
       else s"array_join(${args.head}, '')")
     // arraySlice(arr, offset[, length]) → slice; omitted length = to the
     // end (size() is a safe upper bound in both engines)
-    s = rewriteCall(s, "arraySlice", args =>
+    rule("arraySlice", args =>
       if (args.size >= 3) s"slice(${args(0)}, ${args(1)}, ${args(2)})"
       else s"slice(${args(0)}, ${args(1)}, size(${args(0)}))")
     // AggregatingMergeTree combinators: -State writes produce the
@@ -2006,40 +1978,40 @@ object ChSqlTranslator {
     // -Merge reads combine partial states. avg keeps exact integer
     // sum/count (single-division rational on read — hash-stable);
     // uniq is exact over xxhash64 values.
-    s = rewriteCall(s, "avgState",
+    rule("avgState",
       args => s"named_struct('s', sum(${args.head}), 'c', count(${args.head}))")
-    s = rewriteCall(s, "avgMerge",
+    rule("avgMerge",
       args => s"(sum((${args.head}).s) / sum((${args.head}).c))")
-    s = rewriteCall(s, "uniqState",
+    rule("uniqState",
       args => s"collect_set(xxhash64(${args.head})) " +
         s"FILTER (WHERE (${args.head}) IS NOT NULL)")
-    s = rewriteCall(s, "uniqExactState",
+    rule("uniqExactState",
       args => s"collect_set(xxhash64(${args.head})) " +
         s"FILTER (WHERE (${args.head}) IS NOT NULL)")
-    s = rewriteCall(s, "uniqMerge",
+    rule("uniqMerge",
       args => s"cast(size(array_distinct(flatten(collect_list(${args.head})))) as bigint)")
-    s = rewriteCall(s, "uniqExactMerge",
+    rule("uniqExactMerge",
       args => s"cast(size(array_distinct(flatten(collect_list(${args.head})))) as bigint)")
-    s = rewriteCall(s, "sumState", args => s"sum(${args.head})")
-    s = rewriteCall(s, "sumMerge", args => s"sum(${args.head})")
-    s = rewriteCall(s, "countState",
+    rule("sumState", args => s"sum(${args.head})")
+    rule("sumMerge", args => s"sum(${args.head})")
+    rule("countState",
       args => if (args.isEmpty) "count(1)" else s"count(${args.head})")
-    s = rewriteCall(s, "countMerge", args => s"sum(${args.head})")
-    s = rewriteCall(s, "minState", args => s"min(${args.head})")
-    s = rewriteCall(s, "minMerge", args => s"min(${args.head})")
-    s = rewriteCall(s, "maxState", args => s"max(${args.head})")
-    s = rewriteCall(s, "maxMerge", args => s"max(${args.head})")
+    rule("countMerge", args => s"sum(${args.head})")
+    rule("minState", args => s"min(${args.head})")
+    rule("minMerge", args => s"min(${args.head})")
+    rule("maxState", args => s"max(${args.head})")
+    rule("maxMerge", args => s"max(${args.head})")
     // anyState: the server keeps "any one" value — min is a legal any,
     // reproducibly (same rule as the Summing non-summed columns)
-    s = rewriteCall(s, "anyState", args => s"min(${args.head})")
-    s = rewriteCall(s, "anyMerge", args => s"min(${args.head})")
+    rule("anyState", args => s"min(${args.head})")
+    rule("anyMerge", args => s"min(${args.head})")
     // parameterized aggregate: quantileExactInclusive(p)(x) →
     // percentile(x, p) (percentile_cont semantics in both)
-    s = rewriteParamCall(s, "quantileExactInclusive",
+    paramRule("quantileExactInclusive",
       (params, args) => s"percentile(${args.head}, ${params.head})")
     // plural form: quantilesExactInclusive(p1, p2, ...)(x) → one
     // percentile call with an array of fractions (single sort, array out)
-    s = rewriteParamCall(s, "quantilesExactInclusive",
+    paramRule("quantilesExactInclusive",
       (params, args) =>
         s"percentile(${args.head}, array(${params.mkString(", ")}))")
     // Exact nearest-rank quantiles — full materialization per group,
@@ -2088,34 +2060,34 @@ object ChSqlTranslator {
         s"($h - $k) * (CAST(element_at($sorted, $k + 1) AS DOUBLE) - " +
         s"CAST(element_at($sorted, $k) AS DOUBLE)) END"
     }
-    s = rewriteParamCall(s, "quantilesExactExclusive", (params, args) =>
+    paramRule("quantilesExactExclusive", (params, args) =>
       s"array(${params.map(p => exactExclusive(args.head, p)).mkString(", ")})")
-    s = rewriteParamCall(s, "quantilesExactHigh", (params, args) =>
+    paramRule("quantilesExactHigh", (params, args) =>
       s"array(${params.map(p => exactDefaultRank(args.head, p)).mkString(", ")})")
-    s = rewriteParamCall(s, "quantilesExactLow", (params, args) =>
+    paramRule("quantilesExactLow", (params, args) =>
       s"array(${params.map(p => exactLowRank(args.head, p)).mkString(", ")})")
-    s = rewriteParamCall(s, "quantilesExact", (params, args) =>
+    paramRule("quantilesExact", (params, args) =>
       s"array(${params.map(p => exactDefaultRank(args.head, p)).mkString(", ")})")
-    s = rewriteParamCall(s, "quantileExactExclusive",
+    paramRule("quantileExactExclusive",
       (params, args) => exactExclusive(args.head, params.head))
-    s = rewriteParamCall(s, "quantileExactHigh",
+    paramRule("quantileExactHigh",
       (params, args) => exactDefaultRank(args.head, params.head))
-    s = rewriteParamCall(s, "quantileExactLow",
+    paramRule("quantileExactLow",
       (params, args) => exactLowRank(args.head, params.head))
-    s = rewriteParamCall(s, "quantileExact",
+    paramRule("quantileExact",
       (params, args) => exactDefaultRank(args.head, params.head))
-    s = rewriteCall(s, "medianExact", args => exactDefaultRank(args.head, "0.5"))
+    rule("medianExact", args => exactDefaultRank(args.head, "0.5"))
     // higher-moment family, closed forms over Spark's population
     // statistics (ClickHouse: kurtPop = µ4/σ⁴ NON-excess, Spark's
     // kurtosis is the EXCESS form; the *Samp variants divide the same
     // population central moment by the UNBIASED σ — the ratio
     // (varPop/varSamp)^(k/2) converts). n=1 groups: Spark yields NULL
     // where a server yields nan — both "no answer", never a value lie.
-    s = rewriteCall(s, "kurtPop", args => s"(kurtosis(${args.head}) + 3.0)")
-    s = rewriteCall(s, "skewSamp", args =>
+    rule("kurtPop", args => s"(kurtosis(${args.head}) + 3.0)")
+    rule("skewSamp", args =>
       s"(skewness(${args.head}) * " +
         s"pow(var_pop(${args.head}) / var_samp(${args.head}), 1.5))")
-    s = rewriteCall(s, "kurtSamp", args =>
+    rule("kurtSamp", args =>
       s"((kurtosis(${args.head}) + 3.0) * " +
         s"pow(var_pop(${args.head}) / var_samp(${args.head}), 2.0))")
     // topK(k)(x) / topKWeighted(k)(x, w): exact frequency ranking via the
@@ -2125,11 +2097,11 @@ object ChSqlTranslator {
     // load_factor/counted_rate extra parameters are sketch-accuracy
     // tuning with no exact-result meaning — dropped like the
     // performance-identity SETTINGS.
-    s = rewriteParamCall(s, "topKWeighted", (params, args) => {
+    paramRule("topKWeighted", (params, args) => {
       require(args.size == 2, "topKWeighted(k)(x, weight)")
       s"graft_topk_w(${args(0)}, ${args(1)}, ${params.head})"
     })
-    s = rewriteParamCall(s, "topK", (params, args) => {
+    paramRule("topK", (params, args) => {
       require(args.size == 1, "topK(k)(x)")
       s"graft_topk(${args.head}, ${params.head})"
     })
@@ -2138,7 +2110,7 @@ object ChSqlTranslator {
     // server algorithm — laws in ChWindowFunnel's scaladoc); unknown
     // mode strings reject loudly there, never a silent default-mode
     // answer for a strict-mode question.
-    s = rewriteParamCall(s, "windowFunnel", (params, args) => {
+    paramRule("windowFunnel", (params, args) => {
       require(params.nonEmpty, "windowFunnel(window[, mode...])(ts, cond...)")
       val w = params.head.trim
       require(raw"^\d+$$".r.findFirstIn(w).isDefined,
@@ -2154,7 +2126,7 @@ object ChSqlTranslator {
     // sequenceMatch(pattern)(ts, cond...): the subsequence-expressible
     // pattern subset — laws and the supported token set live in
     // ChSequenceMatch's scaladoc; unsupported tokens reject there
-    s = rewriteParamCall(s, "sequenceMatch", (params, args) => {
+    paramRule("sequenceMatch", (params, args) => {
       require(params.size == 1, "sequenceMatch('pattern')(ts, cond...)")
       stringLiteral(params.head).getOrElse(
         throw new IllegalArgumentException(
@@ -2164,7 +2136,7 @@ object ChSqlTranslator {
     })
     // sequenceCount: the same pattern subset, counting NON-OVERLAPPING
     // matches (a completed chain resets the search after its last event)
-    s = rewriteParamCall(s, "sequenceCount", (params, args) => {
+    paramRule("sequenceCount", (params, args) => {
       require(params.size == 1, "sequenceCount('pattern')(ts, cond...)")
       stringLiteral(params.head).getOrElse(
         throw new IllegalArgumentException(
@@ -2178,7 +2150,7 @@ object ChSqlTranslator {
     // folds for integral values)
     for ((ch, fn) <- Seq("sumMap" -> "graft_summap",
       "minMap" -> "graft_minmap", "maxMap" -> "graft_maxmap"))
-      s = rewriteCall(s, ch, args => args.size match {
+      rule(ch, args => args.size match {
         case 2 => s"$fn(${args(0)}, ${args(1)})"
         // the 1-argument MAP form is the same fold over the map's
         // key/value arrays
@@ -2189,7 +2161,7 @@ object ChSqlTranslator {
     // retention(cond1, ..., condN): r1 = cond1 held on some row;
     // r_i = cond1 held AND cond_i held (independent rows — the
     // documented law), as an array of 0/1
-    s = rewriteCall(s, "retention", args => {
+    rule("retention", args => {
       require(args.nonEmpty && args.size <= 32,
         "retention takes 1 to 32 conditions")
       def hit(c: String): String = s"max(CASE WHEN $c THEN 1 ELSE 0 END)"
@@ -2200,7 +2172,7 @@ object ChSqlTranslator {
     // uniqUpTo(N)(x...): the EXACT count when ≤ N, else N + 1 — that
     // IS the documented law, so the capped exact count is not an
     // approximation stand-in
-    s = rewriteParamCall(s, "uniqUpTo", (params, args) => {
+    paramRule("uniqUpTo", (params, args) => {
       require(params.size == 1, "uniqUpTo(N)(x...)")
       val n = params.head.trim
       require(raw"^\d+$$".r.findFirstIn(n).isDefined,
@@ -2212,133 +2184,49 @@ object ChSqlTranslator {
     // server): the contract is "computes an approximate quantile", so the
     // EXACT interpolated percentile is a legal instance (the uniq rule);
     // deterministic here where the server's sampling is not
-    s = rewriteParamCall(s, "quantiles", (params, args) =>
+    paramRule("quantiles", (params, args) =>
       s"percentile(${args.head}, array(${params.mkString(", ")}))")
-    s = rewriteParamCall(s, "quantile",
+    paramRule("quantile",
       (params, args) => s"percentile(${args.head}, ${params.head})")
-    s = rewriteCall(s, "median", args => s"percentile(${args.head}, 0.5)")
+    rule("median", args => s"percentile(${args.head}, 0.5)")
     // lagInFrame/leadInFrame → lag/lead; Spark REJECTS an explicit frame
     // on offset functions, so the forced full frame our unparser emits is
     // stripped from the OVER clause that follows
-    s = rewriteCall(s, "lagInFrame", args => s"lag(${args.mkString(", ")})")
-    s = rewriteCall(s, "leadInFrame", args => s"lead(${args.mkString(", ")})")
-    s = stripOffsetFrames(s)
-    s
+    rule("lagInFrame", args => s"lag(${args.mkString(", ")})")
+    rule("leadInFrame", args => s"lead(${args.mkString(", ")})")
+    b.result()
   }
 
   private val FullFrame = " ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING"
 
   /** Remove the frame clause from the OVER spec directly following a
-    * lag()/lead() call (balanced-paren aware; other windows keep theirs).
+    * lag()/lead() call (other windows keep theirs).
     */
-  private def stripOffsetFrames(in: String): String = {
-    var s = in
-    for (fn <- Seq("lag", "lead")) {
-      val out = new StringBuilder
-      var i = 0
-      val pat = fn + "("
-      while (i < s.length) {
-        val at = s.indexOf(pat, i)
-        val boundaryOk = at >= 0 &&
-          (at == 0 || !(s.charAt(at - 1).isLetterOrDigit || s.charAt(at - 1) == '_'))
-        if (at < 0) { out.append(s.substring(i)); i = s.length }
-        else if (!boundaryOk) {
-          out.append(s.substring(i, at + pat.length)); i = at + pat.length
-        } else {
-          val (callEnd, _) = skipBalanced(s, at + pat.length)
-          out.append(s.substring(i, callEnd))
-          i = callEnd
-          val overPrefix = " OVER ("
-          if (s.regionMatches(true, i, overPrefix, 0, overPrefix.length)) {
-            val (overEnd, overBody) = skipBalanced(s, i + overPrefix.length)
-            out.append(" OVER (").append(overBody.replace(FullFrame, "")).append(")")
-            i = overEnd
-          }
-        }
-      }
-      s = out.result()
-    }
-    s
-  }
-
-  /** From just after an opening '(', return (index past the matching ')',
-    * the body between the parens) — quote-aware.
-    */
-  private def skipBalanced(s: String, start: Int): (Int, String) = {
-    var depth = 1
-    var i = start
-    var inStr = false
-    while (i < s.length && depth > 0) {
-      val c = s.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else c match {
-        case '\'' => inStr = true
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case _ => ()
-      }
-      i += 1
-    }
-    (i, s.substring(start, i - 1))
-  }
-
-  /** Rewrite ClickHouse parameterized-aggregate syntax
-    * `name(params...)(args...)` via `f(params, args)` (both groups
-    * balanced-paren parsed). Calls without the second group pass through.
-    */
-  private def rewriteParamCall(
-      s: String, name: String, f: (Seq[String], Seq[String]) => String): String = {
+  private def stripOffsetFrames(s: String): String = {
+    if (!s.contains(FullFrame)) return s
     val out = new StringBuilder
-    var i = 0
-    val pat = name + "("
-    while (i < s.length) {
-      val at = s.indexOf(pat, i)
-      val boundaryOk = at >= 0 &&
-        (at == 0 || !(s.charAt(at - 1).isLetterOrDigit || s.charAt(at - 1) == '_'))
-      if (at < 0) { out.append(s.substring(i)); i = s.length }
-      else if (!boundaryOk) { out.append(s.substring(i, at + pat.length)); i = at + pat.length }
-      else {
-        out.append(s.substring(i, at))
-        val (params, afterParams) = parseArgs(s, at + pat.length)
-        if (afterParams < s.length && s.charAt(afterParams) == '(') {
-          val (args, end) = parseArgs(s, afterParams + 1)
-          out.append(f(params, args))
-          i = end
-        } else {
-          out.append(s.substring(at, afterParams))
-          i = afterParams
+    val lx = new ChLex(s)
+    var copied = 0
+    val overPrefix = " OVER ("
+    while (lx.next()) {
+      if (lx.kind == ChLex.Word && (lx.token == "lag" || lx.token == "lead") &&
+        lx.end < s.length && s.charAt(lx.end) == '(') {
+        val callEnd = ChLex.closeOf(s, lx.end)
+        val overEnd =
+          if (callEnd > 0 && s.regionMatches(true, callEnd, overPrefix, 0, overPrefix.length))
+            ChLex.closeOf(s, callEnd + overPrefix.length - 1)
+          else -1
+        if (overEnd > 0) {
+          val bodyAt = callEnd + overPrefix.length
+          out.append(s.substring(copied, bodyAt))
+            .append(s.substring(bodyAt, overEnd - 1).replace(FullFrame, ""))
+            .append(')')
+          copied = overEnd
+          lx.seek(overEnd)
         }
       }
     }
-    out.result()
-  }
-
-  /** Rewrite every `name(args...)` call via `f(topLevelArgs)`, handling
-    * nested parens/quotes in the arguments.
-    */
-  private def rewriteCall(s: String, name: String, f: Seq[String] => String): String = {
-    val out = new StringBuilder
-    var i = 0
-    val pat = name + "("
-    while (i < s.length) {
-      val at = s.indexOf(pat, i)
-      val boundaryOk = at >= 0 &&
-        (at == 0 || !(s.charAt(at - 1).isLetterOrDigit || s.charAt(at - 1) == '_'))
-      if (at < 0) { out.append(s.substring(i)); i = s.length }
-      else if (!boundaryOk) { out.append(s.substring(i, at + pat.length)); i = at + pat.length }
-      else {
-        out.append(s.substring(i, at))
-        val (args, end) = parseArgs(s, at + pat.length)
-        // recurse into the parsed arguments FIRST: the outer call's
-        // region swallows any same-name call nested inside it (e.g.
-        // CAST(x AS Float64) inside a lambda under an outer CAST), and
-        // the left-to-right scan resumes past it — the inner call would
-        // otherwise reach Spark untranslated
-        out.append(f(args.map(a => rewriteCall(a, name, f))))
-        i = end
-      }
-    }
-    out.result()
+    out.append(s.substring(copied)).result()
   }
 
   /** A parsed top-level `LIMIT n [OFFSET o] BY exprs` clause
@@ -2358,32 +2246,17 @@ object ChSqlTranslator {
   /** Positions of top-level (outside parens/quotes) word-boundary
     * occurrences of `word` (case-insensitive).
     */
-  private[client] def topLevelPositions(sql: String, word: String): Seq[Int] = {
+  private[client] def topLevelPositions(sql: String, word: String): Seq[Int] =
+    wordPositions(sql, word, topLevel = true)
+
+  /** Word-boundary positions of `word` outside string/backtick quotes,
+    * at paren depth 0 only or at any depth.
+    */
+  private def wordPositions(sql: String, word: String, topLevel: Boolean): Seq[Int] = {
     val out = Seq.newBuilder[Int]
-    var depth = 0
-    var inSq = false
-    var inBq = false
-    var i = 0
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (inSq) { if (c == '\\') i += 1 else if (c == '\'') inSq = false }
-      else if (inBq) { if (c == '`') inBq = false }
-      else c match {
-        case '\'' => inSq = true
-        case '`' => inBq = true
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case _ =>
-          if (depth == 0 &&
-            (i == 0 || !(sql.charAt(i - 1).isLetterOrDigit || sql.charAt(i - 1) == '_')) &&
-            sql.regionMatches(true, i, word, 0, word.length) &&
-            (i + word.length >= sql.length ||
-              !(sql.charAt(i + word.length).isLetterOrDigit ||
-                sql.charAt(i + word.length) == '_')))
-            out += i
-      }
-      i += 1
-    }
+    val lx = new ChLex(sql)
+    while (lx.next())
+      if ((!topLevel || lx.depth == 0) && lx.isWord(word)) out += lx.start
     out.result()
   }
 
@@ -2405,53 +2278,29 @@ object ChSqlTranslator {
     */
   private def injectNullOrder(in: String): String = {
     val out = new StringBuilder
-    var i = 0
-    var inSq = false
-    var inBq = false
-    def wordAt(at: Int, w: String): Boolean =
-      (at == 0 || !(in.charAt(at - 1).isLetterOrDigit || in.charAt(at - 1) == '_')) &&
-        in.regionMatches(true, at, w, 0, w.length) &&
-        (at + w.length >= in.length ||
-          !(in.charAt(at + w.length).isLetterOrDigit || in.charAt(at + w.length) == '_'))
-    while (i < in.length) {
-      val c = in.charAt(i)
-      if (inSq) { out.append(c); if (c == '\\') { if (i + 1 < in.length) { out.append(in.charAt(i + 1)); i += 1 } } else if (c == '\'') inSq = false; i += 1 }
-      else if (inBq) { out.append(c); if (c == '`') inBq = false; i += 1 }
-      else if (c == '\'') { inSq = true; out.append(c); i += 1 }
-      else if (c == '`') { inBq = true; out.append(c); i += 1 }
-      else if (wordAt(i, "ORDER")) {
-        var j = i + 5
-        while (j < in.length && in.charAt(j).isWhitespace) j += 1
-        if (wordAt(j, "BY")) {
-          out.append(in.substring(i, j + 2))
-          i = j + 2
-          // parse comma-separated items at this nesting level
+    val lx = new ChLex(in)
+    var copied = 0
+    while (lx.next()) {
+      if (lx.isWord("ORDER")) {
+        val by = ChLex.after(in, lx.end)
+        if (by.isWord("BY")) {
+          lx.seek(by.end)
+          // comma-separated items at this nesting level
+          val base = lx.depth
+          var itemStart = by.end
           var listDone = false
           while (!listDone) {
-            val item = new StringBuilder
-            var rel = 0
-            var itemDone = false
-            var sep: Option[Char] = None
-            var sq = false; var bq = false
-            while (!itemDone && i < in.length) {
-              val ch = in.charAt(i)
-              if (sq) { item.append(ch); if (ch == '\\') { if (i + 1 < in.length) { item.append(in.charAt(i + 1)); i += 1 } } else if (ch == '\'') sq = false; i += 1 }
-              else if (bq) { item.append(ch); if (ch == '`') bq = false; i += 1 }
-              else if (ch == '\'') { sq = true; item.append(ch); i += 1 }
-              else if (ch == '`') { bq = true; item.append(ch); i += 1 }
-              else if (ch == '(') { rel += 1; item.append(ch); i += 1 }
-              else if (ch == ')') {
-                if (rel == 0) { itemDone = true; listDone = true } // OVER(...) closes
-                else { rel -= 1; item.append(ch); i += 1 }
+            var itemEnd = -1
+            var sep = false
+            while (itemEnd < 0 && lx.next()) {
+              if (lx.depth < base) { itemEnd = lx.start; listDone = true } // OVER(...) closes
+              else if (lx.depth == base && lx.isPunct(',')) { itemEnd = lx.start; sep = true }
+              else if (lx.depth == base && OrderEnders.exists(lx.isWord)) {
+                itemEnd = lx.start; listDone = true
               }
-              else if (ch == ',' && rel == 0) { itemDone = true; sep = Some(','); i += 1 }
-              else if (rel == 0 && OrderEnders.exists(wordAt(i, _))) {
-                itemDone = true; listDone = true
-              }
-              else { item.append(ch); i += 1 }
             }
-            if (i >= in.length) { itemDone = true; listDone = true }
-            val raw0 = item.result()
+            if (itemEnd < 0) { itemEnd = in.length; listDone = true }
+            val raw0 = in.substring(itemStart, itemEnd)
             val trimmedEnd = raw0.replaceAll("\\s+$", "")
             val trailingWs = raw0.substring(trimmedEnd.length)
             val fixed =
@@ -2460,15 +2309,15 @@ object ChSqlTranslator {
               else if (DescTail.findFirstIn(trimmedEnd).isDefined)
                 trimmedEnd + " NULLS FIRST"
               else trimmedEnd + " NULLS LAST"
-            out.append(fixed).append(trailingWs)
-            sep.foreach(out.append(_))
-            if (sep.isEmpty) listDone = true
+            out.append(in.substring(copied, itemStart)).append(fixed).append(trailingWs)
+            copied = itemEnd
+            itemStart = itemEnd + 1
+            if (!sep) listDone = true
           }
-        } else { out.append(c); i += 1 }
+        }
       }
-      else { out.append(c); i += 1 }
     }
-    out.result()
+    out.append(in.substring(copied)).result()
   }
 
   // ---- ASOF JOIN → Spark rewrite (the embedded model of the server's
@@ -2692,39 +2541,19 @@ object ChSqlTranslator {
     require(j >= 0 && s.charAt(j) == ')',
       "PASTE JOIN: both sides must be parenthesized subqueries with " +
         "their own ORDER BY")
-    var d = 1
-    var k = j - 1
-    var sq = false
-    while (k >= 0 && d > 0) {
-      val c = s.charAt(k)
-      if (sq) { if (c == '\'') sq = false }
-      else if (c == '\'') sq = true
-      else if (c == ')') d += 1
-      else if (c == '(') d -= 1
-      if (d > 0) k -= 1
-    }
+    val k = ChLex.openOf(s, j)
     require(k > fromPos, "PASTE JOIN: unbalanced left subquery parens")
     val leftInner = s.substring(k + 1, j)
     require(s.substring(fromPos + 4, k).trim.isEmpty,
       "PASTE JOIN: the left side must be a single parenthesized subquery")
     // right side after the JOIN keyword
     val m = raw"(?is)^PASTE\s+JOIN\s*".r.findFirstMatchIn(s.substring(at)).get
-    var r = at + m.end
+    val r = at + m.end
     require(r < s.length && s.charAt(r) == '(',
       "PASTE JOIN: both sides must be parenthesized subqueries with " +
         "their own ORDER BY")
-    var rd = 1
-    var rc = r + 1
-    sq = false
-    while (rc < s.length && rd > 0) {
-      val c = s.charAt(rc)
-      if (sq) { if (c == '\\') rc += 1 else if (c == '\'') sq = false }
-      else if (c == '\'') sq = true
-      else if (c == '(') rd += 1
-      else if (c == ')') rd -= 1
-      if (rd > 0) rc += 1
-    }
-    require(rd == 0, "PASTE JOIN: unbalanced right subquery parens")
+    val rc = ChLex.closeOf(s, r) - 1
+    require(rc > r, "PASTE JOIN: unbalanced right subquery parens")
     val rightInner = s.substring(r + 1, rc)
     var p = rc + 1
     while (p < s.length && s.charAt(p).isWhitespace) p += 1
@@ -2898,23 +2727,9 @@ object ChSqlTranslator {
     * lambda bodies sit inside parens), or -1.
     */
   private def lastTopLevelAs(it: String): Int = {
-    var p = 0; var d = 0; var sq = false; var bq = false; var asAt = -1
-    while (p < it.length) {
-      val c = it.charAt(p)
-      if (sq) { if (c == '\\') p += 1 else if (c == '\'') sq = false }
-      else if (bq) { if (c == '`') bq = false }
-      else c match {
-        case '\'' => sq = true
-        case '`' => bq = true
-        case '(' => d += 1
-        case ')' => d -= 1
-        case _ if d == 0 && (p == 0 || !isWordChar(it.charAt(p - 1))) &&
-          it.regionMatches(true, p, "AS", 0, 2) &&
-          (p + 2 >= it.length || !isWordChar(it.charAt(p + 2))) => asAt = p
-        case _ =>
-      }
-      p += 1
-    }
+    var asAt = -1
+    val lx = new ChLex(it)
+    while (lx.next()) if (lx.depth == 0 && lx.isWord("AS")) asAt = lx.start
     asAt
   }
 
@@ -2940,38 +2755,10 @@ object ChSqlTranslator {
     val w = topLevelPositions(sql, "WITH").find(_ < sel).getOrElse(return sql)
     val itemsTxt = sql.substring(w + 4, sel)
     // split items on top-level commas
-    val items = {
-      var p = 0; var d = 0; var sq = false; var bq = false; var last = 0
-      val out = Seq.newBuilder[String]
-      while (p < itemsTxt.length) {
-        val c = itemsTxt.charAt(p)
-        if (sq) { if (c == '\\') p += 1 else if (c == '\'') sq = false }
-        else if (bq) { if (c == '`') bq = false }
-        else c match {
-          case '\'' => sq = true
-          case '`' => bq = true
-          case '(' => d += 1
-          case ')' => d -= 1
-          case ',' if d == 0 => out += itemsTxt.substring(last, p); last = p + 1
-          case _ =>
-        }
-        p += 1
-      }
-      out += itemsTxt.substring(last)
-      out.result().map(_.trim).filter(_.nonEmpty)
-    }
+    val items = parseArgs(itemsTxt + ")", 0)._1
     var subs = Seq.empty[(String, String)]
     def applySubs(text: String): String = subs.foldLeft(text) {
-      case (acc, (name, repl)) =>
-        mapOutsideStrings(acc) { seg =>
-          // even split indexes sit outside backticks
-          seg.split("`", -1).zipWithIndex.map { case (part, idx) =>
-            if (idx % 2 != 0) part
-            else part.replaceAll(
-              raw"(?<![.\w])" + java.util.regex.Pattern.quote(name) + raw"(?![\w(])",
-              java.util.regex.Matcher.quoteReplacement(repl))
-          }.mkString("`")
-        }
+      case (acc, (name, repl)) => replaceRefs(acc, name, repl)
     }
     val kept = items.flatMap { it =>
       val asAt = lastTopLevelAs(it)
@@ -2995,6 +2782,24 @@ object ChSqlTranslator {
     val head = sql.substring(0, w)
     if (kept.isEmpty) head + rest
     else head + "WITH " + kept.map(applySubs).mkString(", ") + " " + rest
+  }
+
+  /** Every bare `name` reference in `text` → `repl`: whole words
+    * outside quotes, never after `.` (qualified columns) or before `(`
+    * (calls).
+    */
+  private def replaceRefs(text: String, name: String, repl: String): String = {
+    val out = new StringBuilder
+    val lx = new ChLex(text)
+    var copied = 0
+    while (lx.next())
+      if (lx.kind == ChLex.Word && lx.token == name &&
+        !(lx.start > 0 && text.charAt(lx.start - 1) == '.') &&
+        !(lx.end < text.length && text.charAt(lx.end) == '(')) {
+        out.append(text.substring(copied, lx.start)).append(repl)
+        copied = lx.end
+      }
+    out.append(text.substring(copied)).result()
   }
 
   // ---- ARRAY JOIN clause → LATERAL VIEW chain ------------------------
@@ -3030,29 +2835,15 @@ object ChSqlTranslator {
 
   private def rewriteArrayJoinFrom(sql: String, k: Int): String = {
     // locate the first ARRAY JOIN outside strings/backticks
-    var i = 0; var inSq = false; var inBq = false; var depth = 0
+    val lx = new ChLex(sql)
     var found = -1; var foundDepth = 0
     var lastSelAtDepth = Map[Int, Int]()
-    while (i < sql.length && found < 0) {
-      val c = sql.charAt(i)
-      if (inSq) { if (c == '\\') i += 1 else if (c == '\'') inSq = false }
-      else if (inBq) { if (c == '`') inBq = false }
-      else c match {
-        case '\'' => inSq = true
-        case '`' => inBq = true
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case _ =>
-          val boundary = i == 0 || !isWordChar(sql.charAt(i - 1))
-          if (boundary && sql.regionMatches(true, i, "SELECT", 0, 6) &&
-            (i + 6 >= sql.length || !isWordChar(sql.charAt(i + 6))))
-            lastSelAtDepth += depth -> i
-          if (boundary && sql.regionMatches(true, i, "ARRAY", 0, 5) &&
-            raw"(?is)^ARRAY\s+JOIN\b".r.findFirstIn(sql.substring(i)).isDefined) {
-            found = i; foundDepth = depth
-          }
+    while (found < 0 && lx.next()) {
+      if (lx.isWord("SELECT")) lastSelAtDepth += lx.depth -> lx.start
+      else if (lx.isWord("ARRAY") &&
+        raw"(?is)^ARRAY\s+JOIN\b".r.findFirstIn(sql.substring(lx.start)).isDefined) {
+        found = lx.start; foundDepth = lx.depth
       }
-      i += 1
     }
     if (found < 0) return sql
     // LEFT / INNER prefix (INNER ARRAY JOIN == ARRAY JOIN)
@@ -3067,24 +2858,10 @@ object ChSqlTranslator {
     lastSelAtDepth.get(foundDepth).foreach { selAt =>
       // the owning FROM is the first one at the SELECT's own depth (a
       // scalar subquery in the select list carries its own, deeper FROM)
-      var p = selAt + 6; var d = 0; var s2 = false; var b2 = false
+      val sl = new ChLex(sql.substring(0, found), selAt + 6)
       var selEnd = found
-      while (p < found && selEnd == found) {
-        val c = sql.charAt(p)
-        if (s2) { if (c == '\\') p += 1 else if (c == '\'') s2 = false }
-        else if (b2) { if (c == '`') b2 = false }
-        else c match {
-          case '\'' => s2 = true
-          case '`' => b2 = true
-          case '(' => d += 1
-          case ')' => d -= 1
-          case _ if d == 0 && !isWordChar(sql.charAt(p - 1)) &&
-            sql.regionMatches(true, p, "FROM", 0, 4) &&
-            (p + 4 >= sql.length || !isWordChar(sql.charAt(p + 4))) => selEnd = p
-          case _ =>
-        }
-        p += 1
-      }
+      while (selEnd == found && sl.next())
+        if (sl.depth == 0 && sl.isWord("FROM")) selEnd = sl.start
       if (hasTopLevelStar(sql.substring(selAt + 6, selEnd)))
         throw new IllegalArgumentException(
           "ARRAY JOIN with a `*` select is not supported by the embedded " +
@@ -3094,36 +2871,21 @@ object ChSqlTranslator {
     val itemsStart =
       found + raw"(?is)^ARRAY\s+JOIN\b".r.findFirstMatchIn(sql.substring(found)).get.end
     // items run to the next clause keyword / closing paren at this level
-    var j = itemsStart; var rel = 0; var sq = false; var bq = false
+    val il = new ChLex(sql, itemsStart)
     var itemsEnd = sql.length
     val commas = Seq.newBuilder[Int]
-    while (j < sql.length && itemsEnd == sql.length) {
-      val c = sql.charAt(j)
-      if (sq) { if (c == '\\') j += 1 else if (c == '\'') sq = false }
-      else if (bq) { if (c == '`') bq = false }
-      else c match {
-        case '\'' => sq = true
-        case '`' => bq = true
-        case '(' => rel += 1
-        case ')' =>
-          rel -= 1; if (rel < 0) itemsEnd = j
-        case ',' if rel == 0 => commas += j
-        case _ if rel == 0 && (j == itemsStart || !isWordChar(sql.charAt(j - 1))) =>
-          val kw = AjEnders.find(w =>
-            sql.regionMatches(true, j, w, 0, w.length) &&
-              (j + w.length >= sql.length || !isWordChar(sql.charAt(j + w.length))))
-          kw.foreach { w =>
-            // LEFT(/RIGHT( are string functions, not clause starts
-            val fnLike = (w == "LEFT" || w == "RIGHT") && {
-              var p = j + w.length
-              while (p < sql.length && sql.charAt(p).isWhitespace) p += 1
-              p < sql.length && sql.charAt(p) == '('
-            }
-            if (!fnLike) itemsEnd = j
-          }
-        case _ =>
+    while (itemsEnd == sql.length && il.next()) {
+      if (il.depth < 0) itemsEnd = il.start
+      else if (il.depth == 0 && il.isPunct(',')) commas += il.start
+      else if (il.depth == 0 && AjEnders.exists(il.isWord)) {
+        // LEFT(/RIGHT( are string functions, not clause starts
+        val fnLike = (il.isWord("LEFT") || il.isWord("RIGHT")) && {
+          var p = il.end
+          while (p < sql.length && sql.charAt(p).isWhitespace) p += 1
+          p < sql.length && sql.charAt(p) == '('
+        }
+        if (!fnLike) itemsEnd = il.start
       }
-      j += 1
     }
     val itemsTxt = sql.substring(itemsStart, itemsEnd)
     val cuts = (Seq(itemsStart - 1) ++ commas.result() ++ Seq(itemsEnd))
@@ -3134,23 +2896,7 @@ object ChSqlTranslator {
     val parsed = items.map { it =>
       // the alias is the LAST top-level ` AS ` binding (CAST(x AS T) and
       // lambda bodies sit inside parens)
-      var p = 0; var d = 0; var s2 = false; var b2 = false; var asAt = -1
-      while (p < it.length) {
-        val c = it.charAt(p)
-        if (s2) { if (c == '\\') p += 1 else if (c == '\'') s2 = false }
-        else if (b2) { if (c == '`') b2 = false }
-        else c match {
-          case '\'' => s2 = true
-          case '`' => b2 = true
-          case '(' => d += 1
-          case ')' => d -= 1
-          case _ if d == 0 && (p == 0 || !isWordChar(it.charAt(p - 1))) &&
-            it.regionMatches(true, p, "AS", 0, 2) &&
-            (p + 2 >= it.length || !isWordChar(it.charAt(p + 2))) => asAt = p
-          case _ =>
-        }
-        p += 1
-      }
+      val asAt = lastTopLevelAs(it)
       if (asAt < 0)
         throw new IllegalArgumentException(
           s"ARRAY JOIN item '$it' has no AS alias: an unaliased ARRAY " +
@@ -3186,41 +2932,8 @@ object ChSqlTranslator {
     */
   private def rewriteAsofLevel(sql: String): String = {
     val asofs = topLevelPositions(sql, "ASOF")
-    if (asofs.isEmpty) {
-      // recurse into top-level paren groups
-      val out = new StringBuilder
-      var i = 0
-      var inSq = false
-      var inBq = false
-      while (i < sql.length) {
-        val c = sql.charAt(i)
-        if (inSq) { out.append(c); if (c == '\\' && i + 1 < sql.length) { out.append(sql.charAt(i + 1)); i += 1 } else if (c == '\'') inSq = false; i += 1 }
-        else if (inBq) { out.append(c); if (c == '`') inBq = false; i += 1 }
-        else if (c == '\'') { inSq = true; out.append(c); i += 1 }
-        else if (c == '`') { inBq = true; out.append(c); i += 1 }
-        else if (c == '(') {
-          // find matching close, quote-aware
-          var depth = 1; var j = i + 1; var sq = false; var bq = false
-          while (j < sql.length && depth > 0) {
-            val ch = sql.charAt(j)
-            if (sq) { if (ch == '\\') j += 1 else if (ch == '\'') sq = false }
-            else if (bq) { if (ch == '`') bq = false }
-            else ch match {
-              case '\'' => sq = true
-              case '`' => bq = true
-              case '(' => depth += 1
-              case ')' => depth -= 1
-              case _ =>
-            }
-            j += 1
-          }
-          out.append('(').append(rewriteAsofLevel(sql.substring(i + 1, j - 1))).append(')')
-          i = j
-        }
-        else { out.append(c); i += 1 }
-      }
-      return out.result()
-    }
+    // none at this level: recurse into top-level paren groups
+    if (asofs.isEmpty) return mapTopLevelParens(sql)(rewriteAsofLevel)
     require(asofs.length == 1,
       "ASOF JOIN: multiple ASOF joins at one SELECT level are not supported " +
         "by the embedded rewrite; nest them in subqueries")
@@ -3455,28 +3168,17 @@ object ChSqlTranslator {
 
   /** Some((lhs, op, rhs)) when the conjunct is a top-level inequality. */
   private def ineqOf(c: String): Option[(String, String, String)] = {
-    var depth = 0; var inSq = false; var inBq = false; var i = 0
-    while (i < c.length) {
-      val ch = c.charAt(i)
-      if (inSq) { if (ch == '\\') i += 1 else if (ch == '\'') inSq = false }
-      else if (inBq) { if (ch == '`') inBq = false }
-      else ch match {
-        case '\'' => inSq = true
-        case '`' => inBq = true
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case '<' | '>' if depth == 0 =>
-          val nxt = if (i + 1 < c.length) c.charAt(i + 1) else ' '
-          if (ch == '<' && nxt == '>') i += 1 // not-equals, skip
-          else {
-            val op = if (nxt == '=') c.substring(i, i + 2) else ch.toString
-            return Some((c.substring(0, i).trim, op,
-              c.substring(i + op.length).trim))
-          }
-        case _ =>
+    val lx = new ChLex(c)
+    while (lx.next())
+      if (lx.depth == 0 && (lx.isPunct('<') || lx.isPunct('>'))) {
+        val nxt = if (lx.end < c.length) c.charAt(lx.end) else ' '
+        if (lx.char == '<' && nxt == '>') lx.next() // not-equals, skip
+        else {
+          val op = if (nxt == '=') c.substring(lx.start, lx.start + 2) else lx.token
+          return Some((c.substring(0, lx.start).trim, op,
+            c.substring(lx.start + op.length).trim))
+        }
       }
-      i += 1
-    }
     None
   }
 
@@ -3490,46 +3192,29 @@ object ChSqlTranslator {
   /** Quote-aware `alias.` → `repl` (repl carries its own dot or empty). */
   private def replaceQualifier(text: String, alias: String, repl: String): String = {
     val out = new StringBuilder
-    var i = 0; var inSq = false; var inBq = false
-    while (i < text.length) {
-      val c = text.charAt(i)
-      if (inSq) { out.append(c); if (c == '\\' && i + 1 < text.length) { out.append(text.charAt(i + 1)); i += 1 } else if (c == '\'') inSq = false; i += 1 }
-      else if (inBq) { out.append(c); if (c == '`') inBq = false; i += 1 }
-      else if (c == '\'') { inSq = true; out.append(c); i += 1 }
-      else if (c == '`') { inBq = true; out.append(c); i += 1 }
-      else if ((i == 0 || !(text.charAt(i - 1).isLetterOrDigit || text.charAt(i - 1) == '_' || text.charAt(i - 1) == '.')) &&
-        text.regionMatches(true, i, alias, 0, alias.length) &&
-        i + alias.length < text.length && text.charAt(i + alias.length) == '.') {
-        out.append(repl)
-        i += alias.length + 1
+    val lx = new ChLex(text)
+    var copied = 0
+    while (lx.next())
+      if (lx.isWord(alias) && lx.end < text.length && text.charAt(lx.end) == '.' &&
+        !(lx.start > 0 && text.charAt(lx.start - 1) == '.')) {
+        out.append(text.substring(copied, lx.start)).append(repl)
+        copied = lx.end + 1
+        lx.seek(copied)
       }
-      else { out.append(c); i += 1 }
-    }
-    out.result()
+    out.append(text.substring(copied)).result()
   }
 
   /** True when the select list carries a bare or qualified `*` at depth 0. */
   private def hasTopLevelStar(sel: String): Boolean = {
-    var depth = 0; var inSq = false; var inBq = false; var i = 0
-    while (i < sel.length) {
-      val c = sel.charAt(i)
-      if (inSq) { if (c == '\\') i += 1 else if (c == '\'') inSq = false }
-      else if (inBq) { if (c == '`') inBq = false }
-      else c match {
-        case '\'' => inSq = true
-        case '`' => inBq = true
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case '*' if depth == 0 =>
-          // `*` as multiplication has operands on both sides; a select
-          // star is preceded by start, comma, or a dot
-          var j = i - 1
-          while (j >= 0 && sel.charAt(j).isWhitespace) j -= 1
-          if (j < 0 || sel.charAt(j) == ',' || sel.charAt(j) == '.') return true
-        case _ =>
+    val lx = new ChLex(sel)
+    while (lx.next())
+      if (lx.depth == 0 && lx.isPunct('*')) {
+        // `*` as multiplication has operands on both sides; a select
+        // star is preceded by start, comma, or a dot
+        var j = lx.start - 1
+        while (j >= 0 && sel.charAt(j).isWhitespace) j -= 1
+        if (j < 0 || sel.charAt(j) == ',' || sel.charAt(j) == '.') return true
       }
-      i += 1
-    }
     false
   }
 
@@ -3540,23 +3225,14 @@ object ChSqlTranslator {
     */
   private[client] def mapOutsideStrings(s: String)(f: String => String): String = {
     val out = new StringBuilder
-    val seg = new StringBuilder
-    var inSq = false
-    var i = 0
-    def flush(): Unit = { out.append(f(seg.result())); seg.clear() }
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inSq) {
-        out.append(c)
-        if (c == '\\' && i + 1 < s.length) { out.append(s.charAt(i + 1)); i += 1 }
-        else if (c == '\'') inSq = false
-        i += 1
-      } else if (c == '\'') {
-        flush(); inSq = true; out.append(c); i += 1
-      } else { seg.append(c); i += 1 }
-    }
-    flush()
-    out.result()
+    val lx = new ChLex(s)
+    var seg = 0
+    while (lx.next())
+      if (lx.kind == ChLex.Str) {
+        out.append(f(s.substring(seg, lx.start))).append(lx.token)
+        seg = lx.end
+      }
+    out.append(f(s.substring(seg))).result()
   }
 
   /** `s` with each top-level paren group's CONTENT replaced by
@@ -3565,34 +3241,18 @@ object ChSqlTranslator {
     */
   private def mapTopLevelParens(s: String)(g: String => String): String = {
     val out = new StringBuilder
-    var i = 0; var inSq = false; var inBq = false
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inSq) { out.append(c); if (c == '\\' && i + 1 < s.length) { out.append(s.charAt(i + 1)); i += 1 } else if (c == '\'') inSq = false; i += 1 }
-      else if (inBq) { out.append(c); if (c == '`') inBq = false; i += 1 }
-      else if (c == '\'') { inSq = true; out.append(c); i += 1 }
-      else if (c == '`') { inBq = true; out.append(c); i += 1 }
-      else if (c == '(') {
-        var depth = 1; var j = i + 1; var sq = false; var bq = false
-        while (j < s.length && depth > 0) {
-          val ch = s.charAt(j)
-          if (sq) { if (ch == '\\') j += 1 else if (ch == '\'') sq = false }
-          else if (bq) { if (ch == '`') bq = false }
-          else ch match {
-            case '\'' => sq = true
-            case '`' => bq = true
-            case '(' => depth += 1
-            case ')' => depth -= 1
-            case _ =>
-          }
-          j += 1
-        }
-        out.append('(').append(g(s.substring(i + 1, j - 1))).append(')')
-        i = j
+    val lx = new ChLex(s)
+    var copied = 0
+    while (lx.next())
+      if (lx.depth == 1 && lx.isPunct('(')) {
+        val open = lx.start
+        lx.skipGroup()
+        val close = if (lx.depth == 0 && lx.isPunct(')')) lx.start else s.length
+        out.append(s.substring(copied, open)).append('(')
+          .append(g(s.substring(open + 1, close))).append(')')
+        copied = lx.end
       }
-      else { out.append(c); i += 1 }
-    }
-    out.result()
+    out.append(s.substring(copied)).result()
   }
 
   // ---- WITH TOTALS → GROUPING SETS rewrite ----------------------------
@@ -3755,31 +3415,6 @@ object ChSqlTranslator {
         (if (tail.isEmpty) "" else " " + tail))
   }
 
-  /** Word-boundary positions of `word` outside string/backtick quotes at
-    * ANY paren depth (topLevelPositions' depth-0 restriction lifted).
-    */
-  private def wordPositionsAnyDepth(sql: String, word: String): Seq[Int] = {
-    val out = Seq.newBuilder[Int]
-    var inSq = false
-    var inBq = false
-    var i = 0
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (inSq) { if (c == '\\') i += 1 else if (c == '\'') inSq = false }
-      else if (inBq) { if (c == '`') inBq = false }
-      else if (c == '\'') inSq = true
-      else if (c == '`') inBq = true
-      else if ((i == 0 || !(sql.charAt(i - 1).isLetterOrDigit || sql.charAt(i - 1) == '_')) &&
-        sql.regionMatches(true, i, word, 0, word.length) &&
-        (i + word.length >= sql.length ||
-          !(sql.charAt(i + word.length).isLetterOrDigit ||
-            sql.charAt(i + word.length) == '_')))
-        out += i
-      i += 1
-    }
-    out.result()
-  }
-
   /** Hoist every inline `fn(args) OVER (spec)` / `fn(args) OVER name` in
     * a QUALIFY condition into the core's select list as hidden `__q_i`
     * aliases (window results are only addressable as columns of the
@@ -3790,7 +3425,7 @@ object ChSqlTranslator {
     */
   private def hoistQualifyWindows(
       core: String, cond: String): (String, String, Seq[String]) = {
-    if (wordPositionsAnyDepth(cond, "OVER").isEmpty) return (core, cond, Seq.empty)
+    if (wordPositions(cond, "OVER", topLevel = false).isEmpty) return (core, cond, Seq.empty)
     require(!raw"(?is)^SELECT\s+DISTINCT\b".r.findFirstIn(core).isDefined,
       "QUALIFY with an inline window over a SELECT DISTINCT core is not " +
         "supported by the embedded rewrite (hidden hoisted columns would " +
@@ -3802,25 +3437,15 @@ object ChSqlTranslator {
     var c = cond
     val exprs = scala.collection.mutable.LinkedHashMap.empty[String, String]
     var guard = 0
-    while (wordPositionsAnyDepth(c, "OVER").nonEmpty && guard < 32) {
+    while (wordPositions(c, "OVER", topLevel = false).nonEmpty && guard < 32) {
       guard += 1
-      val at = wordPositionsAnyDepth(c, "OVER").head
+      val at = wordPositions(c, "OVER", topLevel = false).head
       // backward: ')' closing the function's argument list, then the name
       var j = at - 1
       while (j >= 0 && c.charAt(j).isWhitespace) j -= 1
       require(j >= 0 && c.charAt(j) == ')',
         s"QUALIFY: cannot parse the window call before OVER in '$cond'")
-      var d = 1
-      var k = j - 1
-      var sq = false
-      while (k >= 0 && d > 0) {
-        val ch = c.charAt(k)
-        if (sq) { if (ch == '\'') sq = false }
-        else if (ch == '\'') sq = true
-        else if (ch == ')') d += 1
-        else if (ch == '(') d -= 1
-        if (d > 0) k -= 1
-      }
+      val k = ChLex.openOf(c, j)
       require(k > 0, s"QUALIFY: unbalanced window call in '$cond'")
       var f = k - 1
       while (f >= 0 && (c.charAt(f).isLetterOrDigit || c.charAt(f) == '_')) f -= 1
@@ -3832,18 +3457,8 @@ object ChSqlTranslator {
       while (p < c.length && c.charAt(p).isWhitespace) p += 1
       val end =
         if (p < c.length && c.charAt(p) == '(') {
-          var dd = 1
-          var q = p + 1
-          var sq2 = false
-          while (q < c.length && dd > 0) {
-            val ch = c.charAt(q)
-            if (sq2) { if (ch == '\'') sq2 = false }
-            else if (ch == '\'') sq2 = true
-            else if (ch == '(') dd += 1
-            else if (ch == ')') dd -= 1
-            q += 1
-          }
-          require(dd == 0, s"QUALIFY: unbalanced OVER spec in '$cond'")
+          val q = ChLex.closeOf(c, p)
+          require(q > 0, s"QUALIFY: unbalanced OVER spec in '$cond'")
           q
         } else {
           var q = p
@@ -3928,29 +3543,17 @@ object ChSqlTranslator {
     */
   private def stripGlobal(in: String): String = {
     val out = new StringBuilder
-    var inSq = false
-    var inBq = false
-    var i = 0
-    def wordAt(at: Int, w: String): Boolean =
-      (at == 0 || !(in.charAt(at - 1).isLetterOrDigit || in.charAt(at - 1) == '_')) &&
-        in.regionMatches(true, at, w, 0, w.length) &&
-        (at + w.length >= in.length ||
-          !(in.charAt(at + w.length).isLetterOrDigit || in.charAt(at + w.length) == '_'))
-    while (i < in.length) {
-      val c = in.charAt(i)
-      if (inSq) { out.append(c); if (c == '\\' && i + 1 < in.length) { out.append(in.charAt(i + 1)); i += 1 } else if (c == '\'') inSq = false; i += 1 }
-      else if (inBq) { out.append(c); if (c == '`') inBq = false; i += 1 }
-      else if (c == '\'') { inSq = true; out.append(c); i += 1 }
-      else if (c == '`') { inBq = true; out.append(c); i += 1 }
-      else if (wordAt(i, "GLOBAL")) {
-        var j = i + 6
-        while (j < in.length && in.charAt(j).isWhitespace) j += 1
-        if (GlobalFollowers.exists(wordAt(j, _))) i = j // drop GLOBAL + ws
-        else { out.append(c); i += 1 }
+    val lx = new ChLex(in)
+    var copied = 0
+    while (lx.next())
+      if (lx.isWord("GLOBAL")) {
+        val f = ChLex.after(in, lx.end)
+        if (GlobalFollowers.exists(f.isWord)) { // drop GLOBAL + ws
+          out.append(in.substring(copied, lx.start))
+          copied = f.start
+        }
       }
-      else { out.append(c); i += 1 }
-    }
-    out.result()
+    out.append(in.substring(copied)).result()
   }
 
   /** Fold every top-level `PREWHERE p` into the WHERE clause:
@@ -4214,38 +3817,19 @@ object ChSqlTranslator {
     * (top-level args, index just past the closing paren).
     */
   private[client] def parseArgs(s: String, start: Int): (Seq[String], Int) = {
-    var depth = 1
-    // square-bracket literals (`[1, 2]`) carry top-level commas that are
-    // NOT argument separators — arrayMap(x -> x, [1, 2]) must parse as
-    // two args, not three (round-13 session-3 fix; the mangled split
-    // produced unbalanced Spark SQL)
-    var bDepth = 0
-    var i = start
-    var inStr = false
-    var inBq = false
+    // top-level commas only: square-bracket literals (`[1, 2]`) carry
+    // commas that are NOT argument separators
     val args = Seq.newBuilder[String]
-    val cur = new StringBuilder
-    while (i < s.length && depth > 0) {
-      val c = s.charAt(i)
-      if (inStr) {
-        cur.append(c); if (c == '\'') inStr = false
-      } else if (inBq) {
-        cur.append(c); if (c == '`') inBq = false
-      } else c match {
-        case '\'' => inStr = true; cur.append(c)
-        case '`' => inBq = true; cur.append(c)
-        case '(' => depth += 1; cur.append(c)
-        case '[' => bDepth += 1; cur.append(c)
-        case ']' => bDepth -= 1; cur.append(c)
-        case ')' =>
-          depth -= 1
-          if (depth == 0) { args += cur.result().trim } else cur.append(c)
-        case ',' if depth == 1 && bDepth == 0 =>
-          args += cur.result().trim; cur.clear()
-        case _ => cur.append(c)
+    val lx = new ChLex(s, start)
+    var argStart = start
+    while (lx.next())
+      if (lx.depth < 0) {
+        args += s.substring(argStart, lx.start).trim
+        return (args.result().filter(_.nonEmpty), lx.end)
+      } else if (lx.depth == 0 && lx.brackets == 0 && lx.isPunct(',')) {
+        args += s.substring(argStart, lx.start).trim
+        argStart = lx.end
       }
-      i += 1
-    }
-    (args.result().filter(_.nonEmpty), i)
+    (args.result().filter(_.nonEmpty), s.length)
   }
 }

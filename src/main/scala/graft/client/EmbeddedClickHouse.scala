@@ -6,6 +6,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.types.{StructField, StructType}
 
+import graft.sql.ChLex
 import graft.types.ClickHouseType
 
 /** Embedded, parquet-backed stand-in for a ClickHouse server (the dev
@@ -1872,26 +1873,10 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
     // quote-aware reference scan: a bare `_part` word or the backticked
     // identifier, never text inside string literals
     def referencesPart(s: String): Boolean = {
-      var inSq = false
-      var i = 0
-      while (i < s.length) {
-        val c = s.charAt(i)
-        if (inSq) { if (c == '\\') i += 1 else if (c == '\'') inSq = false }
-        else if (c == '\'') inSq = true
-        else if (c == '`') {
-          val e = s.indexOf('`', i + 1)
-          if (e < 0) return false
-          if (s.substring(i + 1, e) == "_part") return true
-          i = e
-        }
-        else if (c == '_' &&
-          (i == 0 || !(s.charAt(i - 1).isLetterOrDigit || s.charAt(i - 1) == '_')) &&
-          s.regionMatches(false, i, "_part", 0, 5) &&
-          (i + 5 >= s.length ||
-            !(s.charAt(i + 5).isLetterOrDigit || s.charAt(i + 5) == '_')))
-          return true
-        i += 1
-      }
+      val lx = new ChLex(s)
+      while (lx.next())
+        if ((lx.kind == ChLex.Ident && lx.closed ||
+          lx.kind == ChLex.Word) && lx.name == "_part") return true
       false
     }
     if (!referencesPart(stmt)) return stmt
@@ -2049,22 +2034,11 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
         raw"(?is)\b(WHERE|GROUP|HAVING|ORDER|LIMIT|SETTINGS|UNION|QUALIFY|FORMAT)\b".r
       // clause keywords only count outside parens/quotes
       var body = tail
-      var d = 0; var i = 0; var sq = false; var bq = false
-      while (i < tail.length && body == tail) {
-        val c = tail.charAt(i)
-        if (sq) { if (c == '\\') i += 1 else if (c == '\'') sq = false }
-        else if (bq) { if (c == '`') bq = false }
-        else c match {
-          case '\'' => sq = true
-          case '`' => bq = true
-          case '(' => d += 1
-          case ')' => d -= 1
-          case _ if d == 0 && (i == 0 || !tail.charAt(i - 1).isLetterOrDigit) &&
-            endRe.findPrefixOf(tail.substring(i)).isDefined => body = tail.substring(0, i)
-          case _ =>
-        }
-        i += 1
-      }
+      val lx = new ChLex(tail)
+      while (body == tail && lx.next())
+        if (lx.depth == 0 && lx.kind == ChLex.Word &&
+          endRe.findPrefixOf(tail.substring(lx.start)).isDefined)
+          body = tail.substring(0, lx.start)
       val QualRef = ("^(?:`([^`]+)`|([A-Za-z_][A-Za-z0-9_]*))\\." +
         "(?:`([^`]+)`|([A-Za-z_][A-Za-z0-9_]*))$").r
       def refOf(e: String): Option[(String, String)] =
@@ -2257,36 +2231,11 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
     * repartition fan for it would serialize the read for no reason.
     */
   private def topLevelOrderBy(sql: String): Boolean = {
-    var depth = 0
-    var inSq = false // '...'
-    var inBq = false // `...`
-    var i = 0
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      // ChSql.stringLit escapes quotes with a backslash — skipping the
-      // escaped char keeps the scanner's string state honest ('O\'Brien'
-      // must not toggle the state twice, or everything after it reads
-      // as in-string and a real top-level ORDER BY gets repartitioned)
-      if (inSq) {
-        if (c == '\\') i += 1
-        else if (c == '\'') inSq = false
+    val lx = new ChLex(sql)
+    while (lx.next())
+      if (lx.depth == 0 && lx.isWord("ORDER")) {
+        if (ChLex.after(sql, lx.end).isWord("BY")) return true
       }
-      else if (inBq) { if (c == '`') inBq = false }
-      else c match {
-        case '\'' => inSq = true
-        case '`' => inBq = true
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case 'O' | 'o' if depth == 0 &&
-            (i == 0 || !Character.isLetterOrDigit(sql.charAt(i - 1))) &&
-            sql.regionMatches(true, i, "ORDER", 0, 5) =>
-          var j = i + 5
-          while (j < sql.length && sql.charAt(j).isWhitespace) j += 1
-          if (sql.regionMatches(true, j, "BY", 0, 2)) return true
-        case _ => ()
-      }
-      i += 1
-    }
     false
   }
 

@@ -9,8 +9,8 @@ package graft.sql
   * statement into the generated SQL.
   *
   * Accepts exactly one expression: balanced parens/brackets, terminated
-  * string literals (both `\'` and `''` escapes) and backtick identifiers,
-  * no comments, no top-level commas, no semicolons.
+  * string literals and backtick identifiers (quoting per [[ChLex]]), no
+  * comments, no top-level commas, no semicolons.
   */
 object ChFragment {
 
@@ -19,39 +19,25 @@ object ChFragment {
       s"invalid clickhouse_eval fragment ($msg): $raw")
     val s = raw.trim
     if (s.isEmpty) fail("empty expression")
-    var depth = 0
-    var i = 0
-    var inStr = false
-    var inTick = false
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inStr) {
-        if (c == '\\') i += 1 // escaped char, skip
-        else if (c == '\'') {
-          if (i + 1 < s.length && s.charAt(i + 1) == '\'') i += 1 // '' doubling
-          else inStr = false
+    val lx = new ChLex(s)
+    while (lx.next()) {
+      lx.kind match {
+        case ChLex.Str if !lx.closed => fail("unterminated string literal")
+        case ChLex.Ident if !lx.closed => fail("unterminated quoted identifier")
+        case ChLex.Punct => lx.char match {
+          case ')' | ']' if lx.depth < 0 || lx.brackets < 0 =>
+            fail("unbalanced parentheses")
+          case ';' => fail("';' not allowed")
+          case ',' if lx.depth == 0 && lx.brackets == 0 =>
+            fail("not a single expression (top-level ',')")
+          case '-' | '/' if lx.end < s.length &&
+            s.charAt(lx.end) == (if (lx.char == '-') '-' else '*') =>
+            fail("comments not allowed")
+          case _ => ()
         }
-      } else if (inTick) {
-        if (c == '`') inTick = false
-      } else c match {
-        case '\'' => inStr = true
-        case '`' => inTick = true
-        case '(' | '[' => depth += 1
-        case ')' | ']' =>
-          depth -= 1
-          if (depth < 0) fail("unbalanced parentheses")
-        case ';' => fail("';' not allowed")
-        case ',' if depth == 0 => fail("not a single expression (top-level ',')")
-        case '-' if i + 1 < s.length && s.charAt(i + 1) == '-' =>
-          fail("comments not allowed")
-        case '/' if i + 1 < s.length && s.charAt(i + 1) == '*' =>
-          fail("comments not allowed")
         case _ => ()
       }
-      i += 1
     }
-    if (inStr) fail("unterminated string literal")
-    if (inTick) fail("unterminated quoted identifier")
-    if (depth != 0) fail("unbalanced parentheses")
+    if (lx.depth != 0 || lx.brackets != 0) fail("unbalanced parentheses")
   }
 }

@@ -453,7 +453,13 @@ class DifferentialSpec extends AnyFunSuite {
       ("rep", c => clickhouse_fn("replaceAll", Seq(c, lit("0"), lit("#")), "String"),
         c => regexp_replace(c, "0", "#")),
       ("sub", c => clickhouse_fn("substring", Seq(c, lit(2), lit(9)), "String"),
-        c => substring(c, 2, 9)))
+        c => substring(c, 2, 9)),
+      // call-shaped literal text with an escaped quote: literals must
+      // reach the embedded engine verbatim
+      ("cat", c => clickhouse_fn("concat", Seq(c, lit("it's, has(1)")), "String"),
+        c => concat(c, lit("it's, has(1)"))),
+      ("pre", c => clickhouse_fn("concat", Seq(lit("length(x) "), c), "String"),
+        c => concat(lit("length(x) "), c)))
     // int→int steps over the key column
     val intFns: Vector[(String, Column => Column, Column => Column)] = Vector(
       ("m11", c => clickhouse_fn("modulo", Seq(c, lit(11)), "Int64"), c => c % 11),

@@ -12,9 +12,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * translator's text pipeline (chSql → ChSqlTranslator → child
   * session) against an INDEPENDENTLY WRITTEN Spark-SQL rendering of the
   * same semantics over the same rows, bit for bit. That is exactly the
-  * failure class the round-14/15 bugs lived in: rewriteCall ordering/
-  * shadowing, paren nesting, argument routing — not the kernels (those
-  * are vector-pinned elsewhere).
+  * failure class the translator bugs lived in: rule ordering/shadowing,
+  * paren nesting, argument routing, call-shaped text inside literals —
+  * not the kernels (those are vector-pinned elsewhere).
   *
   * For the graft-specific laws with no independent Spark spelling
   * (hash family, CH round()), the direct side registers the SAME
@@ -113,8 +113,9 @@ class FnFuzzSpec extends AnyFunSuite {
     mk("s", 's', "left($0, 4)", "left($0, 4)"),
     mk("s", 's', "right($0, 4)", "right($0, 4)"),
     mk("i", 's', "toString($0)", "cast($0 as string)"),
-    // the fuzz data carries no quotes/backslashes, so round-tripping a
-    // string through the scanner is the identity on non-NULL input
+    // the fuzz strings carry no double quotes or backslashes, so
+    // round-tripping one through the scanner is the identity on non-NULL
+    // input
     mk("s", 's', "simpleJSONExtractString(concat('{\"k\":\"', $0, '\"}'), 'k')",
       "CASE WHEN $0 IS NULL THEN NULL ELSE $0 END"),
     // integer surface (byte laws exact on ASCII data)
@@ -170,7 +171,11 @@ class FnFuzzSpec extends AnyFunSuite {
         "slice($0, 1, pmod(1, size($0)))) END"))
 
   private val leaves: Map[Char, Seq[(String, String)]] = Map(
-    's' -> Seq(("`s`", "s"), ("'Abc l0l'", "'Abc l0l'")),
+    // call-shaped literal text, an escaped quote and a qualified
+    // backticked column: literals must reach the child verbatim
+    's' -> Seq(("`s`", "s"), ("'Abc l0l'", "'Abc l0l'"),
+      ("'length(x)'", "'length(x)'"), ("'it\\'s, has(1)'", "'it\\'s, has(1)'"),
+      ("`t`.`s`", "t.s")),
     'i' -> Seq(("`a`", "a"), ("`b`", "b"), ("5", "5"), ("`id`", "id")),
     'd' -> Seq(("`d`", "d"), ("toFloat64(`a`)", "cast(a as double)")),
     'a' -> Seq(("`arr`", "arr")))
@@ -201,10 +206,10 @@ class FnFuzzSpec extends AnyFunSuite {
       }
       val chSqlText = "SELECT `id` AS id, " +
         shapes.map { case (nm, (c, _)) => s"$c AS $nm" }.mkString(", ") +
-        " FROM `main`.`t` ORDER BY `id`"
+        " FROM `main`.`t` AS `t` ORDER BY `id`"
       val spSqlText = "SELECT id, " +
         shapes.map { case (nm, (_, sp)) => s"$sp AS $nm" }.mkString(", ") +
-        " FROM fuzz_local ORDER BY id"
+        " FROM fuzz_local AS t ORDER BY id"
       val got = ch.chSql(chSqlText).collect()
       val want = spark.sql(spSqlText).collect()
       assert(got.length == want.length, s"batch $batch row count")
@@ -257,11 +262,11 @@ class FnFuzzSpec extends AnyFunSuite {
       val chSqlText = "SELECT `id` % 2 AS g, " +
         aggs.zipWithIndex.map { case ((c, _), j) => s"$c AS v$j" }
           .mkString(", ") +
-        " FROM `main`.`t` GROUP BY `id` % 2 ORDER BY g"
+        " FROM `main`.`t` AS `t` GROUP BY `id` % 2 ORDER BY g"
       val spSqlText = "SELECT id % 2 AS g, " +
         aggs.zipWithIndex.map { case ((_, p), j) => s"$p AS v$j" }
           .mkString(", ") +
-        " FROM fuzz_local GROUP BY id % 2 ORDER BY g"
+        " FROM fuzz_local AS t GROUP BY id % 2 ORDER BY g"
       val got = ch.chSql(chSqlText).collect()
       val want = spark.sql(spSqlText).collect()
       assert(got.length == want.length, s"agg batch $batch row count")

@@ -194,4 +194,26 @@ class ScanPushdownSpec extends AnyFunSuite {
     assert(before.contains("LIMIT 6"))
     assert(df.count() == 6)
   }
+
+  test("string literals reach the embedded engine verbatim: call-shaped " +
+    "text and escaped quotes filter exactly") {
+    val client = new EmbeddedClickHouse(root)
+    client.createTable("db", "names", Seq("id" -> "Int64", "name" -> "String"),
+      Map("engine" -> "MergeTree"))
+    client.insert("db", "names", client.sparkSchema("db", "names"), Seq(
+      Row(1L, "length(x)"), Row(2L, "O'Brien, x"), Row(3L, "O'Brien, xy"),
+      Row(4L, "plain"), Row(5L, "it's")))
+    // the pushed WHERE carries the literal 'length(x)'
+    val df = spark.sql("SELECT id FROM chspd.db.names WHERE name = 'length(x)'")
+    assert(chScans(df).exists(_.generatedSql.contains("'length(x)'")),
+      chScans(df).map(_.generatedSql).mkString("; "))
+    assert(df.collect().map(_.getLong(0)).toSeq == Seq(1L))
+    // raw ClickHouse SQL: a backslash-escaped quote inside the needle
+    val ch = graft.session.ClickHouseSession.builder(spark)
+      .storePath(root).catalogName("chspd").build()
+    val hits = ch.chSql("SELECT `id` FROM `db`.`names` " +
+      "WHERE position(`name`, 'O\\'Brien, x') > 0 ORDER BY `id`")
+      .collect().map(_.getLong(0)).toSeq
+    assert(hits == Seq(2L, 3L))
+  }
 }

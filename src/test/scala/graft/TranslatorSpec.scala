@@ -79,6 +79,12 @@ class TranslatorSpec extends AnyFunSuite {
     assert(t("SELECT toDate('2024-01-01')") == "SELECT to_date('2024-01-01')")
     assert(t("SELECT base64Encode(s)") == "SELECT base64(s)")
     assert(t("SELECT toString(x)") == "SELECT string(x)")
+    // arguments translate before their call; the Spark transform()
+    // arrayMap emits is not re-read as the ClickHouse 4-argument form
+    assert(t("SELECT sigmoid(length(s))") ==
+      "SELECT (1.0 / (1.0 + exp(-(graft_length(s)))))")
+    assert(t("SELECT arrayMap(x -> transform(x, [1], [2], 0), a)") ==
+      "SELECT transform(a, x -> (CASE WHEN (x) <=> (1) THEN (2) ELSE (0) END))")
   }
 
   test("round-11 function wave: -If combinators, argMax/argMin, uniq, " +
@@ -619,6 +625,8 @@ class TranslatorSpec extends AnyFunSuite {
     assert(t("SELECT countOrNull()") == "SELECT nullif(count(*), 0)")
     assert(t("SELECT countOrNull(x)") == "SELECT nullif(count(x), 0)")
     assert(t("SELECT uniqOrNull(x)") == "SELECT nullif(count(DISTINCT x), 0)")
+    assert(t("SELECT argMaxOrNull(a, b)") == "SELECT max_by(a, b)")
+    assert(t("SELECT uniqExactOrDefault(x)") == "SELECT count(DISTINCT x)")
     assert(t("SELECT sumOrDefault(x)") == "SELECT coalesce(sum(x), 0)")
     assert(t("SELECT avgOrDefault(x)") == "SELECT coalesce(avg(x), 0.0)")
     assert(t("SELECT countOrDefault()") == "SELECT count(*)")
@@ -1011,5 +1019,38 @@ class TranslatorSpec extends AnyFunSuite {
       "SELECT filter(array(1, 2, 3), x -> x > 1)")
     assert(t("SELECT sumIf(v, has([1, 2], k))") ==
       "SELECT sum(v) FILTER (WHERE array_contains(array(1, 2), k))")
+  }
+
+  test("string literals are opaque to the call walk: call-shaped text " +
+    "survives verbatim") {
+    for (lit <- Seq("'length(x)'", "'toString(y)'", "'has(1)'", "'sigmoid(y)'"))
+      assert(t(s"SELECT `a` FROM `db`.`tbl` WHERE `name` = $lit") ==
+        s"SELECT `a` FROM __ch_db_tbl WHERE `name` = $lit")
+    // rules that reject malformed calls must not see literal text
+    assert(t("SELECT 'arrayMap(x)' AS a") == "SELECT 'arrayMap(x)' AS a")
+    assert(t("SELECT 'splitByChar(1)' AS a") == "SELECT 'splitByChar(1)' AS a")
+    // both escapes keep the literal whole: doubled quotes too
+    assert(t("SELECT 'it''s length(x)' AS a") == "SELECT 'it''s length(x)' AS a")
+    // a backticked call name dispatches like a bare one
+    assert(t("SELECT `length`(s), `sigmoid`(x)") ==
+      "SELECT graft_length(s), (1.0 / (1.0 + exp(-(x))))")
+  }
+
+  test("backslash-escaped quotes keep every argument and the rest of " +
+    "the statement") {
+    assert(t("SELECT position(`name`, 'a\\'b, c') FROM `db`.`tbl`") ==
+      "SELECT graft_position(`name`, 'a\\'b, c') FROM __ch_db_tbl")
+    assert(t("SELECT replaceAll(`name`, 'it\\'s', 'x') AS r FROM `db`.`tbl`") ==
+      "SELECT replace(`name`, 'it\\'s', 'x') AS r FROM __ch_db_tbl")
+  }
+
+  test("one rule per name: a duplicate fails when the table is built; " +
+    "single-array rules reject extra arrays") {
+    val e = intercept[IllegalArgumentException](ChSqlTranslator.ruleTable(Seq(
+      "f" -> ChSqlTranslator.Swap("g"), "h" -> ChSqlTranslator.Swap("i"),
+      "f" -> ChSqlTranslator.Call(_ => "x"))))
+    assert(e.getMessage.contains("duplicate names f"), e.getMessage)
+    intercept[IllegalArgumentException](t("SELECT arrayDifference(a, b)"))
+    intercept[IllegalArgumentException](t("SELECT arrayCumSum(a, b)"))
   }
 }
