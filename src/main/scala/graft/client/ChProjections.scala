@@ -1,6 +1,7 @@
 package graft.client
 
-import graft.sql.ChLex
+import graft.sql.{ChClauses, ChLex}
+import graft.sql.ChClauses.{From, GroupBy, Having, Limit, OrderBy, Select, Where}
 
 /** ClickHouse table PROJECTIONs — pre-aggregated alternates stored with
   * each part and used transparently by matching reads (server surface:
@@ -103,15 +104,11 @@ object ChProjections {
   /** Strip one trailing top-level `AS alias`; returns (expr, alias?). */
   def splitAlias(item: String): (String, Option[String]) = {
     val t = item.trim
-    ChSqlTranslator.topLevelPositions(t, "AS").lastOption match {
-      case Some(p) =>
-        val alias = t.substring(p + 2).trim
-        val ident = raw"^`?[A-Za-z_][A-Za-z0-9_]*`?$$".r
-        if (ident.findFirstIn(alias).isDefined)
-          (t.substring(0, p).trim, Some(alias.replace("`", "")))
-        else (t, None)
-      case None => (t, None)
-    }
+    val p = ChSqlTranslator.lastTopLevelAs(t)
+    val alias = if (p < 0) "" else t.substring(p + 2).trim
+    if (raw"^`?[A-Za-z_][A-Za-z0-9_]*`?$$".r.findFirstIn(alias).isDefined)
+      (t.substring(0, p).trim, Some(alias.replace("`", "")))
+    else (t, None)
   }
 
   /** Parse a projection definition: `SELECT <items> GROUP BY <keys>`
@@ -124,21 +121,19 @@ object ChProjections {
       s"ADD PROJECTION $name: $why (definition: '$defSql'); supported " +
         "shape is `SELECT <keys and aggregates> GROUP BY <keys>` with " +
         "aggregates in {sum, min, max, avg, count}")
-    val sel = ChSqlTranslator.topLevelPositions(s, "SELECT")
-    if (sel.isEmpty || sel.head != 0) bad("the definition must start with SELECT")
-    if (ChSqlTranslator.topLevelPositions(s, "FROM").nonEmpty)
-      bad("the definition takes no FROM (it is implicitly the table)")
-    val grp = ChSqlTranslator.topLevelPositions(s, "GROUP")
-    if (grp.isEmpty)
+    val top = ChClauses(s)
+    val b = top.branches.head
+    val sel = b(Select).filter(_.start == 0)
+      .getOrElse(bad("the definition must start with SELECT"))
+    if (b.has(From)) bad("the definition takes no FROM (it is implicitly the table)")
+    val grp = b(GroupBy).getOrElse(
       bad("only AGGREGATE projections are supported — ORDER BY-only " +
-        "projections change no result and are not modeled")
-    for (kw <- Seq("WHERE", "HAVING", "ORDER", "LIMIT", "UNION", "SETTINGS"))
-      if (ChSqlTranslator.topLevelPositions(s, kw).nonEmpty)
-        bad(s"$kw is not supported in a projection definition")
-    val byM = raw"(?is)^GROUP\s+BY\s+".r.findFirstMatchIn(s.substring(grp.head))
-      .getOrElse(bad("malformed GROUP BY"))
-    val items = splitList(s.substring(6, grp.head).trim)
-    val rawKeys = splitList(s.substring(grp.head + byM.end).trim)
+        "projections change no result and are not modeled"))
+    if (top.branches.size > 1) bad("UNION is not supported in a projection definition")
+    b.clauses.map(_.kind).find(k => !(k eq Select) && !(k eq GroupBy)).foreach(k =>
+      bad(s"${k.name} is not supported in a projection definition"))
+    val items = splitList(top.body(sel))
+    val rawKeys = splitList(top.body(grp))
     if (rawKeys.isEmpty) bad("GROUP BY needs at least one key")
     val keys = rawKeys.map(normalize)
     if (keys.distinct.size != keys.size) bad("duplicate GROUP BY keys")
@@ -191,30 +186,22 @@ object ChProjections {
       sql: String, tableRef: String, d: ProjectionDef,
       viewRef: String): Option[String] = {
     val s = sql.trim.replaceAll(raw"[;\s]+$$", "")
-    def pos(w: String) = ChSqlTranslator.topLevelPositions(s, w)
-    // conservative shape gate
-    if (pos("UNION").nonEmpty || pos("SETTINGS").nonEmpty ||
-      pos("JOIN").nonEmpty || pos("PREWHERE").nonEmpty ||
-      pos("QUALIFY").nonEmpty || pos("OFFSET").nonEmpty ||
-      pos("WINDOW").nonEmpty) return None
-    val selP = pos("SELECT")
-    val fromP = pos("FROM")
-    if (selP.size != 1 || selP.head != 0 || fromP.size != 1) return None
+    val top = ChClauses(s)
+    val b = top.branches.head
+    // conservative shape gate: one SELECT ... FROM branch with plain
+    // WHERE / GROUP BY / HAVING / ORDER BY / LIMIT clauses only
+    if (top.branches.size != 1 || !b(Select).exists(_.start == 0) ||
+      !b.clauses.forall(c => Seq(Select, From, Where, GroupBy, Having, OrderBy,
+        Limit).contains(c.kind))) return None
     if (raw"(?is)^SELECT\s+DISTINCT\b".r.findFirstIn(s).isDefined) return None
-    val whereP = pos("WHERE").headOption
-    val groupP = pos("GROUP").headOption
-    val havingP = pos("HAVING").headOption
-    val orderP = pos("ORDER").headOption
-    val limitP = pos("LIMIT").headOption
-    val clauseEnds =
-      (whereP.toSeq ++ groupP ++ havingP ++ orderP ++ limitP).sorted
-    def upTo(from: Int): Int =
-      clauseEnds.find(_ > from).getOrElse(s.length)
+    val fromC = b(From).getOrElse(return None)
+    val whereP = b(Where)
+    val groupP = b(GroupBy)
     // FROM must reference exactly the projected table
-    val fromBody = s.substring(fromP.head + 4, upTo(fromP.head + 4)).trim
+    val fromBody = top.body(fromC)
     if (normalize(fromBody) != normalize(tableRef)) return None
     // select items
-    val items = splitList(s.substring(6, fromP.head).trim)
+    val items = splitList(top.body(b(Select).get))
     if (items.isEmpty) return None
     var aggItems = 0
     val mappedItems = items.map { item =>
@@ -258,9 +245,7 @@ object ChProjections {
     }.toMap
     // GROUP BY items must all be projection keys (a subset re-merges)
     val mappedGroup: Option[String] = groupP.map { gp =>
-      val byM = raw"(?is)^GROUP\s+BY\s+".r
-        .findFirstMatchIn(s.substring(gp)).getOrElse(return None)
-      val gItems = splitList(s.substring(gp + byM.end, upTo(gp + byM.end)).trim)
+      val gItems = splitList(top.body(gp))
       val refs = gItems.map { g =>
         val n0 = normalize(g)
         val n = aliasExpr.getOrElse(n0, n0)
@@ -272,7 +257,7 @@ object ChProjections {
     }
     // WHERE: bare-column keys only, every identifier must be a key
     val mappedWhere: Option[String] = whereP.map { wp =>
-      val body = s.substring(wp + 5, upTo(wp + 5)).trim
+      val body = top.body(wp)
       val colKey: Map[String, Int] = d.keys.zipWithIndex
         .filter(_._1.matches("[A-Za-z_][A-Za-z0-9_]*")).toMap
       val out = new StringBuilder
@@ -307,8 +292,8 @@ object ChProjections {
     // rows with an identical schema, so the caller's check cannot save
     // us. Alias-only tails (`HAVING total > 3 ORDER BY total LIMIT 5`)
     // are the common shapes and keep the swap.
-    val tailStart = Seq(havingP, orderP, limitP).flatten.sorted.headOption
-    val tail = tailStart.map(t => " " + s.substring(t)).getOrElse("")
+    val tail = b.clauses.find(_.kind.rank > GroupBy.rank)
+      .fold("")(c => " " + s.substring(c.start))
     if (tail.contains('(')) return None
     Some(s"SELECT ${mappedItems.mkString(", ")} FROM $viewRef" +
       mappedWhere.map(w => s" WHERE $w").getOrElse("") +

@@ -1,6 +1,7 @@
 package graft.client
 
-import graft.sql.ChLex
+import graft.sql.{ChClauses, ChLex}
+import graft.sql.ChClauses._
 
 /** Translates the ClickHouse-dialect SQL our unparser generates into Spark
   * SQL for the embedded server engine. A real ClickHouse server would
@@ -15,10 +16,12 @@ import graft.sql.ChLex
   * QUALIFY, SETTINGS, table references, NULL ordering) followed by ONE
   * walk over the call sites ([[translateCalls]]). Every scanner reads
   * the text through [[graft.sql.ChLex]], so string literals are opaque
-  * everywhere. The walk translates each call's arguments before the
-  * call and dispatches on the exact, case-sensitive name through one
-  * table ([[rules]]) — 1:1 name swaps and rewrite rules alike; a name
-  * entered twice fails at object init.
+  * everywhere, and every clause boundary comes from
+  * [[graft.sql.ChClauses]], whose one level walk the rewrites that act
+  * at every query level share. The call walk translates each call's
+  * arguments before the call and dispatches on the exact,
+  * case-sensitive name through one table ([[rules]]) — 1:1 name swaps
+  * and rewrite rules alike; a name entered twice fails at object init.
   */
 object ChSqlTranslator {
 
@@ -371,18 +374,36 @@ object ChSqlTranslator {
     * `totals_mode = 'after_having_exclusive'` — the mode the embedded
     * rewrite implements — so a real server receiving the statement
     * verbatim behaves identically regardless of its configured default.
-    * A statement that already names totals_mode is left untouched (the
-    * embedded engine then honors-or-rejects the author's choice).
+    * A statement whose SETTINGS clause already names totals_mode is left
+    * untouched (the embedded engine then honors-or-rejects the author's
+    * choice).
     */
   def pinTotalsMode(sql: String): String = {
-    if (!raw"(?i)\bTOTALS\b".r.findFirstIn(sql).isDefined ||
-      !raw"(?i)\bHAVING\b".r.findFirstIn(sql).isDefined) return sql
-    if (raw"(?i)\btotals_mode\b".r.findFirstIn(sql).isDefined) return sql
     val trimmed = sql.replaceAll(raw"[;\s]+$$", "")
-    if (topLevelPositions(trimmed, "SETTINGS").nonEmpty)
-      trimmed + ", totals_mode = 'after_having_exclusive'"
-    else trimmed + " SETTINGS totals_mode = 'after_having_exclusive'"
+    val pins = ChClauses.levels(trimmed).exists(l => l.branches.exists(b =>
+      b.has(Having) && b(GroupBy).exists(l.seek(_, "WITH", "TOTALS") >= 0)))
+    if (!pins) return sql
+    val top = ChClauses(trimmed)
+    val last = top.branches.last
+    val settings = last(Settings)
+    if (settings.exists(st => settingItems(top, st).exists(_._1 == "totals_mode")))
+      return sql
+    val at = settings.map(_.end).orElse(last(Format).map(_.start))
+      .getOrElse(trimmed.length)
+    val tail = trimmed.substring(at)
+    trimmed.substring(0, at).replaceAll(raw"\s+$$", "") +
+      (if (settings.isDefined) ", " else " SETTINGS ") +
+      "totals_mode = 'after_having_exclusive'" +
+      (if (tail.isEmpty) "" else " " + tail)
   }
+
+  /** (lower-case name, value text) of each item of a SETTINGS clause. */
+  private def settingItems(lvl: ChClauses, st: Clause): Seq[(String, String)] =
+    parseArgs(lvl.body(st).stripSuffix(";") + ")", 0)._1.map { it =>
+      val eq = it.indexOf('=')
+      if (eq < 0) (it.trim.toLowerCase, "")
+      else (it.substring(0, eq).trim.toLowerCase, it.substring(eq + 1).trim)
+    }
 
   /** Drop a trailing top-level `FORMAT <name>` clause. The clause selects
     * a WIRE RENDERING, not a result: the connector owns the wire format
@@ -391,16 +412,11 @@ object ChSqlTranslator {
     * statement-final form exists in the server grammar; a FORMAT token
     * anywhere else is left for the engine to reject loudly.
     */
-  def stripFormat(sql: String): String = {
-    val ps = topLevelPositions(sql, "FORMAT")
-    if (ps.isEmpty) return sql
-    val at = ps.last
-    val tail = sql.substring(at)
-    if (raw"(?is)^FORMAT\s+[A-Za-z][A-Za-z0-9]*\s*;?\s*$$".r
-      .findFirstIn(tail).isDefined)
-      sql.substring(0, at).replaceAll(raw"\s+$$", "")
-    else sql
-  }
+  def stripFormat(sql: String): String =
+    ChClauses(sql).branches.last(Format) match {
+      case Some(f) => sql.substring(0, f.start).replaceAll(raw"\s+$$", "")
+      case None => sql
+    }
 
   /** ClickHouse bracket syntax, which Spark's parser either rejects or —
     * worse — silently re-interprets:
@@ -558,7 +574,7 @@ object ChSqlTranslator {
     // accepts CTE subqueries
     s = rewriteScalarWith(s)
     // honored-or-rejected: WITH FILL is handled BEFORE translation (the
-    // top-level single-column form — parseWithFill + the session's lazy
+    // top-level single-column form — [[reshape]] + the session's lazy
     // gap composition); any WITH FILL / INTERPOLATE still visible here
     // is a shape that path does not model (nested in a subquery, or a
     // caller bypassing the session) — reject by name, never garbled SQL.
@@ -588,9 +604,7 @@ object ChSqlTranslator {
     s = rewriteRightSemiAnti(s)
     s = rewritePaste(s)
     s = rewriteAsof(s)
-    s = rewriteTotals(s)
-    s = rewriteQualify(s)
-    s = rewriteSettings(s)
+    s = rewriteLevels(s)
     // table references: `db`.`table` or db.table → __ch_db_table.
     // Applied OUTSIDE string literals only — a data value containing the
     // text "main.orders" must survive translation verbatim (the same
@@ -2229,93 +2243,53 @@ object ChSqlTranslator {
     out.append(s.substring(copied)).result()
   }
 
-  /** A parsed top-level `LIMIT n [OFFSET o] BY exprs` clause
-    * (ClickHouse's per-group limit): `core` is the statement with the
-    * ORDER BY, LIMIT BY, and trailing LIMIT clauses removed; `orderBy`
-    * the top-level ORDER BY expression list (the order LIMIT BY selects
-    * rows in, per the server's documented semantics); `outerLimit` the
-    * trailing plain LIMIT clause verbatim, if any.
-    */
-  final case class LimitByParts(core: String, n: Long, offset: Long,
-      by: String, orderBy: Option[String], outerLimit: Option[String])
-
-  private val LimitByHead = raw"(?is)^LIMIT\s+(\d+)(?:\s+OFFSET\s+(\d+))?\s+BY\s+".r
-  private val OrderByHead = raw"(?is)^ORDER\s+BY\s+".r
-  private val PlainLimit = raw"(?is)^LIMIT\s+\d+(?:\s+OFFSET\s+\d+)?\s*;?\s*$$".r
-
-  /** Positions of top-level (outside parens/quotes) word-boundary
-    * occurrences of `word` (case-insensitive).
-    */
-  private[client] def topLevelPositions(sql: String, word: String): Seq[Int] =
-    wordPositions(sql, word, topLevel = true)
-
-  /** Word-boundary positions of `word` outside string/backtick quotes,
-    * at paren depth 0 only or at any depth.
-    */
-  private def wordPositions(sql: String, word: String, topLevel: Boolean): Seq[Int] = {
+  /** Positions of the word `w` outside literals, at any depth. */
+  private def wordPositions(sql: String, w: String): Seq[Int] = {
     val out = Seq.newBuilder[Int]
     val lx = new ChLex(sql)
-    while (lx.next())
-      if ((!topLevel || lx.depth == 0) && lx.isWord(word)) out += lx.start
+    while (lx.next()) if (lx.isWord(w)) out += lx.start
     out.result()
   }
 
-  private val ClauseKws =
-    Seq("WHERE", "GROUP", "ORDER", "LIMIT", "HAVING", "UNION", "SETTINGS",
-      "QUALIFY")
+  /** The [start, end) spans of the items between the commas of `s` in
+    * `[from, to)` that sit at the nesting level of `from`.
+    */
+  private def commaSpans(s: String, from: Int, to: Int): Seq[(Int, Int)] = {
+    val cuts = Seq.newBuilder[Int]
+    val lx = new ChLex(s, from)
+    while (lx.next() && lx.start < to)
+      if (lx.depth == 0 && lx.brackets == 0 && lx.isPunct(',')) cuts += lx.start
+    val cs = cuts.result()
+    (from +: cs.map(_ + 1)).zip(cs :+ to)
+  }
 
-  /** Keywords that end an ORDER BY item list (same nesting level). */
-  private val OrderEnders = Seq(
-    "LIMIT", "SETTINGS", "UNION", "HAVING", "WINDOW", "ROWS", "RANGE",
-    "GROUPS", "FORMAT", "OFFSET")
   private val NullsClause = raw"(?is).*\bNULLS\s+(FIRST|LAST)\s*$$".r
   private val DescTail = raw"(?is).*\bDESC\s*$$".r
 
   /** Make the server's sort-NULL default explicit on every ORDER BY item
-    * (any nesting level — window specs included) that does not already
+    * (every query level, window specs included) that does not already
     * carry a NULLS clause: ASC → NULLS LAST, DESC → NULLS FIRST (NULL is
     * the largest value on a server; Spark defaults the opposite way).
     */
   private def injectNullOrder(in: String): String = {
+    if (raw"(?i)\bORDER\b".r.findFirstIn(in).isEmpty) return in
+    val marks = for {
+      lvl <- ChClauses.levels(in)
+      b <- lvl.branches
+      ob <- b(OrderBy).toSeq
+      // a window spec's ORDER BY (no SELECT at its level) ends at its frame
+      end = if (b.has(Select)) ob.end
+        else (Seq("ROWS", "RANGE", "GROUPS").map(lvl.seek(ob, _)).filter(_ >= 0) :+ ob.end).min
+      (from, to) <- commaSpans(in, ob.body, end)
+      item = in.substring(from, to).replaceAll("\\s+$", "")
+      if item.trim.nonEmpty && NullsClause.findFirstIn(item).isEmpty
+    } yield (from + item.length,
+      if (DescTail.findFirstIn(item).isDefined) " NULLS FIRST" else " NULLS LAST")
     val out = new StringBuilder
-    val lx = new ChLex(in)
     var copied = 0
-    while (lx.next()) {
-      if (lx.isWord("ORDER")) {
-        val by = ChLex.after(in, lx.end)
-        if (by.isWord("BY")) {
-          lx.seek(by.end)
-          // comma-separated items at this nesting level
-          val base = lx.depth
-          var itemStart = by.end
-          var listDone = false
-          while (!listDone) {
-            var itemEnd = -1
-            var sep = false
-            while (itemEnd < 0 && lx.next()) {
-              if (lx.depth < base) { itemEnd = lx.start; listDone = true } // OVER(...) closes
-              else if (lx.depth == base && lx.isPunct(',')) { itemEnd = lx.start; sep = true }
-              else if (lx.depth == base && OrderEnders.exists(lx.isWord)) {
-                itemEnd = lx.start; listDone = true
-              }
-            }
-            if (itemEnd < 0) { itemEnd = in.length; listDone = true }
-            val raw0 = in.substring(itemStart, itemEnd)
-            val trimmedEnd = raw0.replaceAll("\\s+$", "")
-            val trailingWs = raw0.substring(trimmedEnd.length)
-            val fixed =
-              if (trimmedEnd.isEmpty || NullsClause.findFirstIn(trimmedEnd).isDefined)
-                trimmedEnd
-              else if (DescTail.findFirstIn(trimmedEnd).isDefined)
-                trimmedEnd + " NULLS FIRST"
-              else trimmedEnd + " NULLS LAST"
-            out.append(in.substring(copied, itemStart)).append(fixed).append(trailingWs)
-            copied = itemEnd
-            itemStart = itemEnd + 1
-            if (!sep) listDone = true
-          }
-        }
-      }
+    marks.toSeq.sortBy(_._1).foreach { case (at, nulls) =>
+      out.append(in.substring(copied, at)).append(nulls)
+      copied = at
     }
     out.append(in.substring(copied)).result()
   }
@@ -2350,10 +2324,9 @@ object ChSqlTranslator {
   // must resolve to one side (by alias qualifier or by a unique ` AS x`
   // binding in one side's subquery).
 
-  private def rewriteAsof(in: String): String = {
-    if (!raw"(?i)\bASOF\b".r.findFirstIn(in).isDefined) return in
-    rewriteAsofLevel(in)
-  }
+  private def rewriteAsof(in: String): String =
+    if (raw"(?i)\bASOF\b".r.findFirstIn(in).isEmpty) in
+    else ChClauses.mapLevels(in)(rewriteAsofLevel)
 
   // ---- ANY JOIN strictness → build-side dedup -------------------------
 
@@ -2362,52 +2335,69 @@ object ChSqlTranslator {
     * `ANY INNER JOIN` both): the session rewrites the RIGHT operand to a
     * deterministic one-row-per-key pick (schema needed, so the rewrite
     * itself lives with the embedded engine). `cond` starts at the
-    * ON/USING keyword and runs to the end of the statement.
+    * ON/USING keyword and runs to the end of the statement; `on` is the
+    * ON expression alone, up to the end of the FROM clause ("" for
+    * USING).
     */
   final case class AnyJoinParts(
       prefix: String, kind: String, left: String, right: String,
       rightAlias: Option[String], usingCols: Option[Seq[String]],
-      cond: String)
+      cond: String, on: String)
 
   private val AnyJoinRe =
-    raw"(?is)^(?:(LEFT|INNER)\s+ANY|ANY\s+(LEFT|INNER))\s+JOIN\b".r
+    raw"(?is)\b(?:(LEFT|INNER)\s+ANY|ANY\s+(LEFT|INNER))\s+JOIN\b".r
   private val RightAnyRe =
     raw"(?is)\b(?:RIGHT\s+ANY|ANY\s+RIGHT|ANY\s+FULL|FULL\s+ANY)\s+JOIN\b".r
 
+  /** The join operators of `lvl` whose text matches `re`, as (branch,
+    * operator start, index past JOIN, operator text).
+    */
+  private def joinOps(lvl: ChClauses, re: scala.util.matching.Regex)
+      : Seq[(Branch, Int, Int, String)] =
+    for {
+      b <- lvl.branches
+      (at, end) <- b.joins
+      op = lvl.text.substring(at, end)
+      if re.findFirstIn(op).isDefined
+    } yield (b, at, end, op)
+
+  /** The top level of `sql` and what `find` yields there. When that is
+    * nothing but a nested level yields something, `what` rejects loudly:
+    * its embedded rewrite models the top level only.
+    */
+  private def topLevelOnly[A](sql: String, what: String)(
+      find: ChClauses => Seq[A]): (ChClauses, Seq[A]) = {
+    val levels = ChClauses.levels(sql)
+    val top = levels.next()
+    val hits = find(top)
+    if (hits.isEmpty && levels.exists(find(_).nonEmpty)) throw nestedOnly(what)
+    (top, hits)
+  }
+
+  private def nestedOnly(what: String) = new IllegalArgumentException(
+    s"$what inside a subquery is not supported by the embedded rewrite " +
+      "(top-level only); restructure the statement or run against a real " +
+      "server")
+
   def parseAnyJoin(sql: String): Option[AnyJoinParts] = {
-    if (RightAnyRe.findFirstIn(sql).isDefined)
+    if (raw"(?i)\bANY\b".r.findFirstIn(sql).isEmpty) return None
+    if (ChClauses.levels(sql).exists(joinOps(_, RightAnyRe).nonEmpty))
       throw new IllegalArgumentException(
         "RIGHT/FULL ANY JOIN is not supported by the embedded rewrite " +
           "(the deduplicated side is the LEFT operand there); swap the " +
           "sides to LEFT ANY JOIN, or run against a real server")
-    val hits = (topLevelPositions(sql, "LEFT") ++
-      topLevelPositions(sql, "INNER") ++ topLevelPositions(sql, "ANY"))
-      .distinct.sorted
-      .filter(p => AnyJoinRe.findFirstIn(sql.substring(p)).isDefined)
-    if (hits.isEmpty) {
-      if (raw"(?is)\b(LEFT|INNER)\s+ANY\s+JOIN|\bANY\s+(LEFT|INNER)\s+JOIN".r
-        .findFirstIn(sql).isDefined)
-        throw new IllegalArgumentException(
-          "ANY JOIN inside a subquery is not supported by the embedded " +
-            "rewrite (top-level only); restructure the statement or run " +
-            "against a real server")
-      return None
-    }
-    require(hits.length == 1 && topLevelPositions(sql, "JOIN").length == 1,
+    val (top, hits) = topLevelOnly(sql, "ANY JOIN")(joinOps(_, AnyJoinRe))
+    if (hits.isEmpty) return None
+    require(hits.length == 1 && top.positions("JOIN").length == 1,
       "ANY JOIN mixed with other joins at one SELECT level is not " +
         "supported by the embedded rewrite; nest them in subqueries")
-    val at = hits.head
-    val m = AnyJoinRe.findFirstMatchIn(sql.substring(at)).get
+    val (b, at, afterJoin, op) = hits.head
+    val m = AnyJoinRe.findFirstMatchIn(op).get
     val kind = Option(m.group(1)).getOrElse(m.group(2)).toUpperCase
-    val fromPos = topLevelPositions(sql, "FROM").filter(_ < at).lastOption
-      .getOrElse(throw new IllegalArgumentException(
-        "ANY JOIN without a FROM clause"))
-    val left = sql.substring(fromPos + 4, at).trim
-    val afterJoin = at + m.end
-    val condPos = (topLevelPositions(sql, "ON") ++
-      topLevelPositions(sql, "USING")).filter(_ > afterJoin).sorted.headOption
-      .getOrElse(throw new IllegalArgumentException(
-        "ANY JOIN without an ON/USING condition"))
+    val from = b(From).get
+    val left = sql.substring(from.body, at).trim
+    val condPos = joinCond(top, from, afterJoin).getOrElse(
+      throw new IllegalArgumentException("ANY JOIN without an ON/USING condition"))
     var right = sql.substring(afterJoin, condPos).trim
     // optional `AS alias` / trailing bare alias on the right operand
     var alias: Option[String] = None
@@ -2430,8 +2420,9 @@ object ChSqlTranslator {
         Some(parseArgs(condText, open + 1)._1
           .map(_.trim.stripPrefix("`").stripSuffix("`")))
       } else None
-    Some(AnyJoinParts(sql.substring(0, fromPos), kind, left, right,
-      alias, usingCols, condText))
+    Some(AnyJoinParts(sql.substring(0, from.start), kind, left, right,
+      alias, usingCols, condText,
+      if (usingCols.isDefined) "" else sql.substring(condPos + 2, from.end).trim))
   }
 
   // ---- RIGHT SEMI / RIGHT ANTI joins → side swap ----------------------
@@ -2449,34 +2440,28 @@ object ChSqlTranslator {
   def rewriteRightSemiAnti(s: String): String = {
     if (raw"(?is)\bRIGHT\s+(SEMI|ANTI)\s+JOIN\b".r.findFirstIn(s).isEmpty)
       return s
-    mapTopLevelParens(rewriteRightSemiLevel(s))(
-      inner => rewriteRightSemiAnti(inner))
+    ChClauses.mapLevels(s)(rewriteRightSemiLevel)
   }
 
   private def rewriteRightSemiLevel(sql: String): String = {
-    val hits = topLevelPositions(sql, "RIGHT").filter(p =>
-      RightSemiRe.findFirstIn(sql.substring(p)).isDefined)
+    val lvl = ChClauses(sql)
+    val hits = joinOps(lvl, RightSemiRe)
     if (hits.isEmpty) return sql
-    require(hits.length == 1 && topLevelPositions(sql, "JOIN").length == 1,
+    require(hits.length == 1 && lvl.positions("JOIN").length == 1,
       "RIGHT SEMI/ANTI JOIN mixed with other joins at one SELECT level " +
         "is not supported by the embedded rewrite; nest them in subqueries")
-    val at = hits.head
-    val m = RightSemiRe.findFirstMatchIn(sql.substring(at)).get
-    val kind = m.group(1).toUpperCase
-    val fromPos = topLevelPositions(sql, "FROM").filter(_ < at).lastOption
-      .getOrElse(throw new IllegalArgumentException(
-        "RIGHT SEMI/ANTI JOIN without a FROM clause"))
-    val left = sql.substring(fromPos + 4, at).trim
-    val afterJoin = at + m.end
-    val condPos = (topLevelPositions(sql, "ON") ++
-      topLevelPositions(sql, "USING")).filter(_ > afterJoin).sorted.headOption
-      .getOrElse(throw new IllegalArgumentException(
+    val (b, at, afterJoin, op) = hits.head
+    val kind = RightSemiRe.findFirstMatchIn(op).get.group(1).toUpperCase
+    val from = b(From).get
+    val left = sql.substring(from.body, at).trim
+    val condPos = joinCond(lvl, from, afterJoin).getOrElse(
+      throw new IllegalArgumentException(
         "RIGHT SEMI/ANTI JOIN without an ON/USING condition"))
     val right = sql.substring(afterJoin, condPos).trim
     require(left.nonEmpty && right.nonEmpty,
-      s"RIGHT $kind JOIN: malformed operands near '${sql.substring(fromPos)
+      s"RIGHT $kind JOIN: malformed operands near '${sql.substring(from.start)
         .take(60)}'")
-    sql.substring(0, fromPos) + s"FROM $right LEFT $kind JOIN $left " +
+    sql.substring(0, from.start) + s"FROM $right LEFT $kind JOIN $left " +
       sql.substring(condPos)
   }
 
@@ -2496,112 +2481,61 @@ object ChSqlTranslator {
     */
   def rewritePaste(s: String): String = {
     if (raw"(?is)\bPASTE\s+JOIN\b".r.findFirstIn(s).isEmpty) return s
-    val hits = topLevelPositions(s, "PASTE").filter(p =>
-      raw"(?is)^PASTE\s+JOIN\b".r.findFirstIn(s.substring(p)).isDefined)
-    if (hits.isEmpty)
-      throw new IllegalArgumentException(
-        "PASTE JOIN inside a subquery is not supported by the embedded " +
-          "rewrite; restructure or run against a real server")
+    val (top, hits) = topLevelOnly(s, "PASTE JOIN")(joinOps(_, PasteJoin))
+    if (hits.isEmpty) return s
     require(hits.length == 1,
       "multiple PASTE JOINs in one statement are not supported by the " +
         "embedded rewrite; nest them in subqueries")
-    require(topLevelPositions(s, "JOIN").length == 1,
+    require(top.positions("JOIN").length == 1,
       "PASTE JOIN mixed with other joins at one SELECT level is not " +
         "supported by the embedded rewrite; nest them in subqueries")
-    val at = hits.head
+    val (b, at, joinEnd, _) = hits.head
     // `*` select items would expose the injected pairing column
-    val selPos = topLevelPositions(s, "SELECT").headOption.getOrElse(
+    val sel = b(Select).getOrElse(
       throw new IllegalArgumentException("PASTE JOIN without a SELECT"))
-    val fromAll = topLevelPositions(s, "FROM")
-    val fromPos = fromAll.filter(_ < at).lastOption.getOrElse(
-      throw new IllegalArgumentException("PASTE JOIN without a FROM clause"))
-    require(!s.substring(selPos, fromPos).contains("*"),
+    val from = b(From).get
+    require(!s.substring(sel.body, from.start).contains("*"),
       "PASTE JOIN: `*` select items are not supported by the embedded " +
         "rewrite (the positional pairing column would leak into them); " +
         "name the columns explicitly")
-    // left side: optional alias, optional AS, then a ')' closing the
-    // parenthesized subquery
-    var j = at - 1
-    while (j >= 0 && s.charAt(j).isWhitespace) j -= 1
-    var leftAlias = ""
-    if (j >= 0 && (s.charAt(j).isLetterOrDigit || s.charAt(j) == '_')) {
-      var ws = j
-      while (ws >= 0 && (s.charAt(ws).isLetterOrDigit || s.charAt(ws) == '_')) ws -= 1
-      leftAlias = s.substring(ws + 1, j + 1)
-      require(!leftAlias.equalsIgnoreCase("AS"),
-        "PASTE JOIN: missing alias after AS on the left side")
-      j = ws
-      while (j >= 0 && s.charAt(j).isWhitespace) j -= 1
-      if (j >= 1 && s.regionMatches(true, j - 1, "AS", 0, 2) &&
-        (j - 2 < 0 || !(s.charAt(j - 2).isLetterOrDigit || s.charAt(j - 2) == '_'))) {
-        j -= 2
-        while (j >= 0 && s.charAt(j).isWhitespace) j -= 1
-      }
-    }
-    require(j >= 0 && s.charAt(j) == ')',
-      "PASTE JOIN: both sides must be parenthesized subqueries with " +
-        "their own ORDER BY")
-    val k = ChLex.openOf(s, j)
-    require(k > fromPos, "PASTE JOIN: unbalanced left subquery parens")
-    val leftInner = s.substring(k + 1, j)
-    require(s.substring(fromPos + 4, k).trim.isEmpty,
-      "PASTE JOIN: the left side must be a single parenthesized subquery")
-    // right side after the JOIN keyword
-    val m = raw"(?is)^PASTE\s+JOIN\s*".r.findFirstMatchIn(s.substring(at)).get
-    val r = at + m.end
-    require(r < s.length && s.charAt(r) == '(',
-      "PASTE JOIN: both sides must be parenthesized subqueries with " +
-        "their own ORDER BY")
-    val rc = ChLex.closeOf(s, r) - 1
-    require(rc > r, "PASTE JOIN: unbalanced right subquery parens")
-    val rightInner = s.substring(r + 1, rc)
-    var p = rc + 1
-    while (p < s.length && s.charAt(p).isWhitespace) p += 1
-    if (p + 1 < s.length && s.regionMatches(true, p, "AS", 0, 2) &&
-      (p + 2 >= s.length ||
-        !(s.charAt(p + 2).isLetterOrDigit || s.charAt(p + 2) == '_'))) {
-      p += 2
-      while (p < s.length && s.charAt(p).isWhitespace) p += 1
-    }
-    var rightAlias = ""
-    var pe = p
-    while (pe < s.length && (s.charAt(pe).isLetterOrDigit || s.charAt(pe) == '_')) pe += 1
-    if (pe > p) {
-      val word = s.substring(p, pe)
-      // clause keywords are NOT aliases
-      if (!(ClauseKws ++ Seq("ON", "USING", "FORMAT", "OFFSET"))
-        .exists(_.equalsIgnoreCase(word))) {
-        rightAlias = word
-        p = pe
-      }
-    }
-    val rest = s.substring(p)
-    require(!raw"(?is)^\s*(ON|USING)\b".r.findFirstIn(rest).isDefined,
+    require(joinCond(top, from, joinEnd).isEmpty,
       "PASTE JOIN takes no ON/USING condition (pairing is positional)")
-    def sideOrder(inner: String, side: String): String = {
-      val obs = topLevelPositions(inner, "ORDER").filter(q =>
-        OrderByHead.findFirstIn(inner.substring(q)).isDefined)
-      require(obs.nonEmpty,
-        s"PASTE JOIN: the $side side needs its own top-level ORDER BY — " +
-          "positional pairing over an unordered stream is " +
-          "nondeterministic (the LIMIT BY determinism rule)")
-      val q = obs.last
-      val obM = OrderByHead.findFirstMatchIn(inner.substring(q)).get
-      val after = q + obM.end
-      val end = OrderEnders.flatMap(kw => topLevelPositions(inner, kw))
-        .filter(_ >= after).sorted.headOption.getOrElse(inner.length)
-      inner.substring(after, end).trim
+    // each side: one parenthesized subquery, then an optional [AS] alias
+    def side(seg: String, which: String): (String, String) = {
+      val t = seg.trim
+      val close = if (t.startsWith("(")) ChLex.closeOf(t, 0) else -1
+      require(close > 0, "PASTE JOIN: both sides must be parenthesized " +
+        "subqueries with their own ORDER BY")
+      val alias = t.substring(close).trim.replaceFirst("(?is)^AS\\s+", "")
+      require(!alias.equalsIgnoreCase("AS"),
+        s"PASTE JOIN: missing alias after AS on the $which side")
+      require(alias.isEmpty || BareIdent.findFirstIn(alias).isDefined,
+        s"PASTE JOIN: the $which side must be a single parenthesized subquery")
+      val inner = t.substring(1, close - 1)
+      val il = ChClauses(inner)
+      val order = il.branches.flatMap(_(OrderBy)).lastOption.map(il.body)
+        .getOrElse(throw new IllegalArgumentException(
+          s"PASTE JOIN: the $which side needs its own top-level ORDER BY — " +
+            "positional pairing over an unordered stream is " +
+            "nondeterministic (the LIMIT BY determinism rule)"))
+      val as = if (alias.nonEmpty) alias else s"__paste_${which.head}"
+      (s"(SELECT *, row_number() OVER (ORDER BY $order) AS __paste_rn " +
+        s"FROM ( $inner ) __paste_${which.head}i) AS $as", as)
     }
-    val la = if (leftAlias.nonEmpty) leftAlias else "__paste_l"
-    val ra = if (rightAlias.nonEmpty) rightAlias else "__paste_r"
-    val newFrom =
-      s"FROM (SELECT *, row_number() OVER (ORDER BY ${sideOrder(leftInner, "left")}) " +
-        s"AS __paste_rn FROM ( $leftInner ) __paste_li) AS $la " +
-        s"JOIN (SELECT *, row_number() OVER (ORDER BY ${sideOrder(rightInner, "right")}) " +
-        s"AS __paste_rn FROM ( $rightInner ) __paste_ri) AS $ra " +
-        s"ON $la.__paste_rn = $ra.__paste_rn"
-    s.substring(0, fromPos) + newFrom + rest
+    val (l, la) = side(s.substring(from.body, at), "left")
+    val (r, ra) = side(s.substring(joinEnd, from.end), "right")
+    s.substring(0, from.start) + s"FROM $l JOIN $r ON $la.__paste_rn = " +
+      s"$ra.__paste_rn" + (if (from.end < s.length) " " + s.substring(from.end) else "")
   }
+
+  /** The first ON / USING keyword of a join whose operator ends at
+    * `afterJoin`, inside the FROM clause `from`.
+    */
+  private def joinCond(lvl: ChClauses, from: Clause, afterJoin: Int): Option[Int] =
+    (lvl.positions("ON") ++ lvl.positions("USING"))
+      .filter(p => p > afterJoin && p < from.end).minOption
+
+  private val PasteJoin = raw"(?is)^PASTE\s+JOIN$$".r
 
   // ---- star column transformers (* REPLACE / APPLY / COLUMNS) --------
 
@@ -2619,7 +2553,7 @@ object ChSqlTranslator {
     * server's naming). COLUMNS filters by RE2-style partial match first.
     */
   final case class StarTransformParts(
-      core: String, ops: Seq[StarOp], columnsRe: Option[String])
+      core: String, ops: Seq[StarOp], columnsRe: Option[String]) extends Reshape
 
   /** Translate a ClickHouse scalar EXPRESSION fragment (no statement
     * structure) to a Spark SQL fragment.
@@ -2627,10 +2561,15 @@ object ChSqlTranslator {
   def translateFragment(frag: String, tables: Seq[(String, String)]): String =
     translate("SELECT " + frag, tables).trim.stripPrefix("SELECT").trim
 
-  def parseStarTransform(sql: String): Option[StarTransformParts] = {
-    val sel = topLevelPositions(sql, "SELECT").headOption.getOrElse(return None)
-    val from = topLevelPositions(sql, "FROM").find(_ > sel).getOrElse(return None)
-    val list = sql.substring(sel + 6, from).trim
+  def parseStarTransform(sql: String): Option[StarTransformParts] =
+    reshape(sql).collect { case p: StarTransformParts => p }
+
+  private def starTransform(top: ChClauses): Option[StarTransformParts] = {
+    val sql = top.text
+    val b = top.branches.head
+    val sel = b(Select).getOrElse(return None)
+    val from = b(From).getOrElse(return None)
+    val list = sql.substring(sel.body, from.start).trim
     val isStarForm =
       raw"(?is)^\*\s+(EXCEPT|REPLACE|APPLY)\b.*".r.findFirstIn(list).isDefined
     val isColumnsForm = raw"(?is)^COLUMNS\s*\(.*".r.findFirstIn(list).isDefined
@@ -2640,18 +2579,19 @@ object ChSqlTranslator {
         "are `* [EXCEPT (cols)] {REPLACE (e AS c, ...) | APPLY (fn)}...` " +
         "and `COLUMNS('re') {APPLY (fn) | REPLACE (...)}...` at the top " +
         "level — restructure or run against a real server")
-    for (kw <- Seq("GROUP", "ORDER", "HAVING", "UNION"))
-      if (topLevelPositions(sql, kw).exists(_ > from))
-        fail(s"$kw BY/clause combined with a transformer is not modeled " +
-          "embedded (the transformer composes on the analyzed result); " +
-          "wrap the transformed SELECT in a subquery")
+    val clash = b.clauses.map(_.kind).filter(k => (k eq GroupBy) || (k eq Having) ||
+      (k eq OrderBy)).map(_.name) ++ (if (top.branches.size > 1) Seq("UNION") else Nil)
+    clash.headOption.foreach(kw =>
+      fail(s"$kw combined with a transformer is not modeled embedded (the " +
+        "transformer composes on the analyzed result); wrap the transformed " +
+        "SELECT in a subquery"))
     var p = 0
     var columnsRe: Option[String] = None
     val keep = new StringBuilder("*")
     def skipWs(): Unit = while (p < list.length && list.charAt(p).isWhitespace) p += 1
     def word(): String = {
       val s0 = p
-      while (p < list.length && isWordChar(list.charAt(p))) p += 1
+      while (p < list.length && ChLex.isWordChar(list.charAt(p))) p += 1
       list.substring(s0, p)
     }
     if (isColumnsForm) {
@@ -2668,7 +2608,7 @@ object ChSqlTranslator {
       p = 1 // past '*'
       skipWs()
       if (list.regionMatches(true, p, "EXCEPT", 0, 6) &&
-        (p + 6 >= list.length || !isWordChar(list.charAt(p + 6)))) {
+        (p + 6 >= list.length || !ChLex.isWordChar(list.charAt(p + 6)))) {
         p += 6; skipWs()
         if (p < list.length && list.charAt(p) == '(') {
           val (args, past) = parseArgs(list, p + 1)
@@ -2717,7 +2657,7 @@ object ChSqlTranslator {
     val parts = ops.result()
     if (parts.isEmpty && columnsRe.isEmpty && keep.result() == "*") return None
     Some(StarTransformParts(
-      sql.substring(0, sel + 6) + " " + keep.result() + " " + sql.substring(from),
+      sql.substring(0, sel.body) + " " + keep.result() + " " + sql.substring(from.start),
       parts, columnsRe))
   }
 
@@ -2726,12 +2666,8 @@ object ChSqlTranslator {
   /** Index of the LAST top-level ` AS ` keyword in `it` (CAST's AS and
     * lambda bodies sit inside parens), or -1.
     */
-  private def lastTopLevelAs(it: String): Int = {
-    var asAt = -1
-    val lx = new ChLex(it)
-    while (lx.next()) if (lx.depth == 0 && lx.isWord("AS")) asAt = lx.start
-    asAt
-  }
+  private[client] def lastTopLevelAs(it: String): Int =
+    ChClauses(it).positions("AS").lastOption.getOrElse(-1)
 
   private val BareIdent = raw"^[A-Za-z_][A-Za-z0-9_]*$$".r
 
@@ -2747,13 +2683,14 @@ object ChSqlTranslator {
     */
   def rewriteScalarWith(s: String): String = {
     if (raw"(?i)\bWITH\b".r.findFirstIn(s).isEmpty) return s
-    mapTopLevelParens(rewriteScalarWithLevel(s))(inner => rewriteScalarWith(inner))
+    ChClauses.mapLevels(s)(rewriteScalarWithLevel)
   }
 
   private def rewriteScalarWithLevel(sql: String): String = {
-    val sel = topLevelPositions(sql, "SELECT").headOption.getOrElse(return sql)
-    val w = topLevelPositions(sql, "WITH").find(_ < sel).getOrElse(return sql)
-    val itemsTxt = sql.substring(w + 4, sel)
+    val b = ChClauses(sql).branches.head
+    val w = b(With).getOrElse(return sql)
+    val sel = b(Select).getOrElse(return sql).start
+    val itemsTxt = sql.substring(w.body, sel)
     // split items on top-level commas
     val items = parseArgs(itemsTxt + ")", 0)._1
     var subs = Seq.empty[(String, String)]
@@ -2779,7 +2716,7 @@ object ChSqlTranslator {
     }
     if (subs.isEmpty) return sql
     val rest = applySubs(sql.substring(sel))
-    val head = sql.substring(0, w)
+    val head = sql.substring(0, w.start)
     if (kept.isEmpty) head + rest
     else head + "WITH " + kept.map(applySubs).mkString(", ") + " " + rest
   }
@@ -2804,21 +2741,12 @@ object ChSqlTranslator {
 
   // ---- ARRAY JOIN clause → LATERAL VIEW chain ------------------------
 
-  /** Keywords that end an ARRAY JOIN item list at its own nesting level
-    * (next clause or next join). LEFT/RIGHT double as function names —
-    * the scanner skips them when a `(` follows.
-    */
-  private val AjEnders = Set(
-    "WHERE", "GROUP", "HAVING", "ORDER", "LIMIT", "SETTINGS", "UNION",
-    "FORMAT", "QUALIFY", "WINDOW", "JOIN", "INNER", "LEFT", "RIGHT",
-    "FULL", "CROSS", "ASOF", "SEMI", "ANTI", "GLOBAL", "INTERSECT",
-    "EXCEPT", "ARRAY", "PREWHERE")
-
-  private def isWordChar(c: Char): Boolean = c.isLetterOrDigit || c == '_'
+  private val ArrayJoinOp = raw"(?is)^(?:(LEFT|INNER)\s+)?ARRAY\s+JOIN$$".r
 
   /** `FROM ... [LEFT] ARRAY JOIN e1 AS n1 [, e2 AS n2 ...]` → a Spark
-    * LATERAL VIEW chain, rewritten in place at ANY nesting depth (the
-    * clause sits exactly where LATERAL VIEW does). The first item
+    * LATERAL VIEW chain, rewritten in place at EVERY query level (the
+    * clause sits exactly where LATERAL VIEW does). The items run to the
+    * next join operator or the end of the FROM clause. The first item
     * posexplodes and its position column zips the rest — server
     * multi-ARRAY JOIN is POSITIONAL, not a cross product (SELECT doc
     * §array-join); each further item picks `element_at(ek, pos + 1)`.
@@ -2831,128 +2759,94 @@ object ChSqlTranslator {
     * shows). Unequal array sizes in the multi-item form surface as an
     * element_at index error under ANSI — a server errors there too.
     */
-  def rewriteArrayJoin(sql: String): String = rewriteArrayJoinFrom(sql, 0)
-
-  private def rewriteArrayJoinFrom(sql: String, k: Int): String = {
-    // locate the first ARRAY JOIN outside strings/backticks
-    val lx = new ChLex(sql)
-    var found = -1; var foundDepth = 0
-    var lastSelAtDepth = Map[Int, Int]()
-    while (found < 0 && lx.next()) {
-      if (lx.isWord("SELECT")) lastSelAtDepth += lx.depth -> lx.start
-      else if (lx.isWord("ARRAY") &&
-        raw"(?is)^ARRAY\s+JOIN\b".r.findFirstIn(sql.substring(lx.start)).isDefined) {
-        found = lx.start; foundDepth = lx.depth
+  def rewriteArrayJoin(sql: String): String = {
+    if (raw"(?i)\bARRAY\b".r.findFirstIn(sql).isEmpty) return sql
+    var k = 0 // helper names stay unique across the statement
+    def level(s: String): String = {
+      val lvl = ChClauses(s)
+      joinOps(lvl, ArrayJoinOp).headOption match {
+        case None => s
+        case Some((b, start, itemsStart, op)) =>
+          // the owning SELECT must not be a star select
+          val from = b(From).get
+          b(Select).foreach { sel =>
+            if (hasTopLevelStar(s.substring(sel.body, from.start)))
+              throw new IllegalArgumentException(
+                "ARRAY JOIN with a `*` select is not supported by the embedded " +
+                  "rewrite (a Spark star would include the helper position " +
+                  "column a server never shows); list columns explicitly")
+          }
+          val outer = Option(ArrayJoinOp.findFirstMatchIn(op).get.group(1))
+            .exists(_.equalsIgnoreCase("LEFT"))
+          val itemsEnd = b.joins.map(_._1).find(_ > start).getOrElse(from.end)
+          val items = commaSpans(s, itemsStart, itemsEnd)
+            .map { case (a, z) => s.substring(a, z).trim }.filter(_.nonEmpty)
+          require(items.nonEmpty,
+            s"ARRAY JOIN: empty item list near '${s.substring(itemsStart, itemsEnd)}'")
+          val parsed = items.map { it =>
+            // the alias is the LAST top-level ` AS ` binding (CAST(x AS T)
+            // and lambda bodies sit inside parens)
+            val asAt = lastTopLevelAs(it)
+            if (asAt < 0)
+              throw new IllegalArgumentException(
+                s"ARRAY JOIN item '$it' has no AS alias: an unaliased ARRAY " +
+                  "JOIN replaces the array column in place, which the embedded " +
+                  "rewrite cannot express — write `ARRAY JOIN <expr> AS <name>` " +
+                  "or run against a real server")
+            val expr = it.substring(0, asAt).trim
+            val alias = it.substring(asAt + 2).trim
+            require(expr.nonEmpty && alias.nonEmpty &&
+              raw"^(`[^`]+`|[A-Za-z_][A-Za-z0-9_]*)$$".r.findFirstIn(alias).isDefined,
+              s"ARRAY JOIN item '$it': malformed expression or alias")
+            (expr, alias)
+          }
+          val lead = if (outer) "LATERAL VIEW OUTER " else "LATERAL VIEW "
+          val pos = s"__aj_pos_$k"
+          val repl = new StringBuilder
+          repl.append(s"${lead}posexplode(${parsed.head._1}) __aj_$k ")
+            .append(s"AS $pos, ${parsed.head._2}")
+          parsed.zipWithIndex.drop(1).foreach { case ((e, n), idx) =>
+            // element_at rides the FIRST item's position: zip semantics. The
+            // 1-element array keeps this a generator (never empty, so plain
+            // LATERAL VIEW is right even under OUTER).
+            repl.append(s" LATERAL VIEW explode(array(element_at($e, $pos + 1))) ")
+              .append(s"__aj_${k}_$idx AS $n")
+          }
+          k += 1
+          val rest = s.substring(itemsEnd).trim
+          level(s.substring(0, start).stripSuffix(" ") + " " + repl.result() +
+            (if (rest.isEmpty) "" else " " + rest))
       }
     }
-    if (found < 0) return sql
-    // LEFT / INNER prefix (INNER ARRAY JOIN == ARRAY JOIN)
-    var start = found
-    var outer = false
-    val before = sql.substring(0, found)
-    raw"(?is)\b(LEFT|INNER)\s*$$".r.findFirstMatchIn(before).foreach { pm =>
-      start = pm.start
-      outer = pm.group(1).equalsIgnoreCase("LEFT")
-    }
-    // the owning SELECT (same depth) must not be a star select
-    lastSelAtDepth.get(foundDepth).foreach { selAt =>
-      // the owning FROM is the first one at the SELECT's own depth (a
-      // scalar subquery in the select list carries its own, deeper FROM)
-      val sl = new ChLex(sql.substring(0, found), selAt + 6)
-      var selEnd = found
-      while (selEnd == found && sl.next())
-        if (sl.depth == 0 && sl.isWord("FROM")) selEnd = sl.start
-      if (hasTopLevelStar(sql.substring(selAt + 6, selEnd)))
-        throw new IllegalArgumentException(
-          "ARRAY JOIN with a `*` select is not supported by the embedded " +
-            "rewrite (a Spark star would include the helper position " +
-            "column a server never shows); list columns explicitly")
-    }
-    val itemsStart =
-      found + raw"(?is)^ARRAY\s+JOIN\b".r.findFirstMatchIn(sql.substring(found)).get.end
-    // items run to the next clause keyword / closing paren at this level
-    val il = new ChLex(sql, itemsStart)
-    var itemsEnd = sql.length
-    val commas = Seq.newBuilder[Int]
-    while (itemsEnd == sql.length && il.next()) {
-      if (il.depth < 0) itemsEnd = il.start
-      else if (il.depth == 0 && il.isPunct(',')) commas += il.start
-      else if (il.depth == 0 && AjEnders.exists(il.isWord)) {
-        // LEFT(/RIGHT( are string functions, not clause starts
-        val fnLike = (il.isWord("LEFT") || il.isWord("RIGHT")) && {
-          var p = il.end
-          while (p < sql.length && sql.charAt(p).isWhitespace) p += 1
-          p < sql.length && sql.charAt(p) == '('
-        }
-        if (!fnLike) itemsEnd = il.start
-      }
-    }
-    val itemsTxt = sql.substring(itemsStart, itemsEnd)
-    val cuts = (Seq(itemsStart - 1) ++ commas.result() ++ Seq(itemsEnd))
-    val items = cuts.sliding(2).map { case Seq(a, b) =>
-      sql.substring(a + 1, b).trim
-    }.toSeq.filter(_.nonEmpty)
-    require(items.nonEmpty, s"ARRAY JOIN: empty item list near '$itemsTxt'")
-    val parsed = items.map { it =>
-      // the alias is the LAST top-level ` AS ` binding (CAST(x AS T) and
-      // lambda bodies sit inside parens)
-      val asAt = lastTopLevelAs(it)
-      if (asAt < 0)
-        throw new IllegalArgumentException(
-          s"ARRAY JOIN item '$it' has no AS alias: an unaliased ARRAY " +
-            "JOIN replaces the array column in place, which the embedded " +
-            "rewrite cannot express — write `ARRAY JOIN <expr> AS <name>` " +
-            "or run against a real server")
-      val expr = it.substring(0, asAt).trim
-      val alias = it.substring(asAt + 2).trim
-      require(expr.nonEmpty && alias.nonEmpty &&
-        raw"^(`[^`]+`|[A-Za-z_][A-Za-z0-9_]*)$$".r.findFirstIn(alias).isDefined,
-        s"ARRAY JOIN item '$it': malformed expression or alias")
-      (expr, alias)
-    }
-    val lead = if (outer) "LATERAL VIEW OUTER " else "LATERAL VIEW "
-    val pos = s"__aj_pos_$k"
-    val repl = new StringBuilder
-    repl.append(s"${lead}posexplode(${parsed.head._1}) __aj_$k ")
-      .append(s"AS $pos, ${parsed.head._2}")
-    parsed.zipWithIndex.drop(1).foreach { case ((e, n), idx) =>
-      // element_at rides the FIRST item's position: zip semantics. The
-      // 1-element array keeps this a generator (never empty, so plain
-      // LATERAL VIEW is right even under OUTER).
-      repl.append(s" LATERAL VIEW explode(array(element_at($e, $pos + 1))) ")
-        .append(s"__aj_${k}_$idx AS $n")
-    }
-    val rebuilt = sql.substring(0, start).stripSuffix(" ") + " " +
-      repl.result() + " " + sql.substring(itemsEnd).trim
-    rewriteArrayJoinFrom(rebuilt.trim, k + 1)
+    ChClauses.mapLevels(sql)(level)
   }
 
-  /** Rewrite the (single) top-level ASOF join of `sql`, recursing into
-    * top-level paren groups when this level has none.
+  /** Rewrite the (single) ASOF join of one query level; the level walk
+    * in [[rewriteAsof]] reaches the nested ones.
     */
   private def rewriteAsofLevel(sql: String): String = {
-    val asofs = topLevelPositions(sql, "ASOF")
-    // none at this level: recurse into top-level paren groups
-    if (asofs.isEmpty) return mapTopLevelParens(sql)(rewriteAsofLevel)
+    val top = ChClauses(sql)
+    val asofs = top.positions("ASOF")
+    if (asofs.isEmpty) return sql
     require(asofs.length == 1,
       "ASOF JOIN: multiple ASOF joins at one SELECT level are not supported " +
         "by the embedded rewrite; nest them in subqueries")
     val at = asofs.head
-    val selPos = topLevelPositions(sql, "SELECT").headOption.getOrElse(
+    val branch = top.branchAt(at)
+    val select = branch(Select).getOrElse(
       throw new IllegalArgumentException("ASOF JOIN outside a SELECT"))
-    val fromPos = topLevelPositions(sql, "FROM").filter(p => p > selPos && p < at)
-      .lastOption.getOrElse(
-        throw new IllegalArgumentException("ASOF JOIN without a FROM clause"))
-    require(topLevelPositions(sql, "JOIN").length == 1,
+    val from = branch(From).filter(_.start < at).getOrElse(
+      throw new IllegalArgumentException("ASOF JOIN without a FROM clause"))
+    require(top.positions("JOIN").length == 1,
       "ASOF JOIN mixed with other joins at one SELECT level is not " +
         "supported by the embedded rewrite; nest them in subqueries")
-    val prefix = sql.substring(0, selPos)
-    val selRaw = sql.substring(selPos + 6, fromPos).trim
+    val prefix = sql.substring(0, select.start)
+    val selRaw = sql.substring(select.body, from.start).trim
     require(!hasTopLevelStar(selRaw),
       "ASOF JOIN: `*` select items are not supported by the embedded " +
         "rewrite (the internal row-pick columns would leak); list columns " +
         "explicitly")
-    val lSeg = sql.substring(fromPos + 4, at).trim
+    val lSeg = sql.substring(from.body, at).trim
     val jm = raw"(?is)^ASOF\s+(LEFT\s+|INNER\s+)?JOIN\b".r
       .findFirstMatchIn(sql.substring(at)).getOrElse(
         throw new IllegalArgumentException(
@@ -2963,27 +2857,21 @@ object ChSqlTranslator {
     // asof column with the server's pinned `left >= right` (backward
     // inclusive) match; handled in its own branch because the flattening
     // must EXCEPT the right side's same-named columns
-    val usingPosOpt = topLevelPositions(sql, "USING").find(_ >= joinEnd)
-    val onPosOpt = topLevelPositions(sql, "ON").find(_ >= joinEnd)
-    if (usingPosOpt.exists(up => onPosOpt.forall(up < _)))
+    val condPos = joinCond(top, from, joinEnd)
+    if (condPos.exists(sql.regionMatches(true, _, "USING", 0, 5)))
       return rewriteAsofUsing(
-        sql, prefix, selRaw, lSeg, isLeft, joinEnd, usingPosOpt.get)
-    val onPos = onPosOpt.getOrElse(
+        sql, prefix, selRaw, lSeg, isLeft, joinEnd, condPos.get)
+    val onPos = condPos.getOrElse(
       throw new IllegalArgumentException(
         "ASOF JOIN requires an ON clause (or USING (keys..., asofColumn))"))
     val rSeg = sql.substring(joinEnd, onPos).trim
-    val onEnd = ClauseKws.flatMap(k => topLevelPositions(sql, k))
-      .filter(_ > onPos).sorted.headOption.getOrElse(sql.length)
-    val onExpr = sql.substring(onPos + 2, onEnd).trim
-    val tail = sql.substring(onEnd)
+    val onExpr = sql.substring(onPos + 2, from.end).trim
+    val tail = sql.substring(from.end)
 
     val (lAlias, _) = termAlias(lSeg)
     val (rAliasOpt, _) = termAlias(rSeg)
     val rAlias = rAliasOpt.getOrElse("__asof_r")
-    // nested ASOF joins inside either side rewrite recursively
-    val lSegR = rewriteAsofLevel(lSeg)
-    val rSegR = rewriteAsofLevel(rSeg)
-    val rTermFull = if (rAliasOpt.isDefined) rSegR else s"$rSegR AS __asof_r"
+    val rTermFull = if (rAliasOpt.isDefined) rSeg else s"$rSeg AS __asof_r"
 
     // the one inequality decides the pick order
     val conjs = splitTopLevelAnd(onExpr)
@@ -3037,7 +2925,7 @@ object ChSqlTranslator {
       s"SELECT __asof_l.*, $rAlias.*, row_number() OVER (PARTITION BY " +
         s"__asof_l.__asof_lid ORDER BY $rTime $ord) AS __asof_rn " +
         s"FROM (SELECT *, monotonically_increasing_id() AS __asof_lid " +
-        s"FROM $lSegR) AS __asof_l LEFT JOIN $rTermFull ON $onInner"
+        s"FROM $lSeg) AS __asof_l LEFT JOIN $rTermFull ON $onInner"
     val innerCond = if (isLeft) "" else s" AND $rTimeOuter IS NOT NULL"
     val whereOut = s" WHERE __asof_rn = 1$innerCond" +
       whereExpr.map(w => s" AND (${stripQuals(w)})").getOrElse("")
@@ -3075,10 +2963,7 @@ object ChSqlTranslator {
     val (lAlias, _) = termAlias(lSeg)
     val (rAliasOpt, _) = termAlias(rSeg)
     val rAlias = rAliasOpt.getOrElse("__asof_r")
-    // nested ASOF joins inside either side rewrite recursively
-    val lSegR = rewriteAsofLevel(lSeg)
-    val rSegR = rewriteAsofLevel(rSeg)
-    val rTermFull = if (rAliasOpt.isDefined) rSegR else s"$rSegR AS __asof_r"
+    val rTermFull = if (rAliasOpt.isDefined) rSeg else s"$rSeg AS __asof_r"
     val keys = cols.init
     val tCol = cols.last
     val onInner = (keys.map(k => s"__asof_l.$k = $rAlias.$k") :+
@@ -3095,7 +2980,7 @@ object ChSqlTranslator {
         s"$rAlias.$tCol AS __asof_rt, row_number() OVER (PARTITION BY " +
         s"__asof_l.__asof_lid ORDER BY $rAlias.$tCol DESC) AS __asof_rn " +
         s"FROM (SELECT *, monotonically_increasing_id() AS __asof_lid " +
-        s"FROM $lSegR) AS __asof_l LEFT JOIN $rTermFull ON $onInner"
+        s"FROM $lSeg) AS __asof_l LEFT JOIN $rTermFull ON $onInner"
     val innerCond = if (isLeft) "" else " AND __asof_rt IS NOT NULL"
     val whereOut = s" WHERE __asof_rn = 1$innerCond" +
       whereExpr.map(w => s" AND (${stripQuals(w)})").getOrElse("")
@@ -3108,34 +2993,28 @@ object ChSqlTranslator {
     * NULL padding is the rewrite's native behavior; `= 0` type-default
     * padding cannot be honored).
     */
-  private def splitAsofTail(tail0: String): (Option[String], String) = {
-    var tail = tail0
-    // SETTINGS handling (always trailing in our dialect)
-    topLevelPositions(tail, "SETTINGS").headOption.foreach { sp =>
-      val body = tail.substring(sp + 8).trim.stripSuffix(";").trim
-      val items = body.split(",").map(_.trim).filter(_.nonEmpty)
-      val kept = items.filterNot(
-        _.matches(raw"(?i)join_use_nulls\s*=\s*1"))
-      require(!items.exists(_.matches(raw"(?i)join_use_nulls\s*=\s*0")),
+  private def splitAsofTail(tail: String): (Option[String], String) = {
+    val tl = ChClauses(tail)
+    val b = tl.branches.head
+    val settings = b(Settings)
+    settings.foreach { st =>
+      val items = settingItems(tl, st)
+      val kept = items.filterNot(_ == ("join_use_nulls" -> "1"))
+      require(!items.contains("join_use_nulls" -> "0"),
         "ASOF JOIN with join_use_nulls = 0 (type-default padding) is not " +
           "supported by the embedded engine; use NULL padding")
       require(kept.isEmpty,
         s"ASOF JOIN: unsupported SETTINGS on the embedded engine: " +
-          kept.mkString(", "))
-      tail = tail.substring(0, sp)
+          kept.map { case (n, v) => s"$n = $v" }.mkString(", "))
     }
-    val t = tail.trim
-    if (t.isEmpty) (None, "")
-    else {
-      val wp = topLevelPositions(t, "WHERE").headOption
-      wp match {
-        case Some(0) =>
-          val wEnd = ClauseKws.filterNot(_ == "WHERE")
-            .flatMap(k => topLevelPositions(t, k))
-            .sorted.headOption.getOrElse(t.length)
-          (Some(t.substring(5, wEnd).trim), t.substring(wEnd))
-        case _ => (None, t)
-      }
+    // the tail from `at`, without the SETTINGS clause
+    def from(at: Int): String = settings match {
+      case Some(st) => tail.substring(at, st.start) + tail.substring(st.end)
+      case None => tail.substring(at)
+    }
+    b(Where).filter(w => tail.substring(0, w.start).trim.isEmpty) match {
+      case Some(w) => (Some(tl.body(w)), from(w.end).trim)
+      case None => (None, from(0).trim)
     }
   }
 
@@ -3159,7 +3038,7 @@ object ChSqlTranslator {
 
   /** Split a boolean expression on top-level AND (quote/paren-aware). */
   private def splitTopLevelAnd(e: String): Seq[String] = {
-    val ands = topLevelPositions(e, "AND")
+    val ands = ChClauses(e).positions("AND")
     val bounds = (Seq(-3) ++ ands) :+ e.length
     bounds.sliding(2).map { case Seq(a, b) =>
       e.substring(a + 3, b).trim
@@ -3235,26 +3114,6 @@ object ChSqlTranslator {
     out.append(f(s.substring(seg))).result()
   }
 
-  /** `s` with each top-level paren group's CONTENT replaced by
-    * `g(content)` (quote-aware) — the shared recursion step for
-    * statement-structure rewrites.
-    */
-  private def mapTopLevelParens(s: String)(g: String => String): String = {
-    val out = new StringBuilder
-    val lx = new ChLex(s)
-    var copied = 0
-    while (lx.next())
-      if (lx.depth == 1 && lx.isPunct('(')) {
-        val open = lx.start
-        lx.skipGroup()
-        val close = if (lx.depth == 0 && lx.isPunct(')')) lx.start else s.length
-        out.append(s.substring(copied, open)).append('(')
-          .append(g(s.substring(open + 1, close))).append(')')
-        copied = lx.end
-      }
-    out.append(s.substring(copied)).result()
-  }
-
   // ---- WITH TOTALS → GROUPING SETS rewrite ----------------------------
   //
   // `GROUP BY <keys> WITH TOTALS` adds one all-rows aggregate row. A real
@@ -3281,70 +3140,60 @@ object ChSqlTranslator {
   // accepted (it names the implemented behavior), every other
   // totals_mode value rejects loudly.
 
-  private def rewriteTotals(in: String): String = {
-    if (!raw"(?i)\bTOTALS\b".r.findFirstIn(in).isDefined) return in
-    mapTopLevelParens(rewriteTotalsLevel(in))(rewriteTotals)
-  }
+  /** The WITH TOTALS, QUALIFY and SETTINGS rewrites, in that order, at
+    * every query level through the one level walk.
+    */
+  private def rewriteLevels(in: String): String =
+    if (raw"(?i)\b(TOTALS|QUALIFY|SETTINGS)\b".r.findFirstIn(in).isEmpty) in
+    else ChClauses.mapLevels(in)(s =>
+      rewriteSettingsLevel(rewriteQualifyLevel(rewriteTotalsLevel(s))))
 
   private def rewriteTotalsLevel(s: String): String = {
-    val tps = topLevelPositions(s, "TOTALS")
-    if (tps.isEmpty) return s
-    val tp = tps.head
-    // require the preceding word WITH
-    var w = tp - 1
-    while (w >= 0 && s.charAt(w).isWhitespace) w -= 1
-    val wp = w - 3
-    require(wp >= 0 && s.regionMatches(true, wp, "WITH", 0, 4) &&
-      (wp == 0 || !(s.charAt(wp - 1).isLetterOrDigit || s.charAt(wp - 1) == '_')),
+    val lvl = ChClauses(s)
+    val tp = lvl.positions("TOTALS").headOption.getOrElse(return s)
+    val b = lvl.branchAt(tp)
+    val wp = b.clauseAt(tp).fold(-1)(lvl.seek(_, "WITH", "TOTALS"))
+    require(wp >= 0,
       s"TOTALS without WITH near: ${s.substring(math.max(0, tp - 30), tp + 6)}")
-    val gp = topLevelPositions(s, "GROUP").filter(_ < wp).lastOption.getOrElse(
-      throw new IllegalArgumentException("WITH TOTALS requires GROUP BY"))
-    val bym = raw"(?is)^GROUP\s+BY\s+".r.findFirstMatchIn(s.substring(gp)).getOrElse(
-      throw new IllegalArgumentException("malformed GROUP BY before WITH TOTALS"))
-    val keys = s.substring(gp + bym.end, wp).trim
+    val g = b.clauseAt(tp).filter(_.kind eq GroupBy).getOrElse(
+      throw new IllegalArgumentException(
+        if (b.clauseAt(tp).exists(_.kind eq Having))
+          "WITH TOTALS: HAVING must follow the GROUP BY ... WITH TOTALS " +
+            "clause (ClickHouse clause order)"
+        else "WITH TOTALS requires GROUP BY"))
+    val keys = s.substring(g.body, wp).trim
     require(keys.nonEmpty, "WITH TOTALS: empty GROUP BY key list")
     val sets = s"GROUP BY GROUPING SETS (($keys), ())"
-    topLevelPositions(s, "HAVING").find(_ > gp) match {
+    b(Having) match {
       case None =>
-        rewriteTotalsLevel(s.substring(0, gp) + sets + s.substring(tp + 6))
+        rewriteTotalsLevel(s.substring(0, g.start) + sets + s.substring(tp + 6))
       case Some(hv) =>
-        require(hv > tp,
-          "WITH TOTALS: HAVING must follow the GROUP BY ... WITH TOTALS " +
-            "clause (ClickHouse clause order)")
         // pinned totals_mode = 'after_having_exclusive' (see header)
-        val selPos = topLevelPositions(s, "SELECT").headOption.getOrElse(
-          throw new IllegalArgumentException("WITH TOTALS outside a SELECT"))
-        val fromPos = topLevelPositions(s, "FROM")
-          .filter(p => p > selPos && p < gp).lastOption.getOrElse(
-            throw new IllegalArgumentException(
-              "WITH TOTALS + HAVING requires a FROM clause"))
-        val hvEnd = Seq("ORDER", "LIMIT", "UNION", "SETTINGS", "FORMAT",
-            "OFFSET", "WINDOW", "QUALIFY")
-          .flatMap(k => topLevelPositions(s, k)).filter(_ > hv)
-          .sorted.headOption.getOrElse(s.length)
-        val cond = s.substring(hv + 6, hvEnd).trim
+        val from = b(From).getOrElse(throw new IllegalArgumentException(
+          "WITH TOTALS + HAVING requires a FROM clause"))
+        val cond = lvl.body(hv)
         require(cond.nonEmpty, "WITH TOTALS: empty HAVING condition")
         // FROM ... [WHERE ...] verbatim — reused for the surviving-group
         // probe (same source text, so the probe sees the same rows)
-        val srcSeg = s.substring(fromPos, gp).trim
+        val srcSeg = s.substring(from.start, g.start).trim
         val keyList = parseArgs("(" + keys + ")", 1)._1.map(_.trim)
         val probe = "SELECT " + keyList.zipWithIndex
           .map { case (k, i) => s"$k AS __totals_k$i" }.mkString(", ") +
           s" $srcSeg GROUP BY $keys HAVING $cond"
         // null-safe key equality: a NULL-keyed group surviving HAVING
         // must keep its rows (IN-subquery three-valued logic would drop
-        // them). The semi join inserts between the source and the WHERE.
+        // them). The semi join inserts between the FROM clause and the
+        // clause after it.
         val eqs = keyList.zipWithIndex.map { case (k, i) =>
           s"($k) <=> __totals_keep.__totals_k$i" }.mkString(" AND ")
         val semi = s" LEFT SEMI JOIN ($probe) AS __totals_keep ON $eqs"
-        val joinAt = topLevelPositions(s, "WHERE")
-          .find(p => p > fromPos && p < gp).getOrElse(gp)
+        val joinAt = from.end
         val headBase = s.substring(0, joinAt).replaceAll(raw"\s+$$", "")
-        val whereSeg = s.substring(joinAt, gp).trim // "" or "WHERE ..."
+        val whereSeg = s.substring(joinAt, g.start).trim // "" or "WHERE ..."
         val head = headBase + semi +
           (if (whereSeg.isEmpty) " " else s" $whereSeg ")
         val tailStr =
-          (s.substring(tp + 6, hv).trim + " " + s.substring(hvEnd).trim).trim
+          (s.substring(tp + 6, hv.start).trim + " " + s.substring(hv.end).trim).trim
         rewriteTotalsLevel(head + sets +
           (if (tailStr.isEmpty) "" else " " + tailStr))
     }
@@ -3358,50 +3207,25 @@ object ChSqlTranslator {
   // filter — the window results are ordinary columns there, and the
   // trailing ORDER BY / LIMIT stay OUTSIDE the wrap so they apply after
   // the filter (the server's clause order). Works at any depth via the
-  // same top-level-paren recursion as the TOTALS rewrite.
+  // level walk shared with the TOTALS rewrite.
   //
   // Honored-or-rejected: the condition must reference window results BY
   // SELECT ALIAS (an inline `OVER (...)` inside QUALIFY would need
   // injecting hidden columns into the select list — rejected loudly with
   // the alias workaround); one QUALIFY per SELECT level.
 
-  private def rewriteQualify(in: String): String = {
-    if (!raw"(?i)\bQUALIFY\b".r.findFirstIn(in).isDefined) return in
-    mapTopLevelParens(rewriteQualifyLevel(in))(rewriteQualify)
-  }
-
   private def rewriteQualifyLevel(s: String): String = {
-    val qps = topLevelPositions(s, "QUALIFY")
-    if (qps.isEmpty) return s
-    // one QUALIFY per SELECT — but UNION branches share this paren level,
-    // so rewrite the FIRST and recurse (its clause ends at the UNION
-    // keyword, leaving later branches intact), like the TOTALS rewrite
-    val qp = qps.head
-    val qEnd = Seq("ORDER", "LIMIT", "UNION", "SETTINGS", "FORMAT", "OFFSET")
-      .flatMap(k => topLevelPositions(s, k)).filter(_ > qp)
-      .sorted.headOption.getOrElse(s.length)
-    val cond = s.substring(qp + 7, qEnd).trim
+    val lvl = ChClauses(s)
+    // one QUALIFY per SELECT — UNION branches share this level, so
+    // rewrite the FIRST and recurse; the wrap is BRANCH-local and never
+    // touches the other branches
+    val (b, q) = lvl.branches.iterator.flatMap(b => b(Qualify).map(b -> _))
+      .nextOption().getOrElse(return s)
+    val cond = lvl.body(q)
     require(cond.nonEmpty, "QUALIFY: empty condition")
-    // the wrap must be BRANCH-local: a QUALIFY in a later UNION branch
-    // wraps only text after the preceding top-level UNION keyword, never
-    // the already-rewritten earlier branches
-    val branchStart = topLevelPositions(s, "UNION").filter(_ < qp)
-      .lastOption.map { up =>
-        var j = up + 5
-        while (j < s.length && s.charAt(j).isWhitespace) j += 1
-        val kw = Seq("ALL", "DISTINCT").find(k =>
-          s.regionMatches(true, j, k, 0, k.length) &&
-            (j + k.length >= s.length ||
-              !(s.charAt(j + k.length).isLetterOrDigit || s.charAt(j + k.length) == '_')))
-        kw.foreach { k =>
-          j += k.length
-          while (j < s.length && s.charAt(j).isWhitespace) j += 1
-        }
-        j
-      }.getOrElse(0)
-    val prefix = s.substring(0, branchStart)
-    val core0 = s.substring(branchStart, qp).trim
-    val tail = s.substring(qEnd).trim
+    val prefix = s.substring(0, b.start)
+    val core0 = s.substring(b.start, q.start).trim
+    val tail = s.substring(q.end).trim
     // inline `fn(...) OVER (...)` in the condition: hoist each distinct
     // window expression into the core's select list under a hidden
     // alias, reference the alias, and star-EXCEPT the hidden columns in
@@ -3425,21 +3249,21 @@ object ChSqlTranslator {
     */
   private def hoistQualifyWindows(
       core: String, cond: String): (String, String, Seq[String]) = {
-    if (wordPositions(cond, "OVER", topLevel = false).isEmpty) return (core, cond, Seq.empty)
+    if (wordPositions(cond, "OVER").isEmpty) return (core, cond, Seq.empty)
     require(!raw"(?is)^SELECT\s+DISTINCT\b".r.findFirstIn(core).isDefined,
       "QUALIFY with an inline window over a SELECT DISTINCT core is not " +
         "supported by the embedded rewrite (hidden hoisted columns would " +
         "change the dedup key); alias the window function in the SELECT " +
         "list and reference the alias in QUALIFY")
-    val fromP = topLevelPositions(core, "FROM").headOption.getOrElse(
+    val fromP = ChClauses(core).branches.head(From).map(_.start).getOrElse(
       throw new IllegalArgumentException(
         "QUALIFY with an inline window needs a FROM clause to hoist into"))
     var c = cond
     val exprs = scala.collection.mutable.LinkedHashMap.empty[String, String]
     var guard = 0
-    while (wordPositions(c, "OVER", topLevel = false).nonEmpty && guard < 32) {
+    while (wordPositions(c, "OVER").nonEmpty && guard < 32) {
       guard += 1
-      val at = wordPositions(c, "OVER", topLevel = false).head
+      val at = wordPositions(c, "OVER").head
       // backward: ')' closing the function's argument list, then the name
       var j = at - 1
       while (j >= 0 && c.charAt(j).isWhitespace) j -= 1
@@ -3496,40 +3320,28 @@ object ChSqlTranslator {
     "max_bytes_before_external_group_by", "max_bytes_before_external_sort",
     "max_execution_time", "priority", "network_compression_method")
 
-  private def rewriteSettings(in: String): String = {
-    if (!raw"(?i)\bSETTINGS\b".r.findFirstIn(in).isDefined) return in
-    mapTopLevelParens(rewriteSettingsLevel(in))(rewriteSettings)
-  }
-
   private def rewriteSettingsLevel(s: String): String = {
-    val sp = topLevelPositions(s, "SETTINGS").headOption.getOrElse(return s)
-    // the clause runs to the next top-level clause keyword (in our
-    // dialect SETTINGS is trailing; UNION branches carry their own)
-    val end = Seq("UNION", "FORMAT").flatMap(k => topLevelPositions(s, k))
-      .filter(_ > sp).sorted.headOption.getOrElse(s.length)
-    val body = s.substring(sp + 8, end).trim.stripSuffix(";").trim
-    val items = body.split(",").map(_.trim).filter(_.nonEmpty)
-    val offenders = items.flatMap { it =>
-      val Array(name0, value0 @ _*) = it.split("=", 2).map(_.trim): @unchecked
-      val name = name0.toLowerCase
-      val value = value0.headOption.getOrElse("")
-        .stripPrefix("'").stripSuffix("'").trim.toLowerCase
-      if (IdentitySettings.contains(name)) None
-      // totals_mode: 'after_having_exclusive' IS the implemented embedded
-      // behavior (the pinned WITH TOTALS + HAVING mode) — accepted and
-      // dropped; any other mode would silently change totals semantics
-      else if (name == "totals_mode" && value == "after_having_exclusive") None
-      else Some(name)
+    val lvl = ChClauses(s)
+    // UNION branches carry their own clause; cut from the last one back
+    lvl.branches.flatMap(_(Settings)).foldRight(s) { (st, acc) =>
+      val offenders = settingItems(lvl, st).collect {
+        case (name, value0) if !IdentitySettings.contains(name) &&
+          // totals_mode: 'after_having_exclusive' IS the implemented
+          // embedded behavior (the pinned WITH TOTALS + HAVING mode) —
+          // accepted and dropped; any other mode would silently change
+          // totals semantics
+          !(name == "totals_mode" && value0.stripPrefix("'").stripSuffix("'")
+            .trim.toLowerCase == "after_having_exclusive") => name
+      }
+      require(offenders.isEmpty,
+        s"SETTINGS not supported by the embedded engine: " +
+          s"${offenders.mkString(", ")} — only performance/resource " +
+          "settings (" + IdentitySettings.toSeq.sorted.take(4).mkString(", ") +
+          ", ...) are accepted (and dropped as identities); result-shaping " +
+          "settings would silently change semantics")
+      acc.substring(0, st.start).stripSuffix(" ").stripSuffix("\n") + " " +
+        acc.substring(st.end)
     }
-    require(offenders.isEmpty,
-      s"SETTINGS not supported by the embedded engine: " +
-        s"${offenders.mkString(", ")} — only performance/resource " +
-        "settings (" + IdentitySettings.toSeq.sorted.take(4).mkString(", ") +
-        ", ...) are accepted (and dropped as identities); result-shaping " +
-        "settings would silently change semantics")
-    rewriteSettingsLevel(
-      s.substring(0, sp).stripSuffix(" ").stripSuffix("\n") + " " +
-        s.substring(end))
   }
 
   private val GlobalFollowers = Seq(
@@ -3556,30 +3368,76 @@ object ChSqlTranslator {
     out.append(in.substring(copied)).result()
   }
 
-  /** Fold every top-level `PREWHERE p` into the WHERE clause:
+  /** Fold every `PREWHERE p` into the WHERE clause, at every query level
+    * (a top-level reshape such as LIMIT BY nests the statement):
     * `PREWHERE p WHERE w` → `WHERE (p) AND (w)`, bare `PREWHERE p` →
-    * `WHERE p`. One fold per pass; loops until none remain (UNION
-    * branches at the top level each get their own). Subquery-nested
-    * PREWHERE is left for Spark to reject loudly.
+    * `WHERE p`; UNION branches each get their own fold.
     */
-  private def foldPrewhere(in: String): String = {
-    val pws = topLevelPositions(in, "PREWHERE")
-    if (pws.isEmpty) return in
-    val at = pws.head
-    val after = at + "PREWHERE".length
-    val end = ClauseKws.flatMap(k => topLevelPositions(in, k))
-      .filter(_ > at).sorted.headOption.getOrElse(in.length)
-    val expr = in.substring(after, end).trim
-    val prefix = in.substring(0, at)
-    val folded =
-      if (end < in.length && in.regionMatches(true, end, "WHERE", 0, 5)) {
-        val end2 = ClauseKws.filterNot(_ == "WHERE")
-          .flatMap(k => topLevelPositions(in, k))
-          .filter(_ > end).sorted.headOption.getOrElse(in.length)
-        val w = in.substring(end + 5, end2).trim
-        s"${prefix}WHERE ($expr) AND ($w)${if (end2 < in.length) " " + in.substring(end2) else ""}"
-      } else s"${prefix}WHERE $expr${if (end < in.length) " " + in.substring(end) else ""}"
-    foldPrewhere(folded)
+  private def foldPrewhere(in: String): String =
+    if (raw"(?i)\bPREWHERE\b".r.findFirstIn(in).isEmpty) in
+    else ChClauses.mapLevels(in) { s =>
+      val lvl = ChClauses(s)
+      lvl.branches.foldRight(s) { (b, acc) =>
+        b(Prewhere).fold(acc) { pw =>
+          val expr = lvl.body(pw)
+          val (folded, end) = b(Where) match {
+            case Some(w) => (s"WHERE ($expr) AND (${lvl.body(w)})", w.end)
+            case None => (s"WHERE $expr", pw.end)
+          }
+          acc.substring(0, pw.start) + folded +
+            (if (end < acc.length) " " + acc.substring(end) else "")
+        }
+      }
+    }
+
+  /** A top-level statement shape the embedded engine runs as a rewritten
+    * `statement` plus a step on the analyzed frame (dropping a helper
+    * column, composing fill rows or star transformers).
+    */
+  sealed trait Reshape {
+    def core: String
+    def statement: String = core
+  }
+
+  /** The top-level reshape `sql` needs, if any: LIMIT BY (DISTINCT ON is
+    * its sugar), then LIMIT WITH TIES, then WITH FILL, then star
+    * transformers — decided from one clause split. LIMIT BY and WITH
+    * TIES in a nested query level have no rewrite and reject loudly (a
+    * server handles them, so silence would be a lie).
+    */
+  def reshape(sql: String): Option[Reshape] = {
+    val levels = ChClauses.levels(rewriteDistinctOn(sql)).toSeq
+    val top = levels.head
+    for ((what, has) <- Seq[(String, ChClauses => Boolean)](
+      "LIMIT BY" -> (_.branches.exists(_.has(LimitBy))),
+      "LIMIT ... WITH TIES" -> (l => l.branches.exists(withTiesIn(l, _)))))
+      if (!has(top) && levels.tail.exists(has)) throw nestedOnly(what)
+    limitBy(top).orElse(withTies(top)).orElse(withFill(top))
+      .orElse(starTransform(top))
+  }
+
+  private def withTiesIn(l: ChClauses, b: Branch): Boolean =
+    b(Limit).exists(l.seek(_, "WITH", "TIES") >= 0)
+
+  /** The branch of a top-level reshape clause: the only branch, since a
+    * trailing ORDER BY / LIMIT binds to the LAST branch on a server,
+    * which a whole-statement rewrite cannot express.
+    */
+  private def soleBranch(top: ChClauses, what: String): Branch = {
+    require(top.branches.size == 1,
+      s"$what over a top-level UNION is not supported by the embedded " +
+        "rewrite; wrap each branch in a subquery")
+    top.branches.head
+  }
+
+  /** `top` up to `cut`, with its SETTINGS clause kept (a trailing
+    * FORMAT names a wire rendering and drops).
+    */
+  private def coreBefore(top: ChClauses, b: Branch, cut: Int): String = {
+    require(!b.has(Offset), "an OFFSET clause after LIMIT BY / LIMIT WITH " +
+      "TIES is not supported by the embedded rewrite")
+    (top.text.substring(0, cut).trim +: b(Settings).map(c =>
+      top.text.substring(c.start, c.end).trim).toSeq).mkString(" ")
   }
 
   /** A parsed top-level `LIMIT n WITH TIES`: core is the statement with
@@ -3588,34 +3446,36 @@ object ChSqlTranslator {
     * the server errors too).
     */
   final case class WithTiesParts(core: String, orderBy: String, n: Long)
+      extends Reshape {
+    override def statement: String =
+      s"SELECT * FROM (SELECT *, rank() OVER (ORDER BY $orderBy) " +
+        s"AS __wt_rk FROM ($core) AS __wt_in) AS __wt " +
+        s"WHERE __wt_rk <= $n ORDER BY $orderBy"
+  }
 
   private val WithTiesHead = raw"(?is)^LIMIT\s+(\d+)\s+WITH\s+TIES\s*;?\s*$$".r
 
   /** Some(parts) when `sql` ends in a top-level `LIMIT n WITH TIES`
     * (server semantics: keep every row tying the last in-limit row on
-    * the ORDER BY key). Nested WITH TIES rejects loudly like LIMIT BY.
+    * the ORDER BY key).
     */
-  def parseWithTies(sql: String): Option[WithTiesParts] = {
-    val hit = topLevelPositions(sql, "LIMIT").flatMap(at =>
-      WithTiesHead.findFirstMatchIn(sql.substring(at)).map(m => (at, m)))
-    if (hit.isEmpty) {
-      if (raw"(?is)LIMIT\s+\d+\s+WITH\s+TIES".r.findFirstIn(sql).isDefined)
-        throw new IllegalArgumentException(
-          "LIMIT ... WITH TIES inside a subquery is not supported by the " +
-            "embedded rewrite (top-level only); restructure the statement " +
-            "or run against a real server")
-      return None
-    }
-    val (at, m) = hit.head
-    val ob = topLevelPositions(sql, "ORDER")
-      .filter(p => p < at && OrderByHead.findFirstIn(sql.substring(p)).isDefined)
-      .headOption.getOrElse(throw new IllegalArgumentException(
-        "LIMIT ... WITH TIES requires a top-level ORDER BY (the ties are " +
-          "defined by the sort key)"))
-    val obM = OrderByHead.findFirstMatchIn(sql.substring(ob)).get
-    val orderBy = sql.substring(ob + obM.end, at).trim
+  def parseWithTies(sql: String): Option[WithTiesParts] =
+    reshape(sql).collect { case p: WithTiesParts => p }
+
+  private def withTies(top: ChClauses): Option[WithTiesParts] = {
+    if (!top.branches.exists(withTiesIn(top, _))) return None
+    val b = soleBranch(top, "LIMIT ... WITH TIES")
+    val l = b(Limit).get
+    val m = WithTiesHead.findFirstMatchIn(top.text.substring(l.start, l.end))
+      .getOrElse(throw new IllegalArgumentException(
+        "LIMIT ... WITH TIES: only `LIMIT n WITH TIES` is supported by the " +
+          s"embedded rewrite, got '${top.text.substring(l.start, l.end).trim}'"))
+    val ob = b(OrderBy).getOrElse(throw new IllegalArgumentException(
+      "LIMIT ... WITH TIES requires a top-level ORDER BY (the ties are " +
+        "defined by the sort key)"))
+    val orderBy = top.body(ob)
     require(orderBy.nonEmpty, "LIMIT ... WITH TIES: empty ORDER BY")
-    Some(WithTiesParts(sql.substring(0, ob).trim, orderBy, m.group(1).toLong))
+    Some(WithTiesParts(coreBefore(top, b, ob.start), orderBy, m.group(1).toLong))
   }
 
   /** A parsed top-level `ORDER BY <col> [ASC] WITH FILL [FROM i] [TO i]
@@ -3637,7 +3497,7 @@ object ChSqlTranslator {
       /** Columns carrying the PREVIOUS value across fill rows
         * (`INTERPOLATE (c1, c2)` — the no-AS form; expressions reject).
         */
-      interpolate: Seq[String] = Seq.empty)
+      interpolate: Seq[String] = Seq.empty) extends Reshape
 
   private val FillTail =
     (raw"(?is)^(?:\s+FROM\s+(-?\d+|'[^']*'))?(?:\s+TO\s+(-?\d+|'[^']*'))?" +
@@ -3650,21 +3510,13 @@ object ChSqlTranslator {
     * items) rejects loudly — and WITH FILL that never reaches this
     * parser (nested in a subquery) rejects in the translator.
     */
-  def parseWithFill(sql: String): Option[WithFillParts] = {
-    val fp = topLevelPositions(sql, "FILL").headOption.getOrElse(return None)
-    // require the preceding word WITH (same shape as the TOTALS parse)
-    var w = fp - 1
-    while (w >= 0 && sql.charAt(w).isWhitespace) w -= 1
-    val wp = w - 3
-    if (!(wp >= 0 && sql.regionMatches(true, wp, "WITH", 0, 4) &&
-      (wp == 0 || !(sql.charAt(wp - 1).isLetterOrDigit || sql.charAt(wp - 1) == '_'))))
-      return None
-    val ob = topLevelPositions(sql, "ORDER")
-      .filter(p => p < wp && OrderByHead.findFirstIn(sql.substring(p)).isDefined)
-      .lastOption.getOrElse(throw new IllegalArgumentException(
-        "WITH FILL requires an ORDER BY"))
-    val obM = OrderByHead.findFirstMatchIn(sql.substring(ob)).get
-    var item = sql.substring(ob + obM.end, wp).trim
+  private def withFill(top: ChClauses): Option[WithFillParts] = {
+    val sql = top.text
+    val (ob, wp) = top.branches.flatMap(_(OrderBy))
+      .map(o => o -> top.seek(o, "WITH", "FILL")).find(_._2 >= 0)
+      .getOrElse(return None)
+    val fillEnd = wp + raw"(?is)^WITH\s+FILL".r.findFirstMatchIn(sql.substring(wp)).get.end
+    var item = sql.substring(ob.body, wp).trim
     require(!raw"(?i)\bDESC\b".r.findFirstIn(item).isDefined,
       "WITH FILL DESC is not supported by the embedded rewrite " +
         "(ascending fills only); sort the filled result afterwards")
@@ -3673,8 +3525,8 @@ object ChSqlTranslator {
       "WITH FILL is supported embedded only as the SOLE ORDER BY item")
     require(item.matches(raw"`[^`]+`|\w+"),
       s"WITH FILL embedded needs a bare output column to fill, got: $item")
-    val m = FillTail.findFirstMatchIn(sql.substring(fp + 4)).get
-    var rest = sql.substring(fp + 4 + m.end).trim.stripSuffix(";").trim
+    val m = FillTail.findFirstMatchIn(sql.substring(fillEnd)).get
+    var rest = sql.substring(fillEnd + m.end).trim.stripSuffix(";").trim
     // INTERPOLATE (c1, c2, ...) — previous-value carry on fill rows.
     // Only the no-AS form is modeled (expression interpolation chains
     // through previously interpolated rows — rejected, not faked).
@@ -3721,96 +3573,96 @@ object ChSqlTranslator {
     * nested LIMIT BY. Returns `sql` unchanged when the clause is absent.
     */
   def rewriteDistinctOn(sql: String): String = {
-    val sel = topLevelPositions(sql, "SELECT").find(at =>
-      DistinctOnHead.findFirstIn(sql.substring(at)).isDefined)
-    if (sel.isEmpty) {
-      if (raw"(?is)\bDISTINCT\s+ON\s*\(".r.findFirstIn(sql).isDefined)
-        throw new IllegalArgumentException(
-          "DISTINCT ON inside a subquery is not supported by the embedded " +
-            "rewrite (top-level only); restructure the statement or run " +
-            "against a real server")
-      return sql
-    }
-    val at = sel.get
-    val m = DistinctOnHead.findFirstMatchIn(sql.substring(at)).get
-    val (exprs, past) = parseArgs(sql, at + m.end)
+    if (raw"(?i)\bDISTINCT\b".r.findFirstIn(sql).isEmpty) return sql
+    val (top, hits) = topLevelOnly(sql, "DISTINCT ON")(l => l.branches.flatMap(b =>
+      b(Select).filter(c => DistinctOnHead.findFirstIn(
+        l.text.substring(c.start, c.end)).isDefined).map(b -> _)))
+    val (b, sel) = hits.headOption.getOrElse(return sql)
+    val m = DistinctOnHead.findFirstMatchIn(sql.substring(sel.start)).get
+    val (exprs, past) = parseArgs(sql, sel.start + m.end)
     require(exprs.nonEmpty, "DISTINCT ON: empty expression list")
-    if (raw"(?is)\bLIMIT\s+\d+(?:\s+OFFSET\s+\d+)?\s+BY\s".r
-      .findFirstIn(sql).isDefined)
+    if (b.has(LimitBy))
       throw new IllegalArgumentException(
         "DISTINCT ON combined with LIMIT BY is not supported by the " +
           "embedded rewrite (DISTINCT ON is itself LIMIT 1 BY — express " +
           "the statement with a single LIMIT BY clause)")
-    if (topLevelPositions(sql, "UNION").nonEmpty)
-      throw new IllegalArgumentException(
-        "DISTINCT ON over a top-level UNION is not supported by the " +
-          "embedded rewrite; wrap each branch in a subquery")
-    if (topLevelPositions(sql, "ORDER").isEmpty)
+    soleBranch(top, "DISTINCT ON")
+    if (!b.has(OrderBy))
       throw new IllegalArgumentException(
         "DISTINCT ON without a top-level ORDER BY keeps an arbitrary row " +
           "per group — add an ORDER BY for a deterministic read")
     val stripped =
-      sql.substring(0, at) + "SELECT " + sql.substring(past).trim
+      sql.substring(0, sel.start) + "SELECT " + sql.substring(past).trim
     // the LIMIT 1 BY clause slots before any trailing top-level LIMIT /
-    // SETTINGS (clause order a server accepts); otherwise at the end
-    val tailAt = (topLevelPositions(stripped, "LIMIT") ++
-      topLevelPositions(stripped, "SETTINGS")).sorted.headOption
+    // OFFSET / SETTINGS / FORMAT (clause order a server accepts);
+    // otherwise at the end
     val byTxt = s"LIMIT 1 BY ${exprs.mkString(", ")}"
-    tailAt match {
-      case Some(p) =>
-        stripped.substring(0, p).trim + s" $byTxt " + stripped.substring(p)
+    ChClauses(stripped).branches.head.clauses.find(_.kind.rank > LimitBy.rank) match {
+      case Some(c) =>
+        stripped.substring(0, c.start).trim + s" $byTxt " + stripped.substring(c.start)
       case None =>
         stripped.trim.stripSuffix(";").trim + s" $byTxt"
     }
   }
 
-  /** Some(parts) when `sql` carries a top-level `LIMIT n [OFFSET o] BY`
-    * clause; None otherwise. A LIMIT BY nested in a subquery is rejected
-    * loudly (the embedded rewrite handles the top level only — a server
-    * handles both, so silence would be a lie).
+  /** A parsed top-level `LIMIT n [OFFSET o] BY exprs` clause
+    * (ClickHouse's per-group limit): `core` is the statement with the
+    * ORDER BY, LIMIT BY, and trailing LIMIT clauses removed (SETTINGS
+    * kept); `orderBy` the top-level ORDER BY expression list (the order
+    * LIMIT BY selects rows in, per the server's documented semantics);
+    * `outerLimit` the trailing plain LIMIT clause verbatim, if any.
     */
-  def parseLimitBy(sql: String): Option[LimitByParts] = {
-    val limits = topLevelPositions(sql, "LIMIT")
-    val lb = limits.flatMap(at =>
-      LimitByHead.findFirstMatchIn(sql.substring(at)).map(m => (at, m)))
-    if (lb.isEmpty) {
-      // nested LIMIT BY (inside a subquery) has no rewrite — honored-or-
-      // rejected: fail loudly rather than hand Spark unparseable SQL
-      if (raw"(?is)LIMIT\s+\d+(?:\s+OFFSET\s+\d+)?\s+BY\s".r
-        .findFirstIn(sql).isDefined)
-        throw new IllegalArgumentException(
-          "LIMIT BY inside a subquery is not supported by the embedded " +
-            "rewrite (top-level only); restructure the statement or run " +
-            "against a real server")
-      return None
+  final case class LimitByParts(core: String, n: Long, offset: Long,
+      by: String, orderBy: Option[String], outerLimit: Option[String])
+      extends Reshape {
+    /** A row_number window over the BY expressions, selecting rows in
+      * the ORDER BY order. The ORDER BY is REQUIRED: without one the
+      * server returns an arbitrary n per group — not reproducible, so
+      * rejected (the same determinism rule as FINAL tie-breaks).
+      */
+    override def statement: String = {
+      val ord = orderBy.getOrElse(throw new IllegalArgumentException(
+        "LIMIT BY without a top-level ORDER BY selects an arbitrary " +
+          "n rows per group — add an ORDER BY for a deterministic read"))
+      s"SELECT * FROM (SELECT *, row_number() OVER " +
+        s"(PARTITION BY $by ORDER BY $ord) AS __lb_rn " +
+        s"FROM ($core) AS __lb_in) AS __lb " +
+        s"WHERE __lb_rn > $offset AND __lb_rn <= ${offset + n} " +
+        s"ORDER BY $ord" + outerLimit.map(" " + _).getOrElse("")
     }
-    val (at, m) = lb.head
-    val byStart = at + m.end
-    // the BY expression list runs to the next top-level LIMIT (or end)
-    val nextLimit = limits.find(_ > at)
-    val byEnd = nextLimit.getOrElse(sql.length)
-    val by = sql.substring(byStart, byEnd).trim.stripSuffix(";").trim
+  }
+
+  private val LimitByHead = raw"(?is)^LIMIT\s+(\d+)(?:\s+OFFSET\s+(\d+))?\s+BY\s+".r
+  private val PlainLimit = raw"(?is)^LIMIT\s+\d+(?:\s+OFFSET\s+\d+)?\s*;?\s*$$".r
+
+  /** Some(parts) when `sql` carries a top-level `LIMIT n [OFFSET o] BY`
+    * clause; None otherwise.
+    */
+  def parseLimitBy(sql: String): Option[LimitByParts] =
+    reshape(sql).collect { case p: LimitByParts => p }
+
+  private def limitBy(top: ChClauses): Option[LimitByParts] = {
+    if (!top.branches.exists(_.has(LimitBy))) return None
+    val b = soleBranch(top, "LIMIT BY")
+    val lb = b(LimitBy).get
+    val clause = top.text.substring(lb.start, lb.end)
+    val m = LimitByHead.findFirstMatchIn(clause).getOrElse(
+      throw new IllegalArgumentException(
+        s"LIMIT BY: only `LIMIT n [OFFSET o] BY exprs` is supported by the " +
+          s"embedded rewrite, got '${clause.trim}'"))
+    val by = clause.substring(m.end).trim.stripSuffix(";").trim
     require(by.nonEmpty, "LIMIT BY: empty expression list")
-    val outer = nextLimit.map { nl =>
-      val rest = sql.substring(nl).trim
+    val outer = b(Limit).map { l =>
+      val rest = top.text.substring(l.start, l.end).trim
       require(PlainLimit.findFirstIn(rest).isDefined,
         s"LIMIT BY: unsupported trailing clause '$rest'")
       rest.stripSuffix(";").trim
     }
-    // top-level ORDER BY before the LIMIT BY clause defines the
-    // selection order within each group (server semantics)
-    val ob = topLevelPositions(sql, "ORDER")
-      .filter(p => p < at && OrderByHead.findFirstIn(sql.substring(p)).isDefined)
-      .headOption
-    val (core, orderBy) = ob match {
-      case Some(p) =>
-        val obM = OrderByHead.findFirstMatchIn(sql.substring(p)).get
-        (sql.substring(0, p).trim,
-          Some(sql.substring(p + obM.end, at).trim).filter(_.nonEmpty))
-      case None => (sql.substring(0, at).trim, None)
-    }
-    Some(LimitByParts(core, m.group(1).toLong,
-      Option(m.group(2)).map(_.toLong).getOrElse(0L), by, orderBy, outer))
+    // the ORDER BY defines the selection order within each group
+    val ob = b(OrderBy)
+    Some(LimitByParts(coreBefore(top, b, ob.getOrElse(lb).start),
+      m.group(1).toLong, Option(m.group(2)).map(_.toLong).getOrElse(0L), by,
+      ob.map(top.body).filter(_.nonEmpty), outer))
   }
 
   /** Parse balanced argument list starting just after '('; returns

@@ -6,7 +6,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.types.{StructField, StructType}
 
-import graft.sql.ChLex
+import graft.sql.{ChClauses, ChLex}
 import graft.types.ClickHouseType
 
 /** Embedded, parquet-backed stand-in for a ClickHouse server (the dev
@@ -384,7 +384,7 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
   /** OPTIMIZE as part rewrite: consolidates every part into one; FINAL
     * on a ReplacingMergeTree(ver) table materializes the max-version
     * survivor set (the same rule FINAL reads apply on the fly, via
-    * [[rewriteFinal]]), so subsequent plain reads see the deduped rows —
+    * [[rewriteStorage]]), so subsequent plain reads see the deduped rows —
     * the server's documented OPTIMIZE FINAL semantics. FINAL on engines
     * without a version column is a plain consolidation (no row change).
     * A declared row TTL is applied here — merges are where the server
@@ -418,7 +418,7 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
     // CLEANUP); only FINAL READS filter tombstones
     val src =
       if ((finalize && replacing) || summing)
-        rewriteFinal(s"SELECT * FROM $qt FINAL", keepTombstones = true)
+        rewriteStorage(s"SELECT * FROM $qt FINAL", keepTombstones = true)
       else s"SELECT * FROM $qt"
     val entry = serverEntry()
     val tables = knownTables
@@ -1502,9 +1502,10 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
     * engine-reproducible): keep the rows whose unit-interval hash of the
     * table's DECLARED sampling key falls in [o, o+f) wrapping at 1,
     * where the hash is the repo's standard cheap rehash
-    * (first-8-hex-of-md5 as integer, mod 1e6). Rewritten to an
-    * equivalent WHERE conjunct before translation; a table without a
-    * declared `sampling` key rejects the clause, like the server.
+    * (first-8-hex-of-md5 as integer, mod 1e6). Rewritten before
+    * translation to a source subquery filtered on that range; a table
+    * without a declared `sampling` key rejects the clause, like the
+    * server.
     */
   /** `FROM db.t FINAL` — dedup-on-read for ReplacingMergeTree tables.
     * The embedded model keeps, per ORDER BY key, the row with the MAX
@@ -1516,230 +1517,237 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
     * on (key, ver) have no deterministic survivor on the server either;
     * callers wanting hash-stable FINAL reads keep (key, ver) unique.)
     */
-  private val FinalClause = "FROM `([^`]+)`\\.`([^`]+)` FINAL".r
-
-  private def rewriteFinal(sql: String, keepTombstones: Boolean = false): String =
-    FinalClause.replaceAllIn(sql, m => {
-      val (db, t) = (m.group(1), m.group(2))
-      require(tableExists(db, t), s"no such table $db.$t")
-      val (cols, opts, _) = readMeta(db, t)
-      def orderKeys: Seq[String] =
-        opts.getOrElse("order_by", throw new IllegalArgumentException(
-          s"FINAL on $db.$t: table declares no order_by key"))
-          .split(",").map(_.trim).filter(_.nonEmpty).toSeq
-      // is_deleted tombstone variant FIRST: the one-arg pattern would
-      // otherwise swallow "ver,isd" written without a space
-      val VerDelRe =
-        "ReplacingMergeTree\\(\\s*([^,)\\s]+)\\s*,\\s*([^,)\\s]+)\\s*\\)".r
-      val VerRe = "ReplacingMergeTree\\(\\s*([^,)\\s]+)\\s*\\)".r
-      val SumRe = "SummingMergeTree(?:\\(\\s*([^)]*)\\))?".r
-      def replacingPick(ver: String, isDeleted: Option[String]): String = {
-        require(cols.exists(_._1 == ver),
-          s"FINAL on $db.$t: version column '$ver' not in table columns")
-        isDeleted.foreach { d =>
-          val ty = cols.collectFirst { case (c, ty0) if c == d => ty0 }
-            .getOrElse(throw new IllegalArgumentException(
-              s"FINAL on $db.$t: is_deleted column '$d' not in table columns"))
-          require({
-            import org.apache.spark.sql.types._
-            Seq(ByteType, ShortType, IntegerType, LongType)
-              .contains(ClickHouseType.parse(ty).dataType)
-          },
-            s"FINAL on $db.$t: is_deleted column '$d' must be an integer " +
-              s"0/1 flag (UInt8 on a real server), not $ty")
+  private def finalSource(db: String, t: String, keepTombstones: Boolean): String = {
+    require(tableExists(db, t), s"no such table $db.$t")
+    val (cols, opts, _) = readMeta(db, t)
+    def orderKeys: Seq[String] =
+      opts.getOrElse("order_by", throw new IllegalArgumentException(
+        s"FINAL on $db.$t: table declares no order_by key"))
+        .split(",").map(_.trim).filter(_.nonEmpty).toSeq
+    // is_deleted tombstone variant FIRST: the one-arg pattern would
+    // otherwise swallow "ver,isd" written without a space
+    val VerDelRe =
+      "ReplacingMergeTree\\(\\s*([^,)\\s]+)\\s*,\\s*([^,)\\s]+)\\s*\\)".r
+    val VerRe = "ReplacingMergeTree\\(\\s*([^,)\\s]+)\\s*\\)".r
+    val SumRe = "SummingMergeTree(?:\\(\\s*([^)]*)\\))?".r
+    def replacingPick(ver: String, isDeleted: Option[String]): String = {
+      require(cols.exists(_._1 == ver),
+        s"FINAL on $db.$t: version column '$ver' not in table columns")
+      isDeleted.foreach { d =>
+        val ty = cols.collectFirst { case (c, ty0) if c == d => ty0 }
+          .getOrElse(throw new IllegalArgumentException(
+            s"FINAL on $db.$t: is_deleted column '$d' not in table columns"))
+        require({
+          import org.apache.spark.sql.types._
+          Seq(ByteType, ShortType, IntegerType, LongType)
+            .contains(ClickHouseType.parse(ty).dataType)
+        },
+          s"FINAL on $db.$t: is_deleted column '$d' must be an integer " +
+            s"0/1 flag (UInt8 on a real server), not $ty")
+      }
+      val keys = orderKeys.map(k => s"`$k`").mkString(", ")
+      val colList = cols.map { case (c, _) => s"`$c`" }.mkString(", ")
+      // survivor = max-version row per key; with an is_deleted column a
+      // FINAL READ then drops survivors flagged 1 (the modern server
+      // tombstone rule). Merges (OPTIMIZE, keepTombstones=true) KEEP
+      // the flagged survivor — a server only purges it under OPTIMIZE
+      // ... FINAL CLEANUP, so plain reads must still see it.
+      val drop = isDeleted match {
+        case Some(d) if !keepTombstones => s" AND `$d` <> 1"
+        case _ => ""
+      }
+      s"FROM (SELECT $colList FROM (SELECT *, ROW_NUMBER() OVER " +
+        s"(PARTITION BY $keys ORDER BY `$ver` DESC) AS __gf_rn " +
+        s"FROM `$db`.`$t`) AS __gf_in WHERE __gf_rn = 1$drop) AS `$t`"
+    }
+    opts.getOrElse("engine", "") match {
+      case VerDelRe(ver, del) =>
+        replacingPick(ver, Some(del))
+      case VerRe(ver) =>
+        replacingPick(ver, None)
+      case SumRe(sumList) =>
+        // SummingMergeTree: merges collapse rows sharing the sorting
+        // key — listed columns (or, unlisted, every numeric non-key
+        // column) SUM; other non-key columns take a deterministic
+        // representative (min — the server keeps "any one", min is a
+        // legal any, reproducibly); rows whose summed columns all
+        // total 0/NULL are DELETED (the server's documented rule)
+        val keys = orderKeys
+        keys.foreach(k => require(cols.exists(_._1 == k),
+          s"FINAL on $db.$t: sorting key '$k' not in table columns"))
+        val listed = Option(sumList).map(_.split(",").map(_.trim)
+          .filter(_.nonEmpty).toSeq).getOrElse(Seq.empty)
+        listed.foreach(c => require(cols.exists(_._1 == c),
+          s"FINAL on $db.$t: summed column '$c' not in table columns"))
+        val summed: Set[String] =
+          if (listed.nonEmpty) listed.toSet
+          else cols.collect { case (c, ty)
+              if !keys.contains(c) &&
+                ClickHouseType.parse(ty).dataType
+                  .isInstanceOf[org.apache.spark.sql.types.NumericType] =>
+            c
+          }.toSet
+        require(summed.nonEmpty,
+          s"FINAL on $db.$t: SummingMergeTree with nothing to sum " +
+            "(no numeric non-key columns)")
+        val sel = cols.map { case (c, _) =>
+          if (keys.contains(c)) s"`$c`"
+          else if (summed(c)) s"sum(`$c`) AS `$c`"
+          else s"min(`$c`) AS `$c`"
+        }.mkString(", ")
+        val havingNotAllZero = summed.toSeq.sorted
+          .map(c => s"coalesce(sum(`$c`), 0) = 0").mkString(" AND ")
+        s"FROM (SELECT $sel FROM `$db`.`$t` GROUP BY " +
+          keys.map(k => s"`$k`").mkString(", ") +
+          s" HAVING NOT ($havingNotAllZero)) AS `$t`"
+      case e if e.startsWith("VersionedCollapsingMergeTree") =>
+        // (sign, version): rows with the same sorting key AND version
+        // cancel in +1/-1 pairs; the net survivor keeps its net sign.
+        // Deterministic for well-formed input (net sign per (key,
+        // version) in {-1, 0, 1} — the documented usage); plain
+        // CollapsingMergeTree depends on INSERTION ORDER and is
+        // rejected below.
+        val VcRe = "VersionedCollapsingMergeTree\\(\\s*([^,\\s)]+)\\s*,\\s*([^,\\s)]+)\\s*\\)".r
+        val (signCol, verCol) = VcRe.findFirstMatchIn(e) match {
+          case Some(m) => (m.group(1), m.group(2))
+          case None => throw new IllegalArgumentException(
+            s"FINAL on $db.$t: VersionedCollapsingMergeTree needs " +
+              "(sign_column, version_column)")
         }
-        val keys = orderKeys.map(k => s"`$k`").mkString(", ")
+        for (c <- Seq(signCol, verCol))
+          require(cols.exists(_._1 == c),
+            s"FINAL on $db.$t: column '$c' not in table columns")
+        val keys = orderKeys
+        keys.foreach(k => require(cols.exists(_._1 == k),
+          s"FINAL on $db.$t: sorting key '$k' not in table columns"))
+        val groupCols = keys :+ verCol
+        val sel = cols.map { case (c, ty) =>
+          if (groupCols.contains(c)) s"`$c`"
+          else if (c == signCol)
+            // CAST target is the CH type — the translator maps it
+            s"CAST(if(sum(`$signCol`) > 0, 1, -1) AS $ty) AS `$c`"
+          else s"min(`$c`) AS `$c`"
+        }.mkString(", ")
+        s"FROM (SELECT $sel FROM `$db`.`$t` GROUP BY " +
+          groupCols.map(k => s"`$k`").mkString(", ") +
+          s" HAVING sum(`$signCol`) <> 0) AS `$t`"
+      case e if e.startsWith("CollapsingMergeTree") =>
+        // Insertion-order collapse over the sequence view (every part
+        // carries its insert sequence in its name since round 12). Per
+        // sorting-key group, in insertion order — the server's
+        // documented algorithm: net sum(sign) = 0 with a trailing
+        // cancel → nothing survives; net 0 with a trailing state →
+        // first cancel AND last state survive (the state row arrived
+        // after its own history collapsed); net +1 → last state;
+        // net -1 → first cancel; |net| >= 2 is the server's "logical
+        // error" (it logs and gives no guarantee) — here it raises
+        // loudly instead of answering unpredictably.
+        val CcRe = "CollapsingMergeTree\\(\\s*([^)\\s]+)\\s*\\)".r
+        val signCol = CcRe.findFirstMatchIn(e) match {
+          case Some(m) => m.group(1)
+          case None => throw new IllegalArgumentException(
+            s"FINAL on $db.$t: CollapsingMergeTree needs (sign_column)")
+        }
+        require(cols.exists(_._1 == signCol),
+          s"FINAL on $db.$t: sign column '$signCol' not in table columns")
+        val keys = orderKeys
+        keys.foreach(k => require(cols.exists(_._1 == k),
+          s"FINAL on $db.$t: sorting key '$k' not in table columns"))
+        val kl = keys.map(k => s"`$k`").mkString(", ")
         val colList = cols.map { case (c, _) => s"`$c`" }.mkString(", ")
-        // survivor = max-version row per key; with an is_deleted column a
-        // FINAL READ then drops survivors flagged 1 (the modern server
-        // tombstone rule). Merges (OPTIMIZE, keepTombstones=true) KEEP
-        // the flagged survivor — a server only purges it under OPTIMIZE
-        // ... FINAL CLEANUP, so plain reads must still see it.
-        val drop = isDeleted match {
-          case Some(d) if !keepTombstones => s" AND `$d` <> 1"
-          case _ => ""
+        val sq = s"`$signCol`"
+        s"FROM (SELECT $colList FROM (SELECT *, " +
+          s"sum($sq) OVER (PARTITION BY $kl) AS __cf_net, " +
+          s"max(CASE WHEN $sq = 1 THEN __ch_seq END) OVER (PARTITION BY $kl) AS __cf_ls, " +
+          s"min(CASE WHEN $sq = -1 THEN __ch_seq END) OVER (PARTITION BY $kl) AS __cf_fc, " +
+          s"max(__ch_seq) OVER (PARTITION BY $kl) AS __cf_mx " +
+          s"FROM ${EmbeddedClickHouse.seqViewName(db, t)}) AS __cf_in " +
+          "WHERE CASE " +
+          "WHEN abs(__cf_net) > 1 THEN CAST(raise_error(" +
+          s"'CollapsingMergeTree collapse on $db.$t: a sorting-key " +
+          "group nets |sum(sign)| >= 2 — malformed state/cancel " +
+          "sequence (the server calls this a logical error and gives " +
+          "no guarantee); repair the writer') AS BOOLEAN) " +
+          s"WHEN __cf_net = 1 THEN $sq = 1 AND __ch_seq = __cf_ls " +
+          s"WHEN __cf_net = -1 THEN $sq = -1 AND __ch_seq = __cf_fc " +
+          "WHEN __cf_ls IS NOT NULL AND __cf_ls = __cf_mx THEN " +
+          s"($sq = 1 AND __ch_seq = __cf_ls) OR " +
+          s"($sq = -1 AND __ch_seq = __cf_fc) " +
+          s"ELSE false END) AS `$t`"
+      case e if e.startsWith("AggregatingMergeTree") =>
+        // AggregatingMergeTree: rows sharing the sorting key collapse
+        // by MERGING each AggregateFunction column per its function
+        // (the transparent state reps of ClickHouseType.aggStateType);
+        // plain non-key columns take the deterministic representative
+        val keys = orderKeys
+        keys.foreach(k => require(cols.exists(_._1 == k),
+          s"FINAL on $db.$t: sorting key '$k' not in table columns"))
+        val sel = cols.map { case (c, ty) =>
+          if (keys.contains(c)) s"`$c`"
+          else ClickHouseType.aggFunction(ty) match {
+            case Some("avg") =>
+              s"named_struct('s', sum(`$c`.s), 'c', sum(`$c`.c)) AS `$c`"
+            case Some("uniq") | Some("uniqExact") =>
+              s"array_distinct(flatten(collect_list(`$c`))) AS `$c`"
+            case Some("sum") | Some("count") => s"sum(`$c`) AS `$c`"
+            case Some("min") | Some("any") => s"min(`$c`) AS `$c`"
+            case Some("max") => s"max(`$c`) AS `$c`"
+            case Some(other) => throw new IllegalArgumentException(
+              s"FINAL on $db.$t: no merge rule for AggregateFunction($other)")
+            case None => s"min(`$c`) AS `$c`"
+          }
+        }.mkString(", ")
+        s"FROM (SELECT $sel FROM `$db`.`$t` GROUP BY " +
+          keys.map(k => s"`$k`").mkString(", ") + s") AS `$t`"
+      case e => throw new IllegalArgumentException(
+        s"FINAL on $db.$t: the embedded store supports FINAL only on " +
+          s"ReplacingMergeTree(<version_column>), SummingMergeTree" +
+          s"[(columns)], or AggregatingMergeTree (engine is '$e'; " +
+          "without a merge rule the server's part-order tiebreak is " +
+          "not reproducible here)")
+    }
+  }
+
+  /** The unit-interval hash condition keeping `db`.`t`'s rows in
+    * [o, o+f), wrapping at 1 (see the SAMPLE note above).
+    */
+  private def sampleCond(db: String, t: String, f: Double, o: Double): String = {
+    require(tableExists(db, t), s"no such table $db.$t")
+    val (_, opts, _) = readMeta(db, t)
+    val key = opts.getOrElse("sampling", throw new IllegalArgumentException(
+      s"SAMPLE on $db.$t: table has no declared sampling key " +
+        "(create it with TBLPROPERTIES sampling = '<expr>')"))
+    val lo = math.round(o * 1000000.0)
+    val hi = lo + math.round(f * 1000000.0)
+    val bucket = "pmod(CAST(conv(substring(md5(CAST((" + key +
+      ") AS STRING)), 1, 8), 16, 10) AS BIGINT), 1000000)"
+    if (hi <= 1000000L) s"($bucket >= $lo AND $bucket < $hi)"
+    else s"($bucket >= $lo OR $bucket < ${hi - 1000000L})"
+  }
+
+  private val StorageRef = ("(?is)^\\s*`([^`]+)`\\.`([^`]+)`\\s+" +
+    "(?:(FINAL)|SAMPLE\\s+([0-9.]+)(?:\\s+OFFSET\\s+([0-9.]+))?)(?=\\s|$)").r
+
+  /** `FROM `db`.`t` FINAL` and `FROM `db`.`t` SAMPLE f [OFFSET o]` at
+    * every query level: the source becomes its dedup subquery or its
+    * sampled subquery. Both are read from the FROM clause's own text,
+    * never from literals.
+    */
+  private def rewriteStorage(sql: String, keepTombstones: Boolean = false): String =
+    if (raw"(?i)\b(FINAL|SAMPLE)\b".r.findFirstIn(sql).isEmpty) sql
+    else ChClauses.mapLevels(sql) { s =>
+      ChClauses(s).branches.flatMap(_(ChClauses.From)).foldRight(s) { (f, acc) =>
+        StorageRef.findFirstMatchIn(acc.substring(f.body, f.end)).fold(acc) { m =>
+          val (db, t) = (m.group(1), m.group(2))
+          val source =
+            if (m.group(3) != null) finalSource(db, t, keepTombstones)
+            else s"FROM (SELECT * FROM `$db`.`$t` WHERE " + sampleCond(db, t,
+              m.group(4).toDouble, Option(m.group(5)).fold(0.0)(_.toDouble)) +
+              s") AS `$t`"
+          acc.substring(0, f.start) + source + acc.substring(f.body + m.end)
         }
-        s"FROM (SELECT $colList FROM (SELECT *, ROW_NUMBER() OVER " +
-          s"(PARTITION BY $keys ORDER BY `$ver` DESC) AS __gf_rn " +
-          s"FROM `$db`.`$t`) AS __gf_in WHERE __gf_rn = 1$drop) AS `$t`"
       }
-      opts.getOrElse("engine", "") match {
-        case VerDelRe(ver, del) =>
-          java.util.regex.Matcher.quoteReplacement(replacingPick(ver, Some(del)))
-        case VerRe(ver) =>
-          java.util.regex.Matcher.quoteReplacement(replacingPick(ver, None))
-        case SumRe(sumList) =>
-          // SummingMergeTree: merges collapse rows sharing the sorting
-          // key — listed columns (or, unlisted, every numeric non-key
-          // column) SUM; other non-key columns take a deterministic
-          // representative (min — the server keeps "any one", min is a
-          // legal any, reproducibly); rows whose summed columns all
-          // total 0/NULL are DELETED (the server's documented rule)
-          val keys = orderKeys
-          keys.foreach(k => require(cols.exists(_._1 == k),
-            s"FINAL on $db.$t: sorting key '$k' not in table columns"))
-          val listed = Option(sumList).map(_.split(",").map(_.trim)
-            .filter(_.nonEmpty).toSeq).getOrElse(Seq.empty)
-          listed.foreach(c => require(cols.exists(_._1 == c),
-            s"FINAL on $db.$t: summed column '$c' not in table columns"))
-          val summed: Set[String] =
-            if (listed.nonEmpty) listed.toSet
-            else cols.collect { case (c, ty)
-                if !keys.contains(c) &&
-                  ClickHouseType.parse(ty).dataType
-                    .isInstanceOf[org.apache.spark.sql.types.NumericType] =>
-              c
-            }.toSet
-          require(summed.nonEmpty,
-            s"FINAL on $db.$t: SummingMergeTree with nothing to sum " +
-              "(no numeric non-key columns)")
-          val sel = cols.map { case (c, _) =>
-            if (keys.contains(c)) s"`$c`"
-            else if (summed(c)) s"sum(`$c`) AS `$c`"
-            else s"min(`$c`) AS `$c`"
-          }.mkString(", ")
-          val havingNotAllZero = summed.toSeq.sorted
-            .map(c => s"coalesce(sum(`$c`), 0) = 0").mkString(" AND ")
-          java.util.regex.Matcher.quoteReplacement(
-            s"FROM (SELECT $sel FROM `$db`.`$t` GROUP BY " +
-              keys.map(k => s"`$k`").mkString(", ") +
-              s" HAVING NOT ($havingNotAllZero)) AS `$t`")
-        case e if e.startsWith("VersionedCollapsingMergeTree") =>
-          // (sign, version): rows with the same sorting key AND version
-          // cancel in +1/-1 pairs; the net survivor keeps its net sign.
-          // Deterministic for well-formed input (net sign per (key,
-          // version) in {-1, 0, 1} — the documented usage); plain
-          // CollapsingMergeTree depends on INSERTION ORDER and is
-          // rejected below.
-          val VcRe = "VersionedCollapsingMergeTree\\(\\s*([^,\\s)]+)\\s*,\\s*([^,\\s)]+)\\s*\\)".r
-          val (signCol, verCol) = VcRe.findFirstMatchIn(e) match {
-            case Some(m) => (m.group(1), m.group(2))
-            case None => throw new IllegalArgumentException(
-              s"FINAL on $db.$t: VersionedCollapsingMergeTree needs " +
-                "(sign_column, version_column)")
-          }
-          for (c <- Seq(signCol, verCol))
-            require(cols.exists(_._1 == c),
-              s"FINAL on $db.$t: column '$c' not in table columns")
-          val keys = orderKeys
-          keys.foreach(k => require(cols.exists(_._1 == k),
-            s"FINAL on $db.$t: sorting key '$k' not in table columns"))
-          val groupCols = keys :+ verCol
-          val sel = cols.map { case (c, ty) =>
-            if (groupCols.contains(c)) s"`$c`"
-            else if (c == signCol)
-              // CAST target is the CH type — the translator maps it
-              s"CAST(if(sum(`$signCol`) > 0, 1, -1) AS $ty) AS `$c`"
-            else s"min(`$c`) AS `$c`"
-          }.mkString(", ")
-          java.util.regex.Matcher.quoteReplacement(
-            s"FROM (SELECT $sel FROM `$db`.`$t` GROUP BY " +
-              groupCols.map(k => s"`$k`").mkString(", ") +
-              s" HAVING sum(`$signCol`) <> 0) AS `$t`")
-        case e if e.startsWith("CollapsingMergeTree") =>
-          // Insertion-order collapse over the sequence view (every part
-          // carries its insert sequence in its name since round 12). Per
-          // sorting-key group, in insertion order — the server's
-          // documented algorithm: net sum(sign) = 0 with a trailing
-          // cancel → nothing survives; net 0 with a trailing state →
-          // first cancel AND last state survive (the state row arrived
-          // after its own history collapsed); net +1 → last state;
-          // net -1 → first cancel; |net| >= 2 is the server's "logical
-          // error" (it logs and gives no guarantee) — here it raises
-          // loudly instead of answering unpredictably.
-          val CcRe = "CollapsingMergeTree\\(\\s*([^)\\s]+)\\s*\\)".r
-          val signCol = CcRe.findFirstMatchIn(e) match {
-            case Some(m) => m.group(1)
-            case None => throw new IllegalArgumentException(
-              s"FINAL on $db.$t: CollapsingMergeTree needs (sign_column)")
-          }
-          require(cols.exists(_._1 == signCol),
-            s"FINAL on $db.$t: sign column '$signCol' not in table columns")
-          val keys = orderKeys
-          keys.foreach(k => require(cols.exists(_._1 == k),
-            s"FINAL on $db.$t: sorting key '$k' not in table columns"))
-          val kl = keys.map(k => s"`$k`").mkString(", ")
-          val colList = cols.map { case (c, _) => s"`$c`" }.mkString(", ")
-          val sq = s"`$signCol`"
-          java.util.regex.Matcher.quoteReplacement(
-            s"FROM (SELECT $colList FROM (SELECT *, " +
-              s"sum($sq) OVER (PARTITION BY $kl) AS __cf_net, " +
-              s"max(CASE WHEN $sq = 1 THEN __ch_seq END) OVER (PARTITION BY $kl) AS __cf_ls, " +
-              s"min(CASE WHEN $sq = -1 THEN __ch_seq END) OVER (PARTITION BY $kl) AS __cf_fc, " +
-              s"max(__ch_seq) OVER (PARTITION BY $kl) AS __cf_mx " +
-              s"FROM ${EmbeddedClickHouse.seqViewName(db, t)}) AS __cf_in " +
-              "WHERE CASE " +
-              "WHEN abs(__cf_net) > 1 THEN CAST(raise_error(" +
-              s"'CollapsingMergeTree collapse on $db.$t: a sorting-key " +
-              "group nets |sum(sign)| >= 2 — malformed state/cancel " +
-              "sequence (the server calls this a logical error and gives " +
-              "no guarantee); repair the writer') AS BOOLEAN) " +
-              s"WHEN __cf_net = 1 THEN $sq = 1 AND __ch_seq = __cf_ls " +
-              s"WHEN __cf_net = -1 THEN $sq = -1 AND __ch_seq = __cf_fc " +
-              "WHEN __cf_ls IS NOT NULL AND __cf_ls = __cf_mx THEN " +
-              s"($sq = 1 AND __ch_seq = __cf_ls) OR " +
-              s"($sq = -1 AND __ch_seq = __cf_fc) " +
-              s"ELSE false END) AS `$t`")
-        case e if e.startsWith("AggregatingMergeTree") =>
-          // AggregatingMergeTree: rows sharing the sorting key collapse
-          // by MERGING each AggregateFunction column per its function
-          // (the transparent state reps of ClickHouseType.aggStateType);
-          // plain non-key columns take the deterministic representative
-          val keys = orderKeys
-          keys.foreach(k => require(cols.exists(_._1 == k),
-            s"FINAL on $db.$t: sorting key '$k' not in table columns"))
-          val sel = cols.map { case (c, ty) =>
-            if (keys.contains(c)) s"`$c`"
-            else ClickHouseType.aggFunction(ty) match {
-              case Some("avg") =>
-                s"named_struct('s', sum(`$c`.s), 'c', sum(`$c`.c)) AS `$c`"
-              case Some("uniq") | Some("uniqExact") =>
-                s"array_distinct(flatten(collect_list(`$c`))) AS `$c`"
-              case Some("sum") | Some("count") => s"sum(`$c`) AS `$c`"
-              case Some("min") | Some("any") => s"min(`$c`) AS `$c`"
-              case Some("max") => s"max(`$c`) AS `$c`"
-              case Some(other) => throw new IllegalArgumentException(
-                s"FINAL on $db.$t: no merge rule for AggregateFunction($other)")
-              case None => s"min(`$c`) AS `$c`"
-            }
-          }.mkString(", ")
-          java.util.regex.Matcher.quoteReplacement(
-            s"FROM (SELECT $sel FROM `$db`.`$t` GROUP BY " +
-              keys.map(k => s"`$k`").mkString(", ") + s") AS `$t`")
-        case e => throw new IllegalArgumentException(
-          s"FINAL on $db.$t: the embedded store supports FINAL only on " +
-            s"ReplacingMergeTree(<version_column>), SummingMergeTree" +
-            s"[(columns)], or AggregatingMergeTree (engine is '$e'; " +
-            "without a merge rule the server's part-order tiebreak is " +
-            "not reproducible here)")
-      }
-    })
-
-  private val SampleClause =
-    ("FROM `([^`]+)`\\.`([^`]+)` SAMPLE ([0-9.]+)" +
-      "(?: OFFSET ([0-9.]+))?( WHERE )?").r
-
-  private def rewriteSample(sql: String): String =
-    SampleClause.replaceAllIn(sql, m => {
-      val (db, t) = (m.group(1), m.group(2))
-      val f = m.group(3).toDouble
-      val o = Option(m.group(4)).map(_.toDouble).getOrElse(0.0)
-      val hadWhere = m.group(5) != null
-      require(tableExists(db, t), s"no such table $db.$t")
-      val (_, opts, _) = readMeta(db, t)
-      val key = opts.getOrElse("sampling", throw new IllegalArgumentException(
-        s"SAMPLE on $db.$t: table has no declared sampling key " +
-          "(create it with TBLPROPERTIES sampling = '<expr>')"))
-      val lo = math.round(o * 1000000.0)
-      val hi = lo + math.round(f * 1000000.0)
-      val bucket = "pmod(CAST(conv(substring(md5(CAST((" + key +
-        ") AS STRING)), 1, 8), 16, 10) AS BIGINT), 1000000)"
-      val cond =
-        if (hi <= 1000000L) s"($bucket >= $lo AND $bucket < $hi)"
-        else s"($bucket >= $lo OR $bucket < ${hi - 1000000L})"
-      java.util.regex.Matcher.quoteReplacement(
-        s"FROM `$db`.`$t` WHERE $cond" + (if (hadWhere) " AND " else " "))
-    })
+    }
 
   /** Translate + analyze `sql` on the server session, through the
     * analyzed-plan cache: a server keeps prepared statements; repeated
@@ -1760,59 +1768,20 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
       // embedded transport executes the statement ONCE and repartitions,
       // so the token is dropped before translation (leaving `WHERE true`)
       val detokened0 = sql.replaceAll(raw"/\*__CH_SLICE__\([^)]*\)\*/", "")
-      // SELECT DISTINCT ON (exprs): server-documented sugar for
-      // LIMIT 1 BY exprs — textual pre-step so the LIMIT BY machinery
-      // below (row_number window, ORDER BY determinism rule) executes it
-      val detokened1 = ChSqlTranslator.rewriteDistinctOn(detokened0)
       // ANY JOIN strictness: build side dedupes to a deterministic
       // one-row-per-key pick (needs schema, so it lives here, not in
       // the pure translator)
-      val detokened = rewriteAnyJoin(entry, detokened1, knownTables)
-      // LIMIT n [OFFSET o] BY exprs (per-group limit): rewrite to a
-      // row_number window over the clause's expressions, selecting rows
-      // in the statement's ORDER BY order (the server's semantics). An
-      // ORDER BY is REQUIRED here: without one the server returns an
-      // arbitrary n per group — not reproducible, so rejected (the same
-      // determinism rule as FINAL tie-breaks).
-      val lb = ChSqlTranslator.parseLimitBy(detokened)
-      // LIMIT n WITH TIES (server: keep every row tying the last
-      // in-limit row on the ORDER BY key) — a rank() window, same
-      // helper-column pattern as LIMIT BY
-      val wt =
-        if (lb.isDefined) None else ChSqlTranslator.parseWithTies(detokened)
-      // ORDER BY col WITH FILL: two-phase — the fill decoration strips
-      // here and the gap rows are composed onto the analyzed frame below
-      // (the grid, bounds, and default pads all stay LAZY so DESCRIBE
-      // never executes anything)
-      val wf =
-        if (lb.isDefined || wt.isDefined) None
-        else ChSqlTranslator.parseWithFill(detokened)
-      // star column transformers (* REPLACE / APPLY / COLUMNS('re')):
-      // the core analyzes with a native star; the transformer list
-      // composes on the analyzed frame (REPLACE keeps column position)
-      val st =
-        if (lb.isDefined || wt.isDefined || wf.isDefined) None
-        else ChSqlTranslator.parseStarTransform(detokened)
-      val effective = lb match {
-        case Some(p) =>
-          val ord = p.orderBy.getOrElse(throw new IllegalArgumentException(
-            "LIMIT BY without a top-level ORDER BY selects an arbitrary " +
-              "n rows per group — add an ORDER BY for a deterministic read"))
-          s"SELECT * FROM (SELECT *, row_number() OVER " +
-            s"(PARTITION BY ${p.by} ORDER BY $ord) AS __lb_rn " +
-            s"FROM (${p.core}) AS __lb_in) AS __lb " +
-            s"WHERE __lb_rn > ${p.offset} AND __lb_rn <= ${p.offset + p.n} " +
-            s"ORDER BY $ord" + p.outerLimit.map(" " + _).getOrElse("")
-        case None => wt match {
-          case Some(w) =>
-            s"SELECT * FROM (SELECT *, rank() OVER (ORDER BY ${w.orderBy}) " +
-              s"AS __wt_rk FROM (${w.core}) AS __wt_in) AS __wt " +
-              s"WHERE __wt_rk <= ${w.n} ORDER BY ${w.orderBy}"
-          case None =>
-            wf.map(_.core).orElse(st.map(_.core)).getOrElse(detokened)
-        }
-      }
-      val plainStmt = rewriteSample(rewriteFinal(effective))
+      val detokened = rewriteAnyJoin(entry, detokened0, knownTables)
+      // top-level reshapes, decided from one clause split: DISTINCT ON
+      // and LIMIT n [OFFSET o] BY (a row_number window in the ORDER BY
+      // order, which is REQUIRED), LIMIT n WITH TIES (a rank() window,
+      // same helper-column pattern), ORDER BY col WITH FILL (the gap rows
+      // are composed onto the analyzed frame below, lazily, so DESCRIBE
+      // never executes anything), star transformers (* REPLACE / APPLY /
+      // COLUMNS('re'), composed on the analyzed frame)
+      val shape = ChSqlTranslator.reshape(detokened)
+      val effective = shape.fold(detokened)(_.statement)
+      val plainStmt = rewriteStorage(effective)
       // `_part` virtual column (server MergeTree parity): statements
       // referencing it read through per-part augmented views so the
       // part NAME is an ordinary column — registered on demand, never
@@ -1851,11 +1820,14 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
       // mismatch or failure keeps the base frame — a projection read is
       // a storage optimization, identical rows by construction
       val chosen = tryProjectionSwap(entry, plainStmt, df, tables)
-      if (lb.isDefined) chosen.drop("__lb_rn")
-      else if (wt.isDefined) chosen.drop("__wt_rk")
-      else wf.map(f => fillGaps(chosen, f))
-        .orElse(st.map(p => starTransform(chosen, p, tables)))
-        .getOrElse(chosen)
+      shape match {
+        case Some(_: ChSqlTranslator.LimitByParts) => chosen.drop("__lb_rn")
+        case Some(_: ChSqlTranslator.WithTiesParts) => chosen.drop("__wt_rk")
+        case Some(f: ChSqlTranslator.WithFillParts) => fillGaps(chosen, f)
+        case Some(p: ChSqlTranslator.StarTransformParts) =>
+          starTransform(chosen, p, tables)
+        case None => chosen
+      }
     })
   }
 
@@ -1924,14 +1896,10 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
       base: org.apache.spark.sql.DataFrame,
       tables: Seq[(String, String)]): org.apache.spark.sql.DataFrame = {
     try {
-      val fromP = ChSqlTranslator.topLevelPositions(plainStmt, "FROM")
-      if (fromP.size != 1) return base
-      val afterFrom = plainStmt.substring(fromP.head + 4)
-      val endKw = Seq("WHERE", "GROUP", "HAVING", "ORDER", "LIMIT")
-        .flatMap(k => ChSqlTranslator.topLevelPositions(afterFrom, k))
-        .sorted.headOption.getOrElse(afterFrom.length)
-      val (db, t) = afterFrom.substring(0, endKw).trim match {
-        case ProjFromRe(d0, t0) => (d0, t0)
+      val top = ChClauses(plainStmt)
+      if (top.branches.size != 1) return base
+      val (db, t) = top.branches.head(ChClauses.From).map(top.body) match {
+        case Some(ProjFromRe(d0, t0)) => (d0, t0)
         case _ => return base
       }
       val defs = listProjections(db, t)
@@ -2027,18 +1995,8 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
           "ANY JOIN: a subquery right operand needs an alias (AS r)")
       })
     val keys: Seq[String] = p.usingCols.getOrElse {
-      // equi-ON: the build-side key columns, by alias qualifier. The ON
-      // body ends at the next top-level clause keyword.
-      val tail = p.cond.trim.stripPrefix("ON").stripPrefix("on").trim
-      val endRe =
-        raw"(?is)\b(WHERE|GROUP|HAVING|ORDER|LIMIT|SETTINGS|UNION|QUALIFY|FORMAT)\b".r
-      // clause keywords only count outside parens/quotes
-      var body = tail
-      val lx = new ChLex(tail)
-      while (body == tail && lx.next())
-        if (lx.depth == 0 && lx.kind == ChLex.Word &&
-          endRe.findPrefixOf(tail.substring(lx.start)).isDefined)
-          body = tail.substring(0, lx.start)
+      // equi-ON: the build-side key columns, by alias qualifier
+      val body = p.on
       val QualRef = ("^(?:`([^`]+)`|([A-Za-z_][A-Za-z0-9_]*))\\." +
         "(?:`([^`]+)`|([A-Za-z_][A-Za-z0-9_]*))$").r
       def refOf(e: String): Option[(String, String)] =
@@ -2224,21 +2182,6 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
     }
   }
 
-  /** True only for an ORDER BY at the TOP level of `sql` — outside every
-    * parenthesis and quoted region. Only a top-level ORDER BY imposes a
-    * global order the stream split must preserve; a subquery-only ORDER
-    * BY constrains nothing about the outer result, and suppressing the
-    * repartition fan for it would serialize the read for no reason.
-    */
-  private def topLevelOrderBy(sql: String): Boolean = {
-    val lx = new ChLex(sql)
-    while (lx.next())
-      if (lx.depth == 0 && lx.isWord("ORDER")) {
-        if (ChLex.after(sql, lx.end).isWord("BY")) return true
-      }
-    false
-  }
-
   override def describeQuery(chSql: String): StructType =
     resolveQueryDf(serverEntry(), chSql).schema // analysis only, no execution
 
@@ -2253,12 +2196,14 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
     Files.createDirectories(dir)
     val dirStr = dir.toString
     // honor the requested stream count for un-ordered results (a server
-    // fans even small results across max_threads streams); an ORDER BY
-    // result keeps its range partitioning so global order survives.
+    // fans even small results across max_threads streams); a TOP-LEVEL
+    // ORDER BY result keeps its range partitioning so global order
+    // survives (a subquery-only ORDER BY orders nothing outside it).
     // toRdd = INTERNAL rows: spill is UnsafeRow bytes, no external-row
     // conversion on either side of the "wire"
     val source =
-      if (df.rdd.getNumPartitions < numStreams && !topLevelOrderBy(sql))
+      if (df.rdd.getNumPartitions < numStreams &&
+        !ChClauses(sql).branches.exists(_.has(ChClauses.OrderBy)))
         df.repartition(numStreams)
       else df
     val internal = source.queryExecution.toRdd

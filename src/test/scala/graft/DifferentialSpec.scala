@@ -1028,6 +1028,84 @@ class DifferentialSpec extends AnyFunSuite {
     }
   }
 
+  test("random trailing-clause tails (PREWHERE, WHERE, WINDOW, QUALIFY, " +
+    "ORDER BY, LIMIT BY, LIMIT [WITH TIES], SETTINGS, FORMAT) with clause " +
+    "words inside literals agree with a local recompute") {
+    val r = new Random(20261018)
+    val tag = sfDir.replaceAll("[^a-zA-Z0-9]", "_")
+    val ch = graft.session.ClickHouseSession.builder(spark)
+      .storePath(s"target/chstore_$tag")
+      .catalogName("clickhouse").build()
+    // literals that spell clauses: data in both dialects, never clauses
+    val lits = Seq("x LIMIT 5 BY k", "a WHERE b", "SETTINGS max_threads = 1",
+      "ORDER BY z LIMIT 2 WITH TIES", "QUALIFY rn", "WINDOW w AS (",
+      "distinct on (x)", "FORMAT JSON", "PREWHERE p", "UNION ALL SELECT")
+    // (ClickHouse, Spark) predicate pairs over documents
+    def pred(): (String, String) = r.nextInt(4) match {
+      case 0 =>
+        val c = r.nextInt(250) + 100
+        (s"`n_chars` > $c", s"n_chars > $c")
+      case 1 =>
+        val m = r.nextInt(3) + 2
+        (s"`doc_id` % $m <> 0", s"doc_id % $m <> 0")
+      case 2 =>
+        val l = lits(r.nextInt(lits.size))
+        (s"`lang` <> '$l'", s"lang <> '$l'")
+      case _ => ("`lang` IN ('en', 'fr', 'de')", "lang IN ('en', 'fr', 'de')")
+    }
+    val win = "PARTITION BY `lang` ORDER BY `n_chars`, `doc_id`"
+    var nonEmpty = 0
+    (1 to 14).foreach { i =>
+      val lit = lits(r.nextInt(lits.size))
+      val pre = if (r.nextBoolean()) Some(pred()) else None
+      val where = if (r.nextBoolean()) Some(pred()) else None
+      val named = r.nextBoolean()
+      val cut = if (r.nextBoolean()) Some(r.nextInt(30) + 1) else None
+      val k = r.nextInt(4) + 1
+      val tail = r.nextInt(4) // none, LIMIT BY, LIMIT, LIMIT WITH TIES
+      val settings = if (r.nextBoolean()) Some(r.nextInt(4) + 1) else None
+      val format = r.nextBoolean()
+      val remote = ch.chSql(
+        s"SELECT `lang`, `doc_id`, `n_chars`, '$lit' AS tag, row_number() " +
+          s"OVER ${if (named) "w" else s"($win)"} AS rn FROM `main`.`documents`" +
+          pre.fold("")(p => s" PREWHERE ${p._1}") +
+          where.fold("")(w => s" WHERE ${w._1}") +
+          (if (named) s" WINDOW w AS ($win)" else "") +
+          cut.fold("")(c => s" QUALIFY rn <= $c") +
+          (tail match {
+            case 0 => " ORDER BY `doc_id`"
+            case 1 => s" ORDER BY `lang`, `n_chars`, `doc_id` LIMIT $k BY `lang`"
+            case 2 => s" ORDER BY `n_chars`, `doc_id` LIMIT $k"
+            case _ => s" ORDER BY `lang` LIMIT $k WITH TIES"
+          }) +
+          settings.fold("")(n => s" SETTINGS max_threads = $n") +
+          (if (format) " FORMAT JSON" else ""))
+      // the same rows, composed step by step in Spark SQL
+      val conds = (pre.toSeq ++ where).map(_._2)
+      val filtered =
+        s"SELECT lang, doc_id, n_chars, '$lit' AS tag, row_number() OVER " +
+          "(PARTITION BY lang ORDER BY n_chars, doc_id) AS rn FROM documents" +
+          (if (conds.isEmpty) "" else conds.mkString(" WHERE ", " AND ", ""))
+      val qualified =
+        s"SELECT * FROM ($filtered) f" + cut.fold("")(c => s" WHERE rn <= $c")
+      def ranked(window: String) =
+        s"SELECT lang, doc_id, n_chars, tag, rn FROM (SELECT *, $window AS k2 " +
+          s"FROM ($qualified) q) WHERE k2 <= $k"
+      val local = spark.sql(tail match {
+        case 0 => qualified
+        case 1 => ranked("row_number() OVER (PARTITION BY lang ORDER BY n_chars, doc_id)")
+        case 2 => s"SELECT * FROM ($qualified) q ORDER BY n_chars, doc_id LIMIT $k"
+        case _ => ranked("rank() OVER (ORDER BY lang)")
+      })
+      val got = canon(remote)
+      assert(got == canon(local), s"tail case $i diverged (lit='$lit', " +
+        s"pre=$pre, where=$where, named=$named, qualify=$cut, tail=$tail, " +
+        s"k=$k, settings=$settings, format=$format)")
+      if (got.nonEmpty) nonEmpty += 1
+    }
+    assert(nonEmpty > 7, s"only $nonEmpty non-empty cases")
+  }
+
   test("random bracket shapes (array literals + 1-based subscripts) " +
     "agree with an explicit element_at recompute") {
     val r = new Random(31415926)

@@ -649,6 +649,19 @@ class HttpClientSpec extends AnyFunSuite {
     assert(client.tableSizeBytes("main", "events_http").contains(123456L))
   }
 
+  test("chSql pins totals_mode on the statement the server receives " +
+    "unless its SETTINGS clause names one: a 'totals_mode' literal is data") {
+    val ch = graft.session.ClickHouseSession.builder(spark)
+      .endpoint(endpoint).catalogName("chhttptot").build()
+    queries.synchronized(queries.clear())
+    ch.chSql("SELECT `name`, count(*) AS n, 'totals_mode' AS tag " +
+      "FROM `main`.`events_http` GROUP BY `name` WITH TOTALS HAVING count(*) >= 1")
+    val described = queries.synchronized(
+      queries.filter(_.startsWith("DESCRIBE TABLE")).toSeq)
+    assert(described.nonEmpty && described.forall(_.contains("HAVING count(*) >= 1 " +
+      "SETTINGS totals_mode = 'after_having_exclusive'")), described.toString)
+  }
+
   test("planQuery streams RowBinaryWithNamesAndTypes executor-side") {
     val (schema, handles) = client.planQuery(
       "SELECT `id`, `name`, `val` FROM `main`.`events_http`", 1)

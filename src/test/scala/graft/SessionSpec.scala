@@ -138,6 +138,63 @@ class SessionSpec extends AnyFunSuite {
     assert(top == 2L)
   }
 
+  test("FINAL and SAMPLE are storage clauses of the FROM clause: the " +
+    "same text inside a string literal reads back verbatim") {
+    val root = Files.createTempDirectory("graft_finlit_").toString
+    val ch = ClickHouseSession.builder(spark)
+      .storePath(root).catalogName("chfinlit").build()
+    ch.createDatabase("fl")
+    ch.newTable("fl", "m")
+      .column("id", "Int64").column("ver", "Int64")
+      .engine("ReplacingMergeTree(ver)").orderBy("id").create()
+    val sch = ch.client.asInstanceOf[graft.client.EmbeddedClickHouse]
+      .sparkSchema("fl", "m")
+    ch.client.insert("fl", "m", sch, Seq(Row(1L, 1L), Row(2L, 1L)))
+    ch.client.insert("fl", "m", sch, Seq(Row(1L, 2L)))
+    def read(sql: String): Seq[(String, Long)] =
+      ch.chSql(sql).collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+    val fin = "FROM `fl`.`m` FINAL"
+    assert(read(s"SELECT '$fin' AS tag, count(*) AS n FROM `fl`.`m`") ==
+      Seq(fin -> 3L))
+    assert(read(s"SELECT '$fin' AS tag, count(*) AS n FROM `fl`.`m` FINAL") ==
+      Seq(fin -> 2L))
+    // the table declares no sampling key: a SAMPLE clause would reject
+    val smp = "FROM `fl`.`m` SAMPLE 0.5"
+    assert(read(s"SELECT '$smp' AS tag, count(*) AS n FROM `fl`.`m`") ==
+      Seq(smp -> 3L))
+  }
+
+  test("clause ends on an embedded store: SETTINGS after LIMIT BY and " +
+    "LIMIT WITH TIES keeps the ORDER BY; clause words inside literals " +
+    "read back as data") {
+    val root = Files.createTempDirectory("graft_clauses_").toString
+    val ch = ClickHouseSession.builder(spark)
+      .storePath(root).catalogName("chclauses").build()
+    ch.createDatabase("cl")
+    ch.newTable("cl", "t")
+      .column("g", "String").column("v", "Int64").column("s", "String")
+      .engine("MergeTree").orderBy("g").create()
+    val sch = ch.client.asInstanceOf[graft.client.EmbeddedClickHouse]
+      .sparkSchema("cl", "t")
+    ch.client.insert("cl", "t", sch, Seq(
+      Row("a", 1L, "limit 5 by k"), Row("a", 3L, "distinct on (x)"),
+      Row("a", 2L, "-"), Row("b", 8L, "limit 5 with ties"), Row("b", 9L, "-"),
+      Row("c", 5L, "-")))
+    def gv(sql: String): Seq[(String, Long)] =
+      ch.chSql(sql).collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+    assert(gv("SELECT `g`, `v` FROM `cl`.`t` ORDER BY `g`, `v` DESC " +
+      "LIMIT 1 BY `g` SETTINGS max_threads = 1") ==
+      Seq("a" -> 3L, "b" -> 9L, "c" -> 5L))
+    // rank() over g: the three a rows tie at rank 1, b starts at 4
+    assert(gv("SELECT `g`, `v` FROM `cl`.`t` ORDER BY `g` LIMIT 2 WITH TIES " +
+      "SETTINGS max_threads = 1").toSet == Set("a" -> 1L, "a" -> 2L, "a" -> 3L))
+    for (lit <- Seq("distinct on (x)", "limit 5 by k", "limit 5 with ties")) {
+      val got = ch.chSql(s"SELECT * FROM `cl`.`t` WHERE `s` = '$lit'")
+        .collect().map(_.getString(2)).toSeq
+      assert(got == Seq(lit), s"$lit: $got")
+    }
+  }
+
   test("chSql pins totals_mode='after_having_exclusive' on the SHIPPED " +
     "statement when TOTALS meets HAVING — the wire transport contract, " +
     "visible in the remote node's SQL on any transport") {

@@ -1053,4 +1053,48 @@ class TranslatorSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](t("SELECT arrayDifference(a, b)"))
     intercept[IllegalArgumentException](t("SELECT arrayCumSum(a, b)"))
   }
+
+  test("PREWHERE folds into WHERE up to a following WINDOW clause, at " +
+    "every query level") {
+    assert(t("SELECT a FROM db.tbl PREWHERE a > 1 WHERE b < 2 " +
+      "WINDOW w AS (ORDER BY a)") ==
+      "SELECT a FROM __ch_db_tbl WHERE (a > 1) AND (b < 2) " +
+        "WINDOW w AS (ORDER BY a NULLS LAST)")
+    // a LIMIT BY / WITH TIES reshape nests the statement it rewrites
+    assert(t("SELECT * FROM (SELECT a FROM db.tbl PREWHERE a > 1) q") ==
+      "SELECT * FROM (SELECT a FROM __ch_db_tbl WHERE a > 1) q")
+  }
+
+  test("SETTINGS after LIMIT BY ends the BY list; the ORDER BY survives") {
+    val lb = ChSqlTranslator.parseLimitBy(
+      "SELECT k, v FROM t ORDER BY v LIMIT 1 BY k SETTINGS max_threads = 1").get
+    assert(lb.by == "k" && lb.orderBy.contains("v") && lb.outerLimit.isEmpty,
+      lb.toString)
+    assert(lb.core == "SELECT k, v FROM t SETTINGS max_threads = 1", lb.core)
+  }
+
+  test("SETTINGS after LIMIT n WITH TIES is a top-level tail, not a " +
+    "subquery") {
+    val wt = ChSqlTranslator.parseWithTies(
+      "SELECT k FROM t ORDER BY k LIMIT 2 WITH TIES SETTINGS max_threads = 1").get
+    assert(wt.orderBy == "k" && wt.n == 2L, wt.toString)
+    assert(wt.core == "SELECT k FROM t SETTINGS max_threads = 1", wt.core)
+  }
+
+  test("clause keywords inside literals are data: no nested-clause reject") {
+    for (lit <- Seq("'distinct on (x)'", "'limit 5 by k'", "'limit 5 with ties'")) {
+      val sql = s"SELECT * FROM `d`.`t` WHERE s = $lit"
+      assert(ChSqlTranslator.rewriteDistinctOn(sql) == sql)
+      assert(ChSqlTranslator.parseLimitBy(sql).isEmpty)
+      assert(ChSqlTranslator.parseWithTies(sql).isEmpty)
+    }
+  }
+
+  test("pinTotalsMode reads the SETTINGS items: a 'totals_mode' literal " +
+    "does not suppress the pin") {
+    assert(ChSqlTranslator.pinTotalsMode("SELECT k, 'totals_mode' AS s " +
+      "FROM t GROUP BY k WITH TOTALS HAVING count(*) > 1") ==
+      "SELECT k, 'totals_mode' AS s FROM t GROUP BY k WITH TOTALS " +
+        "HAVING count(*) > 1 SETTINGS totals_mode = 'after_having_exclusive'")
+  }
 }
