@@ -23,16 +23,13 @@ object Bench {
       .appName("graft-bench")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")
-      // AQE partition-coalescing policy — A/B'd in r17 (OPTIMIZATION_r17
-      // .md): bytes-first coalescing (parallelismFirst=false, guide §2.2)
-      // halves the sub-second relational tail (q44 0.41×, q52 0.48×, q26
-      // 0.50×) but serializes CPU-dense small-byte stages (t12 2.11×,
-      // r47 1.90×, r45 1.56× — object aggs and store-write fanout drop
-      // to one task), netting a 1.02× WASH on the mixed battery. Keep
-      // Spark's default (parallelism-first); the knob stays for
-      // experiments.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("GRAFT_AQE_PARALLELISM_FIRST", "true"))
+      // AQE partition coalescing keeps Spark's default (parallelism-
+      // first). r17 A/B (OPTIMIZATION_r17.md): bytes-first coalescing
+      // (parallelismFirst=false, guide §2.2) halves the sub-second
+      // relational tail (q44 0.41×, q52 0.48×, q26 0.50×) but serializes
+      // CPU-dense small-byte stages (t12 2.11×, r47 1.90×, r45 1.56× —
+      // object aggs and store-write fanout drop to one task), netting a
+      // 1.02× WASH on the mixed battery.
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

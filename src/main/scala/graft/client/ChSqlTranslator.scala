@@ -107,7 +107,7 @@ object ChSqlTranslator {
     // population skewness: Spark's skewness IS µ3/σ³ over population
     // central moments (CentralMomentAgg: √n·M3/M2^1.5)
     "skewPop" -> "skewness",
-    // round-14 wave: value-identical 1:1 swaps (FnSurfaceProbe sweep)
+    // round-14 wave: value-identical 1:1 swaps (FnSurfaceSpec sweep)
     "mapKeys" -> "map_keys",
     "mapValues" -> "map_values",
     "mapContains" -> "map_contains_key",
@@ -437,20 +437,6 @@ object ChSqlTranslator {
     */
   private[client] def rewriteBrackets(in: String): String =
     rewriteSubscripts(rewriteArrayLiterals(rewriteMapLiterals(in)))
-
-  /** Words after which a `[` opens an array LITERAL (they introduce an
-    * expression rather than ending a primary one). Anything else —
-    * identifiers — takes the subscript reading.
-    */
-  private val NonPrimaryWords: Set[String] = Set(
-    "SELECT", "DISTINCT", "ALL", "FROM", "WHERE", "PREWHERE", "HAVING",
-    "QUALIFY", "AND", "OR", "NOT", "XOR", "IN", "BY", "ON", "WHEN", "THEN",
-    "ELSE", "CASE", "JOIN", "UNION", "EXCEPT", "INTERSECT", "LIMIT",
-    "OFFSET", "SETTINGS", "VALUES", "USING", "BETWEEN", "LIKE", "ILIKE",
-    "IS", "AS", "ASC", "DESC", "OVER", "PARTITION", "ORDER", "GROUP",
-    "RETURN", "INTERPOLATE", "WITH", "TOTALS", "FILL", "TO", "STEP",
-    "ARRAY", "LEFT", "RIGHT", "INNER", "FULL", "CROSS", "SEMI", "ANTI",
-    "ASOF", "ANY", "GLOBAL", "PASTE", "IF", "ELSEIF", "EXISTS")
 
   /** ClickHouse map literals `{'k': v, ...}` → `map('k', v, ...)` —
     * Spark has no brace-literal form. Braces appear in SELECT grammar
@@ -920,7 +906,7 @@ object ChSqlTranslator {
             "anyLast, uniq, uniqExact")
       }
     })
-    // ---- round-14 function wave (FnSurfaceProbe sweep): each mapping
+    // ---- round-14 function wave (FnSurfaceSpec sweep): each mapping
     // is value-identical on its defined domain; anything whose boundary
     // law could not be pinned stays a loud reject ----
     // array surgery
@@ -1304,7 +1290,7 @@ object ChSqlTranslator {
     rule("toQuarter", args => s"quarter(${args.head})")
     rule("toDayOfYear", args => s"dayofyear(${args.head})")
     rule("toISOWeek", args => s"weekofyear(${args.head})")
-    // ---- round-15 sweep-2 wave (FnSurfaceProbe round 2) ----------------
+    // ---- round-15 sweep-2 wave (FnSurfaceSpec round 2) ----------------
     // ISO week-year: Spark's YEAROFWEEK extract carries the same ISO law
     rule("toISOYear", args =>
       s"extract(YEAROFWEEK FROM ${args.head})")
@@ -3150,9 +3136,18 @@ object ChSqlTranslator {
 
   private def rewriteTotalsLevel(s: String): String = {
     val lvl = ChClauses(s)
-    val tp = lvl.positions("TOTALS").headOption.getOrElse(return s)
+    // the modifier is the `WITH TOTALS` pair (not a leading `WITH totals
+    // AS ...` clause); a lone TOTALS is a name (`SELECT totals`) unless it
+    // follows a primary, where only a modifier that lost its WITH can stand
+    def withAt(p: Int): Int = {
+      val m = raw"(?i)\bWITH\s+$$".r.findFirstMatchIn(s.substring(0, p))
+      m.map(_.start).filterNot(w => lvl.branchAt(p)(With).exists(_.start == w))
+        .getOrElse(-1)
+    }
+    val tp = lvl.positions("TOTALS").find(p => withAt(p) >= 0 || lvl.followsPrimary(p))
+      .getOrElse(return s)
     val b = lvl.branchAt(tp)
-    val wp = b.clauseAt(tp).fold(-1)(lvl.seek(_, "WITH", "TOTALS"))
+    val wp = withAt(tp)
     require(wp >= 0,
       s"TOTALS without WITH near: ${s.substring(math.max(0, tp - 30), tp + 6)}")
     val g = b.clauseAt(tp).filter(_.kind eq GroupBy).getOrElse(

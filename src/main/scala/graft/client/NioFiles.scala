@@ -9,8 +9,8 @@ import scala.jdk.CollectionConverters._
   * draining the iterator does not. On the insert hot path (one staging
   * dir per block) the leaked fds accumulate at blocks-per-insert rate and
   * a long ingest run hits the process fd ceiling (surfaced as
-  * `IOException: error=24, Too many open files` from the 5M-row × batch
-  * 5K InsertBench sweep). Listings here are small (parts of one table,
+  * `IOException: error=24, Too many open files` from a 5M-row ×
+  * batch-5K insert sweep). Listings here are small (parts of one table,
   * spill files of one query), so materializing is the right trade.
   */
 private[client] object NioFiles {

@@ -215,21 +215,26 @@ object Registration {
 
   /** SQL-surface registration (runtime, no extensions required):
     * `clickhouse(expr, 'Type')`, `clickhouse_eval('sql', 'Type')`,
-    * `clickhouse_fn('name', args..., 'Type')`.
+    * `clickhouse_fn('name', args..., 'Type')`. Each name registers only
+    * when the session does not have it yet, so installing on a session
+    * again (every `ClickHouseSession` build does) keeps the builders it
+    * has.
     */
   def registerFunctions(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("clickhouse", buildClickhouse, "built-in")
-    reg.createOrReplaceTempFunction("clickhouse_eval", buildEval, "built-in")
-    reg.createOrReplaceTempFunction("clickhouse_fn", buildFn, "built-in")
+    def register(name: String, builder: Seq[Expression] => Expression): Unit =
+      if (!reg.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(name)))
+        reg.createOrReplaceTempFunction(name, builder, "built-in")
+    register("clickhouse", buildClickhouse)
+    register("clickhouse_eval", buildEval)
+    register("clickhouse_fn", buildFn)
     // the apply/lambda named-builder family (udfs/apply.rs:26-34) — also
     // usable WITHOUT the extensions parser (Spark-style lambda + wrapper
     // shapes; the $-placeholder spelling additionally needs the parser's
     // pre-lex and placeholder builder)
     graft.GraftSqlParser.ApplyAliases.foreach { n =>
-      reg.createOrReplaceTempFunction(n,
-        exprs => ApplyBuilders.buildPlaceholder(n, exprs)
-          .getOrElse(ApplyBuilders.buildAlias(n, exprs)), "built-in")
+      register(n, exprs => ApplyBuilders.buildPlaceholder(n, exprs)
+        .getOrElse(ApplyBuilders.buildAlias(n, exprs)))
     }
   }
 

@@ -151,15 +151,18 @@ object Multimodal {
     * [[quarantine]] for EVERY input, including a NULL magic check:
     * quarantine's `when(!magicOk, ...)` arm skips on NULL (falls through
     * to keep), so the conjunct here is coalesce(magicOk, true) — keep ⟺
-    * payload non-null AND minBytes ≤ n_bytes ≤ maxBytes AND NOT
-    * (magicOk IS FALSE) (OpsSpec pins set equality of the two routes,
-    * including a NULL-magic row).
+    * payload non-null AND n_bytes > 0 AND minBytes ≤ n_bytes ≤ maxBytes
+    * AND NOT (magicOk IS FALSE). The `n_bytes > 0` conjunct mirrors the
+    * "empty" arm, which `minBytes = 0` alone would not (OpsSpec pins set
+    * equality of the two routes, including a NULL-magic row and
+    * `minBytes = 0`).
     */
   def keepPredicate(minBytes: Long, maxBytes: Long,
-      magicOk: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    col("payload").isNotNull &&
-      length(col("payload")).cast("long").between(minBytes, maxBytes) &&
+      magicOk: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
+    val nb = length(col("payload")).cast("long")
+    col("payload").isNotNull && nb > 0L && nb.between(minBytes, maxBytes) &&
       coalesce(magicOk, lit(true))
+  }
 
   /** 16-bit SimHash over BYTE shingles of the payload — the d04 text
     * kernel's law applied to opaque media bytes, so payload-level

@@ -746,8 +746,8 @@ object ConnectorQueries {
             // pushdown, /root/reference/src/federation.rs:19-43).
             // COST CONTRACT: the probe is O(index) per micro-batch — at
             // a 100 TB corpus the batch cadence is bounded by index scan
-            // speed. graft.FpProbe's 1x->10x A/B (BASELINE.md round-14)
-            // shows NOT IN flat and a sort-merge formulation 100x worse
+            // speed. The round-14 1x->10x A/B (BASELINE.md) showed
+            // NOT IN flat and a sort-merge formulation 100x worse
             // (per-batch sorts); when the index outgrows scan bandwidth
             // the scale path is r45's fp-sharded index (probe stays
             // shard-local), not a different join shape.

@@ -42,27 +42,33 @@ object SimilarityQueries {
   private def corpus(s: SparkSession): DataFrame =
     s.table("embeddings").repartition(s.sparkContext.defaultParallelism)
 
-  private val ivfIndexCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), graft.ops.AnnIvf.IvfIndex]
+  /** Corpus-derived memos key on (session, dir, embeddings data token)
+    * — the round-13 memo law: a regenerated embeddings.parquet changes
+    * [[graft.Tables.dataToken]], so the memo rebuilds instead of serving
+    * an index or baseline of the old corpus.
+    */
+  private[queries] type CorpusKey = (SparkSession, String, (Long, Long))
+  private def corpusKey(s: SparkSession, dir: String): CorpusKey =
+    (s, dir, Tables.dataToken(dir, "embeddings"))
 
-  /** auto-k for the sf corpus, memoized per (session, dir, data token):
-    * gates that need the auto-scaled k on EVERY invocation (r68/r69 probe
-    * paths — nprobe derives from it) pay the corpus count ONCE instead of
-    * a full scan+shuffle per bench iteration (optimization r17, guide
-    * §1.2: don't compute things you throw away). Keyed on
-    * [[graft.Tables.dataToken]] (r18, the round-13 memo law): a
-    * regenerated embeddings.parquet changes the token and the memo
-    * recomputes instead of serving a stale constant.
+  private[queries] val ivfIndexCache =
+    scala.collection.concurrent.TrieMap.empty[CorpusKey, graft.ops.AnnIvf.IvfIndex]
+
+  /** auto-k for the sf corpus, memoized per corpus key: gates that need
+    * the auto-scaled k on EVERY invocation (r68/r69 probe paths — nprobe
+    * derives from it) pay the corpus count ONCE instead of a full
+    * scan+shuffle per bench iteration (optimization r17, guide §1.2:
+    * don't compute things you throw away).
     */
   private[queries] val autoKCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, (Long, Long)), Int]
+    scala.collection.concurrent.TrieMap.empty[CorpusKey, Int]
   private[queries] def autoK(s: SparkSession, dir: String): Int =
-    autoKCache.getOrElseUpdate((s, dir, Tables.dataToken(dir, "embeddings")),
+    autoKCache.getOrElseUpdate(corpusKey(s, dir),
       graft.ops.AnnIvf.autoCells(corpus(s).count()))
 
   /** s09's half-built + incrementally-grown index (build-once like s04's). */
-  private val incIndexCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), graft.ops.AnnIvf.IvfIndex]
+  private[queries] val incIndexCache =
+    scala.collection.concurrent.TrieMap.empty[CorpusKey, graft.ops.AnnIvf.IvfIndex]
 
   /** Persisted-index stores verified this JVM (gate:tag keyed): the
     * integrity scan (counts + auto-k match, possibly a rebuild) is a
@@ -105,15 +111,15 @@ object SimilarityQueries {
   }
 
   // the exact baseline is probes×k pairs (bounded: 500) — memoized per
-  // (session, dir) so s03 and s04 (and repeated bench iterations) don't
+  // corpus key so s03 and s04 (and repeated bench iterations) don't
   // recompute the brute-force pass
-  private val exactPairsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Set[(Long, Long)]]
+  private[queries] val exactPairsCache =
+    scala.collection.concurrent.TrieMap.empty[CorpusKey, Set[(Long, Long)]]
 
   /** recall@5 of `ann` vs the exact baseline → one threshold row. */
   private def recallGate(s: SparkSession, dir: String, ann: DataFrame): DataFrame = {
     import s.implicits._
-    val exact = exactPairsCache.getOrElseUpdate((s, dir),
+    val exact = exactPairsCache.getOrElseUpdate(corpusKey(s, dir),
       exactTop5(s).collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
     val annPairs = ann.select("probe_id", "neighbor_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -259,14 +265,14 @@ object SimilarityQueries {
         Tables.register(s, dir)
         val probes = s.table("embeddings").filter(col("vec_id") < 100)
         // An IVF index is a build-once offline artifact (like Tables
-        // registration): memoize per (session, dir) so repeated runs
+        // registration): memoize per corpus key so repeated runs
         // measure the probe path, not quantizer re-training.
         // AUTO cell count (k ~ sqrt(N), AnnIvf.autoCells) — a fixed k=16
         // dies at 100x corpus (cells grow as corpus/16). Operating point
         // nprobe = ceil(0.75 k): RecallProbe sweep holds recall@5 = 0.964
         // at every driver scale (near-uniform corpus, the hardest case;
         // real near-dup corpora clear 0.90 at far leaner fractions).
-        val index = ivfIndexCache.getOrElseUpdate((s, dir),
+        val index = ivfIndexCache.getOrElseUpdate(corpusKey(s, dir),
           graft.ops.AnnIvf.buildIndex(
             corpus(s), "vec_id", "embedding",
             trainSampleFraction = 0.5, maxIter = 10))
@@ -749,7 +755,7 @@ object SimilarityQueries {
         Tables.register(s, dir)
         val base = corpus(s).filter(col("vec_id") % 2 === 0)
         val grown = s.table("embeddings").filter(col("vec_id") % 2 === 1)
-        val index = incIndexCache.getOrElseUpdate((s, dir), {
+        val index = incIndexCache.getOrElseUpdate(corpusKey(s, dir), {
           val built = graft.ops.AnnIvf.buildIndex(
             base, "vec_id", "embedding",
             trainSampleFraction = 0.5, maxIter = 10)

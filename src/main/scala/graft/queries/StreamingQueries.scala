@@ -72,32 +72,21 @@ object StreamingQueries {
     * partition. r17 A/B at local[32], sf0.1 (OPTIMIZATION_r17.md):
     * 8 beats 32 by 1.37× (state-store open/commit fanout dominates even
     * the compute-heavy q47 batch) and beats 4 by 1.12× — 8 IS the sweet
-    * spot, measured, not assumed. GRAFT_DRAIN_PARTS overrides for
-    * experiments; at cluster scale state partitioning is sized to the
-    * key cardinality/executor count by the deployment, not this drain
-    * helper (which only serves the finite replayable-batch gates).
-    */
-  private[queries] def drainPartitions(spark: SparkSession): String =
-    sys.env.getOrElse("GRAFT_DRAIN_PARTS", "8")
-
-  /** State-store provider for drained streams, env-keyed for A/Bs
-    * (`GRAFT_STATE_PROVIDER=rocksdb` or a provider class name; unset =
-    * Spark's default HDFS-backed in-memory provider). r18 interleaved
-    * A/B ×2 per side, min-merged, drain subset at local[32]/sf0.1
-    * (OPTIMIZATION_r18.md): RocksDB measured 1.26–1.37× WORSE on
-    * q40/q41/q47/q55 (JNI + per-commit SST churn on checkpoint-lifetime
-    * state that fits comfortably in memory), flat on q54, noise-level on
-    * q42, with flat controls (q35/r27 ≈ 1.04) — the default stays. At
+    * spot, measured, not assumed. At cluster scale state partitioning is
+    * sized to the key cardinality/executor count by the deployment, not
+    * this drain helper (which only serves the finite replayable-batch
+    * gates).
+    *
+    * The state-store provider stays Spark's default HDFS-backed
+    * in-memory one. r18 interleaved A/B ×2 per side, min-merged, drain
+    * subset at local[32]/sf0.1 (OPTIMIZATION_r18.md): RocksDB measured
+    * 1.26–1.37× WORSE on q40/q41/q47/q55 (JNI + per-commit SST churn on
+    * checkpoint-lifetime state that fits comfortably in memory), flat on
+    * q54, noise-level on q42, with flat controls (q35/r27 ≈ 1.04). At
     * 100 TB-stream scale, state that outgrows executor memory is exactly
-    * when RocksDB pays — deployment-sized, like the partition count
-    * above.
+    * when RocksDB pays — deployment-sized, like the partition count.
     */
-  private[queries] def stateProvider: Option[String] =
-    sys.env.get("GRAFT_STATE_PROVIDER").map {
-      case "rocksdb" =>
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-      case other => other
-    }
+  private val DrainPartitions = "8"
 
   private[queries] def drain(spark: SparkSession, built: DataFrame, mode: String): DataFrame = {
     val sink = s"graft_stream_${runSeq.incrementAndGet()}"
@@ -105,9 +94,7 @@ object StreamingQueries {
     // checkpoint delta files; the checkpoint goes to tmpfs when available
     // (state commit latency is fsync-bound, not compute-bound)
     val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", drainPartitions(spark))
-    stateProvider.foreach(p =>
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass", p))
+    spark.conf.set("spark.sql.shuffle.partitions", DrainPartitions)
     val ckBase = if (new java.io.File("/dev/shm").isDirectory) "/dev/shm" else
       sys.props("java.io.tmpdir")
     val ck = s"$ckBase/graft_ck_$sink"
@@ -259,9 +246,7 @@ object StreamingQueries {
 
         val sink = s"graft_stream_${runSeq.incrementAndGet()}"
         val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", drainPartitions(s))
-        stateProvider.foreach(p =>
-          s.conf.set("spark.sql.streaming.stateStore.providerClass", p))
+        s.conf.set("spark.sql.shuffle.partitions", DrainPartitions)
         val ckBase = if (new java.io.File("/dev/shm").isDirectory) "/dev/shm"
           else sys.props("java.io.tmpdir")
         val ck = s"$ckBase/graft_ck_$sink"

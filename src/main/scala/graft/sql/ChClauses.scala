@@ -16,7 +16,9 @@ import scala.collection.mutable.ArrayBuffer
   * inside LIMIT (`LIMIT n OFFSET o [BY ...]`) and after SAMPLE. Words that
   * double as names need the clause's shape after them: `GROUP`/`ORDER`
   * take `BY`, `WINDOW` takes `name AS`, `OFFSET` a number, `SETTINGS`
-  * `name =`, and `FORMAT` one name that ends the level.
+  * `name =`, and `FORMAT` one name that ends the level; `QUALIFY` opens
+  * a clause only after the SELECT list, right after a primary expression
+  * (`WHERE qualify > 1` reads a column).
   *
   * A level is the span `[from, to)` of `text` (the statement, or one paren
   * group's content); every position is an index into `text`. This is the
@@ -25,8 +27,9 @@ import scala.collection.mutable.ArrayBuffer
 final class ChClauses private (val text: String, from: Int, to: Int) {
   import ChClauses._
 
-  // this level's own words, and its paren groups as (open, close)
-  private val wordStart, wordEnd = ArrayBuffer.empty[Int]
+  // this level's own words with the start of the token before each (-1
+  // at the text start), and its paren groups as (open, close)
+  private val wordStart, wordEnd, wordPrev = ArrayBuffer.empty[Int]
   private val groupsB = ArrayBuffer.empty[(Int, Int)]
 
   /** The set-operation branches, in text order (at least one). */
@@ -58,6 +61,26 @@ final class ChClauses private (val text: String, from: Int, to: Int) {
   def positions(w: String): Seq[Int] =
     wordStart.indices.filter(isWordAt(_, w)).map(wordStart)
 
+  /** The level word at `at` follows a primary expression: the token
+    * before it is a name, a literal or a closing paren or bracket, not a
+    * word like SELECT, WHERE or AND that introduces an expression. Only
+    * there can a word like QUALIFY or TOTALS be a keyword.
+    */
+  def followsPrimary(at: Int): Boolean = {
+    val i = wordStart.indexOf(at)
+    i >= 0 && endsPrimary(wordPrev(i))
+  }
+
+  private def endsPrimary(tokenStart: Int): Boolean = tokenStart >= 0 && {
+    val t = new ChLex(text, tokenStart)
+    t.next()
+    t.kind match {
+      case ChLex.Str | ChLex.Ident => true
+      case ChLex.Word => !NonPrimaryWords.contains(t.token.toUpperCase(java.util.Locale.ROOT))
+      case _ => t.isPunct(')') || t.isPunct(']')
+    }
+  }
+
   /** The branch holding position `at`. */
   def branchAt(at: Int): Branch =
     branches.find(b => at < b.end).getOrElse(branches.last)
@@ -67,7 +90,7 @@ final class ChClauses private (val text: String, from: Int, to: Int) {
     val clauses = ArrayBuffer.empty[Clause]
     val joins = ArrayBuffer.empty[(Int, Int)]
     val lx = new ChLex(text, from)
-    var bStart, open = -1
+    var bStart, open, prev = -1
     var cur: Kind = null
     var cStart, cBody = 0
     var sampled = false
@@ -99,7 +122,7 @@ final class ChClauses private (val text: String, from: Int, to: Int) {
       else if (lx.depth == 0 && lx.isPunct(')') && open >= 0) {
         groupsB += open -> lx.start; open = -1
       } else if (lx.depth == 0 && lx.kind == ChLex.Word) {
-        wordStart += lx.start; wordEnd += lx.end
+        wordStart += lx.start; wordEnd += lx.end; wordPrev += prev
         lazy val n = after(lx.end)
         lx.token.toUpperCase(java.util.Locale.ROOT) match {
           case "WITH" if lx.start == bStart => begin(With, lx.end)
@@ -108,7 +131,8 @@ final class ChClauses private (val text: String, from: Int, to: Int) {
           case "PREWHERE" => begin(Prewhere, lx.end)
           case "WHERE" => begin(Where, lx.end)
           case "HAVING" => begin(Having, lx.end)
-          case "QUALIFY" => begin(Qualify, lx.end)
+          case "QUALIFY" if cur != null && cur.rank > Select.rank &&
+            endsPrimary(prev) => begin(Qualify, lx.end)
           case "GROUP" if n.isWord("BY") => begin(GroupBy, n.end)
           case "ORDER" if n.isWord("BY") => begin(OrderBy, n.end)
           case "WINDOW" if named(n) && after(n.end).isWord("AS") => begin(Window, lx.end)
@@ -138,6 +162,7 @@ final class ChClauses private (val text: String, from: Int, to: Int) {
           case _ =>
         }
       }
+      if (lx.kind != ChLex.Space) prev = lx.start
     }
     if (open >= 0) groupsB += open -> to
     endBranch(to)
@@ -163,6 +188,20 @@ object ChClauses {
   case object Offset extends Kind("OFFSET", 12)
   case object Settings extends Kind("SETTINGS", 13)
   case object Format extends Kind("FORMAT", 14)
+
+  /** Words after which an expression starts rather than ends: a `[`
+    * after them opens an array literal, and a clause word after them is
+    * a name.
+    */
+  val NonPrimaryWords: Set[String] = Set(
+    "SELECT", "DISTINCT", "ALL", "FROM", "WHERE", "PREWHERE", "HAVING",
+    "QUALIFY", "AND", "OR", "NOT", "XOR", "IN", "BY", "ON", "WHEN", "THEN",
+    "ELSE", "CASE", "JOIN", "UNION", "EXCEPT", "INTERSECT", "LIMIT",
+    "OFFSET", "SETTINGS", "VALUES", "USING", "BETWEEN", "LIKE", "ILIKE",
+    "IS", "AS", "ASC", "DESC", "OVER", "PARTITION", "ORDER", "GROUP",
+    "RETURN", "INTERPOLATE", "WITH", "TOTALS", "FILL", "TO", "STEP",
+    "ARRAY", "LEFT", "RIGHT", "INNER", "FULL", "CROSS", "SEMI", "ANTI",
+    "ASOF", "ANY", "GLOBAL", "PASTE", "IF", "ELSEIF", "EXISTS")
 
   /** Words that may lead a JOIN keyword as part of its operator. */
   private val JoinWords = Seq("GLOBAL", "ANY", "ALL", "ASOF", "SEMI", "ANTI",

@@ -57,6 +57,16 @@ class ChClausesSpec extends AnyFunSuite {
     "opaque") {
     assert(kinds("SELECT format, window(ts, 1), offset, settings FROM t " +
       "WHERE limit_x > 1") == Seq(Seq("SELECT", "FROM", "WHERE")))
+    // QUALIFY and TOTALS as column names: in the SELECT list, and where
+    // an expression starts; QUALIFY after an expression is the clause
+    assert(kinds("SELECT qualify FROM db.tbl") == Seq(Seq("SELECT", "FROM")))
+    assert(kinds("SELECT totals FROM db.tbl") == Seq(Seq("SELECT", "FROM")))
+    assert(kinds("SELECT a FROM t WHERE qualify > 1 AND totals < 2") ==
+      Seq(Seq("SELECT", "FROM", "WHERE")))
+    assert(bodies("SELECT a FROM t WHERE b = 'x' QUALIFY r = 1")("QUALIFY") ==
+      "r = 1")
+    val tl = ChClauses("SELECT totals FROM t GROUP BY k WITH TOTALS")
+    assert(tl.positions("TOTALS").map(tl.followsPrimary) == Seq(false, false))
     assert(kinds("SELECT 'FROM x WHERE y LIMIT 1 BY z' AS s FROM t") ==
       Seq(Seq("SELECT", "FROM")))
     assert(kinds("SELECT a FROM (SELECT a FROM u ORDER BY a) q") ==

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Seeded compositional fuzz over the round-14/15/16 mapped function
   * surface (VERDICT r15 item 5): the ~120 hand-pinned names are
-  * exercised one call deep by FnSurfaceProbe and the gates; THIS
+  * exercised one call deep by FnSurfaceSpec and the gates; THIS
   * harness composes them 2–3 deep from a typed grammar and compares the
   * translator's text pipeline (chSql → ChSqlTranslator → child
   * session) against an INDEPENDENTLY WRITTEN Spark-SQL rendering of the

@@ -1525,6 +1525,28 @@ class HttpClientSpec extends AnyFunSuite {
     } finally mock.close()
   }
 
+  test("a 16-column resumable columnar read rides the native binary path") {
+    val mock = new graft.client.MockClickHouseHttp
+    mock.wireReadRows = 20000
+    mock.wireReadExtraCols = 13
+    try {
+      val http = new HttpClickHouseClient(mock.endpoint)
+      val client = new graft.client.FailoverClickHouseClient(IndexedSeq(http, http))
+      val cols = (Seq("id", "v", "tag") ++ (0 until 13).map(i => s"w$i"))
+        .map(c => s"`$c`").mkString(", ")
+      val (schema, hs) = client.planQueryRanges(
+        s"SELECT $cols FROM `bench`.`wire_read`", "id", 1)
+      assert(hs.head.isInstanceOf[graft.client.ResumableReplicaHandle])
+      val before = HttpClickHouseClient.binaryBatchesDecoded.get()
+      var n = 0L
+      val it = client.readPartitionColumnar(hs.head, schema)
+      while (it.hasNext) n += it.next().numRows()
+      val after = HttpClickHouseClient.binaryBatchesDecoded.get()
+      assert(n == 20000L)
+      assert(after > before, "16-col resumable read took the ROW fallback")
+    } finally mock.close()
+  }
+
   /* ==================== protocol verification ledger ====================
    *
    * Every wire behavior this client depends on, with its verification

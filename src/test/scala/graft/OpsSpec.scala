@@ -438,12 +438,18 @@ class OpsSpec extends AnyFunSuite {
 
     // keepPredicate is the keep stream's single-pass form (m04/m05 ride
     // it instead of a quarantine semi-join): the filtered id set must
-    // equal quarantine's status='keep' set on every reason class
-    val viaPredicate = media.filter(Multimodal.keepPredicate(
-      minBytes = 10, maxBytes = 50, magicOk = firstByte.between(65, 122)))
-      .select("media_id").collect().map(_.getLong(0)).toSet
-    val viaStatus = got.collect { case (id, (_, "keep")) => id }.toSet
-    assert(viaPredicate == viaStatus)
+    // equal quarantine's status='keep' set on every reason class — also
+    // at minBytes = 0, where only the "empty" arm drops row 2
+    for (minB <- Seq(10L, 0L); magic <- Seq(firstByte.between(65, 122), lit(true))) {
+      val viaPredicate = media.filter(Multimodal.keepPredicate(
+        minBytes = minB, maxBytes = 50, magicOk = magic))
+        .select("media_id").collect().map(_.getLong(0)).toSet
+      val viaStatus = Multimodal.quarantine(media, minBytes = minB,
+        maxBytes = 50, magicOk = magic)
+        .filter(col("status") === "keep").select("media_id")
+        .collect().map(_.getLong(0)).toSet
+      assert(viaPredicate == viaStatus, s"minBytes=$minB magic=$magic")
+    }
 
     // NULL-magic lockstep (r18, ADVICE): quarantine's when(!magicOk, ...)
     // arm SKIPS on NULL (falls through to keep), so keepPredicate must

@@ -195,6 +195,48 @@ class SessionSpec extends AnyFunSuite {
     }
   }
 
+  test("columns named qualify and totals read back through chSql; the " +
+    "WITH TOTALS modifier beside them still rewrites") {
+    val root = Files.createTempDirectory("graft_sess_kwcol_").toString
+    val ch = ClickHouseSession.builder(spark)
+      .storePath(root).catalogName("chkw").build()
+    ch.createDatabase("kw")
+    ch.newTable("kw", "t").column("k", "Int64").column("qualify", "Int64")
+      .column("totals", "Int64").engine("MergeTree").orderBy("k").create()
+    val sch = ch.client.asInstanceOf[graft.client.EmbeddedClickHouse]
+      .sparkSchema("kw", "t")
+    ch.client.insert("kw", "t", sch, Seq(
+      Row(1L, 10L, 100L), Row(2L, 20L, 200L), Row(2L, 30L, 300L)))
+    assert(ch.chSql("SELECT qualify FROM kw.t ORDER BY qualify").collect()
+      .map(_.getLong(0)).toSeq == Seq(10L, 20L, 30L))
+    assert(ch.chSql("SELECT totals FROM kw.t ORDER BY totals").collect()
+      .map(_.getLong(0)).toSeq == Seq(100L, 200L, 300L))
+    val grouped = ch.chSql("SELECT k, sum(totals) AS s FROM kw.t " +
+      "WHERE qualify > 10 GROUP BY k WITH TOTALS").collect()
+      .map(r => (Option(r.get(0)), r.getLong(1))).toSet
+    assert(grouped == Set(Some(2L) -> 500L, None -> 500L), grouped)
+  }
+
+  test("every session build on one SparkSession keeps the function " +
+    "builders the first build registered") {
+    val reg = spark.sessionState.functionRegistry
+    val names = Seq("clickhouse", "clickhouse_eval", "clickhouse_fn") ++
+      GraftSqlParser.ApplyAliases.toSeq.sorted
+    def builders() = names.map(n => reg.lookupFunctionBuilder(
+      org.apache.spark.sql.catalyst.FunctionIdentifier(n)).getOrElse(
+        fail(s"$n is not registered")))
+    ClickHouseSession.builder(spark).storePath(
+      Files.createTempDirectory("graft_sess_reg1_").toString)
+      .catalogName("chreg1").build()
+    val first = builders()
+    ClickHouseSession.builder(spark).storePath(
+      Files.createTempDirectory("graft_sess_reg2_").toString)
+      .catalogName("chreg2").build()
+    val second = builders()
+    names.indices.foreach(i =>
+      assert(first(i) eq second(i), s"${names(i)} was registered again"))
+  }
+
   test("chSql pins totals_mode='after_having_exclusive' on the SHIPPED " +
     "statement when TOTALS meets HAVING — the wire transport contract, " +
     "visible in the remote node's SQL on any transport") {

@@ -280,6 +280,12 @@ class TranslatorSpec extends AnyFunSuite {
     val e2 = intercept[IllegalArgumentException](
       t("SELECT k FROM db.tbl TOTALS"))
     assert(e2.getMessage.contains("TOTALS without WITH"), e2.getMessage)
+    // columns named totals and qualify are names beside the modifier
+    assert(t("SELECT totals FROM db.tbl") == "SELECT totals FROM __ch_db_tbl")
+    assert(t("SELECT k, sum(totals) AS s FROM db.tbl WHERE qualify > 1 " +
+      "GROUP BY k WITH TOTALS") ==
+      "SELECT k, sum(totals) AS s FROM __ch_db_tbl WHERE qualify > 1 " +
+        "GROUP BY GROUPING SETS ((k), ())")
   }
 
   test("WITH TOTALS + HAVING pins totals_mode = 'after_having_exclusive': " +

@@ -9,14 +9,14 @@ import scala.collection.concurrent.TrieMap
 
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 
-/** Minimal in-JVM ClickHouse HTTP emulator for client-level benchmarks
-  * and hermetic experiments — the analog of the reference shipping its
-  * `mocks` connection inside the main crate
-  * (/root/reference/src/connection.rs:1-37, connection/mock.rs).
+/** Minimal in-JVM ClickHouse HTTP emulator for hermetic client specs —
+  * the analog of the reference's `mocks` connection
+  * (src/connection.rs, connection/mock.rs), kept in test scope here so
+  * the connector jar holds only connector code.
   *
   * Surface: system.columns / system.tables metadata, CREATE/DROP TABLE,
   * and a `FORMAT RowBinary` INSERT sink that DECODES every row with the
-  * production codec and counts it, then discards — so a benchmark through
+  * production codec and counts it, then discards — so a client through
   * this server pays the full wire cost (client encode + HTTP + content-coding +
   * server decode) without storage noise. The richer query-capable mock
   * lives in HttpClientSpec; this one is deliberately write-path-only.
@@ -25,7 +25,6 @@ final class MockClickHouseHttp extends AutoCloseable {
 
   private val tables = TrieMap.empty[String, Seq[(String, String)]]
   val rowsReceived = new AtomicLong(0)
-  val bytesReceived = new AtomicLong(0)
 
   /** Every SQL statement this server saw, in arrival order — lets specs
     * assert WHERE a statement landed (e.g. mutations pin to the primary
@@ -36,14 +35,14 @@ final class MockClickHouseHttp extends AutoCloseable {
   /** Read-path envelope: when > 0, `bench.wire_read` exists with this
     * many synthetic rows, served as a STREAMED RowBinaryWithNamesAndTypes
     * response (chunked, codec-encoded per Accept-Encoding) — so a read
-    * benchmark pays the full wire cost (server encode + HTTP +
+    * pays the full wire cost (server encode + HTTP +
     * content-coding + client decode) without storage noise, the mirror
     * of the insert sink above.
     */
   @volatile var wireReadRows: Long = 0L
 
   /** Extra Float64 columns appended to `wire_read` (w0..wN-1): lets the
-    * read envelope measure WIDE atomic schemas, where vector decode's
+    * read path exercise WIDE atomic schemas, where vector decode's
     * per-column advantage over row decode actually shows.
     */
   @volatile var wireReadExtraCols: Int = 0
@@ -55,17 +54,8 @@ final class MockClickHouseHttp extends AutoCloseable {
     */
   @volatile var wireReadGroup: Int = 1
 
-  /** When true, `wire_read` carries a NESTED-COMPOSITE column
-    * `nest Array(Tuple(Int64, String))` — exercises the columnar read
-    * path's row-decode-then-pack fallback on array-of-struct schemas
-    * (the round-14 ColumnarPack extension).
-    */
-  @volatile var wireReadNested: Boolean = false
-
   private def wireReadCols: Seq[(String, String)] =
     Seq("id" -> "Int64", "v" -> "Float64", "tag" -> "String") ++
-      (if (wireReadNested) Seq("nest" -> "Array(Tuple(Int64, String))")
-       else Nil) ++
       (0 until wireReadExtraCols).map(i => s"w$i" -> "Float64")
 
   /** When true, `wire_read` DATA streams abort at the transport level
@@ -142,7 +132,6 @@ final class MockClickHouseHttp extends AutoCloseable {
         java.net.URLDecoder.decode(k, UTF_8) -> java.net.URLDecoder.decode(v, UTF_8)
       }.toMap
     val rawBody = ex.getRequestBody.readAllBytes()
-    bytesReceived.addAndGet(rawBody.length.toLong)
     val enc = Option(ex.getRequestHeaders.getFirst("Content-Encoding")).getOrElse("")
     val body =
       if (enc.nonEmpty) {
@@ -228,12 +217,6 @@ final class MockClickHouseHttp extends AutoCloseable {
         encs(1).write(out, java.lang.Double.valueOf(i * 0.5))
         encs(2).write(out, s"tag_${i % 1000}")
         var w = 3
-        if (wireReadNested) {
-          // two (Int64, String) tuples per row — enough structure to pay
-          // real nested decode cost, small enough to stay row-dominated
-          encs(3).write(out, Seq((i, s"e${i % 50}"), (i + 1, s"f${i % 50}")))
-          w = 4
-        }
         while (w < encs.length) {
           encs(w).write(out, java.lang.Double.valueOf(i * 0.25 + w))
           w += 1

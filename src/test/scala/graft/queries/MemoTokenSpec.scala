@@ -6,8 +6,9 @@ import java.nio.file.attribute.FileTime
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The round-13 memo law applied to the r17 corpus-constant memos
-  * (VERDICT r17 item 7): evMaxId / autoK key on
+/** The round-13 memo law applied to the corpus-derived memos
+  * (VERDICT r17 item 7): evMaxId, autoK and the ANN index and exact
+  * baseline memos key on
   * [[graft.Tables.dataToken]] — (file length, mtime) of the corpus
   * parquet — so an in-place corpus regeneration can never serve a stale
   * constant. The pin: a touched corpus file yields a NEW cache entry
@@ -81,5 +82,28 @@ class MemoTokenSpec extends AnyFunSuite {
     val k2 = SimilarityQueries.autoK(spark, dir)
     assert(entries == 2, "touched corpus must invalidate the memo key")
     assert(k1 == k2)
+  }
+
+  test("the IVF index, incremental index and exact-baseline memos rebuild " +
+    "after the embeddings corpus changes on disk") {
+    val dir = stageCorpus()
+    graft.Tables.register(spark, dir)
+    def entries(cache: scala.collection.Map[SimilarityQueries.CorpusKey, _]) =
+      cache.keys.count { case (s, d, _) => (s eq spark) && d == dir }
+    def counts = Seq(SimilarityQueries.ivfIndexCache,
+      SimilarityQueries.incIndexCache, SimilarityQueries.exactPairsCache)
+      .map(entries)
+    def runGates(): Seq[Seq[org.apache.spark.sql.Row]] =
+      Seq("s04_ann_ivf", "s09_ann_ivf_incremental").map(n =>
+        SimilarityQueries.all.find(_.name == n).get.run(spark, dir).collect().toSeq)
+    val r1 = runGates()
+    assert(counts == Seq(1, 1, 1))
+    runGates() // same token: memo hits
+    assert(counts == Seq(1, 1, 1))
+    Files.setLastModifiedTime(Paths.get(dir, "embeddings.parquet"),
+      FileTime.fromMillis(System.currentTimeMillis() + 5000))
+    val r2 = runGates() // new token: every memo rebuilds
+    assert(counts == Seq(2, 2, 2), "touched corpus must invalidate the memo keys")
+    assert(r1 == r2)
   }
 }

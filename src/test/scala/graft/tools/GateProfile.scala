@@ -12,7 +12,7 @@ import org.apache.spark.sql.SparkSession
   * is what tells a micro-batch-cadence-bound gate apart from a
   * shuffle-bound one before touching any code.
   *
-  * Usage: sbt "runMain graft.GateProfile <sfDir> <gateName> [iters]"
+  * Usage: sbt "Test/runMain graft.GateProfile <sfDir> <gateName> [iters]"
   */
 object GateProfile {
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 /** Dev tool: prints the physical plan of selected gate queries so the
   * shuffle/broadcast/pushdown shape can be audited (scale review).
-  * Usage: runMain graft.PlanAudit <sfDir> <queryName> [<queryName>...]
+  * Usage: sbt "Test/runMain graft.PlanAudit <sfDir> <queryName> [<queryName>...]"
   */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
