@@ -1033,7 +1033,7 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
       // store mutated since last query: keep the child session (UDFs and
       // unchanged views stay), drop only the prepared-statement cache —
       // stale views refresh lazily per referenced table (ensureViews)
-      if (cached.version != v) { cached.dfCache.clear(); cached.version = v }
+      if (cached.version != v) { cached.dropPrepared(); cached.version = v }
       return cached
     }
     val entry = new EmbeddedClickHouse.CachedServer(
@@ -1754,19 +1754,21 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
     * identical remote SQL (bench iterations, re-planned scans) skips
     * parse+analysis. Keyed inside the per-version entry, so any store
     * mutation drops it with the session. Bounded: runtime-filter
-    * literals make distinct SQL per execution, so the cache resets
-    * rather than growing without limit on long read-only sessions.
+    * literals make distinct SQL per execution, so the cache keeps the
+    * [[EmbeddedClickHouse.PreparedStatements]] most recently used
+    * statements rather than growing without limit on long read-only
+    * sessions.
     */
   private def resolveQueryDf(
       entry: EmbeddedClickHouse.CachedServer,
-      sql: String): org.apache.spark.sql.DataFrame = {
-    if (entry.dfCache.size > 64) entry.dfCache.clear()
-    entry.dfCache.computeIfAbsent(sql, _ => {
+      sql: String): org.apache.spark.sql.DataFrame =
+    entry.prepared(sql) { _ =>
       val tables = knownTables
       // keyed-collapse slice tokens are an HTTP-transport affordance
       // (per-slice hash-mod predicates inside the aggregation); the
-      // embedded transport executes the statement ONCE and repartitions,
-      // so the token is dropped before translation (leaving `WHERE true`)
+      // embedded transport executes the statement once and fans its
+      // result out on the spill write, so the token is dropped before
+      // translation (leaving `WHERE true`)
       val detokened0 = sql.replaceAll(raw"/\*__CH_SLICE__\([^)]*\)\*/", "")
       // ANY JOIN strictness: build side dedupes to a deterministic
       // one-row-per-key pick (needs schema, so it lives here, not in
@@ -1828,8 +1830,7 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
           starTransform(chosen, p, tables)
         case None => chosen
       }
-    })
-  }
+    }
 
   /** The `_part` virtual column: when a statement references it (word-
     * boundary, outside strings), every referenced store table swaps to
@@ -2185,9 +2186,24 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
   override def describeQuery(chSql: String): StructType =
     resolveQueryDf(serverEntry(), chSql).schema // analysis only, no execution
 
+  /** One execution per statement: the spill job runs over the
+    * statement's own cached `toRdd` (under AQE, building it runs the
+    * shuffle stages once; a warm statement re-runs only the final stage),
+    * and the stream fan-out happens on the spill write instead of through
+    * a sizing pass and a repartitioned re-run. An un-ordered result
+    * with fewer partitions than `numStreams` deals each partition's rows
+    * round-robin over its share of the stream files (stream j belongs to
+    * partition j % parts) and comes back as exactly `numStreams` handles,
+    * as a server fans even small results across max_threads streams.
+    * Otherwise partition i is stream file i (none if it is empty) and
+    * the handles are contiguous file groups: a TOP-LEVEL ORDER BY result
+    * keeps its range partitioning, so handle order replays the global
+    * order (a subquery-only ORDER BY orders nothing outside it). An empty
+    * result is one empty handle. Spill files are UnsafeRow bytes: no
+    * external-row conversion on either side of the "wire".
+    */
   override def planQuery(sql: String, numStreams: Int): (StructType, Seq[ChPartitionHandle]) = {
     val entry = serverEntry()
-    val spark = entry.session
     val df = resolveQueryDf(entry, sql)
     val schema = df.schema
     val spillRoot = Paths.get(root, ".spill")
@@ -2195,32 +2211,24 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
     val dir = spillRoot.resolve(java.util.UUID.randomUUID.toString)
     Files.createDirectories(dir)
     val dirStr = dir.toString
-    // honor the requested stream count for un-ordered results (a server
-    // fans even small results across max_threads streams); a TOP-LEVEL
-    // ORDER BY result keeps its range partitioning so global order
-    // survives (a subquery-only ORDER BY orders nothing outside it).
-    // toRdd = INTERNAL rows: spill is UnsafeRow bytes, no external-row
-    // conversion on either side of the "wire"
-    val source =
-      if (df.rdd.getNumPartitions < numStreams &&
-        !ChClauses(sql).branches.exists(_.has(ChClauses.OrderBy)))
-        df.repartition(numStreams)
-      else df
-    val internal = source.queryExecution.toRdd
+    val internal = EmbeddedClickHouse.perRunPlan(df).toRdd
+    val parts = internal.getNumPartitions
+    val fan = parts < numStreams &&
+      !ChClauses(sql).branches.exists(_.has(ChClauses.OrderBy))
+    val stream: Int => Path = j => Paths.get(dirStr, f"stream-$j%05d.rows")
     val files = internal.mapPartitionsWithIndex { (i, it) =>
-      if (it.isEmpty) Iterator.empty
-      else {
-        val f = Paths.get(dirStr, f"stream-$i%05d.rows")
-        RowSpill.write(f, schema, it)
-        Iterator.single(f.toString)
-      }
+      val own = if (fan) i until numStreams by parts else i to i
+      RowSpill.writeRoundRobin(own.map(stream), schema, it).iterator.map(_.toString)
     }.collect().toSeq.sorted
-    val n = math.max(1, math.min(numStreams, math.max(files.length, 1)))
     val groups =
       if (files.isEmpty) Seq(Seq.empty[String])
-      else {
-        val chunk = math.max(1, (files.length + n - 1) / n)
-        files.grouped(chunk).toSeq
+      else if (fan) {
+        // exactly numStreams handles; a stream no row landed in is empty
+        val written = files.toSet
+        (0 until numStreams).map(j => Seq(stream(j).toString).filter(written))
+      } else {
+        val streams = math.max(1, numStreams)
+        files.grouped((files.length + streams - 1) / streams).toSeq
       }
     (schema, groups.map(g => ChSpillHandle(g, schema.length, schema.json)))
   }
@@ -2301,11 +2309,18 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
 
   /** Spill dirs from finished queries are garbage once their readers are
     * done; reap anything older than [[EmbeddedClickHouse.SpillTtlMillis]]
-    * on the next plan (readers never outlive a query by that much).
+    * (readers never outlive a query by that much). The listing holds up
+    * to a TTL's worth of result dirs, so a plan reaps at most once per
+    * [[EmbeddedClickHouse.SpillReapIntervalMillis]] per store root; the
+    * first plan of a JVM always reaps.
     */
-  private def cleanStaleSpills(spillRoot: Path): Unit =
-    if (Files.isDirectory(spillRoot)) {
-      val cutoff = System.currentTimeMillis() - EmbeddedClickHouse.SpillTtlMillis
+  private def cleanStaleSpills(spillRoot: Path): Unit = {
+    val last = EmbeddedClickHouse.lastSpillReap(root)
+    val prev = last.get
+    val now = System.currentTimeMillis()
+    if (now - prev >= EmbeddedClickHouse.SpillReapIntervalMillis &&
+      last.compareAndSet(prev, now) && Files.isDirectory(spillRoot)) {
+      val cutoff = now - EmbeddedClickHouse.SpillTtlMillis
       NioFiles.list(spillRoot).iterator
         .filter { p =>
           try Files.getLastModifiedTime(p).toMillis < cutoff
@@ -2315,6 +2330,7 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
           try deleteRecursively(p) catch { case _: Exception => () }
         }
     }
+  }
 
   private def knownTables: Seq[(String, String)] =
     for (db <- listDatabases(); t <- listTables(db)) yield (db, t)
@@ -2681,6 +2697,33 @@ final case class ChSpillHandle(files: Seq[String], numFields: Int, schemaJson: S
 object EmbeddedClickHouse {
   private[client] val SpillTtlMillis: Long = 30L * 60 * 1000
 
+  /** The QueryExecution a [[EmbeddedClickHouse.planQuery]] runs: the
+    * prepared statement's own, cached with it, unless the statement
+    * reads the clock. The optimizer folds now() / today() into the plan
+    * (ComputeCurrentTime), so a cached plan would replay its first run's
+    * time; such a statement gets a fresh QueryExecution per run.
+    */
+  private[client] def perRunPlan(
+      df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.execution.QueryExecution = {
+    val qe = df.queryExecution
+    val readsClock = qe.analyzed.collectWithSubqueries {
+      case p if p.containsPattern(org.apache.spark.sql.catalyst.trees.TreePattern.CURRENT_LIKE) => p
+    }.nonEmpty
+    if (readsClock) df.sparkSession.sessionState.executePlan(qe.analyzed) else qe
+  }
+
+  /** Spill-dir reaps run at most this often per store root. */
+  private[client] val SpillReapIntervalMillis: Long = 60L * 1000
+
+  private val spillReaps =
+    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]
+
+  /** Wall-clock millis of the store root's last spill reap (0 = never). */
+  private[client] def lastSpillReap(root: String): java.util.concurrent.atomic.AtomicLong =
+    spillReaps.computeIfAbsent(
+      Paths.get(root).toAbsolutePath.toString,
+      _ => new java.util.concurrent.atomic.AtomicLong(0L))
+
   /** Strips one Nullable(...) wrapper for declared-type inspection. */
   private[client] val NullableRe = raw"^Nullable\((.+)\)$$".r
 
@@ -2764,7 +2807,43 @@ object EmbeddedClickHouse {
       // views refresh LAZILY, one table at a time, only when a query
       // references them at a newer version — a real server never re-reads
       // its whole catalog because one table got an insert
-      val viewVersions: java.util.concurrent.ConcurrentHashMap[(String, String), java.lang.Long])
+      val viewVersions: java.util.concurrent.ConcurrentHashMap[(String, String), java.lang.Long]) {
+
+    // recency of the dfCache keys, eldest first; guarded by itself
+    private val recency = new java.util.LinkedHashMap[String, Unit](16, 0.75f, true)
+
+    /** The prepared statement for `sql`, resolved at most once per key
+      * (computeIfAbsent) and kept among the [[PreparedStatements]] most
+      * recently used: an entry enters `recency` only after it is in
+      * `dfCache`, and leaves both together, so eviction never drops a
+      * statement that is being resolved.
+      */
+    def prepared(sql: String)(resolve: String => org.apache.spark.sql.DataFrame)
+        : org.apache.spark.sql.DataFrame = {
+      val df = dfCache.computeIfAbsent(sql, k => resolve(k))
+      recency.synchronized {
+        recency.put(sql, ())
+        if (recency.size > PreparedStatements) {
+          val eldest = recency.keySet.iterator.next()
+          recency.remove(eldest)
+          dfCache.remove(eldest)
+        }
+      }
+      df
+    }
+
+    /** Drop every prepared statement (the store version moved). */
+    def dropPrepared(): Unit = recency.synchronized {
+      recency.clear()
+      dfCache.clear()
+    }
+  }
+
+  /** Prepared-statement cache bound per store root: the connector's plan
+    * memo and bench iterations re-send a few texts, while runtime-filter
+    * and ad-hoc literals make the rest single-use.
+    */
+  private[client] val PreparedStatements = 64
 
   private[client] val sessionCache =
     new java.util.concurrent.ConcurrentHashMap[String, CachedServer]

@@ -26,25 +26,52 @@ object RowSpill {
     * needed) to `path`; returns the row count.
     */
   def write(path: Path, schema: StructType, rows: Iterator[InternalRow]): Long = {
-    val out = new DataOutputStream(
-      new BufferedOutputStream(Files.newOutputStream(path), 1 << 16))
-    // rows from a codegen pipeline are UnsafeRow already; anything else
-    // (e.g. a LocalTableScan) converts once here
-    lazy val toUnsafe = UnsafeProjection.create(schema)
+    val out = open(path)
+    val toUnsafe = new ToUnsafe(schema)
     var n = 0L
-    try {
-      rows.foreach { r =>
-        val u = r match {
-          case u: UnsafeRow => u
-          case other => toUnsafe(other)
-        }
-        val bytes = u.getBytes
-        out.writeInt(bytes.length)
-        out.write(bytes)
-        n += 1
-      }
-    } finally out.close()
+    try rows.foreach { r => put(out, toUnsafe(r)); n += 1 }
+    finally out.close()
     n
+  }
+
+  /** Deal `rows` round-robin across `paths`: row k goes to
+    * `paths(k % paths.length)`. A file is created on its first row, so
+    * fewer rows than paths leave the tail unwritten; returns the paths
+    * that were written, in `paths` order.
+    */
+  def writeRoundRobin(
+      paths: IndexedSeq[Path],
+      schema: StructType,
+      rows: Iterator[InternalRow]): IndexedSeq[Path] = {
+    val outs = new Array[DataOutputStream](paths.length)
+    val toUnsafe = new ToUnsafe(schema)
+    var k = 0
+    try rows.foreach { r =>
+      if (outs(k) == null) outs(k) = open(paths(k))
+      put(outs(k), toUnsafe(r))
+      k = if (k + 1 == outs.length) 0 else k + 1
+    } finally outs.foreach(o => if (o != null) o.close())
+    paths.indices.filter(outs(_) != null).map(paths)
+  }
+
+  private def open(path: Path): DataOutputStream =
+    new DataOutputStream(new BufferedOutputStream(Files.newOutputStream(path), 1 << 16))
+
+  private def put(out: DataOutputStream, u: UnsafeRow): Unit = {
+    val bytes = u.getBytes
+    out.writeInt(bytes.length)
+    out.write(bytes)
+  }
+
+  /** Rows from a codegen pipeline are UnsafeRow already; anything else
+    * (e.g. a LocalTableScan) converts once here.
+    */
+  private final class ToUnsafe(schema: StructType) extends (InternalRow => UnsafeRow) {
+    private lazy val projection = UnsafeProjection.create(schema)
+    def apply(r: InternalRow): UnsafeRow = r match {
+      case u: UnsafeRow => u
+      case other => projection(other)
+    }
   }
 
   /** Lazily stream UnsafeRows back from `path` (opens on first hasNext).

@@ -265,9 +265,9 @@ object ConnectorQueries {
     * and the memo recomputes instead of serving a stale constant.
     */
   private[queries] val evMaxIdCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, (Long, Long)), Long]
+    scala.collection.concurrent.TrieMap.empty[CorpusMemo.Key, Long]
   private[queries] def evMaxId(s: SparkSession, dir: String): Long =
-    evMaxIdCache.getOrElseUpdate((s, dir, graft.Tables.dataToken(dir, "events")),
+    CorpusMemo(evMaxIdCache, (s, dir, graft.Tables.dataToken(dir, "events")))(
       s.table("events").agg(max("event_id")).head().getLong(0))
 
   /** Shared append-only source table for the r27/r45 streaming-dedup

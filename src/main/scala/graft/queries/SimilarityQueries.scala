@@ -43,16 +43,19 @@ object SimilarityQueries {
     s.table("embeddings").repartition(s.sparkContext.defaultParallelism)
 
   /** Corpus-derived memos key on (session, dir, embeddings data token)
-    * — the round-13 memo law: a regenerated embeddings.parquet changes
-    * [[graft.Tables.dataToken]], so the memo rebuilds instead of serving
-    * an index or baseline of the old corpus.
+    * through [[CorpusMemo]]: a regenerated embeddings.parquet rebuilds
+    * the memo instead of serving an index or baseline of the old corpus,
+    * and drops (and unpersists) the old corpus's entry.
     */
-  private[queries] type CorpusKey = (SparkSession, String, (Long, Long))
+  private[queries] type CorpusKey = CorpusMemo.Key
   private def corpusKey(s: SparkSession, dir: String): CorpusKey =
     (s, dir, Tables.dataToken(dir, "embeddings"))
 
   private[queries] val ivfIndexCache =
     scala.collection.concurrent.TrieMap.empty[CorpusKey, graft.ops.AnnIvf.IvfIndex]
+
+  /** A dropped index memo frees its cached cell assignment. */
+  private def unpersistIndex(i: graft.ops.AnnIvf.IvfIndex): Unit = i.assigned.unpersist()
 
   /** auto-k for the sf corpus, memoized per corpus key: gates that need
     * the auto-scaled k on EVERY invocation (r68/r69 probe paths — nprobe
@@ -63,7 +66,7 @@ object SimilarityQueries {
   private[queries] val autoKCache =
     scala.collection.concurrent.TrieMap.empty[CorpusKey, Int]
   private[queries] def autoK(s: SparkSession, dir: String): Int =
-    autoKCache.getOrElseUpdate(corpusKey(s, dir),
+    CorpusMemo(autoKCache, corpusKey(s, dir))(
       graft.ops.AnnIvf.autoCells(corpus(s).count()))
 
   /** s09's half-built + incrementally-grown index (build-once like s04's). */
@@ -119,7 +122,7 @@ object SimilarityQueries {
   /** recall@5 of `ann` vs the exact baseline → one threshold row. */
   private def recallGate(s: SparkSession, dir: String, ann: DataFrame): DataFrame = {
     import s.implicits._
-    val exact = exactPairsCache.getOrElseUpdate(corpusKey(s, dir),
+    val exact = CorpusMemo(exactPairsCache, corpusKey(s, dir))(
       exactTop5(s).collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
     val annPairs = ann.select("probe_id", "neighbor_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -272,7 +275,7 @@ object SimilarityQueries {
         // nprobe = ceil(0.75 k): RecallProbe sweep holds recall@5 = 0.964
         // at every driver scale (near-uniform corpus, the hardest case;
         // real near-dup corpora clear 0.90 at far leaner fractions).
-        val index = ivfIndexCache.getOrElseUpdate(corpusKey(s, dir),
+        val index = CorpusMemo(ivfIndexCache, corpusKey(s, dir), unpersistIndex)(
           graft.ops.AnnIvf.buildIndex(
             corpus(s), "vec_id", "embedding",
             trainSampleFraction = 0.5, maxIter = 10))
@@ -755,7 +758,7 @@ object SimilarityQueries {
         Tables.register(s, dir)
         val base = corpus(s).filter(col("vec_id") % 2 === 0)
         val grown = s.table("embeddings").filter(col("vec_id") % 2 === 1)
-        val index = incIndexCache.getOrElseUpdate(corpusKey(s, dir), {
+        val index = CorpusMemo(incIndexCache, corpusKey(s, dir), unpersistIndex) {
           val built = graft.ops.AnnIvf.buildIndex(
             base, "vec_id", "embedding",
             trainSampleFraction = 0.5, maxIter = 10)
@@ -766,16 +769,20 @@ object SimilarityQueries {
           val allCells = graft.ops.AnnIvf
             .cellsTable(built, "vec_id", "embedding")
             .unionByName(appended)
-            .cache() // the index IS this assignment; probes reuse it
           // staleness contract holds at this growth: no retrain due
           require(!graft.ops.AnnIvf.needsRetrain(
             built.centers.length.toLong, base.count() * 2),
             "2x growth must stay under the retrain threshold")
-          graft.ops.AnnIvf.fromTables(
+          val grownIndex = graft.ops.AnnIvf.fromTables(
             allCells,
             graft.ops.AnnIvf.centroidsTable(built, s),
             "vec_id", "embedding")
-        })
+          // the index IS this assignment; probes reuse it. It supersedes
+          // the half-built index's cached assignment, which goes before
+          // either is materialized, so only one copy is ever held
+          built.assigned.unpersist()
+          grownIndex.copy(assigned = grownIndex.assigned.cache())
+        }
         val probes = s.table("embeddings").filter(col("vec_id") < 100)
         val ann = graft.ops.AnnIvf.annTopK(index, probes, "vec_id", "embedding",
           k = 5, nprobe = math.ceil(0.75 * index.centers.length).toInt)

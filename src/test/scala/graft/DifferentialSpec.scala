@@ -1383,7 +1383,7 @@ class DifferentialSpec extends AnyFunSuite {
   }
 
   test("round-14 function wave: hand-pinned server values at the " +
-    "boundary cases (FnSurfaceProbe mappings)") {
+    "boundary cases (FnSurfaceSpec mappings)") {
     val tag = sfDir.replaceAll("[^a-zA-Z0-9]", "_")
     val ch = graft.session.ClickHouseSession.builder(spark)
       .storePath(s"/root/repo/target/chstore_$tag")

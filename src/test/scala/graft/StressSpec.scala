@@ -94,6 +94,51 @@ class StressSpec extends AnyFunSuite {
       "top-level ORDER BY must survive the stream split")
   }
 
+  test("stream fan: an un-ordered result with fewer partitions than streams " +
+    "comes back as exactly numStreams handles holding the exact rows; an " +
+    "empty result is one empty handle") {
+    spark // session up
+    val client = new EmbeddedClickHouse(root)
+    client.createTable("db", "fan3",
+      Seq("id" -> "Int64"), Map("engine" -> "MergeTree"))
+    val schema = client.sparkSchema("db", "fan3")
+    // three inserts = three part files = a three-partition scan
+    (0 until 3).foreach(b =>
+      client.insert("db", "fan3", schema, (1L to 700L).map(i => Row(b * 700L + i))))
+    def multiset(rs: Seq[Row]) = rs.map(_.toSeq).groupBy(identity).map {
+      case (r, same) => r -> same.size
+    }
+    def rows(hs: Seq[graft.client.ChPartitionHandle]) =
+      multiset(hs.flatMap(h => client.readPartition(h)))
+    def expected(sql: String) = multiset(spark.sql(sql).collect().toSeq)
+    // a one-partition GROUP BY with fewer groups than streams: every
+    // stream still gets a handle, and no row is lost or repeated
+    val (_, few) = client.planQuery(
+      "SELECT `id` % 3 AS `g`, count(*) AS `c` FROM `db`.`fan3` GROUP BY `g`", 4)
+    assert(few.size == 4, s"${few.size} handle(s)")
+    assert(rows(few) == expected(
+      "SELECT id % 3 AS g, count(*) AS c FROM range(1, 2101) GROUP BY g"))
+    val (_, many) = client.planQuery(
+      "SELECT `id` % 97 AS `g`, sum(`id`) AS `s` FROM `db`.`fan3` GROUP BY `g`", 4)
+    assert(many.size == 4, s"${many.size} handle(s)")
+    assert(many.forall(h => client.readPartition(h).nonEmpty))
+    assert(rows(many) == expected(
+      "SELECT id % 97 AS g, sum(id) AS s FROM range(1, 2101) GROUP BY g"))
+    // three partitions over four streams: four handles, not three groups
+    val (_, scan) = client.planQuery(
+      "SELECT `id` FROM `db`.`fan3` WHERE `id` % 2 = 0", 4)
+    assert(scan.size == 4, s"${scan.size} handle(s)")
+    assert(rows(scan) == expected("SELECT id FROM range(1, 2101) WHERE id % 2 = 0"))
+    // a top-level ORDER BY still replays the global order in handle order
+    val (_, ordered) = client.planQuery(
+      "SELECT `id` FROM `db`.`fan3` WHERE `id` % 2 = 1 ORDER BY `id` DESC", 4)
+    assert(ordered.flatMap(h => client.readPartition(h)).map(_.getLong(0)) ==
+      (1L to 2100L).filter(_ % 2 == 1).reverse)
+    val (_, empty) = client.planQuery(
+      "SELECT `id` FROM `db`.`fan3` WHERE `id` < 0", 4)
+    assert(empty.size == 1 && client.readPartition(empty.head).isEmpty)
+  }
+
   test("over-subscription: 24 concurrent scans on a 2-stream catalog all " +
     "complete with identical results") {
     val client = new EmbeddedClickHouse(root)

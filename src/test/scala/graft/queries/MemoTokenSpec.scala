@@ -12,7 +12,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * [[graft.Tables.dataToken]] — (file length, mtime) of the corpus
   * parquet — so an in-place corpus regeneration can never serve a stale
   * constant. The pin: a touched corpus file yields a NEW cache entry
-  * (the memo recomputed) instead of a hit on the old key.
+  * (the memo recomputed) instead of a hit on the old key, and the entry
+  * of the old token goes (an index memo unpersists its cached frame), so
+  * each memo holds one entry per (session, dir).
   */
 class MemoTokenSpec extends AnyFunSuite {
 
@@ -64,7 +66,10 @@ class MemoTokenSpec extends AnyFunSuite {
     Files.setLastModifiedTime(Paths.get(dir, "events.parquet"),
       FileTime.fromMillis(System.currentTimeMillis() + 5000))
     val v2 = ConnectorQueries.evMaxId(spark, dir) // new token: recompute
-    assert(entries == 2, "touched corpus must invalidate the memo key")
+    assert(entries == 1, "the old token's entry must go")
+    assert(ConnectorQueries.evMaxIdCache.keys.exists { case (s, d, t) =>
+      (s eq spark) && d == dir && t == graft.Tables.dataToken(dir, "events")
+    }, "touched corpus must invalidate the memo key")
     assert(v1 == v2) // content unchanged, so the recomputed value agrees
   }
 
@@ -80,7 +85,10 @@ class MemoTokenSpec extends AnyFunSuite {
     Files.setLastModifiedTime(Paths.get(dir, "embeddings.parquet"),
       FileTime.fromMillis(System.currentTimeMillis() + 5000))
     val k2 = SimilarityQueries.autoK(spark, dir)
-    assert(entries == 2, "touched corpus must invalidate the memo key")
+    assert(entries == 1, "the old token's entry must go")
+    assert(SimilarityQueries.autoKCache.keys.exists { case (s, d, t) =>
+      (s eq spark) && d == dir && t == graft.Tables.dataToken(dir, "embeddings")
+    }, "touched corpus must invalidate the memo key")
     assert(k1 == k2)
   }
 
@@ -100,10 +108,22 @@ class MemoTokenSpec extends AnyFunSuite {
     assert(counts == Seq(1, 1, 1))
     runGates() // same token: memo hits
     assert(counts == Seq(1, 1, 1))
+    def indexes = Seq(SimilarityQueries.ivfIndexCache, SimilarityQueries.incIndexCache)
+      .map(_.collect { case ((s, d, _), i) if (s eq spark) && d == dir => i }.head)
+    val old = indexes
+    assert(old.forall(_.assigned.storageLevel.useMemory))
     Files.setLastModifiedTime(Paths.get(dir, "embeddings.parquet"),
       FileTime.fromMillis(System.currentTimeMillis() + 5000))
     val r2 = runGates() // new token: every memo rebuilds
-    assert(counts == Seq(2, 2, 2), "touched corpus must invalidate the memo keys")
+    assert(counts == Seq(1, 1, 1), "the old token's entries must go")
+    val token = graft.Tables.dataToken(dir, "embeddings")
+    assert(Seq(SimilarityQueries.ivfIndexCache, SimilarityQueries.incIndexCache,
+      SimilarityQueries.exactPairsCache).forall(_.keys.exists { case (s, d, t) =>
+        (s eq spark) && d == dir && t == token
+      }), "touched corpus must invalidate the memo keys")
+    assert(indexes.zip(old).forall { case (now, was) => now ne was })
+    assert(old.forall(_.assigned.storageLevel == org.apache.spark.storage.StorageLevel.NONE),
+      "a dropped index memo must unpersist its cell assignment")
     assert(r1 == r2)
   }
 }
