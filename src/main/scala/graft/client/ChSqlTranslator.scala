@@ -597,9 +597,7 @@ object ChSqlTranslator {
     // quote-awareness rule the GLOBAL strip learned this round)
     s = mapOutsideStrings(s) { seg =>
       tables.foldLeft(seg) { case (acc, (db, t)) =>
-        acc.replace(s"`$db`.`$t`", viewName(db, t))
-          .replaceAll(s"(?<![`\\w])${java.util.regex.Pattern.quote(db)}\\.$t(?![`\\w])",
-            viewName(db, t))
+        tableRef(db, t).replaceAllIn(acc, viewName(db, t))
       }
     }
     // ClickHouse treats NULL as the LARGEST value in sorts (ASC → nulls
@@ -608,6 +606,23 @@ object ChSqlTranslator {
     // default made explicit, so embedded orderings match a real server.
     s = injectNullOrder(s)
     stripOffsetFrames(translateCalls(s))
+  }
+
+  /** A reference to store table `db`.`t`: the backticked form, or the
+    * bare `db.t` not inside a longer name.
+    */
+  private def tableRef(db: String, t: String): scala.util.matching.Regex = {
+    import java.util.regex.Pattern.quote
+    (quote(s"`$db`.`$t`") + s"|(?<![`\\w])${quote(db)}\\.${quote(t)}(?![`\\w])").r
+  }
+
+  /** The store tables `chSql` reads: the ones [[translate]] maps to their
+    * views, found by the same reference rule, outside string literals.
+    */
+  def tablesIn(chSql: String, tables: Seq[(String, String)]): Seq[(String, String)] = {
+    val code = new StringBuilder
+    mapOutsideStrings(chSql) { seg => code.append(seg).append(' '); seg }
+    tables.filter { case (db, t) => tableRef(db, t).findFirstIn(code).isDefined }
   }
 
   /** The call walk: every call site outside literals — a word or a
@@ -1260,6 +1275,8 @@ object ChSqlTranslator {
         s"position takes 2 or 3 arguments (got $n)")
     })
     // countDistinct(x...) → count(DISTINCT x...)
+    // zero-argument count() is ClickHouse's row count; Spark needs count(*)
+    rule("count", args => s"count(${if (args.isEmpty) "*" else args.mkString(", ")})")
     rule("countDistinct", args => s"count(DISTINCT ${args.mkString(", ")})")
     // positiveModulo → pmod
     rule("positiveModulo", args => s"pmod(${args.mkString(", ")})")

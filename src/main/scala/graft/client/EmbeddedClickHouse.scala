@@ -200,15 +200,10 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
     import org.apache.spark.sql.Column
     import org.apache.spark.sql.functions.col
 
-    val entry = serverEntry()
-    val spark = entry.session
-    val tables = knownTables
-    // the one SQL round-trip: a plain SELECT * so the translator only
-    // rewrites the table name — every column transform below is built
-    // from typed Column objects (no SQL casts to mis-translate)
-    val baseSql = ChSqlTranslator.translate(s"SELECT * FROM $qt", tables)
-    ensureViews(entry, baseSql, tables)
-    val base = spark.sql(baseSql)
+    // the one SQL round-trip: a plain SELECT * — every column transform
+    // below is built from typed Column objects (no SQL casts to
+    // mis-translate)
+    val base = resolveStatement(serverEntry(), s"SELECT * FROM $qt")
 
     // fold ops over (name, chType, column-over-OLD-table); every op
     // validates against the state at ITS point in the sequence, like the
@@ -417,14 +412,10 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
     // survivor (a server purges it only under OPTIMIZE ... FINAL
     // CLEANUP); only FINAL READS filter tombstones
     val src =
-      if ((finalize && replacing) || summing)
-        rewriteStorage(s"SELECT * FROM $qt FINAL", keepTombstones = true)
+      if ((finalize && replacing) || summing) s"SELECT * FROM $qt FINAL"
       else s"SELECT * FROM $qt"
-    val entry = serverEntry()
-    val tables = knownTables
-    val tr = ChSqlTranslator.translate(src, tables)
-    ensureViews(entry, tr, tables)
-    val merged = opts.get("ttl").foldLeft(entry.session.sql(tr)) { (df, e) =>
+    val base = resolveStatement(serverEntry(), src, keepTombstones = true)
+    val merged = opts.get("ttl").foldLeft(base) { (df, e) =>
       val te = ChSqlTranslator.translate(e, Seq.empty)
       df.where(s"NOT coalesce(($te) <= now(), false)")
     }
@@ -495,12 +486,8 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
       s"OPTIMIZE DEDUPLICATE $db.$table: table has attached external data")
     byColumns.foreach(c => require(cols.exists(_._1 == c),
       s"OPTIMIZE DEDUPLICATE $db.$table: no such column '$c'"))
-    val entry = serverEntry()
-    val tables = knownTables
-    val tr = ChSqlTranslator.translate(
-      s"SELECT * FROM ${graft.sql.ChSql.quoteTable(db, table)}", tables)
-    ensureViews(entry, tr, tables)
-    val df = entry.session.sql(tr)
+    val df = resolveStatement(serverEntry(),
+      s"SELECT * FROM ${graft.sql.ChSql.quoteTable(db, table)}")
     val merged =
       if (byColumns.isEmpty) df.distinct()
       else {
@@ -810,10 +797,8 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
     // the trigger needs ONE unambiguous source; the server fires multi-
     // table selects only on the left-most table (a documented footgun) —
     // honored-or-rejected, we require a single-table select instead
-    val tables = knownTables.filterNot(t => isSystem(t._1))
-    val tr = ChSqlTranslator.translate(chSelectSql, tables)
-    val referenced = tables.filter { case (d, t) =>
-      EmbeddedClickHouse.referencesView(tr, ChSqlTranslator.viewName(d, t)) }
+    val referenced =
+      ChSqlTranslator.tablesIn(chSelectSql, knownTables.filterNot(t => isSystem(t._1)))
     require(referenced.size == 1,
       s"CREATE MATERIALIZED VIEW $db.$name: the select must read exactly " +
         s"one source table (found ${referenced.size}: " +
@@ -835,29 +820,15 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
     require(!reaches(targetDb, targetTable, Set.empty),
       s"CREATE MATERIALIZED VIEW $db.$name: cyclic view chain — inserts " +
         s"into $targetDb.$targetTable feed back into $srcDb.$srcTable")
-    // the transform must resolve and insert cleanly into the target
-    val entry = serverEntry()
-    ensureViews(entry, tr, tables)
+    // the transform must resolve as it fires — over one block of the
+    // source, here an empty one — and insert cleanly into the target
     val out =
-      try entry.session.sql(tr).schema
+      try resolveStatement(serverEntry(), chSelectSql,
+        block = Some(((srcDb, srcTable), Nil))).schema
       catch { case e: Exception => throw new IllegalArgumentException(
         s"CREATE MATERIALIZED VIEW $db.$name: select does not resolve: " +
           e.getMessage, e) }
-    val sink = sparkSchema(targetDb, targetTable)
-    val byName = out.fields.map(f => f.name -> f).toMap
-    // nullability-insensitive fit: NULLs are guarded at insert time (the
-    // runtime non-Nullable guard), and aggregate state structs carry
-    // per-expression nullability the declared storage type cannot mirror
-    val errs = sink.fields.flatMap { sf =>
-      byName.get(sf.name) match {
-        case None => Some(s"missing column '${sf.name}'")
-        case Some(f) if ClickHouseType.ignoreNullability(f.dataType) !=
-            ClickHouseType.ignoreNullability(sf.dataType) =>
-          Some(s"'${sf.name}' type mismatch: ${f.dataType.sql} vs ${sf.dataType.sql}")
-        case _ => None
-      }
-    } ++ out.fieldNames.filterNot(sink.fieldNames.contains)
-      .map(n => s"unexpected column '$n'")
+    val errs = fitErrors(out, sparkSchema(targetDb, targetTable))
     require(errs.isEmpty,
       s"CREATE MATERIALIZED VIEW $db.$name: select does not fit target " +
         s"$targetDb.$targetTable: ${errs.mkString("; ")}")
@@ -902,33 +873,14 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
       s"materialized view cascade loops through $key")
     EmbeddedClickHouse.firingMvs.set(firing + key)
     try mvs.foreach { m =>
-      val entry = serverEntry()
-      val tables = knownTables
-      val tr = ChSqlTranslator.translate(m.select, tables)
-      val srcView = ChSqlTranslator.viewName(db, table)
-      val blockView = s"__ch_block_${java.util.UUID.randomUUID.toString.replace("-", "")}"
-      entry.session.read.schema(sparkSchema(db, table))
-        .parquet(newFiles.map(_.toString): _*)
-        .createOrReplaceTempView(blockView)
-      try {
-        // bind every source reference to the block: during the trigger
-        // the source IS the inserted block (server semantics)
-        val blockSql = tr.replace(srcView, blockView)
-        ensureViews(entry, blockSql, tables)
-        val sink = sparkSchema(m.targetDb, m.targetTable)
-        val projected = entry.session.sql(blockSql)
-          .select(sink.fieldNames.map(org.apache.spark.sql.functions.col).toSeq: _*)
-        val stagingId = s"mv-${java.util.UUID.randomUUID}"
-        val dir = stagingPath(m.targetDb, m.targetTable, stagingId)
-        Files.createDirectories(dir.getParent)
-        try {
-          projected.write.parquet(dir.toString)
-          commitStaged(m.targetDb, m.targetTable, stagingId)
-          MvRefresh.pending.add((connectionKey, m.targetDb, m.targetTable))
-        } catch { case e: Throwable =>
-          abortStaged(m.targetDb, m.targetTable, stagingId); throw e
-        }
-      } finally entry.session.catalog.dropTempView(blockView)
+      // during the trigger the source IS the inserted block (server
+      // semantics)
+      val sink = sparkSchema(m.targetDb, m.targetTable)
+      val out = resolveStatement(serverEntry(), m.select,
+        block = Some(((db, table), newFiles)))
+        .select(sink.fieldNames.map(org.apache.spark.sql.functions.col).toSeq: _*)
+      publishStaged(m.targetDb, m.targetTable, "mv", out, fire = true)(_ => ())
+      MvRefresh.pending.add((connectionKey, m.targetDb, m.targetTable))
     } finally EmbeddedClickHouse.firingMvs.set(firing)
   }
 
@@ -1054,25 +1006,25 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
       tables: Seq[(String, String)]): Unit = {
     val v = entry.version
     tables.foreach { case (db, t) =>
-      if (EmbeddedClickHouse.referencesView(
-        translatedSql, ChSqlTranslator.viewName(db, t))) {
-        val reg = entry.viewVersions.get((db, t))
-        if (reg == null || reg.longValue != v) {
-          registerView(entry.session, db, t)
-          entry.viewVersions.put((db, t), java.lang.Long.valueOf(v))
-        }
-      }
+      if (EmbeddedClickHouse.referencesView(translatedSql, ChSqlTranslator.viewName(db, t)))
+        refreshView(entry, (db, t), v)(registerView(entry.session, db, t))
       // sequence-bearing view (order-dependent collapses): registered
       // only when a rewrite referenced it, versioned like any view
-      if (EmbeddedClickHouse.referencesView(
-        translatedSql, EmbeddedClickHouse.seqViewName(db, t))) {
-        val key = (db, t + " seq")
-        val reg = entry.viewVersions.get(key)
-        if (reg == null || reg.longValue != v) {
-          registerSeqView(entry.session, db, t)
-          entry.viewVersions.put(key, java.lang.Long.valueOf(v))
-        }
-      }
+      if (EmbeddedClickHouse.referencesView(translatedSql, EmbeddedClickHouse.seqViewName(db, t)))
+        refreshView(entry, (db, t + " seq"), v)(registerSeqView(entry.session, db, t))
+    }
+  }
+
+  /** Run `register` unless the view under `key` is registered at store
+    * version `v`.
+    */
+  private def refreshView(
+      entry: EmbeddedClickHouse.CachedServer, key: (String, String), v: Long)(
+      register: => Unit): Unit = {
+    val reg = entry.viewVersions.get(key)
+    if (reg == null || reg.longValue != v) {
+      register
+      entry.viewVersions.put(key, java.lang.Long.valueOf(v))
     }
   }
 
@@ -1488,34 +1440,13 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
     child
   }
 
-  /** "Remote" query execution without driver materialization: the
-    * translated SQL runs on the server session, but each EXECUTOR task
-    * spills its own result partition to a stream file under
-    * `<root>/.spill/<query-uuid>/` — only (path, count) metadata returns
-    * to the driver. Handles are contiguous file groups, so a pushed
-    * ORDER BY's global order survives (partition i of a sorted result
-    * precedes partition i+1, and files sort by zero-padded index).
-    * A wire client would return shard cursor ids here instead.
-    */
-  /** `FROM db.t SAMPLE f [OFFSET o]` — the embedded model of the
-    * server's storage-level sampling clause. Semantics (deterministic,
-    * engine-reproducible): keep the rows whose unit-interval hash of the
-    * table's DECLARED sampling key falls in [o, o+f) wrapping at 1,
-    * where the hash is the repo's standard cheap rehash
-    * (first-8-hex-of-md5 as integer, mod 1e6). Rewritten before
-    * translation to a source subquery filtered on that range; a table
-    * without a declared `sampling` key rejects the clause, like the
-    * server.
-    */
-  /** `FROM db.t FINAL` — dedup-on-read for ReplacingMergeTree tables.
-    * The embedded model keeps, per ORDER BY key, the row with the MAX
-    * declared version column (`ReplacingMergeTree(ver)`), which is the
-    * server's documented survivor rule when a version column exists.
-    * Engines without a version column are rejected: their tiebreak is
-    * part-insertion order, which this store cannot reproduce
-    * deterministically — failing loudly beats a wrong dedup. (Rows tying
-    * on (key, ver) have no deterministic survivor on the server either;
-    * callers wanting hash-stable FINAL reads keep (key, ver) unique.)
+  /** `FROM db.t FINAL`: the table's merged state on read, per engine —
+    * Replacing keeps the max-version row per ORDER BY key (dropping
+    * is_deleted survivors unless `keepTombstones`), Summing and
+    * Aggregating combine each key group, VersionedCollapsing and
+    * Collapsing cancel sign pairs. Engines without a merge rule reject:
+    * their part-order tiebreak is not reproducible here. (Rows tying on
+    * (key, ver) have no deterministic survivor on the server either.)
     */
   private def finalSource(db: String, t: String, keepTombstones: Boolean): String = {
     require(tableExists(db, t), s"no such table $db.$t")
@@ -1708,8 +1639,11 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
     }
   }
 
-  /** The unit-interval hash condition keeping `db`.`t`'s rows in
-    * [o, o+f), wrapping at 1 (see the SAMPLE note above).
+  /** `FROM db.t SAMPLE f [OFFSET o]`, the server's storage-level
+    * sampling, deterministically: keep the rows whose unit-interval hash
+    * of the table's DECLARED sampling key (first 8 hex of md5 as an
+    * integer, mod 1e6) falls in [o, o+f), wrapping at 1. A table without
+    * a declared `sampling` key rejects the clause, like the server.
     */
   private def sampleCond(db: String, t: String, f: Double, o: Double): String = {
     require(tableExists(db, t), s"no such table $db.$t")
@@ -1725,36 +1659,42 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
     else s"($bucket >= $lo OR $bucket < ${hi - 1000000L})"
   }
 
-  private val StorageRef = ("(?is)^\\s*`([^`]+)`\\.`([^`]+)`\\s+" +
+  private val StorageRef = ("(?is)^\\s*(?:`([^`]+)`|(\\w+))\\.(?:`([^`]+)`|(\\w+))\\s+" +
     "(?:(FINAL)|SAMPLE\\s+([0-9.]+)(?:\\s+OFFSET\\s+([0-9.]+))?)(?=\\s|$)").r
 
-  /** `FROM `db`.`t` FINAL` and `FROM `db`.`t` SAMPLE f [OFFSET o]` at
-    * every query level: the source becomes its dedup subquery or its
-    * sampled subquery. Both are read from the FROM clause's own text,
-    * never from literals.
+  /** `FROM db.t FINAL` and `FROM db.t SAMPLE f [OFFSET o]`, names
+    * quoted or bare, at every query level: the source becomes its dedup
+    * subquery or its sampled subquery. Both are read from the FROM
+    * clause's own text, never from literals. A `trigger` (a materialized
+    * view's select over one inserted block) rejects FINAL.
     */
-  private def rewriteStorage(sql: String, keepTombstones: Boolean = false): String =
+  private def rewriteStorage(sql: String, keepTombstones: Boolean, trigger: Boolean): String =
     if (raw"(?i)\b(FINAL|SAMPLE)\b".r.findFirstIn(sql).isEmpty) sql
     else ChClauses.mapLevels(sql) { s =>
       ChClauses(s).branches.flatMap(_(ChClauses.From)).foldRight(s) { (f, acc) =>
         StorageRef.findFirstMatchIn(acc.substring(f.body, f.end)).fold(acc) { m =>
-          val (db, t) = (m.group(1), m.group(2))
+          val (db, t) = (Option(m.group(1)).getOrElse(m.group(2)),
+            Option(m.group(3)).getOrElse(m.group(4)))
+          require(m.group(5) == null || !trigger,
+            s"FINAL on $db.$t in a materialized view select: the trigger " +
+              "runs over one inserted block, and FINAL reads the merged " +
+              "state of the whole table — read the target with FINAL instead")
           val source =
-            if (m.group(3) != null) finalSource(db, t, keepTombstones)
+            if (m.group(5) != null) finalSource(db, t, keepTombstones)
             else s"FROM (SELECT * FROM `$db`.`$t` WHERE " + sampleCond(db, t,
-              m.group(4).toDouble, Option(m.group(5)).fold(0.0)(_.toDouble)) +
+              m.group(6).toDouble, Option(m.group(7)).fold(0.0)(_.toDouble)) +
               s") AS `$t`"
           acc.substring(0, f.start) + source + acc.substring(f.body + m.end)
         }
       }
     }
 
-  /** Translate + analyze `sql` on the server session, through the
-    * analyzed-plan cache: a server keeps prepared statements; repeated
-    * identical remote SQL (bench iterations, re-planned scans) skips
-    * parse+analysis. Keyed inside the per-version entry, so any store
-    * mutation drops it with the session. Bounded: runtime-filter
-    * literals make distinct SQL per execution, so the cache keeps the
+  /** A read statement through the prepared-statement cache: a server
+    * keeps prepared statements; repeated identical remote SQL (bench
+    * iterations, re-planned scans) skips parse+analysis. Keyed inside
+    * the per-version entry, so any store mutation drops it with the
+    * session. Bounded: runtime-filter literals make distinct SQL per
+    * execution, so the cache keeps the
     * [[EmbeddedClickHouse.PreparedStatements]] most recently used
     * statements rather than growing without limit on long read-only
     * sessions.
@@ -1762,75 +1702,106 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
   private def resolveQueryDf(
       entry: EmbeddedClickHouse.CachedServer,
       sql: String): org.apache.spark.sql.DataFrame =
-    entry.prepared(sql) { _ =>
-      val tables = knownTables
-      // keyed-collapse slice tokens are an HTTP-transport affordance
-      // (per-slice hash-mod predicates inside the aggregation); the
-      // embedded transport executes the statement once and fans its
-      // result out on the spill write, so the token is dropped before
-      // translation (leaving `WHERE true`)
-      val detokened0 = sql.replaceAll(raw"/\*__CH_SLICE__\([^)]*\)\*/", "")
-      // ANY JOIN strictness: build side dedupes to a deterministic
-      // one-row-per-key pick (needs schema, so it lives here, not in
-      // the pure translator)
-      val detokened = rewriteAnyJoin(entry, detokened0, knownTables)
-      // top-level reshapes, decided from one clause split: DISTINCT ON
-      // and LIMIT n [OFFSET o] BY (a row_number window in the ORDER BY
-      // order, which is REQUIRED), LIMIT n WITH TIES (a rank() window,
-      // same helper-column pattern), ORDER BY col WITH FILL (the gap rows
-      // are composed onto the analyzed frame below, lazily, so DESCRIBE
-      // never executes anything), star transformers (* REPLACE / APPLY /
-      // COLUMNS('re'), composed on the analyzed frame)
-      val shape = ChSqlTranslator.reshape(detokened)
-      val effective = shape.fold(detokened)(_.statement)
-      val plainStmt = rewriteStorage(effective)
-      // `_part` virtual column (server MergeTree parity): statements
-      // referencing it read through per-part augmented views so the
-      // part NAME is an ordinary column — registered on demand, never
-      // polluting star-selects of ordinary reads
-      val partStmt = rewritePartVirtual(entry, plainStmt, tables)
-      val tr = ChSqlTranslator.translate(partStmt, tables)
-      ensureViews(entry, tr, tables)
-      val df =
-        try entry.session.sql(tr) catch { case e: Throwable =>
-          // the ASOF rewrite flattens `l.*, r.*` into one subquery and
-          // strips alias qualifiers, so two sides SHARING a column name
-          // (the `ON l.sym = r.sym` shape with same-named keys) surface
-          // as an ambiguous-reference analysis error — name the actual
-          // limitation instead of leaving a bare Spark message (advisor
-          // r12); the workaround is renaming one side's columns apart in
-          // a subselect
-          val asofAmbig =
-            raw"(?i)\bASOF\b".r.findFirstIn(detokened).isDefined &&
-              (e.getMessage.contains("AMBIGUOUS_REFERENCE") ||
-                e.getMessage.toLowerCase.contains("ambiguous"))
-          val hint =
-            if (asofAmbig)
-              "\nASOF JOIN note: the embedded rewrite flattens both " +
-                "sides into one row, so columns sharing a NAME across " +
-                "the two sides become ambiguous — alias one side's " +
-                "columns apart in a subselect (e.g. SELECT sym AS qsym, " +
-                "... ) and join on the renamed key"
-            else ""
-          throw new IllegalArgumentException(
-            s"translated SQL failed: ${e.getMessage}$hint" +
-              s"\n--- translated ---\n$tr", e) }
-      // projection swap: when the statement is a plain aggregate over a
-      // projected table and every live part carries the projection's
-      // state dir, re-plan onto the state view. The swap is verified
-      // against the BASE plan's analyzed schema (names + types) and any
-      // mismatch or failure keeps the base frame — a projection read is
-      // a storage optimization, identical rows by construction
-      val chosen = tryProjectionSwap(entry, plainStmt, df, tables)
-      shape match {
-        case Some(_: ChSqlTranslator.LimitByParts) => chosen.drop("__lb_rn")
-        case Some(_: ChSqlTranslator.WithTiesParts) => chosen.drop("__wt_rk")
-        case Some(f: ChSqlTranslator.WithFillParts) => fillGaps(chosen, f)
-        case Some(p: ChSqlTranslator.StarTransformParts) =>
-          starTransform(chosen, p, tables)
-        case None => chosen
-      }
+    entry.prepared(sql)(resolveStatement(entry, _))
+
+  /** The one statement path: every statement the store runs turns its
+    * ClickHouse SQL into an analyzed DataFrame here, through the same
+    * stages in order: detoken → ANY JOIN → reshape → FINAL/SAMPLE →
+    * `_part` → translate → views → analyze → projection swap → reshape
+    * post-step. Reads come through [[resolveQueryDf]]'s cache; writes,
+    * DDL and triggers call it uncached, so they never evict a read plan.
+    * `keepTombstones`: a merge keeps is_deleted survivors. `block`: a
+    * materialized view's select over one inserted block (no files: an
+    * empty one) — the view stage binds the source table to it, and
+    * FINAL and `_part` reject, as they read table-level state.
+    */
+  private def resolveStatement(
+      entry: EmbeddedClickHouse.CachedServer,
+      sql: String,
+      keepTombstones: Boolean = false,
+      block: Option[((String, String), Seq[Path])] = None)
+      : org.apache.spark.sql.DataFrame = {
+    val tables = knownTables
+    // keyed-collapse slice tokens are an HTTP-transport affordance
+    // (per-slice hash-mod predicates inside the aggregation); the
+    // embedded transport executes the statement once and fans its
+    // result out on the spill write, so the token is dropped before
+    // translation (leaving `WHERE true`)
+    val detokened0 = sql.replaceAll(raw"/\*__CH_SLICE__\([^)]*\)\*/", "")
+    // ANY JOIN strictness: build side dedupes to a deterministic
+    // one-row-per-key pick (needs schema, so it lives here, not in
+    // the pure translator)
+    val detokened = rewriteAnyJoin(entry, detokened0)
+    // top-level reshapes, decided from one clause split: DISTINCT ON
+    // and LIMIT n [OFFSET o] BY (a row_number window in the ORDER BY
+    // order, which is REQUIRED), LIMIT n WITH TIES (a rank() window,
+    // same helper-column pattern), ORDER BY col WITH FILL (the gap rows
+    // are composed onto the analyzed frame below, lazily, so DESCRIBE
+    // never executes anything), star transformers (* REPLACE / APPLY /
+    // COLUMNS('re'), composed on the analyzed frame)
+    val shape = ChSqlTranslator.reshape(detokened)
+    val effective = shape.fold(detokened)(_.statement)
+    val plainStmt = rewriteStorage(effective, keepTombstones, block.isDefined)
+    // `_part` virtual column (server MergeTree parity): statements
+    // referencing it read through per-part augmented views so the
+    // part NAME is an ordinary column — registered on demand, never
+    // polluting star-selects of ordinary reads
+    val partStmt = rewritePartVirtual(entry, plainStmt, tables, block.isDefined)
+    val tr = ChSqlTranslator.translate(partStmt, tables)
+    // a trigger's source resolves to the block, on a clone of the server
+    // session so that concurrent statements keep reading the table
+    ensureViews(entry, tr, tables.filterNot(t => block.exists(_._1 == t)))
+    val session = block.fold(entry.session) { case ((db, t), files) =>
+      val s = org.apache.spark.sql.graft.bridge.cloneSession(entry.session)
+      val schema = sparkSchema(db, t)
+      (if (files.isEmpty)
+        s.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+      else s.read.schema(schema).parquet(files.map(_.toString): _*))
+        .createOrReplaceTempView(ChSqlTranslator.viewName(db, t))
+      s
     }
+    val df =
+      try session.sql(tr) catch { case e: Throwable =>
+        // the ASOF rewrite flattens `l.*, r.*` into one subquery and
+        // strips alias qualifiers, so two sides SHARING a column name
+        // (the `ON l.sym = r.sym` shape with same-named keys) surface
+        // as an ambiguous-reference analysis error — name the actual
+        // limitation instead of leaving a bare Spark message (advisor
+        // r12); the workaround is renaming one side's columns apart in
+        // a subselect
+        val asofAmbig =
+          raw"(?i)\bASOF\b".r.findFirstIn(detokened).isDefined &&
+            (e.getMessage.contains("AMBIGUOUS_REFERENCE") ||
+              e.getMessage.toLowerCase.contains("ambiguous"))
+        val hint =
+          if (asofAmbig)
+            "\nASOF JOIN note: the embedded rewrite flattens both " +
+              "sides into one row, so columns sharing a NAME across " +
+              "the two sides become ambiguous — alias one side's " +
+              "columns apart in a subselect (e.g. SELECT sym AS qsym, " +
+              "... ) and join on the renamed key"
+          else ""
+        throw new IllegalArgumentException(
+          s"translated SQL failed: ${e.getMessage}$hint" +
+            s"\n--- translated ---\n$tr", e) }
+    // projection swap: when the statement is a plain aggregate over a
+    // projected table and every live part carries the projection's
+    // state dir, re-plan onto the state view. The swap is verified
+    // against the BASE plan's analyzed schema (names + types) and any
+    // mismatch or failure keeps the base frame — a projection read is
+    // a storage optimization, identical rows by construction (a
+    // trigger reads its block, never the table's projection states)
+    val chosen =
+      if (block.isDefined) df else tryProjectionSwap(entry, plainStmt, df, tables)
+    shape match {
+      case Some(_: ChSqlTranslator.LimitByParts) => chosen.drop("__lb_rn")
+      case Some(_: ChSqlTranslator.WithTiesParts) => chosen.drop("__wt_rk")
+      case Some(f: ChSqlTranslator.WithFillParts) => fillGaps(chosen, f)
+      case Some(p: ChSqlTranslator.StarTransformParts) =>
+        starTransform(chosen, p, tables)
+      case None => chosen
+    }
+  }
 
   /** The `_part` virtual column: when a statement references it (word-
     * boundary, outside strings), every referenced store table swaps to
@@ -1838,11 +1809,11 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
     * server's MergeTree `_part` surface. Other virtual columns
     * (`_partition_id` etc.) stay unresolved-and-loud: embedded part
     * files are not partition-split, so deriving them from file names
-    * would lie.
+    * would lie. A `trigger` rejects `_part`.
     */
   private def rewritePartVirtual(
       entry: EmbeddedClickHouse.CachedServer, stmt: String,
-      tables: Seq[(String, String)]): String = {
+      tables: Seq[(String, String)], trigger: Boolean): String = {
     // quote-aware reference scan: a bare `_part` word or the backticked
     // identifier, never text inside string literals
     def referencesPart(s: String): Boolean = {
@@ -1853,6 +1824,9 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
       false
     }
     if (!referencesPart(stmt)) return stmt
+    require(!trigger,
+      "_part in a materialized view select: the trigger runs over one " +
+        "inserted block, and _part reads the part list of the whole table")
     tables.foldLeft(stmt) { case (acc, (db, t)) =>
       val quoted = s"`$db`.`$t`"
       if (!acc.contains(quoted)) acc
@@ -1864,10 +1838,7 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
   private def ensurePartView(
       entry: EmbeddedClickHouse.CachedServer, db: String, t: String): String = {
     val name = ChSqlTranslator.viewName(db, t) + "__parts"
-    val v = EmbeddedClickHouse.storeVersion(root).get()
-    val key = (s"__vpart__$db.$t", "")
-    val reg = entry.viewVersions.get(key)
-    if (reg == null || reg.longValue != v) {
+    refreshView(entry, (s"__vpart__$db.$t", ""), EmbeddedClickHouse.storeVersion(root).get()) {
       val child = entry.session
       import org.apache.spark.sql.functions.lit
       val schema = sparkSchema(db, t)
@@ -1881,7 +1852,6 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
             lit(Paths.get(f).getFileName.toString))
         }.reduce(_ unionByName _)
       df.createOrReplaceTempView(name)
-      entry.viewVersions.put(key, java.lang.Long.valueOf(v))
     }
     name
   }
@@ -1917,15 +1887,11 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
             .foreach { ps =>
               val swapped =
                 try {
-                  val v = EmbeddedClickHouse.storeVersion(root).get()
-                  val key = (s"__proj__$db.$t", d.name)
-                  val reg = entry.viewVersions.get(key)
-                  if (reg == null || reg.longValue != v) {
-                    val dirs = live.map(n =>
-                      projDataDir(db, t, d.name).resolve(n).toString)
-                    entry.session.read.parquet(dirs: _*)
+                  refreshView(entry, (s"__proj__$db.$t", d.name),
+                    EmbeddedClickHouse.storeVersion(root).get()) {
+                    entry.session.read.parquet(live.map(n =>
+                      projDataDir(db, t, d.name).resolve(n).toString): _*)
                       .createOrReplaceTempView(viewRef)
-                    entry.viewVersions.put(key, java.lang.Long.valueOf(v))
                   }
                   val pdf = entry.session.sql(
                     ChSqlTranslator.translate(ps, tables))
@@ -1972,9 +1938,7 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
     * else rejects loudly in parseAnyJoin.
     */
   private def rewriteAnyJoin(
-      entry: EmbeddedClickHouse.CachedServer,
-      sql: String,
-      tables: Seq[(String, String)]): String = {
+      entry: EmbeddedClickHouse.CachedServer, sql: String): String = {
     val p = ChSqlTranslator.parseAnyJoin(sql).getOrElse(return sql)
     val bareT = "^`([^`]+)`\\.`([^`]+)`$".r
     val rightTrim = p.right.trim
@@ -1984,10 +1948,8 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
         require(rsub.startsWith("("),
           s"ANY JOIN: unsupported right operand '$rsub' — use a bare " +
             "`db`.`table` reference or a parenthesized subquery")
-        val probeSql = ChSqlTranslator.translate(
-          s"SELECT * FROM $rsub __any_probe LIMIT 0", tables)
-        ensureViews(entry, probeSql, tables)
-        entry.session.sql(probeSql).schema.fieldNames.toSeq
+        resolveStatement(entry, s"SELECT * FROM $rsub __any_probe LIMIT 0")
+          .schema.fieldNames.toSeq
     }
     val alias = p.rightAlias.map(_.stripPrefix("`").stripSuffix("`"))
       .getOrElse(rightTrim match {
@@ -2203,34 +2165,43 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
     * external-row conversion on either side of the "wire".
     */
   override def planQuery(sql: String, numStreams: Int): (StructType, Seq[ChPartitionHandle]) = {
-    val entry = serverEntry()
-    val df = resolveQueryDf(entry, sql)
+    val df = resolveQueryDf(serverEntry(), sql)
     val schema = df.schema
+    val internal = EmbeddedClickHouse.perRunPlan(df).toRdd
+    val parts = internal.getNumPartitions
+    val fan = parts < numStreams &&
+      !ChClauses(sql).branches.exists(_.has(ChClauses.OrderBy))
+    val files = spill(internal, schema)(i =>
+      if (fan) i until numStreams by parts else IndexedSeq(i))
+    val groups =
+      if (files.isEmpty) Seq(Seq.empty[String])
+      // exactly numStreams handles; a stream no row landed in is empty
+      else if (fan) (0 until numStreams).map(j => files.get(j).toSeq)
+      else {
+        val ordered = files.toSeq.sortBy(_._1).map(_._2)
+        val streams = math.max(1, numStreams)
+        ordered.grouped((ordered.length + streams - 1) / streams).toSeq
+      }
+    (schema, groups.map(g => ChSpillHandle(g, schema.length, schema.json)))
+  }
+
+  /** The spill job: run `rows` once, dealing partition i round-robin
+    * over the streams `layout(i)` (files in a fresh spill dir); returns
+    * stream → file for every stream a row landed in.
+    */
+  private def spill(
+      rows: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+      schema: StructType)(layout: Int => IndexedSeq[Int]): Map[Int, String] = {
     val spillRoot = Paths.get(root, ".spill")
     cleanStaleSpills(spillRoot)
     val dir = spillRoot.resolve(java.util.UUID.randomUUID.toString)
     Files.createDirectories(dir)
     val dirStr = dir.toString
-    val internal = EmbeddedClickHouse.perRunPlan(df).toRdd
-    val parts = internal.getNumPartitions
-    val fan = parts < numStreams &&
-      !ChClauses(sql).branches.exists(_.has(ChClauses.OrderBy))
-    val stream: Int => Path = j => Paths.get(dirStr, f"stream-$j%05d.rows")
-    val files = internal.mapPartitionsWithIndex { (i, it) =>
-      val own = if (fan) i until numStreams by parts else i to i
-      RowSpill.writeRoundRobin(own.map(stream), schema, it).iterator.map(_.toString)
-    }.collect().toSeq.sorted
-    val groups =
-      if (files.isEmpty) Seq(Seq.empty[String])
-      else if (fan) {
-        // exactly numStreams handles; a stream no row landed in is empty
-        val written = files.toSet
-        (0 until numStreams).map(j => Seq(stream(j).toString).filter(written))
-      } else {
-        val streams = math.max(1, numStreams)
-        files.grouped((files.length + streams - 1) / streams).toSeq
-      }
-    (schema, groups.map(g => ChSpillHandle(g, schema.length, schema.json)))
+    rows.mapPartitionsWithIndex { (i, it) =>
+      val streams = layout(i).map(j => j -> Paths.get(dirStr, f"stream-$j%05d.rows"))
+      val written = RowSpill.writeRoundRobin(streams.map(_._2), schema, it).toSet
+      streams.iterator.collect { case (j, f) if written(f) => j -> f.toString }
+    }.collect().toMap
   }
 
   /** Bucket-keyed read ([[ClickHouseClient.planQueryBuckets]]): route the
@@ -2248,27 +2219,14 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
       sql: String,
       bucketColumn: String,
       numBuckets: Int): Option[(StructType, Seq[ChPartitionHandle])] = {
-    val entry = serverEntry()
-    val df = resolveQueryDf(entry, sql)
+    val df = resolveQueryDf(serverEntry(), sql)
     val schema = df.schema
     require(schema.fieldNames.contains(bucketColumn),
       s"bucket column '$bucketColumn' not in result schema " +
         schema.fieldNames.mkString(", "))
-    val spillRoot = Paths.get(root, ".spill")
-    cleanStaleSpills(spillRoot)
-    val dir = spillRoot.resolve(java.util.UUID.randomUUID.toString)
-    Files.createDirectories(dir)
-    val dirStr = dir.toString
-    val source = df.repartition(numBuckets, df(bucketColumn))
-    val internal = source.queryExecution.toRdd
-    val files = internal.mapPartitionsWithIndex { (i, it) =>
-      if (it.isEmpty) Iterator.empty
-      else {
-        val f = Paths.get(dirStr, f"stream-$i%05d.rows")
-        RowSpill.write(f, schema, it)
-        Iterator.single(i -> f.toString)
-      }
-    }.collect().toMap
+    val files = spill(
+      df.repartition(numBuckets, df(bucketColumn)).queryExecution.toRdd, schema)(
+      IndexedSeq(_))
     Some((schema, (0 until numBuckets).map(i =>
       ChSpillHandle(files.get(i).toSeq, schema.length, schema.json))))
   }
@@ -2362,23 +2320,25 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
     // the store does not own — rewriting them is out of contract
     require(ext.isEmpty,
       s"DELETE from $db.$table: table has attached external data (read-only)")
-    val entry = serverEntry()
-    val spark = entry.session
-    val tables = knownTables
     val qt = graft.sql.ChSql.quoteTable(db, table)
     // DELETE WHERE cond removes rows where cond IS TRUE; NULL keeps.
     // CAST: ClickHouse conditions may be integral (e.g. the `1` of an
     // unconditional delete) — Spark's coalesce/NOT need a real boolean
     val pred = s"coalesce(CAST(($whereSql) AS BOOLEAN), false)"
-    val keepSql = ChSqlTranslator.translate(
-      s"SELECT * FROM $qt WHERE NOT $pred", tables)
-    ensureViews(entry, keepSql, tables)
-    val anySql = ChSqlTranslator.translate(
-      s"SELECT count(*) AS n FROM $qt WHERE $pred", tables)
-    ensureViews(entry, anySql, tables)
-    if (spark.sql(anySql).head.getLong(0) == 0L) return // nothing to rewrite
-    rewriteParts(db, table, keepSql)
+    val entry = serverEntry()
+    if (matches(entry, qt, pred)) {
+      // the table's own columns, never a virtual one the condition reads
+      val cols = sparkSchema(db, table).fieldNames.map(graft.sql.ChSql.quoteIdent)
+      rewritePartsDf(db, table, resolveStatement(entry,
+        s"SELECT ${cols.mkString(", ")} FROM $qt WHERE NOT $pred"))
+    }
   }
+
+  /** Whether a mutation over `qt` has any row to rewrite. */
+  private def matches(
+      entry: EmbeddedClickHouse.CachedServer, qt: String, pred: String): Boolean =
+    resolveStatement(entry, s"SELECT count(*) AS n FROM $qt WHERE $pred")
+      .head().getLong(0) > 0L
 
   /** `ALTER TABLE ... UPDATE` analog: rewrite parts with assigned columns
     * recomputed where the condition holds (CASE over the OLD row values,
@@ -2400,9 +2360,6 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
     val unknown = byName.keySet.diff(schema.fieldNames.toSet)
     require(unknown.isEmpty,
       s"UPDATE on $db.$table: unknown column(s) ${unknown.toSeq.sorted.mkString(", ")}")
-    val entry = serverEntry()
-    val spark = entry.session
-    val tables = knownTables
     val qt = graft.sql.ChSql.quoteTable(db, table)
     val pred = s"coalesce(CAST(($whereSql) AS BOOLEAN), false)"
     val cols = schema.fields.map { f =>
@@ -2413,98 +2370,88 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
         case None => q
       }
     }
-    val rewriteSql = ChSqlTranslator.translate(
-      s"SELECT ${cols.mkString(", ")} FROM $qt", tables)
-    ensureViews(entry, rewriteSql, tables)
-    val anySql = ChSqlTranslator.translate(
-      s"SELECT count(*) AS n FROM $qt WHERE $pred", tables)
-    ensureViews(entry, anySql, tables)
-    if (spark.sql(anySql).head.getLong(0) == 0L) return
-    rewriteParts(db, table, rewriteSql)
+    val entry = serverEntry()
+    if (matches(entry, qt, pred))
+      rewritePartsDf(db, table,
+        resolveStatement(entry, s"SELECT ${cols.mkString(", ")} FROM $qt"))
   }
 
-  /** Shared mutation core: materialize `translatedSql` (already Spark
-    * dialect, views ensured) into a staging dir, drop the snapshot of
-    * current parts, publish the staged rewrite atomically per file.
+  /** Shared mutation core: drop the snapshot of current parts and
+    * publish `result` as their replacement, atomically per file.
     */
-  private def rewriteParts(db: String, table: String, translatedSql: String): Unit =
-    rewritePartsDf(db, table,
-      serverEntry().session.sql(translatedSql))
-
   private def rewritePartsDf(
       db: String, table: String,
       result: org.apache.spark.sql.DataFrame): Unit = {
     // snapshot the parts being rewritten BEFORE materializing the result
     val snapshot = dataFiles(db, table)
-    val stagingId = s"mutate-${java.util.UUID.randomUUID}"
-    val dir = stagingPath(db, table, stagingId)
-    Files.createDirectories(dir.getParent)
-    try {
-      result.write.parquet(dir.toString)
-      snapshot.foreach(f => Files.deleteIfExists(Paths.get(f)))
-      commitStagedFire(db, table, stagingId, fire = false)
-    } catch {
-      case e: Throwable => abortStaged(db, table, stagingId); throw e
-    }
+    publishStaged(db, table, "mutate", result, fire = false)(_ =>
+      snapshot.foreach(f => Files.deleteIfExists(Paths.get(f))))
     invalidate()
   }
 
   override def insertSelect(db: String, table: String, chSelectSql: String): Long = {
     rejectSystem(db, s"INSERT into $db.$table")
-    val entry = serverEntry()
-    val spark = entry.session
-    val tables = knownTables
-    val tr = ChSqlTranslator.translate(chSelectSql, tables)
-    ensureViews(entry, tr, tables)
-    val df = spark.sql(tr)
+    val df = resolveStatement(serverEntry(), chSelectSql)
     val sink = sparkSchema(db, table)
-    // names+types must match; nullability is enforced at RUNTIME like a
-    // real server (parquet-backed reads are always nullable, so a static
-    // check would reject even an identical-schema copy — instead a NULL
-    // reaching a non-Nullable sink column fails the copy)
-    val byName = df.schema.fields.map(f => f.name -> f).toMap
-    val errs =
-      sink.fields.flatMap { sf =>
-        byName.get(sf.name) match {
-          case None => Some(s"missing column '${sf.name}'")
-          case Some(inf) if ClickHouseType.ignoreNullability(inf.dataType) !=
-              ClickHouseType.ignoreNullability(sf.dataType) =>
-            Some(s"field '${sf.name}' type mismatch: ${inf.dataType.sql} vs ${sf.dataType.sql}")
-          case _ => None
-        }
-      } ++ df.schema.fieldNames.filterNot(sink.fieldNames.contains)
-        .map(n => s"unexpected column '$n'")
+    val errs = fitErrors(df.schema, sink)
     require(errs.isEmpty, s"INSERT SELECT schema mismatch for $db.$table: ${errs.mkString("; ")}")
-    // write through the staged protocol: Spark lands part files in the
-    // staging dir executor-side (never via the driver), commitStaged
-    // renames them in atomically — a crash mid-copy leaves the target
-    // untouched and the stale staging dir is reaped
-    val stagingId = s"copy-${java.util.UUID.randomUUID}"
+    // nullability is enforced at RUNTIME like a real server: a NULL
+    // reaching a non-Nullable sink column fails the copy
+    import org.apache.spark.sql.functions.{col, lit, raise_error, when}
+    val nullable = df.schema.fields.map(f => f.name -> f.nullable).toMap
+    val guarded = sink.fields.toSeq.map { sf =>
+      val c = col(sf.name)
+      if (!sf.nullable && nullable(sf.name))
+        when(c.isNull, raise_error(
+          lit(s"Cannot insert NULL into non-Nullable column $db.$table.${sf.name}")))
+          .otherwise(c).as(sf.name)
+      else c
+    }
+    // inserted-row count from the part-file footers (local metadata —
+    // no second Spark job over data that was just written)
+    publishStaged(db, table, "copy", df.select(guarded: _*), fire = true) { dir =>
+      NioFiles.walk(dir).iterator
+        .filter(p => p.getFileName.toString.endsWith(".parquet"))
+        .map(p => partRowCount(p.toString)).sum
+    }
+  }
+
+  /** Why a result schema does not fit a table's: missing, mistyped or
+    * unexpected columns. Nullability is left to the rows' landing:
+    * parquet reads are always nullable, and aggregate state structs
+    * carry nullability the declared storage type cannot mirror.
+    */
+  private def fitErrors(out: StructType, sink: StructType): Seq[String] = {
+    val types = out.fields.map(f => f.name -> f.dataType).toMap
+    sink.fields.toSeq.flatMap { sf =>
+      types.get(sf.name) match {
+        case None => Some(s"missing column '${sf.name}'")
+        case Some(t) if ClickHouseType.ignoreNullability(t) !=
+            ClickHouseType.ignoreNullability(sf.dataType) =>
+          Some(s"'${sf.name}' type mismatch: ${t.sql} vs ${sf.dataType.sql}")
+        case _ => None
+      }
+    } ++ out.fieldNames.filterNot(sink.fieldNames.contains)
+      .map(n => s"unexpected column '$n'")
+  }
+
+  /** Publish `df` into a table through the staged protocol: Spark
+    * writes parts executor-side into a fresh `<kind>-<uuid>` staging dir,
+    * `beforeCommit` sees that dir, and the commit renames the parts in
+    * atomically, firing views unless `fire` is false (mutations, merges).
+    * Any failure discards the staging dir.
+    */
+  private def publishStaged[A](
+      db: String, table: String, kind: String,
+      df: org.apache.spark.sql.DataFrame, fire: Boolean)(beforeCommit: Path => A): A = {
+    val stagingId = s"$kind-${java.util.UUID.randomUUID}"
     val dir = stagingPath(db, table, stagingId)
     Files.createDirectories(dir.getParent)
     try {
-      import org.apache.spark.sql.functions.{col, lit, raise_error, when}
-      val guarded = sink.fields.toSeq.map { sf =>
-        val c = col(sf.name)
-        if (!sf.nullable && byName(sf.name).nullable)
-          when(c.isNull, raise_error(
-            lit(s"Cannot insert NULL into non-Nullable column $db.$table.${sf.name}")))
-            .otherwise(c).as(sf.name)
-        else c
-      }
-      df.select(guarded: _*).write.parquet(dir.toString)
-      // inserted-row count from the part-file footers (local metadata —
-      // no second Spark job over data that was just written)
-      val n = NioFiles.walk(dir).iterator
-        .filter(p => p.getFileName.toString.endsWith(".parquet"))
-        .map { p =>
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            new org.apache.hadoop.fs.Path(p.toString), new org.apache.hadoop.conf.Configuration())
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-          try r.getRecordCount finally r.close()
-        }.sum
-      commitStaged(db, table, stagingId)
-      n
+      df.write.parquet(dir.toString)
+      val a = beforeCommit(dir)
+      commitStagedFire(db, table, stagingId, fire)
+      a
     } catch {
       case e: Throwable => abortStaged(db, table, stagingId); throw e
     }

@@ -22,18 +22,6 @@ import org.apache.spark.sql.types.StructType
   */
 object RowSpill {
 
-  /** Write all of `rows` (any InternalRow; converted to UnsafeRow if
-    * needed) to `path`; returns the row count.
-    */
-  def write(path: Path, schema: StructType, rows: Iterator[InternalRow]): Long = {
-    val out = open(path)
-    val toUnsafe = new ToUnsafe(schema)
-    var n = 0L
-    try rows.foreach { r => put(out, toUnsafe(r)); n += 1 }
-    finally out.close()
-    n
-  }
-
   /** Deal `rows` round-robin across `paths`: row k goes to
     * `paths(k % paths.length)`. A file is created on its first row, so
     * fewer rows than paths leave the tail unwritten; returns the paths

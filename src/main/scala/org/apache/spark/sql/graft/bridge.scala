@@ -25,6 +25,14 @@ object bridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** A session sharing `spark`'s functions, conf and temp views, whose
+    * own temp-view changes stay private (`cloneSession` is
+    * `private[sql]`) — the embedded server binds a materialized view's
+    * source to one inserted block on such a clone.
+    */
+  def cloneSession(spark: org.apache.spark.sql.SparkSession): org.apache.spark.sql.SparkSession =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].cloneSession()
+
   // `private[sql]` DSv2 expression shapes, re-exposed for the connector's
   // v2 pushdown compilers (graft.sql.ChV2Exprs)
   def fieldRefName(e: V2Expression): Option[String] = e match {

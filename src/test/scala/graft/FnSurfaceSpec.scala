@@ -213,7 +213,9 @@ class FnSurfaceSpec extends AnyFunSuite {
     "toStartOfInterval(ts, INTERVAL 2 WEEK)",
     "toStartOfInterval(ts, INTERVAL 2 MONTH)",
     "toStartOfInterval(ts, INTERVAL 2 QUARTER)",
-    "toStartOfInterval(ts, INTERVAL 5 YEAR)")
+    "toStartOfInterval(ts, INTERVAL 5 YEAR)",
+    // zero-argument count(), as an aggregate and as a window
+    "count()", "count() OVER (PARTITION BY id)")
   // deliberately unmapped on the embedded engine (no value-exact Spark
   // composition / server-version-dependent law) — these REJECT loudly
   // here and execute only against a real server via the wire transport

@@ -45,6 +45,24 @@ class TranslatorSpec extends AnyFunSuite {
       "SELECT 'db.tbl' AS a, '`db`.`tbl`' AS b FROM __ch_db_tbl")
   }
 
+  test("tablesIn finds the tables translate maps, by the same rule") {
+    val tables = Seq("db" -> "tbl", "db" -> "tbl2", "db" -> "other")
+    assert(ChSqlTranslator.tablesIn(
+      "SELECT * FROM `db`.`tbl` a JOIN db.tbl2 b ON a.k = b.k " +
+        "WHERE s = 'db.other'", tables) == Seq("db" -> "tbl", "db" -> "tbl2"))
+    assert(ChSqlTranslator.tablesIn("SELECT 1 FROM db.tbl22", tables).isEmpty)
+  }
+
+  test("zero-argument count() is count(*), in aggregates and windows; " +
+    "other argument lists pass through") {
+    assert(t("SELECT count() AS n FROM db.tbl") ==
+      "SELECT count(*) AS n FROM __ch_db_tbl")
+    assert(t("SELECT count() OVER (PARTITION BY k) AS n FROM db.tbl") ==
+      "SELECT count(*) OVER (PARTITION BY k) AS n FROM __ch_db_tbl")
+    assert(t("SELECT count(*), count(x), count(DISTINCT x)") ==
+      "SELECT count(*), count(x), count(DISTINCT x)")
+  }
+
   test("CAST rewrites ClickHouse type names, including nested parens") {
     assert(t("SELECT CAST(x AS Int64)") == "SELECT CAST(x AS BIGINT)")
     assert(t("SELECT CAST(f(a, b) AS Float64)") == "SELECT CAST(f(a, b) AS DOUBLE)")
