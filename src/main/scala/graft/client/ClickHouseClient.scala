@@ -41,7 +41,9 @@ trait ClickHouseClient extends Serializable {
     * probe results (the GLOBAL dim materialization) may be memoized
     * ONLY under a token — staleness must be detectable, so wire
     * transports (a remote server can be mutated by other clients
-    * invisibly) return None and simply re-probe every planning.
+    * invisibly) return None and simply re-probe every planning. The
+    * embedded store's token is store-wide: a write to any table moves it,
+    * even though its own views and statements refresh per table.
     */
   def dataVersionToken: Option[String] = None
 

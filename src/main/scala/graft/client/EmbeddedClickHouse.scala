@@ -28,10 +28,12 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
 
   override def connectionKey: String = s"embedded:${Paths.get(root).toAbsolutePath}"
 
-  // every mutation path calls invalidate() → the companion counter, so
-  // the store version IS a change-detectable data token
-  override def dataVersionToken: Option[String] =
-    Some(EmbeddedClickHouse.storeVersion(root).get.toString)
+  // looked up again where the client is deserialized (write tasks)
+  @transient private lazy val clock = EmbeddedClickHouse.clock(root)
+
+  // every write and DDL moves the store's one counter, so its value is a
+  // change-detectable data token; it stays store-wide (not per table)
+  override def dataVersionToken: Option[String] = Some(clock.counter.get.toString)
 
   private def dbPath(db: String): Path = Paths.get(root, db)
   private def tablePath(db: String, table: String): Path = Paths.get(root, db, table)
@@ -125,14 +127,14 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
     val d = dbPath(db)
     if (Files.exists(d) && !ifNotExists) sys.error(s"database $db already exists")
     Files.createDirectories(d)
-    invalidate()
+    clock.catalogChanged()
   }
 
   override def dropDatabase(db: String): Unit = {
     rejectSystem(db, "DROP DATABASE")
     bumpMvGen() // the database may carry view.meta dirs
     deleteRecursively(dbPath(db))
-    invalidate()
+    clock.catalogChanged()
   }
 
   override def createTable(
@@ -154,7 +156,7 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
         options.toSeq.sortBy(_._1).map { case (k, v) => s"option\t$k\t$v" } ++
         options.get("external_paths").toSeq.flatMap(_.split(",")).map(p => s"external\t$p")
     Files.write(metaPath(db, table), lines.asJava)
-    invalidate()
+    clock.catalogChanged()
   }
 
   /** Attach existing parquet files as the table's data (zero-copy). */
@@ -166,14 +168,14 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
         opts.toSeq.sortBy(_._1).map { case (k, v) => s"option\t$k\t$v" } ++
         (ext ++ paths).distinct.map(p => s"external\t$p")
     Files.write(metaPath(db, table), lines.asJava)
-    invalidate()
+    clock.catalogChanged()
   }
 
   override def dropTable(db: String, table: String): Unit = {
     rejectSystem(db, s"DROP TABLE $db.$table")
     if (Files.exists(mvMetaPath(db, table))) bumpMvGen() // DROP TABLE on a view
     deleteRecursively(tablePath(db, table))
-    invalidate()
+    clock.catalogChanged()
   }
 
   /** ALTER TABLE by part rewrite: the embedded analog of a server
@@ -321,7 +323,7 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
       state.map { case (n, t, _) => s"column\t$n\t$t" } ++
         newOpts.toSeq.sortBy(_._1).map { case (k, v) => s"option\t$k\t$v" }
     Files.write(metaPath(db, table), lines.asJava)
-    invalidate()
+    clock.catalogChanged()
   }
 
   /** ClickHouse column DEFAULT for an added column: NULL when Nullable,
@@ -470,7 +472,7 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
         f"part-${ParquetBlockWriter.nextPartSeq()}%016x-attach-$i.parquet")
       Files.copy(Paths.get(f), target)
     }
-    invalidate()
+    clock.tableChanged(db, table)
   }
 
   /** DEDUPLICATE merge: full-row distinct, or — with BY columns — one
@@ -521,7 +523,7 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
       .foreach(Files.delete)
     for (sub <- Seq(".epoch-parts", ".epochs"))
       deleteRecursively(dir.resolve(sub))
-    invalidate()
+    clock.tableChanged(db, table)
   }
 
   /** Atomic-engine name swap: three same-filesystem moves through a temp
@@ -554,7 +556,7 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
         Files.delete(journal)
       }
     }
-    invalidate()
+    clock.catalogChanged()
   }
 
   /** Repair any exchange interrupted by a crash: each surviving
@@ -582,7 +584,7 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
       }
       Files.delete(j)
     }
-    if (journals.nonEmpty) invalidate()
+    if (journals.nonEmpty) clock.catalogChanged()
   }
 
   /** DROP PARTITION as a mutation: every row whose partition_by value
@@ -608,7 +610,7 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
     require(!tableExists(newDb, newTable),
       s"RENAME TABLE target already exists: $newDb.$newTable")
     Files.move(tablePath(db, table), tablePath(newDb, newTable))
-    invalidate()
+    clock.catalogChanged()
   }
 
   // ---- projections (per-part pre-aggregates, server semantics) ----
@@ -718,7 +720,7 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
       if (!Files.isDirectory(projDataDir(db, table, d.name).resolve(name)))
         buildProjectionPart(db, table, d, p, name)
     }
-    invalidate()
+    clock.catalogChanged()
   }
 
   /** Remove state dirs whose part no longer exists (mutations and
@@ -845,7 +847,7 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
       s"mview\t$targetDb.$targetTable\t${chSelectSql.replaceAll("\\s+", " ").trim}",
       s"source\t$srcDb.$srcTable").asJava)
     bumpMvGen()
-    invalidate()
+    clock.catalogChanged()
   }
 
   override def dropMaterializedView(db: String, name: String): Unit = {
@@ -853,7 +855,7 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
       s"no such materialized view: $db.$name")
     deleteRecursively(tablePath(db, name))
     bumpMvGen()
-    invalidate()
+    clock.catalogChanged()
   }
 
   /** The insert trigger: transform the freshly-landed block (ONLY the
@@ -970,63 +972,55 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
     * every store table registered, running the translated remote SQL.
     *
     * Cached per store root (a real server keeps its catalog resident; a
-    * rebuild per query is pure overhead growing with store size) and
-    * invalidated by a version counter bumped on every DDL / insert /
-    * attach — the registered temp views capture the part-file list, so
-    * any mutation must force re-registration. Single-JVM by design: the
-    * embedded store is a test double, and local-mode executors share the
-    * driver's companion object.
+    * rebuild per query is pure overhead growing with store size). A write
+    * keeps the session: the temp views capture a table's part-file list,
+    * and each view and prepared statement re-resolves once a table it
+    * reads has changed since (the store's [[EmbeddedClickHouse.StoreClock]]).
+    * Single-JVM by design: the embedded store is a test double, and
+    * local-mode executors share the driver's companion object.
     */
   private def serverEntry(): EmbeddedClickHouse.CachedServer = {
     val active = SparkSession.active
-    val v = EmbeddedClickHouse.storeVersion(root).get()
     val cached = EmbeddedClickHouse.sessionCache.get(connectionKey)
-    if (cached != null && (cached.parent eq active)) {
-      // store mutated since last query: keep the child session (UDFs and
-      // unchanged views stay), drop only the prepared-statement cache —
-      // stale views refresh lazily per referenced table (ensureViews)
-      if (cached.version != v) { cached.dropPrepared(); cached.version = v }
-      return cached
-    }
-    val entry = new EmbeddedClickHouse.CachedServer(
-      buildServerSession(active), v, active,
-      new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.DataFrame],
-      new java.util.concurrent.ConcurrentHashMap[(String, String), java.lang.Long])
+    if (cached != null && (cached.parent eq active)) return cached
+    val entry = new EmbeddedClickHouse.CachedServer(buildServerSession(active), active, clock)
     EmbeddedClickHouse.sessionCache.put(connectionKey, entry)
     entry
   }
 
-  /** Register (or refresh) the temp views a translated SQL references, at
-    * the current store version. Only referenced tables pay the parquet
-    * (re-)listing; everything else keeps its registered view.
+  /** Register (or refresh) the temp views a translated SQL references,
+    * and record the tables it reads for the statement being prepared.
+    * Only referenced tables pay the parquet (re-)listing; everything else
+    * keeps its registered view.
     */
   private def ensureViews(
       entry: EmbeddedClickHouse.CachedServer,
       translatedSql: String,
-      tables: Seq[(String, String)]): Unit = {
-    val v = entry.version
-    tables.foreach { case (db, t) =>
-      if (EmbeddedClickHouse.referencesView(translatedSql, ChSqlTranslator.viewName(db, t)))
-        refreshView(entry, (db, t), v)(registerView(entry.session, db, t))
+      tables: Seq[(String, String)]): Unit =
+    entry.reads(tables.filter { case (db, t) =>
+      def refs(view: String) = EmbeddedClickHouse.referencesView(translatedSql, view)
+      val plain = refs(ChSqlTranslator.viewName(db, t))
+      if (plain) refreshView(entry, (db, t), (db, t))(registerView(entry.session, db, t))
       // sequence-bearing view (order-dependent collapses): registered
-      // only when a rewrite referenced it, versioned like any view
-      if (EmbeddedClickHouse.referencesView(translatedSql, EmbeddedClickHouse.seqViewName(db, t)))
-        refreshView(entry, (db, t + " seq"), v)(registerSeqView(entry.session, db, t))
-    }
-  }
+      // only when a rewrite referenced it
+      val seq = refs(EmbeddedClickHouse.seqViewName(db, t))
+      if (seq) refreshView(entry, (db, t + " seq"), (db, t))(registerSeqView(entry.session, db, t))
+      // the `_part` view registers in rewritePartVirtual
+      plain || seq || refs(EmbeddedClickHouse.partViewName(db, t))
+    })
 
-  /** Run `register` unless the view under `key` is registered at store
-    * version `v`.
+  /** Run `register` unless the view under `key` is fresh for `table`,
+    * one registration per key at a time. `at`, the counter value the
+    * view is stamped with, must be read before `register`'s file listing:
+    * a racing write then leaves the view stale, never fresh.
     */
   private def refreshView(
-      entry: EmbeddedClickHouse.CachedServer, key: (String, String), v: Long)(
-      register: => Unit): Unit = {
-    val reg = entry.viewVersions.get(key)
-    if (reg == null || reg.longValue != v) {
-      register
-      entry.viewVersions.put(key, java.lang.Long.valueOf(v))
-    }
-  }
+      entry: EmbeddedClickHouse.CachedServer, key: (String, String),
+      table: (String, String), at: Long = clock.counter.get)(
+      register: => Unit): Unit =
+    entry.viewVersions.compute(key, (_, reg) =>
+      if (reg != null && clock.fresh(reg, Seq(table))) reg
+      else { register; java.lang.Long.valueOf(at) })
 
   /** Register the table's rows EXTENDED with a per-row insert sequence
     * `__ch_seq` (part insert order × row position within the part) under
@@ -1133,8 +1127,9 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
 
   /** Synthesize a system table's rows from live store metadata. Runs
     * driver-side at view (re-)registration; rows are metadata-scale.
-    * Version-gated like every view (ensureViews), so any store mutation
-    * refreshes the snapshot on the next query that touches it.
+    * Refreshed like every view (ensureViews); a system table reads every
+    * table, so any write refreshes the snapshot on the next query that
+    * touches it.
     */
   private def systemRows(t: String): Seq[Row] = {
     val realDbs = listDatabases().filterNot(isSystem)
@@ -1176,6 +1171,12 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
 
   private def buildServerSession(active: SparkSession): SparkSession = {
     val child = active.newSession()
+    // a view's parquet read gets the part files dataFiles already listed;
+    // past the default 32 paths, InMemoryFileIndex would list them again
+    // in a distributed job on every (re-)registration
+    child.conf.set(
+      org.apache.spark.sql.internal.SQLConf.PARALLEL_PARTITION_DISCOVERY_THRESHOLD.key,
+      Int.MaxValue.toLong)
     // ClickHouse's length() is polymorphic over strings/arrays — and for
     // String returns BYTES (the round-14 Java-UDF shim returned UTF-16
     // units, silently diverging on multi-byte text; VERDICT r14 item 4).
@@ -1691,9 +1692,10 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
 
   /** A read statement through the prepared-statement cache: a server
     * keeps prepared statements; repeated identical remote SQL (bench
-    * iterations, re-planned scans) skips parse+analysis. Keyed inside
-    * the per-version entry, so any store mutation drops it with the
-    * session. Bounded: runtime-filter literals make distinct SQL per
+    * iterations, re-planned scans) skips parse+analysis. A statement is
+    * re-resolved only after a table it reads, or the catalog, changed: a
+    * write to one table leaves every other table's statements warm.
+    * Bounded: runtime-filter literals make distinct SQL per
     * execution, so the cache keeps the
     * [[EmbeddedClickHouse.PreparedStatements]] most recently used
     * statements rather than growing without limit on long read-only
@@ -1837,8 +1839,8 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
 
   private def ensurePartView(
       entry: EmbeddedClickHouse.CachedServer, db: String, t: String): String = {
-    val name = ChSqlTranslator.viewName(db, t) + "__parts"
-    refreshView(entry, (s"__vpart__$db.$t", ""), EmbeddedClickHouse.storeVersion(root).get()) {
+    val name = EmbeddedClickHouse.partViewName(db, t)
+    refreshView(entry, (s"__vpart__$db.$t", ""), (db, t)) {
       val child = entry.session
       import org.apache.spark.sql.functions.lit
       val schema = sparkSchema(db, t)
@@ -1875,6 +1877,7 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
       }
       val defs = listProjections(db, t)
       if (defs.isEmpty) return base
+      val at = clock.counter.get // before the listing the view registers
       val live = dataFiles(db, t).map(f => Paths.get(f).getFileName.toString)
       if (live.isEmpty) return base
       val tableRef = s"`$db`.`$t`"
@@ -1887,8 +1890,7 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
             .foreach { ps =>
               val swapped =
                 try {
-                  refreshView(entry, (s"__proj__$db.$t", d.name),
-                    EmbeddedClickHouse.storeVersion(root).get()) {
+                  refreshView(entry, (s"__proj__$db.$t", d.name), (db, t), at) {
                     entry.session.read.parquet(live.map(n =>
                       projDataDir(db, t, d.name).resolve(n).toString): _*)
                       .createOrReplaceTempView(viewRef)
@@ -2301,7 +2303,7 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
     // the per-partition streaming shape of the reference's sink
     val (n, landed) = ParquetBlockWriter.writeBlockAt(
       tablePath(db, table), sparkSchema(db, table), reorderToSink(db, table, schema, rows))
-    invalidate()
+    clock.tableChanged(db, table)
     fireMaterializedViews(db, table, Seq(landed))
     n
   }
@@ -2386,7 +2388,6 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
     val snapshot = dataFiles(db, table)
     publishStaged(db, table, "mutate", result, fire = false)(_ =>
       snapshot.foreach(f => Files.deleteIfExists(Paths.get(f))))
-    invalidate()
   }
 
   override def insertSelect(db: String, table: String, chSelectSql: String): Long = {
@@ -2534,7 +2535,7 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
       // message raced the failure and never reached BatchWrite.abort —
       // the next successful write to the table reaps anything past TTL
       reapStaleWriteDirs(db, table)
-      invalidate()
+      clock.tableChanged(db, table)
       if (projs.nonEmpty) pruneProjectionOrphans(db, table)
       if (fire) fireMaterializedViews(db, table, landed)
     }
@@ -2547,7 +2548,8 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
     require(!marker.contains("/") && !marker.contains(".."), s"invalid marker: $marker")
     val dir = tablePath(db, table).resolve(".epochs")
     Files.createDirectories(dir)
-    try { Files.createFile(dir.resolve(marker)); true }
+    // the marker is the epoch's visibility switch (dataFiles)
+    try { Files.createFile(dir.resolve(marker)); clock.tableChanged(db, table); true }
     catch { case _: java.nio.file.FileAlreadyExistsException => false }
   }
 
@@ -2592,7 +2594,6 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
           .filter(_.getFileName.toString.endsWith(".parquet")))
     }
     reapStaleWriteDirs(db, table)
-    invalidate()
   }
 
   /** Orphan reaping: staging dirs from hard-crashed tasks and epoch dirs
@@ -2620,9 +2621,6 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
     if (Files.exists(p)) {
       NioFiles.walk(p).reverse.foreach(Files.delete)
     }
-
-  /** Bump the store version so the next query re-registers views. */
-  private def invalidate(): Unit = EmbeddedClickHouse.invalidate(root)
 
   // store-open crash recovery: a process that died mid-EXCHANGE leaves a
   // journal + temp dir; repair before this client serves its first read
@@ -2745,44 +2743,122 @@ object EmbeddedClickHouse {
     override def close(): Unit = if (cur != null) cur.close()
   }
 
-  private[client] final class CachedServer(
-      val session: SparkSession,
-      @volatile var version: Long,
-      val parent: SparkSession,
-      val dfCache: java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.DataFrame],
-      // (db, table) -> store version its temp view was registered at:
-      // views refresh LAZILY, one table at a time, only when a query
-      // references them at a newer version — a real server never re-reads
-      // its whole catalog because one table got an insert
-      val viewVersions: java.util.concurrent.ConcurrentHashMap[(String, String), java.lang.Long]) {
+  /** A store root's change clock: one monotonic counter, the value it
+    * reached at each table's last part-set change, and the value at the
+    * last catalog change (DDL). State resolved at counter value `at`, read
+    * before its file listing, is fresh while neither the catalog nor a
+    * table it reads changed after `at`; a concurrent write can then only
+    * make it stale, never fresh. A `system` table reads every table.
+    */
+  private[client] final class StoreClock {
+    val counter = new java.util.concurrent.atomic.AtomicLong(0L)
+    private val catalog = new java.util.concurrent.atomic.AtomicLong(0L)
+    private val tables =
+      new java.util.concurrent.ConcurrentHashMap[(String, String), java.lang.Long]
 
-    // recency of the dfCache keys, eldest first; guarded by itself
+    /** A write that changed the part set of `db`.`table` only. */
+    def tableChanged(db: String, table: String): Unit = {
+      val v: java.lang.Long = counter.incrementAndGet()
+      tables.merge((db, table), v, (a, b) => if (a.longValue >= b.longValue) a else b)
+    }
+
+    /** DDL, or any change not known to touch one table's parts only. */
+    def catalogChanged(): Unit =
+      catalog.accumulateAndGet(counter.incrementAndGet(), math.max(_, _))
+
+    def fresh(at: Long, reads: Iterable[(String, String)]): Boolean =
+      at >= catalog.get && reads.forall { case (db, t) =>
+        if (db == "system") at >= counter.get
+        else {
+          val c = tables.get((db, t))
+          c == null || at >= c
+        }
+      }
+  }
+
+  /** A prepared statement's resolution: the counter value read before it
+    * listed any file, and the tables it reads.
+    */
+  private final case class Stamp(at: Long, reads: Set[(String, String)])
+
+  private[client] final class CachedServer(
+      val session: SparkSession, val parent: SparkSession, clock: StoreClock) {
+
+    /** Prepared statements by their ClickHouse SQL. */
+    val dfCache = new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.DataFrame]
+
+    // view key -> store counter value its temp view was registered at:
+    // views refresh LAZILY, one at a time, only when a query references
+    // them after a table they read changed — a real server never re-reads
+    // its whole catalog because one table got an insert
+    val viewVersions = new java.util.concurrent.ConcurrentHashMap[(String, String), java.lang.Long]
+
+    /** Store counter value at the last sweep of stale statements. */
+    @volatile var version: Long = clock.counter.get
+
+    private val stamps = new java.util.concurrent.ConcurrentHashMap[String, Stamp]
+    // recency of the dfCache keys, eldest first; guarded by itself, and
+    // taken before any dfCache key's lock, never inside one
     private val recency = new java.util.LinkedHashMap[String, Unit](16, 0.75f, true)
+    // the tables read by the statement this thread is preparing
+    private val reading = new ThreadLocal[scala.collection.mutable.Set[(String, String)]]
 
     /** The prepared statement for `sql`, resolved at most once per key
-      * (computeIfAbsent) and kept among the [[PreparedStatements]] most
-      * recently used: an entry enters `recency` only after it is in
-      * `dfCache`, and leaves both together, so eviction never drops a
-      * statement that is being resolved.
+      * and store state (`compute` excludes concurrent resolvers of the
+      * same key) and kept among the [[PreparedStatements]] most recently
+      * used: an entry enters `recency` only after it is in `dfCache`, so
+      * eviction never drops a statement that is being resolved. An entry
+      * stays until a table it reads, or the catalog, changes; the first
+      * call after a write drops every entry that write made stale.
       */
     def prepared(sql: String)(resolve: String => org.apache.spark.sql.DataFrame)
         : org.apache.spark.sql.DataFrame = {
-      val df = dfCache.computeIfAbsent(sql, k => resolve(k))
+      sweep()
+      val df = dfCache.compute(sql, (k, old) =>
+        if (old != null && isFresh(k)) old
+        else {
+          val at = clock.counter.get
+          val reads = scala.collection.mutable.Set.empty[(String, String)]
+          reading.set(reads)
+          val df = try resolve(k) finally reading.remove()
+          stamps.put(k, Stamp(at, reads.toSet))
+          df
+        })
       recency.synchronized {
         recency.put(sql, ())
         if (recency.size > PreparedStatements) {
           val eldest = recency.keySet.iterator.next()
           recency.remove(eldest)
-          dfCache.remove(eldest)
+          drop(eldest, onlyStale = false)
         }
       }
       df
     }
 
-    /** Drop every prepared statement (the store version moved). */
-    def dropPrepared(): Unit = recency.synchronized {
-      recency.clear()
-      dfCache.clear()
+    /** Tables the statement being prepared on this thread reads. */
+    def reads(tables: Iterable[(String, String)]): Unit =
+      Option(reading.get).foreach(_ ++= tables)
+
+    private def isFresh(sql: String): Boolean = {
+      val s = stamps.get(sql)
+      s != null && clock.fresh(s.at, s.reads)
+    }
+
+    /** Drop `sql`'s statement (if `onlyStale`, only a stale one),
+      * atomically with any resolution of it; whether it is gone.
+      */
+    private def drop(sql: String, onlyStale: Boolean): Boolean =
+      dfCache.computeIfPresent(sql, (k, df) =>
+        if (onlyStale && isFresh(k)) df else { stamps.remove(k); null }) == null
+
+    private def sweep(): Unit = {
+      val now = clock.counter.get
+      if (now > version) recency.synchronized {
+        if (now > version) {
+          version = now
+          recency.keySet.removeIf(drop(_, onlyStale = true))
+        }
+      }
     }
   }
 
@@ -2795,16 +2871,15 @@ object EmbeddedClickHouse {
   private[client] val sessionCache =
     new java.util.concurrent.ConcurrentHashMap[String, CachedServer]
 
-  private val versions =
-    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]
+  private val clocks = new java.util.concurrent.ConcurrentHashMap[String, StoreClock]
 
-  private[client] def storeVersion(root: String): java.util.concurrent.atomic.AtomicLong =
-    versions.computeIfAbsent(
-      Paths.get(root).toAbsolutePath.toString,
-      _ => new java.util.concurrent.atomic.AtomicLong(0L))
+  private[client] def clock(root: String): StoreClock =
+    clocks.computeIfAbsent(Paths.get(root).toAbsolutePath.toString, _ => new StoreClock)
 
-  /** Any mutation of the store (DDL, insert, attach) must call this. */
-  def invalidate(root: String): Unit = storeVersion(root).incrementAndGet()
+  /** A change to the store's files made outside this client: every view
+    * and prepared statement over the store re-resolves.
+    */
+  def invalidate(root: String): Unit = clock(root).catalogChanged()
 
   // part-name insert sequence (ParquetBlockWriter naming): 16 fixed hex
   // digits right after the part- prefix
@@ -2816,6 +2891,10 @@ object EmbeddedClickHouse {
 
   private[client] def seqViewName(db: String, table: String): String =
     s"__ch_seqv_${db}_$table"
+
+  /** The `_part`-carrying view of a table ([[rewritePartVirtual]]). */
+  private[client] def partViewName(db: String, table: String): String =
+    ChSqlTranslator.viewName(db, table) + "__parts"
 
   // per-root JVM monitor for EXCHANGE TABLES: FileChannel.lock throws on
   // same-JVM contention, so threads serialize here before taking the OS lock

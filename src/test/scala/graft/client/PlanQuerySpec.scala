@@ -115,6 +115,39 @@ class PlanQuerySpec extends AnyFunSuite {
     } finally pool.shutdown()
   }
 
+  test("a stale prepared statement re-resolves exactly once under concurrency") {
+    val client = store()
+    val sql = "SELECT count(*) FROM `db`.`t`"
+    client.describeQuery(sql)
+    val entry = EmbeddedClickHouse.sessionCache.get(client.connectionKey)
+    val stale = entry.dfCache.get(sql)
+    client.insert("db", "t", client.sparkSchema("db", "t"), Seq(Row(0L)))
+    val resolves = new AtomicInteger
+    val df = spark.range(1).toDF()
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    try {
+      val got = Await.result(Future.sequence((0 until 8).map(_ => Future {
+        entry.prepared(sql) { _ =>
+          resolves.incrementAndGet(); Thread.sleep(100); df
+        }
+      })), 30.seconds)
+      assert(resolves.get == 1 && got.forall(_ eq df) && !(stale eq df))
+    } finally pool.shutdown()
+  }
+
+  test("a view over more than 32 parts registers without a file-listing job " +
+    "and reads every part") {
+    val client = store()
+    (2L to 40L).foreach(i =>
+      client.insert("db", "t", client.sparkSchema("db", "t"), Seq(Row(-i))))
+    val sql = "SELECT count(*) AS `c`, sum(`id`) AS `s` FROM `db`.`t`"
+    val (jobs, _) = counted(client.describeQuery(sql))
+    assert(jobs == 0, s"$jobs jobs while registering a 40-part view")
+    val row = client.query(sql, 1)._2.flatten.head
+    assert(row.getLong(0) == 2039L && row.getLong(1) == 2001000L - (2L to 40L).sum)
+  }
+
   test("a spill dir older than the TTL is reaped on the first planQuery; " +
     "later plans within the reap interval do not list the spill root") {
     val client = store()
