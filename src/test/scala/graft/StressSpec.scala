@@ -5,6 +5,7 @@ import java.util.concurrent.Executors
 
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -134,9 +135,50 @@ class StressSpec extends AnyFunSuite {
       "SELECT `id` FROM `db`.`fan3` WHERE `id` % 2 = 1 ORDER BY `id` DESC", 4)
     assert(ordered.flatMap(h => client.readPartition(h)).map(_.getLong(0)) ==
       (1L to 2100L).filter(_ % 2 == 1).reverse)
+    def resultDirs = {
+      val spill = java.nio.file.Paths.get(root, ".spill")
+      if (!Files.isDirectory(spill)) Set.empty[String]
+      else Files.list(spill).toArray.map(_.toString).toSet
+    }
+    val dirsBefore = resultDirs
     val (_, empty) = client.planQuery(
       "SELECT `id` FROM `db`.`fan3` WHERE `id` < 0", 4)
     assert(empty.size == 1 && client.readPartition(empty.head).isEmpty)
+    assert(resultDirs == dirsBefore, "an empty result left a spill dir")
+  }
+
+  test("a planned bare read returns its planned rows after a merge, DELETE, " +
+    "TRUNCATE or DROP PARTITION removes the parts it reads") {
+    spark // session up
+    val client = new EmbeddedClickHouse(root)
+    val writes: Seq[(String, String => Unit)] = Seq(
+      "optimize final" -> (t => client.optimizeTable("db", t, finalize = true)),
+      "delete" -> (t => client.deleteWhere("db", t, "`id` % 2 = 0")),
+      "truncate" -> (t => client.truncateTable("db", t)),
+      "drop partition" -> (t => client.dropPartition("db", t, "1")))
+    writes.zipWithIndex.foreach { case ((name, write), n) =>
+      val t = s"race$n"
+      client.createTable("db", t, Seq("id" -> "Int64", "p" -> "Int64"),
+        Map("engine" -> "MergeTree", "order_by" -> "id", "partition_by" -> "p"))
+      val schema = client.sparkSchema("db", t)
+      (0 until 3).foreach(b => client.insert("db", t, schema,
+        (1L to 300L).map(i => Row(b * 300L + i, b.toLong))))
+      val planned = (1L to 900L).map(i => Seq(i, (i - 1) / 300))
+      val (rs, hs) = client.planQuery(s"SELECT * FROM `db`.`$t`", 4)
+      assert(hs.forall(_.isInstanceOf[graft.client.ChPartHandle]), name)
+      def parts = Files.list(java.nio.file.Paths.get(root, "db", t)).iterator.asScala
+        .map(_.getFileName.toString).filter(_.endsWith(".parquet")).toSet
+      val before = parts
+      write(t)
+      assert(!before.subsetOf(parts), s"$name removed no part")
+      val byRow = hs.flatMap(h => client.readPartition(h)).map(_.toSeq)
+      assert(byRow.sortBy(_.head.asInstanceOf[Long]) == planned, s"row path after $name")
+      val de = org.apache.spark.sql.catalyst.encoders.ExpressionEncoder(rs)
+        .resolveAndBind().createDeserializer()
+      val byBatch = hs.flatMap(h => client.readPartitionColumnar(h, rs).flatMap(b =>
+        b.rowIterator.asScala.map(r => de(r.copy()).toSeq)))
+      assert(byBatch.sortBy(_.head.asInstanceOf[Long]) == planned, s"columnar path after $name")
+    }
   }
 
   test("over-subscription: 24 concurrent scans on a 2-stream catalog all " +

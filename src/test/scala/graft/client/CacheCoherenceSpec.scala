@@ -71,7 +71,11 @@ class CacheCoherenceSpec extends AnyFunSuite {
       "system.parts" -> ("SELECT `table`, count(*) AS `n`, sum(`rows`) AS `r` FROM " +
         s"`system`.`parts` WHERE `database` = '$db' GROUP BY `table`"),
       "projection" -> s"SELECT `g`, sum(`v`) AS `s` FROM ${q("pj")} GROUP BY `g`",
-      "view target" -> s"SELECT `k`, `w` FROM ${q("mt")}")
+      "view target" -> s"SELECT `k`, `w` FROM ${q("mt")}",
+      // bare column reads: served from the parts, not a spill
+      "bare m" -> s"SELECT * FROM ${q("m")}",
+      "bare r" -> s"SELECT * FROM ${q("r")}",
+      "bare pj" -> s"SELECT * FROM ${q("pj")}")
 
     private def mRows(n: Int): Seq[Row] =
       Seq.fill(n)(Row(1L + rnd.nextInt(8), rnd.nextInt(3).toLong, rnd.nextInt(100).toLong))
@@ -180,7 +184,8 @@ class CacheCoherenceSpec extends AnyFunSuite {
     }
     info(s"reads served warm after a step that wrote, over ${Seeds * Steps} steps: " +
       hits.map { case (k, v) => s"$k $v" }.mkString(", "))
-    Seq("point", "aggregate", "join", "final", "_part", "projection", "view target")
+    Seq("point", "aggregate", "join", "final", "_part", "projection", "view target",
+      "bare m", "bare r", "bare pj")
       .foreach(shape => assert(hits.getOrElse(shape, 0) > 0,
         s"the $shape read never stayed warm across a write"))
   }
