@@ -3,33 +3,35 @@ package graft.client
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.types.{StructField, StructType}
 
-import graft.sql.{ChClauses, ChLex}
 import graft.types.ClickHouseType
 
-/** Embedded, parquet-backed stand-in for a ClickHouse server (the dev
-  * sandbox has no server — this mirrors the reference's `mocks` transport,
-  * /root/reference/src/connection.rs:1-37, but executes real queries so
-  * the entire pushdown path is exercised hermetically).
+/** Embedded, parquet-backed stand-in for a ClickHouse server (the
+  * reference's `mocks` transport, `src/connection.rs`, but executing real
+  * queries, so the entire pushdown path is exercised hermetically).
   *
   * Store layout: `<root>/<db>/<table>/table.meta` (TSV: columns with
   * ClickHouse types, engine options, external data paths) plus inserted
-  * parquet part files. "Remote" SQL — the ClickHouse dialect our unparser
-  * generates — is translated by [[ChSqlTranslator]] and executed on an
-  * isolated child SparkSession, standing in for the server's own engine.
-  *
-  * Driver-side only: `query` runs at plan/execute time on the driver and
-  * partitions the result into `numStreams` groups (a real client would
-  * stream per shard); `insert` lands parquet part files atomically.
+  * parquet part files. This class is the store: metadata, DDL, ALTER,
+  * part listings, projections, materialized views, system tables and the
+  * staged and epoch write protocols. "Remote" SQL — the ClickHouse dialect
+  * our unparser generates — resolves in [[EmbeddedStatements]] on an
+  * isolated child SparkSession standing in for the server's own engine,
+  * and [[EmbeddedReads]] plans it into stream handles and reads them.
+  * Per-root state shared by every client of one root lives in
+  * [[EmbeddedClickHouse.RootState]].
   */
 final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
 
   override def connectionKey: String = s"embedded:${Paths.get(root).toAbsolutePath}"
 
-  // looked up again where the client is deserialized (write tasks)
-  @transient private lazy val clock = EmbeddedClickHouse.clock(root)
+  // looked up again where the client is deserialized (read and write tasks)
+  @transient private[client] lazy val state = EmbeddedClickHouse.rootState(root)
+  @transient private[client] lazy val clock = state.clock
+  @transient private[client] lazy val statements = new EmbeddedStatements(this)
+  @transient private lazy val reads = new EmbeddedReads(this)
 
   // every write and DDL moves the store's one counter, so its value is a
   // change-detectable data token; it stays store-wide (not per table)
@@ -51,7 +53,7 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
   // Count columns are declared Int64 rather than the server's UInt64:
   // UInt64 maps to DECIMAL(20,0) on the Spark side and metadata counts
   // never approach 2^63 (deliberate width narrowing, documented here).
-  private def isSystem(db: String): Boolean = db == "system"
+  private[client] def isSystem(db: String): Boolean = db == "system"
 
   private val systemSchemas: Map[String, Seq[(String, String)]] = Map(
     "databases" -> Seq("name" -> "String"),
@@ -98,7 +100,7 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
     if (isSystem(db)) systemSchemas.contains(table)
     else Files.exists(metaPath(db, table))
 
-  private def readMeta(db: String, table: String): (Seq[(String, String)], Map[String, String], Seq[String]) = {
+  private[client] def readMeta(db: String, table: String): (Seq[(String, String)], Map[String, String], Seq[String]) = {
     if (isSystem(db)) {
       require(systemSchemas.contains(table), s"no such table: $db.$table")
       return (systemSchemas(table), Map("engine" -> "SystemTable"), Seq.empty)
@@ -113,6 +115,19 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
     }.toMap
     val ext = lines.collect { case l if l.startsWith("external\t") => l.split("\t", 2)(1) }
     (cols, opts, ext)
+  }
+
+  /** A table a write rewrites in place, with its columns and options:
+    * not a system table, existing, and without attached external data
+    * (a zero-copy view over files the store does not own is read-only).
+    */
+  private def ownedTable(
+      db: String, table: String, what: String): (Seq[(String, String)], Map[String, String]) = {
+    rejectSystem(db, s"$what $db.$table")
+    require(tableExists(db, table), s"no such table: $db.$table")
+    val (cols, opts, ext) = readMeta(db, table)
+    require(ext.isEmpty, s"$what $db.$table: table has attached external data (read-only)")
+    (cols, opts)
   }
 
   override def fetchColumns(db: String, table: String): Seq[(String, String)] =
@@ -132,8 +147,7 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
 
   override def dropDatabase(db: String): Unit = {
     rejectSystem(db, "DROP DATABASE")
-    bumpMvGen() // the database may carry view.meta dirs
-    deleteRecursively(dbPath(db))
+    NioFiles.deleteRecursively(dbPath(db))
     clock.catalogChanged()
   }
 
@@ -173,8 +187,7 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
 
   override def dropTable(db: String, table: String): Unit = {
     rejectSystem(db, s"DROP TABLE $db.$table")
-    if (Files.exists(mvMetaPath(db, table))) bumpMvGen() // DROP TABLE on a view
-    deleteRecursively(tablePath(db, table))
+    NioFiles.deleteRecursively(tablePath(db, table))
     clock.catalogChanged()
   }
 
@@ -188,12 +201,8 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
     * Nullable→non-Nullable re-checks the data and rejects on any NULL.
     */
   override def alterTable(db: String, table: String, ops: Seq[ChAlterOp]): Unit = {
-    rejectSystem(db, s"ALTER TABLE $db.$table")
-    require(tableExists(db, table), s"no such table: $db.$table")
+    val (cols, opts) = ownedTable(db, table, "ALTER TABLE")
     require(ops.nonEmpty, "ALTER TABLE requires at least one change")
-    val (cols, opts, ext) = readMeta(db, table)
-    require(ext.isEmpty,
-      s"ALTER TABLE $db.$table: table has attached external data (read-only)")
     val keyCols: Set[String] =
       Seq("order_by", "partition_by", "sampling", "primary_keys")
         .flatMap(opts.get)
@@ -205,7 +214,7 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
     // the one SQL round-trip: a plain SELECT * — every column transform
     // below is built from typed Column objects (no SQL casts to
     // mis-translate)
-    val base = resolveStatement(serverEntry(), s"SELECT * FROM $qt")
+    val base = statements.resolve(s"SELECT * FROM $qt")
 
     // fold ops over (name, chType, column-over-OLD-table); every op
     // validates against the state at ITS point in the sequence, like the
@@ -247,7 +256,7 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
         writeProjectionMeta(db, table,
           listProjections(db, table).filterNot(_.name == n)
             .map(p => (p.name, p.defSql)))
-        deleteRecursively(projDataDir(db, table, n))
+        NioFiles.deleteRecursively(projDataDir(db, table, n))
       case ChAlterOp.MaterializeProjection(n) =>
         val d = listProjections(db, table).find(_.name == n).getOrElse(
           throw new IllegalArgumentException(
@@ -332,27 +341,10 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
     * server's refusal to invent a composite default.
     */
   private def defaultColumn(
-      name: String, p: ClickHouseType.Parsed): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.types._
-    val dt = p.dataType
-    if (p.nullable) lit(null).cast(dt)
-    else dt match {
-      case ByteType | ShortType | IntegerType | LongType |
-           FloatType | DoubleType | _: DecimalType => lit(0).cast(dt)
-      case StringType => lit("")
-      case BooleanType => lit(false)
-      case DateType => to_date(lit("1970-01-01"))
-      case TimestampType | TimestampNTZType => timestamp_seconds(lit(0)).cast(dt)
-      case _: ArrayType => array().cast(dt)
-      case MapType(kt, vt, _) =>
-        map_from_arrays(
-          array().cast(ArrayType(kt, containsNull = false)),
-          array().cast(ArrayType(vt, containsNull = true))).cast(dt)
-      case other => throw new IllegalArgumentException(
-        s"ADD COLUMN '$name': no default for type ${other.sql} — add it as Nullable")
-    }
-  }
+      name: String, p: ClickHouseType.Parsed): org.apache.spark.sql.Column =
+    if (p.nullable) org.apache.spark.sql.functions.lit(null).cast(p.dataType)
+    else EmbeddedClickHouse.zeroValue(p.dataType).getOrElse(throw new IllegalArgumentException(
+      s"ADD COLUMN '$name': no default for type ${p.dataType.sql} — add it as Nullable"))
 
   /** TTL expressions must evaluate to Date/DateTime over the table's
     * columns — the server validates this at DDL time ("TTL expression
@@ -363,25 +355,28 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
     */
   private def validateTtl(
       db: String, table: String, cols: Seq[(String, String)], expr: String): Unit = {
-    val schema = ClickHouseType.toStructType(cols)
-    val empty = serverEntry().session
-      .createDataFrame(java.util.Collections.emptyList[Row](), schema)
-    val translated = ChSqlTranslator.translate(expr, Seq.empty)
-    val dt =
-      try empty.selectExpr(translated).schema.head.dataType
-      catch { case e: Exception => throw new IllegalArgumentException(
-        s"TTL expression '$expr' does not resolve over $db.$table: " +
-          e.getMessage, e) }
+    val dt = resolvedType(cols, ChSqlTranslator.translate(expr, Seq.empty))(e =>
+      s"TTL expression '$expr' does not resolve over $db.$table: ${e.getMessage}")
     import org.apache.spark.sql.types.{DateType, TimestampNTZType, TimestampType}
     require(dt == DateType || dt == TimestampType || dt == TimestampNTZType,
       s"TTL expression '$expr' on $db.$table must evaluate to Date or " +
         s"DateTime, not ${dt.sql}")
   }
 
+  /** The type a Spark SQL expression resolves to over a table with
+    * columns `cols` (analysis only, no row read), or a rejection with
+    * `message`.
+    */
+  private def resolvedType(cols: Seq[(String, String)], sparkExpr: String)(
+      message: Exception => String): org.apache.spark.sql.types.DataType =
+    try statements.session.createDataFrame(java.util.Collections.emptyList[Row](),
+      ClickHouseType.toStructType(cols)).selectExpr(sparkExpr).schema.head.dataType
+    catch { case e: Exception => throw new IllegalArgumentException(message(e), e) }
+
   /** OPTIMIZE as part rewrite: consolidates every part into one; FINAL
     * on a ReplacingMergeTree(ver) table materializes the max-version
     * survivor set (the same rule FINAL reads apply on the fly, via
-    * [[rewriteStorage]]), so subsequent plain reads see the deduped rows —
+    * [[EmbeddedStatements]]' FINAL rewrite), so subsequent plain reads see the deduped rows —
     * the server's documented OPTIMIZE FINAL semantics. FINAL on engines
     * without a version column is a plain consolidation (no row change).
     * A declared row TTL is applied here — merges are where the server
@@ -390,11 +385,7 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
     * server between merges.
     */
   override def optimizeTable(db: String, table: String, finalize: Boolean): Unit = {
-    rejectSystem(db, s"OPTIMIZE TABLE $db.$table")
-    require(tableExists(db, table), s"no such table: $db.$table")
-    val (_, opts, ext) = readMeta(db, table)
-    require(ext.isEmpty,
-      s"OPTIMIZE TABLE $db.$table: table has attached external data (read-only)")
+    val (_, opts) = ownedTable(db, table, "OPTIMIZE TABLE")
     val qt = graft.sql.ChSql.quoteTable(db, table)
     val engine = opts.getOrElse("engine", "")
     val replacing = "ReplacingMergeTree\\([^)]+\\)".r
@@ -416,7 +407,7 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
     val src =
       if ((finalize && replacing) || summing) s"SELECT * FROM $qt FINAL"
       else s"SELECT * FROM $qt"
-    val base = resolveStatement(serverEntry(), src, keepTombstones = true)
+    val base = statements.resolve(src, keepTombstones = true)
     val merged = opts.get("ttl").foldLeft(base) { (df, e) =>
       val te = ChSqlTranslator.translate(e, Seq.empty)
       df.where(s"NOT coalesce(($te) <= now(), false)")
@@ -481,14 +472,10 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
     */
   override def optimizeDeduplicate(
       db: String, table: String, byColumns: Seq[String]): Unit = {
-    rejectSystem(db, s"OPTIMIZE DEDUPLICATE $db.$table")
-    require(tableExists(db, table), s"no such table: $db.$table")
-    val (cols, _, ext) = readMeta(db, table)
-    require(ext.isEmpty,
-      s"OPTIMIZE DEDUPLICATE $db.$table: table has attached external data")
+    val (cols, _) = ownedTable(db, table, "OPTIMIZE DEDUPLICATE")
     byColumns.foreach(c => require(cols.exists(_._1 == c),
       s"OPTIMIZE DEDUPLICATE $db.$table: no such column '$c'"))
-    val df = resolveStatement(serverEntry(),
+    val df = statements.resolve(
       s"SELECT * FROM ${graft.sql.ChSql.quoteTable(db, table)}")
     val merged =
       if (byColumns.isEmpty) df.distinct()
@@ -512,17 +499,13 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
     * replayed streaming epoch can land again post-truncate.
     */
   override def truncateTable(db: String, table: String): Unit = {
-    rejectSystem(db, s"TRUNCATE TABLE $db.$table")
-    require(tableExists(db, table), s"no such table: $db.$table")
-    val (_, _, ext) = readMeta(db, table)
-    require(ext.isEmpty,
-      s"TRUNCATE TABLE $db.$table: table has attached external data (read-only)")
+    ownedTable(db, table, "TRUNCATE TABLE")
     val dir = tablePath(db, table)
     NioFiles.list(dir).iterator
       .filter(_.getFileName.toString.endsWith(".parquet"))
       .foreach(Files.delete)
     for (sub <- Seq(".epoch-parts", ".epochs"))
-      deleteRecursively(dir.resolve(sub))
+      NioFiles.deleteRecursively(dir.resolve(sub))
     clock.tableChanged(db, table)
   }
 
@@ -540,7 +523,7 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
   override def exchangeTables(db: String, a: String, db2: String, b: String): Unit = {
     rejectSystem(db, s"EXCHANGE TABLES $db.$a")
     rejectSystem(db2, s"EXCHANGE TABLES $db2.$b")
-    EmbeddedClickHouse.exchangeMonitor(root).synchronized {
+    state.exchange.synchronized {
       StoreLock.withLockNamed(s"exchange:${Paths.get(root).toAbsolutePath}") {
         recoverOrphanExchanges()
         require(tableExists(db, a), s"no such table: $db.$a")
@@ -618,7 +601,7 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
   private def projMetaPath(db: String, table: String): Path =
     tablePath(db, table).resolve("projections.meta")
 
-  private def projDataDir(db: String, table: String, name: String): Path =
+  private[client] def projDataDir(db: String, table: String, name: String): Path =
     tablePath(db, table).resolve(".projections").resolve(name)
 
   /** Declared projections of a table (empty for system / missing). */
@@ -653,15 +636,10 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
   private def validateProjectionDef(
       db: String, table: String, cols: Seq[(String, String)],
       d: ChProjections.ProjectionDef): Unit = {
-    val schema = ClickHouseType.toStructType(cols)
-    val empty = serverEntry().session
-      .createDataFrame(java.util.Collections.emptyList[Row](), schema)
     def resolve(frag: String, what: String): org.apache.spark.sql.types.DataType =
-      try empty.selectExpr(ChSqlTranslator.translateFragment(frag, Seq.empty))
-        .schema.head.dataType
-      catch { case e: Exception => throw new IllegalArgumentException(
+      resolvedType(cols, ChSqlTranslator.translateFragment(frag, Seq.empty))(e =>
         s"ADD PROJECTION ${d.name}: $what '$frag' does not resolve over " +
-          s"$db.$table: ${e.getMessage}", e) }
+          s"$db.$table: ${e.getMessage}")
     d.rawKeys.foreach(k => resolve(k, "GROUP BY key"))
     d.aggs.foreach { a =>
       if (a.arg.nonEmpty) {
@@ -689,7 +667,7 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
   private def buildProjectionPart(
       db: String, table: String, d: ChProjections.ProjectionDef,
       srcFile: Path, outName: String): Unit = {
-    val child = serverEntry().session
+    val child = statements.session
     val tmp = s"__ch_projsrc_${java.util.UUID.randomUUID.toString.replace("-", "")}"
     child.read.schema(sparkSchema(db, table)).parquet(srcFile.toString)
       .createOrReplaceTempView(tmp)
@@ -701,7 +679,7 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
       val staging = projRoot.resolve(s".build-${java.util.UUID.randomUUID}")
       df.write.parquet(staging.toString)
       val target = projRoot.resolve(outName)
-      if (Files.exists(target)) deleteRecursively(target)
+      if (Files.exists(target)) NioFiles.deleteRecursively(target)
       Files.move(staging, target, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
     } finally {
       child.catalog.dropTempView(tmp)
@@ -737,7 +715,7 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
         NioFiles.list(dir).iterator.foreach { c =>
           val n = c.getFileName.toString
           if (!n.startsWith(".build-") && !live.contains(n))
-            deleteRecursively(c)
+            NioFiles.deleteRecursively(c)
         }
     }
   }
@@ -755,26 +733,25 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
     EmbeddedClickHouse.MvDef(db, name, sDb, sT, tDb, tT, m("mview")(1))
   }
 
-  /** View definitions, memoized per MV-DDL generation: the lookup runs
-    * on EVERY insert commit (streaming sinks commit per batch), but the
-    * definition set only changes on view/table DDL — a store-version
-    * key would rescan per insert (inserts bump it). JVM-local like the
-    * store-version scheme itself.
+  /** View definitions, memoized on the store clock's catalog stamp: the
+    * lookup runs on EVERY insert commit (streaming sinks commit per
+    * batch), but the definition set only changes with DDL (or a change
+    * made outside this client, [[EmbeddedClickHouse.invalidate]]), and
+    * inserts stamp only their table. The stamp is read before the
+    * listing, so a racing DDL leaves the memo stale, never fresh.
     */
   private def allMvs: Seq[EmbeddedClickHouse.MvDef] = {
-    val v = EmbeddedClickHouse.mvVersion(root).get()
-    val cached = EmbeddedClickHouse.mvCache.get(root)
-    if (cached != null && cached._1 == v) cached._2
+    val at = clock.catalogStamp
+    val (memoAt, memo) = state.mvs
+    if (memoAt == at) memo
     else {
       val defs =
         for (db <- listDatabases().filterNot(isSystem);
              name <- listMaterializedViews(db)) yield readMv(db, name)
-      EmbeddedClickHouse.mvCache.put(root, (v, defs))
+      state.mvs = (at, defs)
       defs
     }
   }
-
-  private def bumpMvGen(): Unit = EmbeddedClickHouse.mvVersion(root).incrementAndGet()
 
   override def listMaterializedViews(db: String): Seq[String] = {
     val d = dbPath(db)
@@ -825,7 +802,7 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
     // the transform must resolve as it fires — over one block of the
     // source, here an empty one — and insert cleanly into the target
     val out =
-      try resolveStatement(serverEntry(), chSelectSql,
+      try statements.resolve(chSelectSql,
         block = Some(((srcDb, srcTable), Nil))).schema
       catch { case e: Exception => throw new IllegalArgumentException(
         s"CREATE MATERIALIZED VIEW $db.$name: select does not resolve: " +
@@ -846,15 +823,13 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
       // meta is line-based: flatten the select (SQL is whitespace-blind)
       s"mview\t$targetDb.$targetTable\t${chSelectSql.replaceAll("\\s+", " ").trim}",
       s"source\t$srcDb.$srcTable").asJava)
-    bumpMvGen()
     clock.catalogChanged()
   }
 
   override def dropMaterializedView(db: String, name: String): Unit = {
     require(Files.exists(mvMetaPath(db, name)),
       s"no such materialized view: $db.$name")
-    deleteRecursively(tablePath(db, name))
-    bumpMvGen()
+    NioFiles.deleteRecursively(tablePath(db, name))
     clock.catalogChanged()
   }
 
@@ -878,7 +853,7 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
       // during the trigger the source IS the inserted block (server
       // semantics)
       val sink = sparkSchema(m.targetDb, m.targetTable)
-      val out = resolveStatement(serverEntry(), m.select,
+      val out = statements.resolve(m.select,
         block = Some(((db, table), newFiles)))
         .select(sink.fieldNames.map(org.apache.spark.sql.functions.col).toSeq: _*)
       publishStaged(m.targetDb, m.targetTable, "mv", out, fire = true)(_ => ())
@@ -931,7 +906,7 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
     * uniquely named.
     */
   private def partRowCount(f: String): Long =
-    EmbeddedClickHouse.footerCounts(root).rows(f)
+    state.footerCounts.rows(f)
 
   override def tableRowCount(db: String, table: String): Option[Long] =
     if (isSystem(db) || !tableExists(db, table)) None
@@ -943,7 +918,7 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
       Some(dataFiles(db, table).map(partRowCount).sum)
     } catch { case _: Exception => None }
 
-  private def dataFiles(db: String, table: String): Seq[String] = {
+  private[client] def dataFiles(db: String, table: String): Seq[String] = {
     if (isSystem(db)) return Seq.empty
     val (_, _, ext) = readMeta(db, table)
     val dir = tablePath(db, table)
@@ -967,169 +942,6 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
     ext ++ parts ++ epochParts
   }
 
-  /** The "server engine": a child session of the active SparkSession with
-    * every store table registered, running the translated remote SQL.
-    *
-    * Cached per store root (a real server keeps its catalog resident; a
-    * rebuild per query is pure overhead growing with store size). A write
-    * keeps the session: the temp views capture a table's part-file list,
-    * and each view and prepared statement re-resolves once a table it
-    * reads has changed since (the store's [[EmbeddedClickHouse.StoreClock]]).
-    * Single-JVM by design: the embedded store is a test double, and
-    * local-mode executors share the driver's companion object.
-    */
-  private def serverEntry(): EmbeddedClickHouse.CachedServer = {
-    val active = SparkSession.active
-    val cached = EmbeddedClickHouse.sessionCache.get(connectionKey)
-    if (cached != null && (cached.parent eq active)) return cached
-    val entry = new EmbeddedClickHouse.CachedServer(buildServerSession(active), active, clock)
-    EmbeddedClickHouse.sessionCache.put(connectionKey, entry)
-    entry
-  }
-
-  /** Register (or refresh) the temp views a translated SQL references,
-    * and record the tables it reads for the statement being prepared.
-    * Only referenced tables pay the parquet (re-)listing; everything else
-    * keeps its registered view.
-    */
-  private def ensureViews(
-      entry: EmbeddedClickHouse.CachedServer,
-      translatedSql: String,
-      tables: Seq[(String, String)]): Unit =
-    entry.reads(tables.filter { case (db, t) =>
-      def refs(view: String) = EmbeddedClickHouse.referencesView(translatedSql, view)
-      val plain = refs(ChSqlTranslator.viewName(db, t))
-      if (plain) refreshView(entry, (db, t), (db, t))(registerView(entry.session, db, t))
-      // sequence-bearing view (order-dependent collapses): registered
-      // only when a rewrite referenced it
-      val seq = refs(EmbeddedClickHouse.seqViewName(db, t))
-      if (seq) refreshView(entry, (db, t + " seq"), (db, t))(registerSeqView(entry.session, db, t))
-      // the `_part` view registers in rewritePartVirtual
-      plain || seq || refs(EmbeddedClickHouse.partViewName(db, t))
-    })
-
-  /** Run `register` unless the view under `key` is fresh for `table`,
-    * one registration per key at a time. `at`, the counter value the
-    * view is stamped with, must be read before `register`'s file listing:
-    * a racing write then leaves the view stale, never fresh.
-    */
-  private def refreshView(
-      entry: EmbeddedClickHouse.CachedServer, key: (String, String),
-      table: (String, String), at: Long = clock.counter.get)(
-      register: => Unit): Unit =
-    entry.viewVersions.compute(key, (_, reg) =>
-      if (reg != null && clock.fresh(reg, Seq(table))) reg
-      else { register; java.lang.Long.valueOf(at) })
-
-  /** Register the table's rows EXTENDED with a per-row insert sequence
-    * `__ch_seq` (part insert order × row position within the part) under
-    * [[EmbeddedClickHouse.seqViewName]] — what order-dependent collapses
-    * (CollapsingMergeTree) read. Every part carries its sequence in its
-    * file name (ParquetBlockWriter / commitStagedFire / attach); a part
-    * without one predates sequence tracking and rejects loudly.
-    */
-  private def registerSeqView(child: SparkSession, db: String, t: String): Unit = {
-    import org.apache.spark.sql.functions.{col, lit}
-    val (_, _, ext) = readMeta(db, t)
-    require(ext.isEmpty,
-      s"$db.$t: attached external parquet carries no insert sequence — " +
-        "order-dependent collapses need store-owned parts")
-    val files = dataFiles(db, t)
-    val schema = sparkSchema(db, t)
-    val df =
-      if (files.isEmpty) {
-        val s2 = org.apache.spark.sql.types.StructType(schema.fields :+
-          org.apache.spark.sql.types.StructField("__ch_seq",
-            org.apache.spark.sql.types.LongType, nullable = false))
-        child.createDataFrame(java.util.Collections.emptyList[Row](), s2)
-      } else {
-        val withSeq = files.map { f =>
-          val n = Paths.get(f).getFileName.toString
-          val seq = EmbeddedClickHouse.partSeqOf(n).getOrElse(
-            throw new IllegalArgumentException(
-              s"$db.$t: part $n carries no insert sequence (written before " +
-                "sequence tracking) — its insertion order is unrecoverable " +
-                "and this engine's collapse is order-dependent; re-ingest " +
-                "the data into a fresh table"))
-          (f, seq)
-        }
-        // ordinal over seq-sorted parts × parquet row position: dense,
-        // overflow-free (seq values are wall-clock micros — shifting THEM
-        // would overflow Long)
-        // path tiebreak: two JVMs can mint the same wall-clock seq —
-        // the order is then arbitrary but must at least be DETERMINISTIC
-        //
-        // r18 (GateProfile r62: the FINAL collapse read ran a 28-task job
-        // over a 28-way per-part UNION): ONE multi-file scan with the
-        // part ordinal looked up from _metadata.file_name replaces the
-        // N-way union — plan size drops from O(parts) scan relations to
-        // one, which is what survives a 10K-part table at 100 TB. Safe
-        // here (unlike registerView's order-preserving Collapsing union,
-        // which must NOT bin-pack): every consumer of this view windows
-        // over the EXPLICIT __ch_seq value, never partition order.
-        // the ordinal map keys on the basename, and epoch parts live in
-        // per-epoch subdirs: two parts with one name would share a key
-        files.groupBy(f => Paths.get(f).getFileName.toString).collectFirst {
-          case (n, same) if same.size > 1 => throw new IllegalStateException(
-            s"$db.$t: parts ${same.mkString(" and ")} share the file name $n — " +
-              "the insertion order of their rows is ambiguous")
-        }
-        val ordered = withSeq.sortBy { case (f, seq) => (seq, f) }.zipWithIndex
-        val nameToIdx = ordered.flatMap { case ((f, _), i) =>
-          Seq(lit(Paths.get(f).getFileName.toString), lit(i.toLong))
-        }
-        val idx = org.apache.spark.sql.functions.element_at(
-          org.apache.spark.sql.functions.map(nameToIdx: _*),
-          col("_metadata.file_name"))
-        child.read.schema(schema).parquet(ordered.map(_._1._1): _*)
-          .select(col("*"),
-            (idx * lit(1L << 40) + col("_metadata.row_index"))
-              .as("__ch_seq"))
-      }
-    df.createOrReplaceTempView(EmbeddedClickHouse.seqViewName(db, t))
-  }
-
-  private def registerView(child: SparkSession, db: String, t: String): Unit = {
-    val df =
-      if (isSystem(db))
-        child.createDataFrame(systemRows(t).asJava, sparkSchema(db, t))
-      else {
-        val files = dataFiles(db, t)
-        if (files.isEmpty)
-          child.createDataFrame(java.util.Collections.emptyList[Row](), sparkSchema(db, t))
-        else if (readMeta(db, t)._2.getOrElse("engine", "")
-          .startsWith("CollapsingMergeTree"))
-          // insertion-ORDERED view: a multi-file parquet read bin-packs
-          // files by SIZE, which scrambles row order across parts — fatal
-          // for the one engine whose collapse is insertion-order-
-          // dependent. A union of per-file reads in sequence order keeps
-          // partition order = insertion order through every narrow plan,
-          // so mutation/ALTER rewrites republish rows in an order the
-          // next collapse can still trust (their staged part-0000N names
-          // follow partition index; publish stamps fresh seqs in that
-          // order). FINAL reads stay immune either way (explicit
-          // __ch_seq via the sequence view).
-          files.map { f =>
-            val n = Paths.get(f).getFileName.toString
-            // reject like registerSeqView: a legacy no-seq part would
-            // otherwise sort LAST here (it was inserted FIRST), and a
-            // mutation over this view would re-stamp fresh sequences in
-            // the wrong insertion order, corrupting future collapses
-            // (advisor r12)
-            val seq = EmbeddedClickHouse.partSeqOf(n).getOrElse(
-              throw new IllegalArgumentException(
-                s"$db.$t: part $n carries no insert sequence (written " +
-                  "before sequence tracking) — its insertion order is " +
-                  "unrecoverable, and CollapsingMergeTree collapses are " +
-                  "order-dependent; re-ingest the data into a fresh table"))
-            (f, seq)
-          }.sortBy { case (f, s) => (s, f) }
-            .map { case (f, _) => child.read.schema(sparkSchema(db, t)).parquet(f) }
-            .reduce(_ union _)
-        else child.read.schema(sparkSchema(db, t)).parquet(files: _*)
-      }
-    df.createOrReplaceTempView(ChSqlTranslator.viewName(db, t))
-  }
 
   /** Synthesize a system table's rows from live store metadata. Runs
     * driver-side at view (re-)registration; rows are metadata-scale.
@@ -1137,7 +949,7 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
     * table, so any write refreshes the snapshot on the next query that
     * touches it.
     */
-  private def systemRows(t: String): Seq[Row] = {
+  private[client] def systemRows(t: String): Seq[Row] = {
     val realDbs = listDatabases().filterNot(isSystem)
     t match {
       case "databases" => listDatabases().map(Row(_))
@@ -1157,7 +969,7 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
           yield Row(db, tb, n, ty, (i + 1).toLong)
       case "parts" =>
         val live = for (db <- realDbs; tb <- listTables(db); f <- dataFiles(db, tb)) yield (db, tb, f)
-        EmbeddedClickHouse.footerCounts(root).retain(live.map(_._3).toSet)
+        state.footerCounts.retain(live.map(_._3).toSet)
         for ((db, tb, f) <- live) yield {
           val p = Paths.get(f)
           val rows = try partRowCount(f) catch { case _: Exception => -1L }
@@ -1177,1228 +989,41 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
     }
   }
 
-  private def buildServerSession(active: SparkSession): SparkSession = {
-    val child = active.newSession()
-    // a view's parquet read gets the part files dataFiles already listed;
-    // past the default 32 paths, InMemoryFileIndex would list them again
-    // in a distributed job on every (re-)registration
-    child.conf.set(
-      org.apache.spark.sql.internal.SQLConf.PARALLEL_PARTITION_DISCOVERY_THRESHOLD.key,
-      Int.MaxValue.toLong)
-    // ClickHouse's length() is polymorphic over strings/arrays — and for
-    // String returns BYTES (the round-14 Java-UDF shim returned UTF-16
-    // units, silently diverging on multi-byte text; VERDICT r14 item 4).
-    // GraftLength is a codegen expression dispatching on the child type:
-    // UTF-8 byte count for strings/binary, element count for arrays/maps.
-    org.apache.spark.sql.graft.bridge.registerFunction(child, "graft_length",
-      args => {
-        require(args.size == 1, "graft_length(x)")
-        graft.functions.GraftLength(args.head)
-      })
-    // CH position() is a 1-based BYTE offset (locate counts codepoints)
-    org.apache.spark.sql.graft.bridge.registerFunction(child, "graft_position",
-      args => {
-        require(args.size == 2, "graft_position(haystack, needle)")
-        graft.functions.GraftBytePosition(args(0), args(1))
-      })
-    org.apache.spark.sql.graft.bridge.registerFunction(child,
-      "graft_position_from",
-      args => {
-        require(args.size == 3, "graft_position_from(haystack, needle, start)")
-        graft.functions.GraftBytePositionFrom(args(0), args(1), args(2))
-      })
-    org.apache.spark.sql.graft.bridge.registerFunction(child, "graft_rexp2",
-      args => {
-        require(args.size == 1, "graft_rexp2(x)")
-        graft.functions.GraftRoundToExp2(args.head)
-      })
-    // windowFunnel: the window and mode list arrive as literals
-    // prepended by the translator's parameterized-aggregate rewrite
-    org.apache.spark.sql.graft.bridge.registerFunction(child,
-      "graft_window_funnel",
-      args => {
-        require(args.size >= 4,
-          "graft_window_funnel(window, modes, ts, cond...)")
-        val w = args.head match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Long, _) => v
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v.toLong
-          case other => throw new IllegalArgumentException(
-            s"windowFunnel: the window must be an integer literal (got $other)")
-        }
-        val modeStr = args(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(
-            u: org.apache.spark.unsafe.types.UTF8String, _) => u.toString
-          case other => throw new IllegalArgumentException(
-            s"windowFunnel: modes must be a string literal (got $other)")
-        }
-        val (so, sd, si) = graft.functions.ChWindowFunnel.parseModes(
-          modeStr.split(',').map(_.trim).filter(_.nonEmpty).toSeq)
-        graft.functions.ChWindowFunnel(w, args(2), args.drop(3),
-          strictOrder = so, strictDedup = sd, strictIncrease = si)
-          .toAggregateExpression()
-      })
-    org.apache.spark.sql.graft.bridge.registerFunction(child,
-      "graft_seq_match",
-      args => {
-        require(args.size >= 3, "graft_seq_match(pattern, ts, cond...)")
-        val pat = args.head match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(
-            u: org.apache.spark.unsafe.types.UTF8String, _) => u.toString
-          case other => throw new IllegalArgumentException(
-            s"sequenceMatch: the pattern must be a string literal (got $other)")
-        }
-        graft.functions.ChSequenceMatch(pat, args(1), args.drop(2))
-          .toAggregateExpression()
-      })
-    org.apache.spark.sql.graft.bridge.registerFunction(child,
-      "graft_seq_count",
-      args => {
-        require(args.size >= 3, "graft_seq_count(pattern, ts, cond...)")
-        val pat = args.head match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(
-            u: org.apache.spark.unsafe.types.UTF8String, _) => u.toString
-          case other => throw new IllegalArgumentException(
-            s"sequenceCount: the pattern must be a string literal (got $other)")
-        }
-        graft.functions.ChSequenceMatch(pat, args(1), args.drop(2),
-          countMode = true).toAggregateExpression()
-      })
-    for ((name, mode) <- Seq(
-      "graft_summap" -> graft.functions.ChMapAgg.Mode.Sum,
-      "graft_minmap" -> graft.functions.ChMapAgg.Mode.Min,
-      "graft_maxmap" -> graft.functions.ChMapAgg.Mode.Max,
-      "graft_summap_ov" -> graft.functions.ChMapAgg.Mode.SumOv))
-      org.apache.spark.sql.graft.bridge.registerFunction(child, name,
-        args => {
-          require(args.size == 2, s"$name(keys, values)")
-          graft.functions.ChMapAgg(args(0), args(1), mode,
-            wrapUW = graft.functions.ChMapAgg.arrayDeclaredW(args(1)))
-            .toAggregateExpression()
-        })
-    // ClickHouse hash family (public-spec kernels, vectors pinned in
-    // HashKernelSpec). Round 17: cityHash64/sipHash64 accept the
-    // multi-argument combine chain (combiners pinned from the same
-    // public sources as the r15 kernels — ChHashChain scaladoc); the
-    // other algos keep the single-argument-only reject (their combine
-    // laws are not pinned offline).
-    for ((name, algo) <- Seq(
-      "graft_cityhash64" -> graft.functions.ChHashAlgo.City64,
-      "graft_siphash64" -> graft.functions.ChHashAlgo.Sip64,
-      "graft_xxhash64ch" -> graft.functions.ChHashAlgo.Xx64,
-      "graft_xxhash32ch" -> graft.functions.ChHashAlgo.Xx32,
-      "graft_farmfp64" -> graft.functions.ChHashAlgo.FarmFp64,
-      "graft_halfmd5" -> graft.functions.ChHashAlgo.HalfMd5))
-      org.apache.spark.sql.graft.bridge.registerFunction(child, name,
-        args => {
-          if (args.size == 1) graft.functions.ChHash(args.head, algo)
-          else if (algo == graft.functions.ChHashAlgo.City64 ||
-            algo == graft.functions.ChHashAlgo.Sip64)
-            graft.functions.ChHashChain(args, algo)
-          else throw new IllegalArgumentException(
-            s"$name: only the single-argument form is supported by the " +
-              "embedded engine (this algo's multi-argument combine " +
-              "chain is not a pinnable law offline) — concat the " +
-              "arguments explicitly or run against a real server")
-        })
-    // RFC 3986 percent-encoding family (GraftUrlCodec)
-    for ((name, enc, form) <- Seq(
-      ("graft_encurl", true, false), ("graft_decurl", false, false),
-      ("graft_encurlf", true, true), ("graft_decurlf", false, true)))
-      org.apache.spark.sql.graft.bridge.registerFunction(child, name,
-        args => {
-          require(args.size == 1, s"$name(s)")
-          graft.functions.GraftUrlCodecExpr(args.head, enc, form)
-        })
-    org.apache.spark.sql.graft.bridge.registerFunction(child, "graft_gcd",
-      args => {
-        require(args.size == 2, "gcd(a, b)")
-        graft.functions.GraftGcd(args(0), args(1))
-      })
-    org.apache.spark.sql.graft.bridge.registerFunction(child, "graft_lcm",
-      args => {
-        require(args.size == 2, "lcm(a, b)")
-        graft.functions.GraftLcm(args(0), args(1))
-      })
-    // keyed SipHash: keys arrive as literal args appended by the
-    // translator's tuple-literal parse
-    org.apache.spark.sql.graft.bridge.registerFunction(child, "graft_siphash64k",
-      args => {
-        require(args.size == 3, "graft_siphash64k(data, k0, k1)")
-        def keyLit(e: org.apache.spark.sql.catalyst.expressions.Expression): Long =
-          e match {
-            case org.apache.spark.sql.catalyst.expressions.Literal(v: Long, _) => v
-            case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v.toLong
-            case org.apache.spark.sql.catalyst.expressions.Literal(d: org.apache.spark.sql.types.Decimal, _) =>
-              d.toJavaBigDecimal.toBigIntegerExact.longValue() // UInt64 bit pattern
-            case other => throw new IllegalArgumentException(
-              s"sipHash64Keyed: keys must be integer literals (got $other)")
-          }
-        graft.functions.ChSipHashKeyed(args(0), keyLit(args(1)), keyLit(args(2)))
-      })
-    // CH round: banker's for Float inputs, away-from-zero otherwise —
-    // Spark's half-up builtin previously resolved case-insensitively
-    org.apache.spark.sql.graft.bridge.registerFunction(child, "graft_round",
-      args => {
-        require(args.size == 1 || args.size == 2, "round(x[, N])")
-        graft.functions.GraftChRound(args.head,
-          args.lift(1).getOrElse(
-            org.apache.spark.sql.catalyst.expressions.Literal(0)))
-      })
-    org.apache.spark.sql.graft.bridge.registerFunction(child,
-      "graft_replace_regexp_one",
-      args => {
-        require(args.size == 3,
-          "replaceRegexpOne(haystack, pattern, replacement)")
-        graft.functions.GraftRegexpReplaceOne(args(0), args(1), args(2))
-      })
-    // simpleJSON*/visitParam* byte-scanner family (round 16; laws in
-    // GraftSimpleJson's scaladoc — the constant-name requirement is
-    // enforced by the expression's type check)
-    for ((name, mode) <- Seq(
-      "graft_sj_has" -> graft.functions.ChSimpleJsonMode.Has,
-      "graft_sj_uint" -> graft.functions.ChSimpleJsonMode.UIntM,
-      "graft_sj_int" -> graft.functions.ChSimpleJsonMode.IntM,
-      "graft_sj_float" -> graft.functions.ChSimpleJsonMode.FloatM,
-      "graft_sj_bool" -> graft.functions.ChSimpleJsonMode.Bool,
-      "graft_sj_raw" -> graft.functions.ChSimpleJsonMode.Raw,
-      "graft_sj_string" -> graft.functions.ChSimpleJsonMode.Str))
-      org.apache.spark.sql.graft.bridge.registerFunction(child, name,
-        args => {
-          require(args.size == 2, s"$name(json, 'name')")
-          graft.functions.ChSimpleJson(args(0), args(1), mode)
-        })
-    // firstSignificantSubdomain family (round 16; documented 4-name
-    // heuristic — GraftUrlFns.fsd). The cut flag arrives as a literal
-    // appended by the translator.
-    org.apache.spark.sql.graft.bridge.registerFunction(child, "graft_fsd",
-      args => {
-        require(args.size == 2, "graft_fsd(url, cut)")
-        val cut = args(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Boolean, _) => v
-          case other => throw new IllegalArgumentException(
-            s"graft_fsd: cut must be a boolean literal (got $other)")
-        }
-        graft.functions.GraftFsd(args(0), cut)
-      })
-    // ClickHouse MD5()/SHA1()/SHA256() return the binary digest (not
-    // hex); generated SQL wraps them as lower(hex(F(x))) which composes
-    // on these UDFs. CRC32 is zlib's (IEEE 802.3, init 0xFFFFFFFF) in
-    // both engines.
-    def digestBytes(x: AnyRef, fn: String): Array[Byte] = x match {
-      case null => null
-      case s: String => s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      case b: Array[Byte] => b
-      case other => throw new IllegalArgumentException(
-        s"$fn: unsupported type ${other.getClass}")
-    }
-    for ((udf, algo) <- Seq("graft_md5bin" -> "MD5", "graft_sha1bin" -> "SHA-1",
-      "graft_sha256bin" -> "SHA-256")) {
-      child.udf.register(udf,
-        new org.apache.spark.sql.api.java.UDF1[AnyRef, Array[Byte]] {
-          override def call(x: AnyRef): Array[Byte] = {
-            val bytes = digestBytes(x, udf)
-            if (bytes == null) null
-            else java.security.MessageDigest.getInstance(algo).digest(bytes)
-          }
-        },
-        org.apache.spark.sql.types.BinaryType)
-    }
-    child.udf.register("graft_crc32",
-      new org.apache.spark.sql.api.java.UDF1[AnyRef, java.lang.Long] {
-        override def call(x: AnyRef): java.lang.Long = {
-          val bytes = digestBytes(x, "graft_crc32")
-          if (bytes == null) null
-          else {
-            val c = new java.util.zip.CRC32(); c.update(bytes); c.getValue
-          }
-        }
-      },
-      org.apache.spark.sql.types.LongType)
-    // Catalyst-builder functions a Scala UDF cannot express (polymorphic
-    // over the argument's type). graft_topk/graft_topk_w back the
-    // translator's topK(k)(x)/topKWeighted(k)(x, w) rewrites;
-    // graft_tuple_at is tupleElement's POSITIONAL struct access.
-    def intLit(e: org.apache.spark.sql.catalyst.expressions.Expression,
-        what: String): Int = e match {
-      case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-      case org.apache.spark.sql.catalyst.expressions.Literal(v: Long, _) => v.toInt
-      case other => throw new IllegalArgumentException(
-        s"$what must be an integer literal (got $other)")
-    }
-    org.apache.spark.sql.graft.bridge.registerFunction(child, "graft_topk",
-      args => {
-        require(args.size == 2, "graft_topk(x, k)")
-        graft.functions.ChTopK(args(0), intLit(args(1), "topK: k"), None)
-          .toAggregateExpression()
-      })
-    org.apache.spark.sql.graft.bridge.registerFunction(child, "graft_topk_w",
-      args => {
-        require(args.size == 3, "graft_topk_w(x, w, k)")
-        graft.functions.ChTopK(args(0), intLit(args(2), "topKWeighted: k"),
-          Some(args(1))).toAggregateExpression()
-      })
-    org.apache.spark.sql.graft.bridge.registerFunction(child, "graft_tuple_at",
-      args => {
-        require(args.size == 2, "graft_tuple_at(struct, index)")
-        val i = intLit(args(1), "tupleElement: index")
-        require(i >= 1, s"tupleElement: index is 1-based (got $i)")
-        org.apache.spark.sql.catalyst.expressions.GetStructField(args(0), i - 1)
-      })
-    // table views register LAZILY (ensureViews) — a fresh session starts
-    // with UDFs only, and each query registers just the views it touches
-    child
-  }
-
-  /** `FROM db.t FINAL`: the table's merged state on read, per engine —
-    * Replacing keeps the max-version row per ORDER BY key (dropping
-    * is_deleted survivors unless `keepTombstones`), Summing and
-    * Aggregating combine each key group, VersionedCollapsing and
-    * Collapsing cancel sign pairs. Engines without a merge rule reject:
-    * their part-order tiebreak is not reproducible here. (Rows tying on
-    * (key, ver) have no deterministic survivor on the server either.)
-    */
-  private def finalSource(db: String, t: String, keepTombstones: Boolean): String = {
-    require(tableExists(db, t), s"no such table $db.$t")
-    val (cols, opts, _) = readMeta(db, t)
-    def orderKeys: Seq[String] =
-      opts.getOrElse("order_by", throw new IllegalArgumentException(
-        s"FINAL on $db.$t: table declares no order_by key"))
-        .split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    // is_deleted tombstone variant FIRST: the one-arg pattern would
-    // otherwise swallow "ver,isd" written without a space
-    val VerDelRe =
-      "ReplacingMergeTree\\(\\s*([^,)\\s]+)\\s*,\\s*([^,)\\s]+)\\s*\\)".r
-    val VerRe = "ReplacingMergeTree\\(\\s*([^,)\\s]+)\\s*\\)".r
-    val SumRe = "SummingMergeTree(?:\\(\\s*([^)]*)\\))?".r
-    def replacingPick(ver: String, isDeleted: Option[String]): String = {
-      require(cols.exists(_._1 == ver),
-        s"FINAL on $db.$t: version column '$ver' not in table columns")
-      isDeleted.foreach { d =>
-        val ty = cols.collectFirst { case (c, ty0) if c == d => ty0 }
-          .getOrElse(throw new IllegalArgumentException(
-            s"FINAL on $db.$t: is_deleted column '$d' not in table columns"))
-        require({
-          import org.apache.spark.sql.types._
-          Seq(ByteType, ShortType, IntegerType, LongType)
-            .contains(ClickHouseType.parse(ty).dataType)
-        },
-          s"FINAL on $db.$t: is_deleted column '$d' must be an integer " +
-            s"0/1 flag (UInt8 on a real server), not $ty")
-      }
-      val keys = orderKeys.map(k => s"`$k`").mkString(", ")
-      val colList = cols.map { case (c, _) => s"`$c`" }.mkString(", ")
-      // survivor = max-version row per key; with an is_deleted column a
-      // FINAL READ then drops survivors flagged 1 (the modern server
-      // tombstone rule). Merges (OPTIMIZE, keepTombstones=true) KEEP
-      // the flagged survivor — a server only purges it under OPTIMIZE
-      // ... FINAL CLEANUP, so plain reads must still see it.
-      val drop = isDeleted match {
-        case Some(d) if !keepTombstones => s" AND `$d` <> 1"
-        case _ => ""
-      }
-      s"FROM (SELECT $colList FROM (SELECT *, ROW_NUMBER() OVER " +
-        s"(PARTITION BY $keys ORDER BY `$ver` DESC) AS __gf_rn " +
-        s"FROM `$db`.`$t`) AS __gf_in WHERE __gf_rn = 1$drop) AS `$t`"
-    }
-    opts.getOrElse("engine", "") match {
-      case VerDelRe(ver, del) =>
-        replacingPick(ver, Some(del))
-      case VerRe(ver) =>
-        replacingPick(ver, None)
-      case SumRe(sumList) =>
-        // SummingMergeTree: merges collapse rows sharing the sorting
-        // key — listed columns (or, unlisted, every numeric non-key
-        // column) SUM; other non-key columns take a deterministic
-        // representative (min — the server keeps "any one", min is a
-        // legal any, reproducibly); rows whose summed columns all
-        // total 0/NULL are DELETED (the server's documented rule)
-        val keys = orderKeys
-        keys.foreach(k => require(cols.exists(_._1 == k),
-          s"FINAL on $db.$t: sorting key '$k' not in table columns"))
-        val listed = Option(sumList).map(_.split(",").map(_.trim)
-          .filter(_.nonEmpty).toSeq).getOrElse(Seq.empty)
-        listed.foreach(c => require(cols.exists(_._1 == c),
-          s"FINAL on $db.$t: summed column '$c' not in table columns"))
-        val summed: Set[String] =
-          if (listed.nonEmpty) listed.toSet
-          else cols.collect { case (c, ty)
-              if !keys.contains(c) &&
-                ClickHouseType.parse(ty).dataType
-                  .isInstanceOf[org.apache.spark.sql.types.NumericType] =>
-            c
-          }.toSet
-        require(summed.nonEmpty,
-          s"FINAL on $db.$t: SummingMergeTree with nothing to sum " +
-            "(no numeric non-key columns)")
-        val sel = cols.map { case (c, _) =>
-          if (keys.contains(c)) s"`$c`"
-          else if (summed(c)) s"sum(`$c`) AS `$c`"
-          else s"min(`$c`) AS `$c`"
-        }.mkString(", ")
-        val havingNotAllZero = summed.toSeq.sorted
-          .map(c => s"coalesce(sum(`$c`), 0) = 0").mkString(" AND ")
-        s"FROM (SELECT $sel FROM `$db`.`$t` GROUP BY " +
-          keys.map(k => s"`$k`").mkString(", ") +
-          s" HAVING NOT ($havingNotAllZero)) AS `$t`"
-      case e if e.startsWith("VersionedCollapsingMergeTree") =>
-        // (sign, version): rows with the same sorting key AND version
-        // cancel in +1/-1 pairs; the net survivor keeps its net sign.
-        // Deterministic for well-formed input (net sign per (key,
-        // version) in {-1, 0, 1} — the documented usage); plain
-        // CollapsingMergeTree depends on INSERTION ORDER and is
-        // rejected below.
-        val VcRe = "VersionedCollapsingMergeTree\\(\\s*([^,\\s)]+)\\s*,\\s*([^,\\s)]+)\\s*\\)".r
-        val (signCol, verCol) = VcRe.findFirstMatchIn(e) match {
-          case Some(m) => (m.group(1), m.group(2))
-          case None => throw new IllegalArgumentException(
-            s"FINAL on $db.$t: VersionedCollapsingMergeTree needs " +
-              "(sign_column, version_column)")
-        }
-        for (c <- Seq(signCol, verCol))
-          require(cols.exists(_._1 == c),
-            s"FINAL on $db.$t: column '$c' not in table columns")
-        val keys = orderKeys
-        keys.foreach(k => require(cols.exists(_._1 == k),
-          s"FINAL on $db.$t: sorting key '$k' not in table columns"))
-        val groupCols = keys :+ verCol
-        val sel = cols.map { case (c, ty) =>
-          if (groupCols.contains(c)) s"`$c`"
-          else if (c == signCol)
-            // CAST target is the CH type — the translator maps it
-            s"CAST(if(sum(`$signCol`) > 0, 1, -1) AS $ty) AS `$c`"
-          else s"min(`$c`) AS `$c`"
-        }.mkString(", ")
-        s"FROM (SELECT $sel FROM `$db`.`$t` GROUP BY " +
-          groupCols.map(k => s"`$k`").mkString(", ") +
-          s" HAVING sum(`$signCol`) <> 0) AS `$t`"
-      case e if e.startsWith("CollapsingMergeTree") =>
-        // Insertion-order collapse over the sequence view (every part
-        // carries its insert sequence in its name since round 12). Per
-        // sorting-key group, in insertion order — the server's
-        // documented algorithm: net sum(sign) = 0 with a trailing
-        // cancel → nothing survives; net 0 with a trailing state →
-        // first cancel AND last state survive (the state row arrived
-        // after its own history collapsed); net +1 → last state;
-        // net -1 → first cancel; |net| >= 2 is the server's "logical
-        // error" (it logs and gives no guarantee) — here it raises
-        // loudly instead of answering unpredictably.
-        val CcRe = "CollapsingMergeTree\\(\\s*([^)\\s]+)\\s*\\)".r
-        val signCol = CcRe.findFirstMatchIn(e) match {
-          case Some(m) => m.group(1)
-          case None => throw new IllegalArgumentException(
-            s"FINAL on $db.$t: CollapsingMergeTree needs (sign_column)")
-        }
-        require(cols.exists(_._1 == signCol),
-          s"FINAL on $db.$t: sign column '$signCol' not in table columns")
-        val keys = orderKeys
-        keys.foreach(k => require(cols.exists(_._1 == k),
-          s"FINAL on $db.$t: sorting key '$k' not in table columns"))
-        val kl = keys.map(k => s"`$k`").mkString(", ")
-        val colList = cols.map { case (c, _) => s"`$c`" }.mkString(", ")
-        val sq = s"`$signCol`"
-        s"FROM (SELECT $colList FROM (SELECT *, " +
-          s"sum($sq) OVER (PARTITION BY $kl) AS __cf_net, " +
-          s"max(CASE WHEN $sq = 1 THEN __ch_seq END) OVER (PARTITION BY $kl) AS __cf_ls, " +
-          s"min(CASE WHEN $sq = -1 THEN __ch_seq END) OVER (PARTITION BY $kl) AS __cf_fc, " +
-          s"max(__ch_seq) OVER (PARTITION BY $kl) AS __cf_mx " +
-          s"FROM ${EmbeddedClickHouse.seqViewName(db, t)}) AS __cf_in " +
-          "WHERE CASE " +
-          "WHEN abs(__cf_net) > 1 THEN CAST(raise_error(" +
-          s"'CollapsingMergeTree collapse on $db.$t: a sorting-key " +
-          "group nets |sum(sign)| >= 2 — malformed state/cancel " +
-          "sequence (the server calls this a logical error and gives " +
-          "no guarantee); repair the writer') AS BOOLEAN) " +
-          s"WHEN __cf_net = 1 THEN $sq = 1 AND __ch_seq = __cf_ls " +
-          s"WHEN __cf_net = -1 THEN $sq = -1 AND __ch_seq = __cf_fc " +
-          "WHEN __cf_ls IS NOT NULL AND __cf_ls = __cf_mx THEN " +
-          s"($sq = 1 AND __ch_seq = __cf_ls) OR " +
-          s"($sq = -1 AND __ch_seq = __cf_fc) " +
-          s"ELSE false END) AS `$t`"
-      case e if e.startsWith("AggregatingMergeTree") =>
-        // AggregatingMergeTree: rows sharing the sorting key collapse
-        // by MERGING each AggregateFunction column per its function
-        // (the transparent state reps of ClickHouseType.aggStateType);
-        // plain non-key columns take the deterministic representative
-        val keys = orderKeys
-        keys.foreach(k => require(cols.exists(_._1 == k),
-          s"FINAL on $db.$t: sorting key '$k' not in table columns"))
-        val sel = cols.map { case (c, ty) =>
-          if (keys.contains(c)) s"`$c`"
-          else ClickHouseType.aggFunction(ty) match {
-            case Some("avg") =>
-              s"named_struct('s', sum(`$c`.s), 'c', sum(`$c`.c)) AS `$c`"
-            case Some("uniq") | Some("uniqExact") =>
-              s"array_distinct(flatten(collect_list(`$c`))) AS `$c`"
-            case Some("sum") | Some("count") => s"sum(`$c`) AS `$c`"
-            case Some("min") | Some("any") => s"min(`$c`) AS `$c`"
-            case Some("max") => s"max(`$c`) AS `$c`"
-            case Some(other) => throw new IllegalArgumentException(
-              s"FINAL on $db.$t: no merge rule for AggregateFunction($other)")
-            case None => s"min(`$c`) AS `$c`"
-          }
-        }.mkString(", ")
-        s"FROM (SELECT $sel FROM `$db`.`$t` GROUP BY " +
-          keys.map(k => s"`$k`").mkString(", ") + s") AS `$t`"
-      case e => throw new IllegalArgumentException(
-        s"FINAL on $db.$t: the embedded store supports FINAL only on " +
-          s"ReplacingMergeTree(<version_column>), SummingMergeTree" +
-          s"[(columns)], or AggregatingMergeTree (engine is '$e'; " +
-          "without a merge rule the server's part-order tiebreak is " +
-          "not reproducible here)")
-    }
-  }
-
-  /** `FROM db.t SAMPLE f [OFFSET o]`, the server's storage-level
-    * sampling, deterministically: keep the rows whose unit-interval hash
-    * of the table's DECLARED sampling key (first 8 hex of md5 as an
-    * integer, mod 1e6) falls in [o, o+f), wrapping at 1. A table without
-    * a declared `sampling` key rejects the clause, like the server.
-    */
-  private def sampleCond(db: String, t: String, f: Double, o: Double): String = {
-    require(tableExists(db, t), s"no such table $db.$t")
-    val (_, opts, _) = readMeta(db, t)
-    val key = opts.getOrElse("sampling", throw new IllegalArgumentException(
-      s"SAMPLE on $db.$t: table has no declared sampling key " +
-        "(create it with TBLPROPERTIES sampling = '<expr>')"))
-    val lo = math.round(o * 1000000.0)
-    val hi = lo + math.round(f * 1000000.0)
-    val bucket = "pmod(CAST(conv(substring(md5(CAST((" + key +
-      ") AS STRING)), 1, 8), 16, 10) AS BIGINT), 1000000)"
-    if (hi <= 1000000L) s"($bucket >= $lo AND $bucket < $hi)"
-    else s"($bucket >= $lo OR $bucket < ${hi - 1000000L})"
-  }
-
-  private val StorageRef = ("(?is)^\\s*(?:`([^`]+)`|(\\w+))\\.(?:`([^`]+)`|(\\w+))\\s+" +
-    "(?:(FINAL)|SAMPLE\\s+([0-9.]+)(?:\\s+OFFSET\\s+([0-9.]+))?)(?=\\s|$)").r
-
-  /** `FROM db.t FINAL` and `FROM db.t SAMPLE f [OFFSET o]`, names
-    * quoted or bare, at every query level: the source becomes its dedup
-    * subquery or its sampled subquery. Both are read from the FROM
-    * clause's own text, never from literals. A `trigger` (a materialized
-    * view's select over one inserted block) rejects FINAL.
-    */
-  private def rewriteStorage(sql: String, keepTombstones: Boolean, trigger: Boolean): String =
-    if (raw"(?i)\b(FINAL|SAMPLE)\b".r.findFirstIn(sql).isEmpty) sql
-    else ChClauses.mapLevels(sql) { s =>
-      ChClauses(s).branches.flatMap(_(ChClauses.From)).foldRight(s) { (f, acc) =>
-        StorageRef.findFirstMatchIn(acc.substring(f.body, f.end)).fold(acc) { m =>
-          val (db, t) = (Option(m.group(1)).getOrElse(m.group(2)),
-            Option(m.group(3)).getOrElse(m.group(4)))
-          require(m.group(5) == null || !trigger,
-            s"FINAL on $db.$t in a materialized view select: the trigger " +
-              "runs over one inserted block, and FINAL reads the merged " +
-              "state of the whole table — read the target with FINAL instead")
-          val source =
-            if (m.group(5) != null) finalSource(db, t, keepTombstones)
-            else s"FROM (SELECT * FROM `$db`.`$t` WHERE " + sampleCond(db, t,
-              m.group(6).toDouble, Option(m.group(7)).fold(0.0)(_.toDouble)) +
-              s") AS `$t`"
-          acc.substring(0, f.start) + source + acc.substring(f.body + m.end)
-        }
-      }
-    }
-
-  /** A read statement through the prepared-statement cache: a server
-    * keeps prepared statements; repeated identical remote SQL (bench
-    * iterations, re-planned scans) skips parse+analysis. A statement is
-    * re-resolved only after a table it reads, or the catalog, changed: a
-    * write to one table leaves every other table's statements warm.
-    * Bounded: runtime-filter literals make distinct SQL per
-    * execution, so the cache keeps the
-    * [[EmbeddedClickHouse.PreparedStatements]] most recently used
-    * statements rather than growing without limit on long read-only
-    * sessions.
-    */
-  private def resolveQueryDf(
-      entry: EmbeddedClickHouse.CachedServer,
-      sql: String): org.apache.spark.sql.DataFrame =
-    entry.prepared(sql)(resolveStatement(entry, _))
-
-  /** The one statement path: every statement the store runs turns its
-    * ClickHouse SQL into an analyzed DataFrame here, through the same
-    * stages in order: detoken → ANY JOIN → reshape → FINAL/SAMPLE →
-    * `_part` → translate → views → analyze → projection swap → reshape
-    * post-step. Reads come through [[resolveQueryDf]]'s cache; writes,
-    * DDL and triggers call it uncached, so they never evict a read plan.
-    * `keepTombstones`: a merge keeps is_deleted survivors. `block`: a
-    * materialized view's select over one inserted block (no files: an
-    * empty one) — the view stage binds the source table to it, and
-    * FINAL and `_part` reject, as they read table-level state.
-    */
-  private def resolveStatement(
-      entry: EmbeddedClickHouse.CachedServer,
-      sql: String,
-      keepTombstones: Boolean = false,
-      block: Option[((String, String), Seq[Path])] = None)
-      : org.apache.spark.sql.DataFrame = {
-    val tables = knownTables
-    // keyed-collapse slice tokens are an HTTP-transport affordance
-    // (per-slice hash-mod predicates inside the aggregation); the
-    // embedded transport executes the statement once and fans its
-    // result out on the spill write, so the token is dropped before
-    // translation (leaving `WHERE true`)
-    val detokened0 = sql.replaceAll(raw"/\*__CH_SLICE__\([^)]*\)\*/", "")
-    // ANY JOIN strictness: build side dedupes to a deterministic
-    // one-row-per-key pick (needs schema, so it lives here, not in
-    // the pure translator)
-    val detokened = rewriteAnyJoin(entry, detokened0)
-    // top-level reshapes, decided from one clause split: DISTINCT ON
-    // and LIMIT n [OFFSET o] BY (a row_number window in the ORDER BY
-    // order, which is REQUIRED), LIMIT n WITH TIES (a rank() window,
-    // same helper-column pattern), ORDER BY col WITH FILL (the gap rows
-    // are composed onto the analyzed frame below, lazily, so DESCRIBE
-    // never executes anything), star transformers (* REPLACE / APPLY /
-    // COLUMNS('re'), composed on the analyzed frame)
-    val shape = ChSqlTranslator.reshape(detokened)
-    val effective = shape.fold(detokened)(_.statement)
-    val plainStmt = rewriteStorage(effective, keepTombstones, block.isDefined)
-    // `_part` virtual column (server MergeTree parity): statements
-    // referencing it read through per-part augmented views so the
-    // part NAME is an ordinary column — registered on demand, never
-    // polluting star-selects of ordinary reads
-    val partStmt = rewritePartVirtual(entry, plainStmt, tables, block.isDefined)
-    val tr = ChSqlTranslator.translate(partStmt, tables)
-    // a trigger's source resolves to the block, on a clone of the server
-    // session so that concurrent statements keep reading the table
-    ensureViews(entry, tr, tables.filterNot(t => block.exists(_._1 == t)))
-    val session = block.fold(entry.session) { case ((db, t), files) =>
-      val s = org.apache.spark.sql.graft.bridge.cloneSession(entry.session)
-      val schema = sparkSchema(db, t)
-      (if (files.isEmpty)
-        s.createDataFrame(java.util.Collections.emptyList[Row](), schema)
-      else s.read.schema(schema).parquet(files.map(_.toString): _*))
-        .createOrReplaceTempView(ChSqlTranslator.viewName(db, t))
-      s
-    }
-    val df =
-      try session.sql(tr) catch { case e: Throwable =>
-        // the ASOF rewrite flattens `l.*, r.*` into one subquery and
-        // strips alias qualifiers, so two sides SHARING a column name
-        // (the `ON l.sym = r.sym` shape with same-named keys) surface
-        // as an ambiguous-reference analysis error — name the actual
-        // limitation instead of leaving a bare Spark message (advisor
-        // r12); the workaround is renaming one side's columns apart in
-        // a subselect
-        val asofAmbig =
-          raw"(?i)\bASOF\b".r.findFirstIn(detokened).isDefined &&
-            (e.getMessage.contains("AMBIGUOUS_REFERENCE") ||
-              e.getMessage.toLowerCase.contains("ambiguous"))
-        val hint =
-          if (asofAmbig)
-            "\nASOF JOIN note: the embedded rewrite flattens both " +
-              "sides into one row, so columns sharing a NAME across " +
-              "the two sides become ambiguous — alias one side's " +
-              "columns apart in a subselect (e.g. SELECT sym AS qsym, " +
-              "... ) and join on the renamed key"
-          else ""
-        throw new IllegalArgumentException(
-          s"translated SQL failed: ${e.getMessage}$hint" +
-            s"\n--- translated ---\n$tr", e) }
-    // projection swap: when the statement is a plain aggregate over a
-    // projected table and every live part carries the projection's
-    // state dir, re-plan onto the state view. The swap is verified
-    // against the BASE plan's analyzed schema (names + types) and any
-    // mismatch or failure keeps the base frame — a projection read is
-    // a storage optimization, identical rows by construction (a
-    // trigger reads its block, never the table's projection states)
-    val chosen =
-      if (block.isDefined) df else tryProjectionSwap(entry, plainStmt, df, tables)
-    shape match {
-      case Some(_: ChSqlTranslator.LimitByParts) => chosen.drop("__lb_rn")
-      case Some(_: ChSqlTranslator.WithTiesParts) => chosen.drop("__wt_rk")
-      case Some(f: ChSqlTranslator.WithFillParts) => fillGaps(chosen, f)
-      case Some(p: ChSqlTranslator.StarTransformParts) =>
-        starTransform(chosen, p, tables)
-      case None => chosen
-    }
-  }
-
-  /** The `_part` virtual column: when a statement references it (word-
-    * boundary, outside strings), every referenced store table swaps to
-    * an on-demand view carrying the part file name as a column — the
-    * server's MergeTree `_part` surface. Other virtual columns
-    * (`_partition_id` etc.) stay unresolved-and-loud: embedded part
-    * files are not partition-split, so deriving them from file names
-    * would lie. A `trigger` rejects `_part`.
-    */
-  private def rewritePartVirtual(
-      entry: EmbeddedClickHouse.CachedServer, stmt: String,
-      tables: Seq[(String, String)], trigger: Boolean): String = {
-    // quote-aware reference scan: a bare `_part` word or the backticked
-    // identifier, never text inside string literals
-    def referencesPart(s: String): Boolean = {
-      val lx = new ChLex(s)
-      while (lx.next())
-        if ((lx.kind == ChLex.Ident && lx.closed ||
-          lx.kind == ChLex.Word) && lx.name == "_part") return true
-      false
-    }
-    if (!referencesPart(stmt)) return stmt
-    require(!trigger,
-      "_part in a materialized view select: the trigger runs over one " +
-        "inserted block, and _part reads the part list of the whole table")
-    tables.foldLeft(stmt) { case (acc, (db, t)) =>
-      val quoted = s"`$db`.`$t`"
-      if (!acc.contains(quoted)) acc
-      else ChSqlTranslator.mapOutsideStrings(acc)(
-        _.replace(quoted, ensurePartView(entry, db, t)))
-    }
-  }
-
-  private def ensurePartView(
-      entry: EmbeddedClickHouse.CachedServer, db: String, t: String): String = {
-    val name = EmbeddedClickHouse.partViewName(db, t)
-    refreshView(entry, (s"__vpart__$db.$t", ""), (db, t)) {
-      val child = entry.session
-      import org.apache.spark.sql.functions.lit
-      val schema = sparkSchema(db, t)
-      val files = dataFiles(db, t)
-      val df =
-        if (files.isEmpty)
-          child.createDataFrame(java.util.Collections.emptyList[Row](), schema)
-            .withColumn("_part", lit(""))
-        else files.map { f =>
-          child.read.schema(schema).parquet(f).withColumn("_part",
-            lit(Paths.get(f).getFileName.toString))
-        }.reduce(_ unionByName _)
-      df.createOrReplaceTempView(name)
-    }
-    name
-  }
-
-  private val ProjFromRe = raw"^`([^`]+)`\.`([^`]+)`$$".r
-
-  /** Attempt the projection read-rewrite for `plainStmt`; returns the
-    * projection-backed frame only when the rewritten statement analyzes
-    * to the SAME schema as `base` — otherwise `base`, always correct.
-    */
-  private def tryProjectionSwap(
-      entry: EmbeddedClickHouse.CachedServer, plainStmt: String,
-      base: org.apache.spark.sql.DataFrame,
-      tables: Seq[(String, String)]): org.apache.spark.sql.DataFrame = {
-    try {
-      val top = ChClauses(plainStmt)
-      if (top.branches.size != 1) return base
-      val (db, t) = top.branches.head(ChClauses.From).map(top.body) match {
-        case Some(ProjFromRe(d0, t0)) => (d0, t0)
-        case _ => return base
-      }
-      val defs = listProjections(db, t)
-      if (defs.isEmpty) return base
-      val at = clock.counter.get // before the listing the view registers
-      val live = dataFiles(db, t).map(f => Paths.get(f).getFileName.toString)
-      if (live.isEmpty) return base
-      val tableRef = s"`$db`.`$t`"
-      defs.foreach { d =>
-        val covered = live.forall(n =>
-          Files.isDirectory(projDataDir(db, t, d.name).resolve(n)))
-        if (covered) {
-          val viewRef = s"__ch_proj_${db}_${t}_${d.name}"
-          ChProjections.rewriteQuery(plainStmt, tableRef, d, viewRef)
-            .foreach { ps =>
-              val swapped =
-                try {
-                  refreshView(entry, (s"__proj__$db.$t", d.name), (db, t), at) {
-                    entry.session.read.parquet(live.map(n =>
-                      projDataDir(db, t, d.name).resolve(n).toString): _*)
-                      .createOrReplaceTempView(viewRef)
-                  }
-                  val pdf = entry.session.sql(
-                    ChSqlTranslator.translate(ps, tables))
-                  val sameSchema =
-                    pdf.schema.fields.length == base.schema.fields.length &&
-                      pdf.schema.fields.zip(base.schema.fields).forall {
-                        case (a, b) => a.name == b.name &&
-                          ClickHouseType.ignoreNullability(a.dataType) ==
-                            ClickHouseType.ignoreNullability(b.dataType)
-                      }
-                  if (sameSchema) Some(pdf) else None
-                } catch { case _: Exception => None }
-              swapped.foreach { pdf =>
-                val hitKey = s"$root|$db.$t.${d.name}"
-                EmbeddedClickHouse.projectionHits.merge(
-                  hitKey, java.lang.Long.valueOf(1L),
-                  (a, b) => java.lang.Long.valueOf(a.longValue + b.longValue))
-                EmbeddedClickHouse.lastProjectionHit = Some(s"$db.$t.${d.name}")
-                return pdf
-              }
-            }
-        }
-      }
-      base
-    } catch { case _: Exception => base }
-  }
-
-  /** Times a read of `db`.`table` was served from projection `name`
-    * (this JVM, this store root).
-    */
-  def projectionHitCount(db: String, table: String, name: String): Long = {
-    val v = EmbeddedClickHouse.projectionHits.get(s"$root|$db.$table.$name")
-    if (v == null) 0L else v.longValue
-  }
-
-  /** `LEFT ANY JOIN` / `INNER ANY JOIN` (either keyword order): at most
-    * one build-side row joins per key. The server picks an ARBITRARY
-    * match; the embedded engine picks a DETERMINISTIC legal instance —
-    * the build side dedupes to one row per join key via a row_number
-    * window ordered over ALL of its columns (the any() → min() rule,
-    * join-shaped). The column list comes from table metadata (bare
-    * `db`.`t` operands) or a LIMIT-0 schema probe (subquery operands).
-    * Top-level only, one join per level, equi-ON or USING — everything
-    * else rejects loudly in parseAnyJoin.
-    */
-  private def rewriteAnyJoin(
-      entry: EmbeddedClickHouse.CachedServer, sql: String): String = {
-    val p = ChSqlTranslator.parseAnyJoin(sql).getOrElse(return sql)
-    val bareT = "^`([^`]+)`\\.`([^`]+)`$".r
-    val rightTrim = p.right.trim
-    val cols: Seq[String] = rightTrim match {
-      case bareT(db, t) => readMeta(db, t)._1.map(_._1)
-      case rsub =>
-        require(rsub.startsWith("("),
-          s"ANY JOIN: unsupported right operand '$rsub' — use a bare " +
-            "`db`.`table` reference or a parenthesized subquery")
-        resolveStatement(entry, s"SELECT * FROM $rsub __any_probe LIMIT 0")
-          .schema.fieldNames.toSeq
-    }
-    val alias = p.rightAlias.map(_.stripPrefix("`").stripSuffix("`"))
-      .getOrElse(rightTrim match {
-        case bareT(_, t) => t
-        case _ => throw new IllegalArgumentException(
-          "ANY JOIN: a subquery right operand needs an alias (AS r)")
-      })
-    val keys: Seq[String] = p.usingCols.getOrElse {
-      // equi-ON: the build-side key columns, by alias qualifier
-      val body = p.on
-      val QualRef = ("^(?:`([^`]+)`|([A-Za-z_][A-Za-z0-9_]*))\\." +
-        "(?:`([^`]+)`|([A-Za-z_][A-Za-z0-9_]*))$").r
-      def refOf(e: String): Option[(String, String)] =
-        QualRef.findFirstMatchIn(e.trim).map(q =>
-          (Option(q.group(1)).getOrElse(q.group(2)),
-            Option(q.group(3)).getOrElse(q.group(4))))
-      body.split(raw"(?i)\bAND\b").toSeq.map(_.trim).map { item =>
-        item.split("=", 2).toSeq.map(_.trim) match {
-          case Seq(a, b) =>
-            (refOf(a), refOf(b)) match {
-              case (Some((qa, ca)), Some(_)) if qa == alias => ca
-              case (Some(_), Some((qb, cb))) if qb == alias => cb
-              case _ => throw new IllegalArgumentException(
-                s"ANY JOIN: ON item '$item' is not a qualified equality " +
-                  s"with one side on `$alias` — use alias-qualified " +
-                  "equi-conditions or USING (cols)")
-            }
-          case _ => throw new IllegalArgumentException(
-            s"ANY JOIN: ON item '$item' is not an equality; only " +
-              "equi-ON / USING shapes are modeled embedded")
-        }
-      }
-    }
-    keys.foreach(k => require(cols.contains(k),
-      s"ANY JOIN: key `$k` is not a column of the build side " +
-        s"(${cols.mkString(", ")})"))
-    val colList = cols.map(c => s"`$c`").mkString(", ")
-    val keyList = keys.map(k => s"`$k`").mkString(", ")
-    val newRight =
-      s"(SELECT $colList FROM (SELECT *, row_number() OVER " +
-        s"(PARTITION BY $keyList ORDER BY $colList) AS __any_rn " +
-        s"FROM $rightTrim) __any_d WHERE __any_rn = 1) AS `$alias`"
-    p.prefix + "FROM " + p.left + s" ${p.kind} JOIN " + newRight + " " + p.cond
-  }
-
-  /** Compose parsed star transformers onto the analyzed core frame:
-    * COLUMNS filters by partial regex match first (server RE2 find
-    * semantics), REPLACE substitutes in place keeping column position
-    * (withColumn), APPLY wraps every column and renames to `fn(col)` —
-    * the server's result naming. Item expressions are ClickHouse SQL
-    * fragments, translated before expr().
-    */
-  private def starTransform(
-      df0: org.apache.spark.sql.DataFrame,
-      p: ChSqlTranslator.StarTransformParts,
-      tables: Seq[(String, String)]): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.{col, expr}
-    var df = df0
-    p.columnsRe.foreach { re =>
-      val r = re.r
-      val hit = df.columns.filter(c => r.findFirstIn(c).isDefined)
-      require(hit.nonEmpty,
-        s"COLUMNS('$re') matched no column of (${df.columns.mkString(", ")})")
-      df = df.select(hit.map(col).toIndexedSeq: _*)
-    }
-    p.ops.foreach {
-      case ChSqlTranslator.StarReplace(items) =>
-        items.foreach { case (e, c) =>
-          require(df.columns.contains(c),
-            s"* REPLACE: no column `$c` in (${df.columns.mkString(", ")})")
-          df = df.withColumn(c,
-            expr(ChSqlTranslator.translateFragment(e, tables)))
-        }
-      case ChSqlTranslator.StarApply(fn) =>
-        df = df.select(df.columns.map(c =>
-          expr(ChSqlTranslator.translateFragment(s"$fn(`$c`)", tables))
-            .as(s"$fn($c)")).toIndexedSeq: _*)
-    }
-    df
-  }
-
-  /** Compose the WITH FILL gap rows onto the analyzed core frame: a
-    * lazy integer grid over [FROM, TO) — or the result's own min..max
-    * when a bound is omitted — anti-joined against the existing fill
-    * values; missing rows pad the other columns with the server's
-    * column defaults (NULL when nullable, the type zero otherwise — the
-    * same rule ALTER ADD uses), and the union re-sorts ascending on the
-    * fill column. Everything stays lazy, so DESCRIBE never executes.
-    */
-  private def fillGaps(
-      df0: org.apache.spark.sql.DataFrame,
-      f: ChSqlTranslator.WithFillParts): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.types._
-    val cname = f.col.stripPrefix("`").stripSuffix("`")
-    val field = df0.schema.fields.find(_.name == cname).getOrElse(
-      throw new IllegalArgumentException(
-        s"WITH FILL: column `$cname` is not in the result " +
-          s"(${df0.schema.fieldNames.mkString(", ")})"))
-    val isDate = field.dataType == DateType
-    require(isDate || Seq(ByteType, ShortType, IntegerType, LongType)
-      .contains(field.dataType),
-      s"WITH FILL embedded supports integral and Date fill columns, " +
-        s"not ${field.dataType.sql}")
-    val Quoted = "'(.*)'".r
-    def bound(txt: String, which: String): org.apache.spark.sql.Column =
-      (txt, isDate) match {
-        case (Quoted(d), true) => to_date(lit(d))
-        case (n, false) if n.matches("-?\\d+") => lit(n.toLong)
-        case _ => throw new IllegalArgumentException(
-          s"WITH FILL $which bound '$txt' does not match the " +
-            s"${field.dataType.sql} fill column (dates take '<yyyy-MM-dd>', " +
-            "integers a bare number)")
-      }
-    // step: numeric counts stride integers; Date columns step by a
-    // calendar interval (a bare number means n DAYS, like the server)
-    val stepUnit = f.stepUnit.getOrElse(
-      if (isDate) "DAY" else "")
-    require(!(!isDate && f.stepUnit.isDefined),
-      "WITH FILL STEP INTERVAL needs a Date fill column")
-    val stepCol =
-      if (isDate) expr(s"interval ${f.stepN} $stepUnit") else lit(f.stepN)
-    // grid source: a 1-row frame when both bounds are literal, else the
-    // result's own min/max (the agg stays lazy)
-    val gridBase =
-      if (f.from.isDefined && f.to.isDefined)
-        df0.sparkSession.range(1).toDF()
-      else if (isDate) df0.agg(
-        min(col(cname)).as("__lo"), max(col(cname)).as("__hi"))
-      else df0.agg(
-        min(col(cname)).cast(LongType).as("__lo"),
-        max(col(cname)).cast(LongType).as("__hi"))
-    val loC = f.from.map(bound(_, "FROM")).getOrElse(col("__lo"))
-    // TO is exclusive (server semantics); an omitted TO means the
-    // existing max, inclusive. For dates the largest value < TO at day
-    // granularity is TO - 1 day (calendar steps land on or before it).
-    val hiC = f.to.map(t =>
-      if (isDate) date_sub(bound(t, "TO"), 1) else bound(t, "TO") - lit(1))
-      .getOrElse(col("__hi"))
-    val grid = gridBase
-      .select(explode(sequence(loC, hiC, stepCol)).as("__fill"))
-      .select(col("__fill").cast(field.dataType).as(cname))
-    val missing = grid.join(
-      df0.select(col(cname)).where(col(cname).isNotNull), Seq(cname), "left_anti")
-    val padCols = df0.schema.fields.map { sf =>
-      if (sf.name == cname) col(cname)
-      else if (sf.nullable) lit(null).cast(sf.dataType).as(sf.name)
-      else (sf.dataType match {
-        case ByteType | ShortType | IntegerType | LongType |
-             FloatType | DoubleType | _: DecimalType => lit(0).cast(sf.dataType)
-        case StringType => lit("")
-        case BooleanType => lit(false)
-        case DateType => to_date(lit("1970-01-01"))
-        case TimestampType | TimestampNTZType =>
-          timestamp_seconds(lit(0)).cast(sf.dataType)
-        case at: ArrayType => array().cast(at)
-        case other => throw new IllegalArgumentException(
-          s"WITH FILL: no column default for non-nullable ${other.sql} " +
-            s"(`${sf.name}`)")
-      }).as(sf.name)
-    }
-    if (f.interpolate.isEmpty)
-      df0.unionByName(missing.select(padCols.toIndexedSeq: _*))
-        .orderBy(col(cname).asc_nulls_last)
-    else {
-      // INTERPOLATE (previous-value carry): a fill row takes the value of
-      // the previous OUTPUT row, which chains back to the LAST ORIGINAL
-      // row at-or-before it — NULL included (an original NULL repeats as
-      // NULL, so a bare ignoreNulls last() over the column would lie).
-      // The struct wrap makes every original row non-null for the
-      // ignoreNulls pick regardless of the column's own value.
-      val interpNames = f.interpolate.map(_.stripPrefix("`").stripSuffix("`"))
-      interpNames.foreach { c =>
-        require(df0.schema.fieldNames.contains(c),
-          s"INTERPOLATE: column `$c` is not in the result")
-        require(c != cname, "INTERPOLATE of the fill column itself")
-      }
-      val marked = df0.withColumn("__fill", lit(false))
-        .unionByName(missing.select(
-          (padCols :+ lit(true).as("__fill")).toIndexedSeq: _*))
-      val w = org.apache.spark.sql.expressions.Window
-        .orderBy(col(cname).asc_nulls_last)
-        .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-      val carried = interpNames.foldLeft(marked) { (d, c) =>
-        val lastOrig = last(
-          when(!col("__fill"), struct(col(c).as("v"))), ignoreNulls = true)
-          .over(w)
-        d.withColumn(c,
-          when(col("__fill") && lastOrig.isNotNull, lastOrig.getField("v"))
-            .otherwise(col(c)))
-      }
-      carried.drop("__fill").orderBy(col(cname).asc_nulls_last)
-    }
-  }
+  // ---- reads: the statements unit resolves, the reads unit plans and reads ----
 
   override def describeQuery(chSql: String): StructType =
-    resolveQueryDf(serverEntry(), chSql).schema // analysis only, no execution
+    statements.prepared(chSql).schema // analysis only, no execution
 
-  /** Two paths. A bare column read (the statement's prepared plan is
-    * one parquet scan, see [[EmbeddedClickHouse.bareScan]]) runs no job
-    * and copies no row: it returns [[ChPartHandle]]s over the scan's own
-    * file partitions ([[partHandles]]), read by the reader the scan would
-    * have run.
-    *
-    * Every other statement is executed once, by the spill job over the
-    * statement's own cached `toRdd` (under AQE, building it runs the
-    * shuffle stages once; a warm statement re-runs only the final stage),
-    * and the stream fan-out happens on the spill write instead of through
-    * a sizing pass and a repartitioned re-run. An un-ordered result
-    * with fewer partitions than `numStreams` deals each partition's rows
-    * round-robin over its share of the stream files (stream j belongs to
-    * partition j % parts) and comes back as exactly `numStreams` handles,
-    * as a server fans even small results across max_threads streams.
-    * Otherwise partition i is stream file i (none if it is empty) and
-    * the handles are contiguous file groups: a TOP-LEVEL ORDER BY result
-    * keeps its range partitioning, so handle order replays the global
-    * order (a subquery-only ORDER BY orders nothing outside it). An empty
-    * result is one empty handle. Spill files are UnsafeRow bytes: no
-    * external-row conversion on either side of the "wire".
-    */
-  override def planQuery(sql: String, numStreams: Int): (StructType, Seq[ChPartitionHandle]) = {
-    val df = resolveQueryDf(serverEntry(), sql)
-    val schema = df.schema
-    val qe = EmbeddedClickHouse.perRunPlan(df)
-    val direct = EmbeddedClickHouse.bareScan(qe.executedPlan, schema)
-      .flatMap(partHandles(_, schema, numStreams))
-    (schema, direct.getOrElse(spillHandles(qe.toRdd, sql, schema, numStreams)))
-  }
+  override def planQuery(sql: String, numStreams: Int): (StructType, Seq[ChPartitionHandle]) =
+    reads.planQuery(sql, numStreams)
 
-  private def spillHandles(
-      internal: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
-      sql: String, schema: StructType, numStreams: Int): Seq[ChPartitionHandle] = {
-    val parts = internal.getNumPartitions
-    val fan = parts < numStreams &&
-      !ChClauses(sql).branches.exists(_.has(ChClauses.OrderBy))
-    val files = spill(internal, schema)(i =>
-      if (fan) i until numStreams by parts else IndexedSeq(i))
-    val groups =
-      if (files.isEmpty) Seq(Seq.empty[String])
-      // exactly numStreams handles; a stream no row landed in is empty
-      else if (fan) (0 until numStreams).map(j => files.get(j).toSeq)
-      else {
-        val ordered = files.toSeq.sortBy(_._1).map(_._2)
-        val streams = math.max(1, numStreams)
-        ordered.grouped((ordered.length + streams - 1) / streams).toSeq
-      }
-    groups.map(g => ChSpillHandle(g, schema.length, schema.json))
-  }
-
-  /** The bare read's handles: the scan's file partitions dealt over
-    * exactly `numStreams` handles (partition i to handle i % numStreams,
-    * empty handles as padding), each with the reader function the scan
-    * builds for its own tasks, so decoding is the scan's own. Store-owned
-    * parts are hard-linked into a fresh spill dir first: the TTL reaper
-    * and the readers' liveness pin cover it like a spill, and a later
-    * merge, mutation or TRUNCATE cannot remove a file a planned read
-    * still needs. Attached external files are read in place (no write
-    * removes them). None when a link fails; the caller spills instead.
-    */
-  private def partHandles(
-      scan: org.apache.spark.sql.execution.FileSourceScanExec,
-      schema: StructType, numStreams: Int): Option[Seq[ChPartitionHandle]] = {
-    import org.apache.spark.sql.execution.datasources.{FilePartition, FileScanRDD, PartitionedFile}
-    val rdd = scan.inputRDD.asInstanceOf[FileScanRDD]
-    val owned = Paths.get(root).toAbsolutePath.normalize
-    def local(f: PartitionedFile) =
-      Option(f.pathUri).filter(_.getScheme == "file").map(Paths.get(_))
-    val toLink = rdd.filePartitions.flatMap(_.files.flatMap(local)).distinct
-      .filter(_.startsWith(owned))
-    val dir = if (toLink.isEmpty) None else Some(newSpillDir())
-    val linked =
-      try dir.fold(Map.empty[Path, Path])(d => toLink.zipWithIndex.map { case (p, i) =>
-        p -> Files.createLink(d.resolve(f"$i%05d-${p.getFileName}"), p)
-      }.toMap)
-      catch {
-        case _: java.io.IOException | _: UnsupportedOperationException =>
-          dir.foreach(d => try deleteRecursively(d) catch { case _: Exception => () })
-          return None
-      }
-    val parts = rdd.filePartitions.map(p => p.copy(files = p.files.map { f =>
-      local(f).flatMap(linked.get).fold(f)(l =>
-        f.copy(filePath = org.apache.spark.paths.SparkPath.fromUri(l.toUri)))
-    }))
-    val read = EmbeddedClickHouse.scanReader(scan, rdd)
-    val n = math.max(1, numStreams)
-    Some((0 until n).map(j => ChPartHandle(
-      parts.indices.filter(_ % n == j).map(parts): Seq[FilePartition],
-      read, scan.supportsColumnar, dir.map(_.toString), schema.json)))
-  }
-
-  /** A fresh result dir under `<root>/.spill` (reaping stale ones first). */
-  private def newSpillDir(): Path = {
-    val spillRoot = Paths.get(root, ".spill")
-    cleanStaleSpills(spillRoot)
-    Files.createDirectories(spillRoot.resolve(java.util.UUID.randomUUID.toString))
-  }
-
-  /** The spill job: run `rows` once, dealing partition i round-robin
-    * over the streams `layout(i)` (files in a fresh spill dir); returns
-    * stream → file for every stream a row landed in. A result with no
-    * rows leaves no dir.
-    */
-  private def spill(
-      rows: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
-      schema: StructType)(layout: Int => IndexedSeq[Int]): Map[Int, String] = {
-    val dir = newSpillDir()
-    val dirStr = dir.toString
-    val files = rows.mapPartitionsWithIndex { (i, it) =>
-      val streams = layout(i).map(j => j -> Paths.get(dirStr, f"stream-$j%05d.rows"))
-      val written = RowSpill.writeRoundRobin(streams.map(_._2), schema, it).toSet
-      streams.iterator.collect { case (j, f) if written(f) => j -> f.toString }
-    }.collect().toMap
-    if (files.isEmpty) Files.deleteIfExists(dir)
-    files
-  }
-
-  /** Bucket-keyed read ([[ClickHouseClient.planQueryBuckets]]): route the
-    * result through Spark's own HashPartitioning on the bucket column —
-    * partition i then holds exactly the rows with
-    * `pmod(murmur3(col, 42), n) = i`, which is bit-for-bit the contract
-    * [[graft.catalog.ChBoundBucket]] reports to Spark's storage-
-    * partitioned join. EXACTLY n handles come back, index = bucket id
-    * (empty buckets stay as empty handles so both join sides always
-    * align positionally).
-    */
   override def bucketFamily: Option[String] = Some("murmur3")
 
   override def planQueryBuckets(
-      sql: String,
-      bucketColumn: String,
-      numBuckets: Int): Option[(StructType, Seq[ChPartitionHandle])] = {
-    val df = resolveQueryDf(serverEntry(), sql)
-    val schema = df.schema
-    require(schema.fieldNames.contains(bucketColumn),
-      s"bucket column '$bucketColumn' not in result schema " +
-        schema.fieldNames.mkString(", "))
-    val files = spill(
-      df.repartition(numBuckets, df(bucketColumn)).queryExecution.toRdd, schema)(
-      IndexedSeq(_))
-    Some((schema, (0 until numBuckets).map(i =>
-      ChSpillHandle(files.get(i).toSeq, schema.length, schema.json))))
-  }
+      sql: String, bucketColumn: String,
+      numBuckets: Int): Option[(StructType, Seq[ChPartitionHandle])] =
+    Some(reads.planQueryBuckets(sql, bucketColumn, numBuckets))
+
+  override def readPartition(handle: ChPartitionHandle): Iterator[Row] =
+    reads.readPartition(handle)
 
   override def readPartitionInternal(
       handle: ChPartitionHandle,
       schema: StructType): Iterator[org.apache.spark.sql.catalyst.InternalRow] =
-    handle match {
-      case ChSpillHandle(files, numFields, _) =>
-        files.headOption.foreach(f => pinLive(Paths.get(f).getParent))
-        val it = new EmbeddedClickHouse.SpillPartitionIterator(files, numFields)
-        // abandoned reads (pushed limits, killed tasks) close at task
-        // completion rather than waiting for GC
-        Option(org.apache.spark.TaskContext.get()).foreach(
-          _.addTaskCompletionListener[Unit](_ => it.close()))
-        it
-      case h: ChPartHandle =>
-        // the reader's rows (or batch rows) are reused buffers
-        val toUnsafe = org.apache.spark.sql.catalyst.expressions.UnsafeProjection.create(schema)
-        val out = openParts(h)
-        val rows =
-          if (h.batches) out.asInstanceOf[Iterator[org.apache.spark.sql.vectorized.ColumnarBatch]]
-            .flatMap(_.rowIterator.asScala)
-          else out
-        rows.map {
-          case u: org.apache.spark.sql.catalyst.expressions.UnsafeRow => u.copy()
-          case r => toUnsafe(r).copy()
-        }
-      case other => throw new IllegalArgumentException(
-        s"not an embedded-store handle: ${other.getClass.getName}")
-    }
+    reads.readPartitionInternal(handle, schema)
 
-  /** A bare read's batches go to the caller as the scan's reader made
-    * them; a row-returning reader's rows are packed.
-    */
   override def readPartitionColumnar(
       handle: ChPartitionHandle,
       schema: StructType): Iterator[org.apache.spark.sql.vectorized.ColumnarBatch] =
-    handle match {
-      case h: ChPartHandle if h.batches =>
-        openParts(h).asInstanceOf[Iterator[org.apache.spark.sql.vectorized.ColumnarBatch]]
-      case _ => super.readPartitionColumnar(handle, schema)
-    }
+    reads.batches(handle).getOrElse(super.readPartitionColumnar(handle, schema))
 
-  /** The handle's files through its reader, in partition order. Readers
-    * close their file at exhaustion and at task completion.
+  /** Times a read of `db`.`table` was served from projection `name`
+    * (this JVM, this store root).
     */
-  private def openParts(h: ChPartHandle): Iterator[org.apache.spark.sql.catalyst.InternalRow] = {
-    h.pin.foreach(d => pinLive(Paths.get(d)))
-    h.parts.iterator.flatMap(_.files).flatMap(h.read)
-  }
+  def projectionHitCount(db: String, table: String, name: String): Long =
+    Option(state.projectionHits.get(s"$db.$table.$name")).fold(0L)(_.get)
 
-  /** Liveness pin: touching a result dir's mtime keeps the TTL reaper
-    * away while the result still has readers (late retries, recomputed
-    * cached plans).
-    */
-  private def pinLive(dir: Path): Unit =
-    try Files.setLastModifiedTime(dir,
-      java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis()))
-    catch { case _: Exception => () }
-
-  override def readPartition(handle: ChPartitionHandle): Iterator[Row] = {
-    val schemaJson = handle match {
-      case h: ChSpillHandle => h.schemaJson
-      case h: ChPartHandle => h.schemaJson
-      case other => throw new IllegalArgumentException(
-        s"not an embedded-store handle: ${other.getClass.getName}")
-    }
-    val schema = org.apache.spark.sql.types.DataType.fromJson(schemaJson).asInstanceOf[StructType]
-    val de = org.apache.spark.sql.catalyst.encoders.ExpressionEncoder(schema)
-      .resolveAndBind().createDeserializer()
-    readPartitionInternal(handle, schema).map(de(_))
-  }
-
-  /** Spill dirs from finished queries are garbage once their readers are
-    * done; reap anything older than [[EmbeddedClickHouse.SpillTtlMillis]]
-    * (readers never outlive a query by that much). The listing holds up
-    * to a TTL's worth of result dirs, so a plan reaps at most once per
-    * [[EmbeddedClickHouse.SpillReapIntervalMillis]] per store root; the
-    * first plan of a JVM always reaps.
-    */
-  private def cleanStaleSpills(spillRoot: Path): Unit = {
-    val last = EmbeddedClickHouse.lastSpillReap(root)
-    val prev = last.get
-    val now = System.currentTimeMillis()
-    if (now - prev >= EmbeddedClickHouse.SpillReapIntervalMillis &&
-      last.compareAndSet(prev, now) && Files.isDirectory(spillRoot)) {
-      val cutoff = now - EmbeddedClickHouse.SpillTtlMillis
-      NioFiles.list(spillRoot).iterator
-        .filter { p =>
-          try Files.getLastModifiedTime(p).toMillis < cutoff
-          catch { case _: Exception => false }
-        }
-        .foreach { p =>
-          try deleteRecursively(p) catch { case _: Exception => () }
-        }
-    }
-  }
-
-  private def knownTables: Seq[(String, String)] =
+  private[client] def knownTables: Seq[(String, String)] =
     for (db <- listDatabases(); t <- listTables(db)) yield (db, t)
 
   override def insert(db: String, table: String, schema: StructType, rows: Seq[Row]): Long = {
@@ -2421,31 +1046,23 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
     * per file). NULL predicate results keep the row, matching the server.
     */
   override def deleteWhere(db: String, table: String, whereSql: String): Unit = {
-    rejectSystem(db, s"DELETE from $db.$table")
-    require(tableExists(db, table), s"no such table $db.$table")
-    val (_, _, ext) = readMeta(db, table)
-    // attached external parquet is a zero-copy read-only view over files
-    // the store does not own — rewriting them is out of contract
-    require(ext.isEmpty,
-      s"DELETE from $db.$table: table has attached external data (read-only)")
+    ownedTable(db, table, "DELETE from")
     val qt = graft.sql.ChSql.quoteTable(db, table)
     // DELETE WHERE cond removes rows where cond IS TRUE; NULL keeps.
     // CAST: ClickHouse conditions may be integral (e.g. the `1` of an
     // unconditional delete) — Spark's coalesce/NOT need a real boolean
     val pred = s"coalesce(CAST(($whereSql) AS BOOLEAN), false)"
-    val entry = serverEntry()
-    if (matches(entry, qt, pred)) {
+    if (matches(qt, pred)) {
       // the table's own columns, never a virtual one the condition reads
       val cols = sparkSchema(db, table).fieldNames.map(graft.sql.ChSql.quoteIdent)
-      rewritePartsDf(db, table, resolveStatement(entry,
+      rewritePartsDf(db, table, statements.resolve(
         s"SELECT ${cols.mkString(", ")} FROM $qt WHERE NOT $pred"))
     }
   }
 
   /** Whether a mutation over `qt` has any row to rewrite. */
-  private def matches(
-      entry: EmbeddedClickHouse.CachedServer, qt: String, pred: String): Boolean =
-    resolveStatement(entry, s"SELECT count(*) AS n FROM $qt WHERE $pred")
+  private def matches(qt: String, pred: String): Boolean =
+    statements.resolve(s"SELECT count(*) AS n FROM $qt WHERE $pred")
       .head().getLong(0) > 0L
 
   /** `ALTER TABLE ... UPDATE` analog: rewrite parts with assigned columns
@@ -2457,12 +1074,8 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
   override def updateWhere(
       db: String, table: String,
       assignments: Seq[(String, String)], whereSql: String): Unit = {
-    rejectSystem(db, s"UPDATE on $db.$table")
-    require(tableExists(db, table), s"no such table $db.$table")
+    ownedTable(db, table, "UPDATE on")
     require(assignments.nonEmpty, "UPDATE requires at least one assignment")
-    val (_, _, ext) = readMeta(db, table)
-    require(ext.isEmpty,
-      s"UPDATE on $db.$table: table has attached external data (read-only)")
     val schema = sparkSchema(db, table)
     val byName = assignments.toMap
     val unknown = byName.keySet.diff(schema.fieldNames.toSet)
@@ -2478,10 +1091,9 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
         case None => q
       }
     }
-    val entry = serverEntry()
-    if (matches(entry, qt, pred))
+    if (matches(qt, pred))
       rewritePartsDf(db, table,
-        resolveStatement(entry, s"SELECT ${cols.mkString(", ")} FROM $qt"))
+        statements.resolve(s"SELECT ${cols.mkString(", ")} FROM $qt"))
   }
 
   /** Shared mutation core: drop the snapshot of current parts and
@@ -2498,7 +1110,7 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
 
   override def insertSelect(db: String, table: String, chSelectSql: String): Long = {
     rejectSystem(db, s"INSERT into $db.$table")
-    val df = resolveStatement(serverEntry(), chSelectSql)
+    val df = statements.resolve(chSelectSql)
     val sink = sparkSchema(db, table)
     val errs = fitErrors(df.schema, sink)
     require(errs.isEmpty, s"INSERT SELECT schema mismatch for $db.$table: ${errs.mkString("; ")}")
@@ -2636,7 +1248,7 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
         Files.move(p, t, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
         t
       }
-      deleteRecursively(dir)
+      NioFiles.deleteRecursively(dir)
       // a failed job can orphan a staged dir when its task's commit
       // message raced the failure and never reached BatchWrite.abort —
       // the next successful write to the table reaps anything past TTL
@@ -2648,7 +1260,7 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
   }
 
   override def abortStaged(db: String, table: String, stagingId: String): Unit =
-    deleteRecursively(stagingPath(db, table, stagingId))
+    NioFiles.deleteRecursively(stagingPath(db, table, stagingId))
 
   override def tryMarkEpochCommitted(db: String, table: String, marker: String): Boolean = {
     require(!marker.contains("/") && !marker.contains(".."), s"invalid marker: $marker")
@@ -2680,7 +1292,7 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
     if (Files.exists(markerFile)) {
       staged.foreach { case (stagingId, _) => abortStaged(db, table, stagingId) }
     } else {
-      deleteRecursively(epochDir) // unmarked partial-attempt debris
+      NioFiles.deleteRecursively(epochDir) // unmarked partial-attempt debris
       Files.createDirectories(epochDir)
       staged.foreach { case (stagingId, partitionId) =>
         val src = stagingPath(db, table, stagingId)
@@ -2707,30 +1319,16 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
     * inactive past the spill TTL goes.
     */
   private def reapStaleWriteDirs(db: String, table: String): Unit = {
-    val cutoff = System.currentTimeMillis() - EmbeddedClickHouse.SpillTtlMillis
-    def stale(p: Path): Boolean =
-      try Files.getLastModifiedTime(p).toMillis < cutoff
-      catch { case _: Exception => false }
-    val staging = tablePath(db, table).resolve(".insert-staging")
-    if (Files.isDirectory(staging))
-      NioFiles.list(staging).iterator.filter(stale)
-        .foreach(p => try deleteRecursively(p) catch { case _: Exception => () })
-    val epochs = tablePath(db, table).resolve(".epoch-parts")
-    val markers = tablePath(db, table).resolve(".epochs")
-    if (Files.isDirectory(epochs))
-      NioFiles.list(epochs).iterator
-        .filter(p => stale(p) && !Files.exists(markers.resolve(p.getFileName)))
-        .foreach(p => try deleteRecursively(p) catch { case _: Exception => () })
+    val cutoff = System.currentTimeMillis() - EmbeddedReads.SpillTtlMillis
+    val dir = tablePath(db, table)
+    NioFiles.sweepStale(dir.resolve(".insert-staging"), cutoff)
+    NioFiles.sweepStale(dir.resolve(".epoch-parts"), cutoff,
+      p => !Files.exists(dir.resolve(".epochs").resolve(p.getFileName)))
   }
-
-  private def deleteRecursively(p: Path): Unit =
-    if (Files.exists(p)) {
-      NioFiles.walk(p).reverse.foreach(Files.delete)
-    }
 
   // store-open crash recovery: a process that died mid-EXCHANGE leaves a
   // journal + temp dir; repair before this client serves its first read
-  EmbeddedClickHouse.exchangeMonitor(root).synchronized {
+  state.exchange.synchronized {
     if (Files.isDirectory(Paths.get(root)))
       StoreLock.withLockNamed(s"exchange:${Paths.get(root).toAbsolutePath}") {
         recoverOrphanExchanges()
@@ -2738,112 +1336,75 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
   }
 }
 
-/** Embedded-store partition handle: one contiguous group of spill files
-  * plus the result schema (field count for the UnsafeRow reader; JSON for
-  * external-row adaptation).
-  */
-final case class ChSpillHandle(files: Seq[String], numFields: Int, schemaJson: String)
-  extends ChPartitionHandle
-
-/** Embedded-store partition handle of a bare column read: some of the
-  * scan's own file partitions (store-owned parts as hard links in the
-  * result dir `pin`, attached files in place), the reader function the
-  * scan would have run on them, whether that reader returns
-  * ColumnarBatch blocks, and the result schema.
-  */
-final case class ChPartHandle(
-    parts: Seq[org.apache.spark.sql.execution.datasources.FilePartition],
-    read: org.apache.spark.sql.execution.datasources.PartitionedFile =>
-      Iterator[org.apache.spark.sql.catalyst.InternalRow],
-    batches: Boolean,
-    pin: Option[String],
-    schemaJson: String) extends ChPartitionHandle
-
 object EmbeddedClickHouse {
-  private[client] val SpillTtlMillis: Long = 30L * 60 * 1000
 
-  /** The QueryExecution a [[EmbeddedClickHouse.planQuery]] runs: the
-    * prepared statement's own, cached with it, unless the statement
-    * reads the clock. The optimizer folds now() / today() into the plan
-    * (ComputeCurrentTime), so a cached plan would replay its first run's
-    * time; such a statement gets a fresh QueryExecution per run.
+  /** Everything this JVM keeps per store root, whichever spelling of the
+    * root a client was opened with: the change clock, the footer row
+    * counts, the view definitions, the projection hit counts, the last
+    * spill reap and the EXCHANGE monitor.
     */
-  private[client] def perRunPlan(
-      df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.execution.QueryExecution = {
-    val qe = df.queryExecution
-    val readsClock = qe.analyzed.collectWithSubqueries {
-      case p if p.containsPattern(org.apache.spark.sql.catalyst.trees.TreePattern.CURRENT_LIKE) => p
-    }.nonEmpty
-    if (readsClock) df.sparkSession.sessionState.executePlan(qe.analyzed) else qe
+  private[client] final class RootState {
+    val clock = new StoreClock
+    val footerCounts = new FooterCounts
+    /** View definitions and the catalog stamp they were listed at. */
+    @volatile var mvs: (Long, Seq[MvDef]) = (-1L, Nil)
+    /** Reads served from a projection, keyed `<db>.<table>.<name>`. */
+    val projectionHits =
+      new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]
+    /** Wall-clock millis of the last spill reap (0 = never). */
+    val lastSpillReap = new java.util.concurrent.atomic.AtomicLong(0L)
+    /** EXCHANGE TABLES serializes here before taking the OS lock:
+      * FileChannel.lock throws on same-JVM contention.
+      */
+    val exchange = new Object
   }
 
-  /** The parquet scan a bare column read is: the executed plan is a
-    * FileSourceScanExec, alone or under ColumnarToRow / whole-stage
-    * codegen, with no data, partition or runtime filter, no partition,
-    * bucket or metadata column, and output equal to `schema`. Any
-    * operator above it (filter, project, aggregate, sort, limit, union,
-    * window, a local relation) leaves the statement on the spill path.
+  private val roots = new java.util.concurrent.ConcurrentHashMap[String, RootState]
+
+  /** The state of the store at `root`, keyed on the absolute path, as
+    * [[EmbeddedClickHouse.connectionKey]] is.
     */
-  private[client] def bareScan(
-      plan: org.apache.spark.sql.execution.SparkPlan,
-      schema: StructType): Option[org.apache.spark.sql.execution.FileSourceScanExec] = {
-    import org.apache.spark.sql.execution._
-    plan match {
-      case p: WholeStageCodegenExec => bareScan(p.child, schema)
-      case p: ColumnarToRowExec => bareScan(p.child, schema)
-      case p: InputAdapter => bareScan(p.child, schema)
-      case s: FileSourceScanExec
-        if s.partitionFilters.isEmpty && s.dataFilters.isEmpty &&
-          s.relation.partitionSchema.isEmpty && !s.bucketedScan &&
-          s.optionalBucketSet.isEmpty && s.fileConstantMetadataColumns.isEmpty &&
-          s.output.map(a => (a.name, a.dataType)) ==
-            s.requiredSchema.map(f => (f.name, f.dataType)) &&
-          s.output.map(a => (a.name, a.dataType)) == schema.map(f => (f.name, f.dataType)) =>
-        Some(s)
-      case _ => None
-    }
-  }
+  private[client] def rootState(root: String): RootState =
+    roots.computeIfAbsent(Paths.get(root).toAbsolutePath.toString, _ => new RootState)
 
-  private val scanReaders = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[AnyRef, org.apache.spark.sql.execution.datasources.PartitionedFile =>
-      Iterator[org.apache.spark.sql.catalyst.InternalRow]])
-
-  /** The reader function `scan` builds for its own tasks (options and
-    * Hadoop conf as FileSourceScanExec passes them), once per planned
-    * scan: building one broadcasts the session's Hadoop conf, about 11 ms
-    * of a 13 ms warm bare-read `planQuery` on 4 cores. Keyed weakly on
-    * the scan's cached `inputRDD`, so it lives as long as the plan.
+  /** The server session and prepared statements per
+    * [[EmbeddedClickHouse.connectionKey]].
     */
-  private[client] def scanReader(
-      scan: org.apache.spark.sql.execution.FileSourceScanExec,
-      rdd: org.apache.spark.sql.execution.datasources.FileScanRDD)
-      : org.apache.spark.sql.execution.datasources.PartitionedFile =>
-        Iterator[org.apache.spark.sql.catalyst.InternalRow] =
-    Option(scanReaders.get(rdd)).getOrElse {
-      val rel = scan.relation
-      val read = rel.fileFormat.buildReaderWithPartitionValues(
-        rel.sparkSession, rel.dataSchema, rel.partitionSchema, scan.requiredSchema, Nil,
-        rel.options + (org.apache.spark.sql.execution.datasources.FileFormat.OPTION_RETURNING_BATCH ->
-          scan.supportsColumnar.toString),
-        scan.getHadoopConf(rel.sparkSession, rel.options))
-      scanReaders.put(rdd, read)
-      read
-    }
+  private[client] val sessionCache =
+    new java.util.concurrent.ConcurrentHashMap[String, EmbeddedStatements.CachedServer]
 
-  /** Spill-dir reaps run at most this often per store root. */
-  private[client] val SpillReapIntervalMillis: Long = 60L * 1000
-
-  private val spillReaps =
-    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]
-
-  /** Wall-clock millis of the store root's last spill reap (0 = never). */
-  private[client] def lastSpillReap(root: String): java.util.concurrent.atomic.AtomicLong =
-    spillReaps.computeIfAbsent(
-      Paths.get(root).toAbsolutePath.toString,
-      _ => new java.util.concurrent.atomic.AtomicLong(0L))
+  /** A change to the store's files made outside this client: every view,
+    * prepared statement and materialized-view definition over the store
+    * is read again.
+    */
+  def invalidate(root: String): Unit = rootState(root).clock.catalogChanged()
 
   /** Strips one Nullable(...) wrapper for declared-type inspection. */
   private[client] val NullableRe = raw"^Nullable\((.+)\)$$".r
+
+  /** The server's default of a non-Nullable column: its type's zero (0,
+    * '', false, the epoch, an empty array or map); None for a type
+    * without one.
+    */
+  private[client] def zeroValue(dt: org.apache.spark.sql.types.DataType)
+      : Option[org.apache.spark.sql.Column] = {
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.types._
+    Some(dt match {
+      case ByteType | ShortType | IntegerType | LongType |
+           FloatType | DoubleType | _: DecimalType => lit(0).cast(dt)
+      case StringType => lit("")
+      case BooleanType => lit(false)
+      case DateType => to_date(lit("1970-01-01"))
+      case TimestampType | TimestampNTZType => timestamp_seconds(lit(0)).cast(dt)
+      case _: ArrayType => array().cast(dt)
+      case MapType(kt, vt, _) =>
+        map_from_arrays(
+          array().cast(ArrayType(kt, containsNull = false)),
+          array().cast(ArrayType(vt, containsNull = true))).cast(dt)
+      case _ => return None
+    })
+  }
 
   /** Source tables whose materialized views are firing on THIS thread —
     * re-entrancy guard behind the create-time cycle check (fires run
@@ -2852,69 +1413,9 @@ object EmbeddedClickHouse {
   private[client] val firingMvs: ThreadLocal[Set[String]] =
     ThreadLocal.withInitial(() => Set.empty[String])
 
-  /** Word-boundary view-name containment: `__ch_main_t_1` is a PREFIX
-    * of `__ch_main_t_10`, so bare `contains` misattributes references
-    * between tables whose names extend each other (caught by the MV
-    * fuzz — the source detector claimed two sources for a one-table
-    * select). View names are \\w-only, so a non-word neighbor char is
-    * a true boundary.
-    */
-  private[client] def referencesView(sql: String, view: String): Boolean = {
-    var i = sql.indexOf(view)
-    while (i >= 0) {
-      val end = i + view.length
-      def word(c: Char) = c.isLetterOrDigit || c == '_'
-      if ((i == 0 || !word(sql.charAt(i - 1))) &&
-        (end >= sql.length || !word(sql.charAt(end)))) return true
-      i = sql.indexOf(view, i + 1)
-    }
-    false
-  }
-
   private[client] final case class MvDef(
       db: String, name: String, srcDb: String, srcTable: String,
       targetDb: String, targetTable: String, select: String)
-
-  /** MV-DDL generation counter per store root (bumped only by view /
-    * table / database DDL that can add or remove view.meta files) and
-    * the definition cache it keys — see [[EmbeddedClickHouse.allMvs]].
-    */
-  private val mvVersions =
-    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
-  private[client] def mvVersion(root: String): java.util.concurrent.atomic.AtomicLong =
-    mvVersions.computeIfAbsent(root, _ => new java.util.concurrent.atomic.AtomicLong(0))
-  private[client] val mvCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, Seq[MvDef])]()
-
-  /** Projection read-path observability: reads served from a projection,
-    * keyed `<root>|<db>.<table>.<name>` — the spec-level proof that the
-    * swap actually engaged (results are identical either way).
-    */
-  private[graft] val projectionHits =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-  @volatile private[graft] var lastProjectionHit: Option[String] = None
-
-  /** Sequential reader over one handle's spill files; closing releases
-    * the in-flight file's descriptor immediately.
-    */
-  private[client] final class SpillPartitionIterator(files: Seq[String], numFields: Int)
-    extends Iterator[org.apache.spark.sql.catalyst.InternalRow] with AutoCloseable {
-    private val fileIt = files.iterator
-    private var cur: RowSpill.SpillFileIterator = _
-
-    override def hasNext: Boolean = {
-      while ((cur == null || !cur.hasNext) && fileIt.hasNext)
-        cur = RowSpill.read(Paths.get(fileIt.next()), numFields)
-      cur != null && cur.hasNext
-    }
-
-    override def next(): org.apache.spark.sql.catalyst.InternalRow = {
-      if (!hasNext) throw new NoSuchElementException
-      cur.next()
-    }
-
-    override def close(): Unit = if (cur != null) cur.close()
-  }
 
   /** A store root's part-file row counts, keyed on (path, size, mtime):
     * each part's parquet footer is opened once, not on every
@@ -2939,11 +1440,6 @@ object EmbeddedClickHouse {
     def retain(live: Set[String]): Unit = memo.keySet.removeIf(k => !live(k._1))
   }
 
-  private val footerCountsByRoot = new java.util.concurrent.ConcurrentHashMap[String, FooterCounts]
-  private[client] def footerCounts(root: String): FooterCounts =
-    footerCountsByRoot.computeIfAbsent(
-      Paths.get(root).toAbsolutePath.toString, _ => new FooterCounts)
-
   /** A store root's change clock: one monotonic counter, the value it
     * reached at each table's last part-set change, and the value at the
     * last catalog change (DDL). State resolved at counter value `at`, read
@@ -2967,6 +1463,9 @@ object EmbeddedClickHouse {
     def catalogChanged(): Unit =
       catalog.accumulateAndGet(counter.incrementAndGet(), math.max(_, _))
 
+    /** The counter value at the last catalog change. */
+    def catalogStamp: Long = catalog.get
+
     def fresh(at: Long, reads: Iterable[(String, String)]): Boolean =
       at >= catalog.get && reads.forall { case (db, t) =>
         if (db == "system") at >= counter.get
@@ -2977,111 +1476,6 @@ object EmbeddedClickHouse {
       }
   }
 
-  /** A prepared statement's resolution: the counter value read before it
-    * listed any file, and the tables it reads.
-    */
-  private final case class Stamp(at: Long, reads: Set[(String, String)])
-
-  private[client] final class CachedServer(
-      val session: SparkSession, val parent: SparkSession, clock: StoreClock) {
-
-    /** Prepared statements by their ClickHouse SQL. */
-    val dfCache = new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.DataFrame]
-
-    // view key -> store counter value its temp view was registered at:
-    // views refresh LAZILY, one at a time, only when a query references
-    // them after a table they read changed — a real server never re-reads
-    // its whole catalog because one table got an insert
-    val viewVersions = new java.util.concurrent.ConcurrentHashMap[(String, String), java.lang.Long]
-
-    /** Store counter value at the last sweep of stale statements. */
-    @volatile var version: Long = clock.counter.get
-
-    private val stamps = new java.util.concurrent.ConcurrentHashMap[String, Stamp]
-    // recency of the dfCache keys, eldest first; guarded by itself, and
-    // taken before any dfCache key's lock, never inside one
-    private val recency = new java.util.LinkedHashMap[String, Unit](16, 0.75f, true)
-    // the tables read by the statement this thread is preparing
-    private val reading = new ThreadLocal[scala.collection.mutable.Set[(String, String)]]
-
-    /** The prepared statement for `sql`, resolved at most once per key
-      * and store state (`compute` excludes concurrent resolvers of the
-      * same key) and kept among the [[PreparedStatements]] most recently
-      * used: an entry enters `recency` only after it is in `dfCache`, so
-      * eviction never drops a statement that is being resolved. An entry
-      * stays until a table it reads, or the catalog, changes; the first
-      * call after a write drops every entry that write made stale.
-      */
-    def prepared(sql: String)(resolve: String => org.apache.spark.sql.DataFrame)
-        : org.apache.spark.sql.DataFrame = {
-      sweep()
-      val df = dfCache.compute(sql, (k, old) =>
-        if (old != null && isFresh(k)) old
-        else {
-          val at = clock.counter.get
-          val reads = scala.collection.mutable.Set.empty[(String, String)]
-          reading.set(reads)
-          val df = try resolve(k) finally reading.remove()
-          stamps.put(k, Stamp(at, reads.toSet))
-          df
-        })
-      recency.synchronized {
-        recency.put(sql, ())
-        if (recency.size > PreparedStatements) {
-          val eldest = recency.keySet.iterator.next()
-          recency.remove(eldest)
-          drop(eldest, onlyStale = false)
-        }
-      }
-      df
-    }
-
-    /** Tables the statement being prepared on this thread reads. */
-    def reads(tables: Iterable[(String, String)]): Unit =
-      Option(reading.get).foreach(_ ++= tables)
-
-    private def isFresh(sql: String): Boolean = {
-      val s = stamps.get(sql)
-      s != null && clock.fresh(s.at, s.reads)
-    }
-
-    /** Drop `sql`'s statement (if `onlyStale`, only a stale one),
-      * atomically with any resolution of it; whether it is gone.
-      */
-    private def drop(sql: String, onlyStale: Boolean): Boolean =
-      dfCache.computeIfPresent(sql, (k, df) =>
-        if (onlyStale && isFresh(k)) df else { stamps.remove(k); null }) == null
-
-    private def sweep(): Unit = {
-      val now = clock.counter.get
-      if (now > version) recency.synchronized {
-        if (now > version) {
-          version = now
-          recency.keySet.removeIf(drop(_, onlyStale = true))
-        }
-      }
-    }
-  }
-
-  /** Prepared-statement cache bound per store root: the connector's plan
-    * memo and bench iterations re-send a few texts, while runtime-filter
-    * and ad-hoc literals make the rest single-use.
-    */
-  private[client] val PreparedStatements = 64
-
-  private[client] val sessionCache =
-    new java.util.concurrent.ConcurrentHashMap[String, CachedServer]
-
-  private val clocks = new java.util.concurrent.ConcurrentHashMap[String, StoreClock]
-
-  private[client] def clock(root: String): StoreClock =
-    clocks.computeIfAbsent(Paths.get(root).toAbsolutePath.toString, _ => new StoreClock)
-
-  /** A change to the store's files made outside this client: every view
-    * and prepared statement over the store re-resolves.
-    */
-  def invalidate(root: String): Unit = clock(root).catalogChanged()
-
   // part-name insert sequence (ParquetBlockWriter naming): 16 fixed hex
   // digits right after the part- prefix
   private val PartSeq = "^part-([0-9a-f]{16})-".r
@@ -3089,19 +1483,5 @@ object EmbeddedClickHouse {
   private[client] def partSeqOf(name: String): Option[Long] =
     PartSeq.findFirstMatchIn(name)
       .map(m => java.lang.Long.parseUnsignedLong(m.group(1), 16))
-
-  private[client] def seqViewName(db: String, table: String): String =
-    s"__ch_seqv_${db}_$table"
-
-  /** The `_part`-carrying view of a table ([[rewritePartVirtual]]). */
-  private[client] def partViewName(db: String, table: String): String =
-    ChSqlTranslator.viewName(db, table) + "__parts"
-
-  // per-root JVM monitor for EXCHANGE TABLES: FileChannel.lock throws on
-  // same-JVM contention, so threads serialize here before taking the OS lock
-  private val exchangeMonitors =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]
-  private[client] def exchangeMonitor(root: String): Object =
-    exchangeMonitors.computeIfAbsent(
-      Paths.get(root).toAbsolutePath.toString, _ => new Object)
 }
+

@@ -24,4 +24,21 @@ private[client] object NioFiles {
     val s = Files.walk(p)
     try s.iterator.asScala.toSeq finally s.close()
   }
+
+  /** Delete `p` and everything under it, if it exists. */
+  def deleteRecursively(p: Path): Unit =
+    if (Files.exists(p)) walk(p).reverse.foreach(Files.delete)
+
+  /** Delete every entry of `dir` last modified before `cutoffMillis` that
+    * `reap` accepts. An entry that cannot be read or deleted is left for
+    * the next sweep.
+    */
+  def sweepStale(dir: Path, cutoffMillis: Long, reap: Path => Boolean = _ => true): Unit =
+    if (Files.isDirectory(dir))
+      list(dir).foreach { p =>
+        val stale =
+          try Files.getLastModifiedTime(p).toMillis < cutoffMillis
+          catch { case _: Exception => false }
+        if (stale && reap(p)) try deleteRecursively(p) catch { case _: Exception => () }
+      }
 }

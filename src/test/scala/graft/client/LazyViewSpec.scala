@@ -49,7 +49,7 @@ class LazyViewSpec extends AnyFunSuite {
     parts.flatten.head.getLong(0)
   }
 
-  private def entry: EmbeddedClickHouse.CachedServer =
+  private def entry: EmbeddedStatements.CachedServer =
     EmbeddedClickHouse.sessionCache.get(client.connectionKey)
 
   test("first query registers only the views it references") {

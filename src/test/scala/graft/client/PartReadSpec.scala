@@ -146,7 +146,7 @@ class PartReadSpec extends AnyFunSuite {
       client.createTable("db", t, Seq("id" -> "Int64"), Map("engine" -> "MergeTree")))
     (1 to 20).foreach(i => client.insert("db", "t1", client.sparkSchema("db", "t1"), Seq(Row(i.toLong))))
     val sql = "SELECT `table`, sum(`rows`) AS `r` FROM `system`.`parts` GROUP BY `table`"
-    val opens = EmbeddedClickHouse.footerCounts(client.root).opens
+    val opens = EmbeddedClickHouse.rootState(client.root).footerCounts.opens
     assert(client.query(sql, 1)._2.flatten.map(r => r.getString(0) -> r.getLong(1)).toMap ==
       Map("t1" -> 20L))
     val before = opens.get

@@ -88,7 +88,7 @@ class PlanQuerySpec extends AnyFunSuite {
       client.describeQuery(hot)
     }
     assert(entry.dfCache.get(hot) eq hotDf, "the hot statement was re-resolved")
-    assert(entry.dfCache.size == EmbeddedClickHouse.PreparedStatements)
+    assert(entry.dfCache.size == EmbeddedStatements.PreparedStatements)
     assert(entry.dfCache.containsKey("SELECT `id` FROM `db`.`t` WHERE `id` = 69"))
     assert(!entry.dfCache.containsKey("SELECT `id` FROM `db`.`t` WHERE `id` = 0"))
     // a write moves the store version: every prepared statement goes
@@ -156,7 +156,7 @@ class PlanQuerySpec extends AnyFunSuite {
       val d = Files.createDirectories(spill.resolve(name))
       Files.write(d.resolve("stream-00000.rows"), Array[Byte](0, 0, 0, 0))
       Files.setLastModifiedTime(d, FileTime.fromMillis(
-        System.currentTimeMillis() - EmbeddedClickHouse.SpillTtlMillis - 60000))
+        System.currentTimeMillis() - EmbeddedReads.SpillTtlMillis - 60000))
       d
     }
     val stale = plant("stale-1")

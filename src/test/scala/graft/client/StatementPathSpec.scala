@@ -186,7 +186,7 @@ class StatementPathSpec extends AnyFunSuite {
   }
 
   test("write statements resolve uncached: the prepared reads stay in place") {
-    val reads = (0 until EmbeddedClickHouse.PreparedStatements)
+    val reads = (0 until EmbeddedStatements.PreparedStatements)
       .map(i => s"SELECT `k` FROM `p`.`l` WHERE `k` = $i")
     reads.foreach(client.describeQuery)
     val entry = EmbeddedClickHouse.sessionCache.get(client.connectionKey)

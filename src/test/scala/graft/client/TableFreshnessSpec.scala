@@ -37,7 +37,7 @@ class TableFreshnessSpec extends AnyFunSuite {
   private def rows(c: EmbeddedClickHouse, sql: String): Seq[String] =
     c.query(sql, 2)._2.flatten.map(_.toString).sorted
 
-  private def entry(c: EmbeddedClickHouse): EmbeddedClickHouse.CachedServer =
+  private def entry(c: EmbeddedClickHouse): EmbeddedStatements.CachedServer =
     EmbeddedClickHouse.sessionCache.get(c.connectionKey)
 
   private val onT2 = "SELECT `k`, `v` FROM `f`.`t2` WHERE `k` > 0"
