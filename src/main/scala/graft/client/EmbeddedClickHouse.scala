@@ -455,15 +455,15 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
       require(dOpts.get(k) == sOpts.get(k),
         s"ATTACH PARTITION FROM: $k differs between $db.$table and " +
           s"$srcDb.$srcTable (server same-key rule)")
-    val dstDir = tablePath(db, table)
-    // attached clones get fresh insert sequences in SOURCE part order, so
+    // the clones are staged without a sequence, named in SOURCE part
+    // order, so the landing gives them fresh sequences in that order and
     // order-dependent collapses remain defined across an ATTACH
-    dataFiles(srcDb, srcTable).zipWithIndex.foreach { case (f, i) =>
-      val target = dstDir.resolve(
-        f"part-${ParquetBlockWriter.nextPartSeq()}%016x-attach-$i.parquet")
-      Files.copy(Paths.get(f), target)
+    publishStaged(db, table, "attach", fire = false) { dir =>
+      Files.createDirectories(dir)
+      dataFiles(srcDb, srcTable).zipWithIndex.foreach { case (f, i) =>
+        Files.copy(Paths.get(f), dir.resolve(f"attach-$i%08d.parquet"))
+      }
     }
-    clock.tableChanged(db, table)
   }
 
   /** DEDUPLICATE merge: full-row distinct, or — with BY columns — one
@@ -500,13 +500,10 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
     */
   override def truncateTable(db: String, table: String): Unit = {
     ownedTable(db, table, "TRUNCATE TABLE")
-    val dir = tablePath(db, table)
-    NioFiles.list(dir).iterator
-      .filter(_.getFileName.toString.endsWith(".parquet"))
-      .foreach(Files.delete)
+    val parts = dataFiles(db, table).map(Paths.get(_))
     for (sub <- Seq(".epoch-parts", ".epochs"))
-      NioFiles.deleteRecursively(dir.resolve(sub))
-    clock.tableChanged(db, table)
+      NioFiles.deleteRecursively(tablePath(db, table).resolve(sub))
+    land(db, table, None, replaces = parts, fire = false)
   }
 
   /** Atomic-engine name swap: three same-filesystem moves through a temp
@@ -660,9 +657,9 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
 
   /** Build one projection's state rows for ONE part file, atomically:
     * a Spark write into a hidden staging dir, then a same-fs rename to
-    * `.projections/<name>/<partFileName>`. Called with STAGED part files
-    * before they land (a failed build aborts the whole insert with
-    * nothing visible) and with live files on MATERIALIZE.
+    * `.projections/<name>/<partFileName>`. Called by [[land]] with STAGED
+    * part files before they land (a failed build aborts the whole landing
+    * with nothing visible) and with live files on MATERIALIZE.
     */
   private def buildProjectionPart(
       db: String, table: String, d: ChProjections.ProjectionDef,
@@ -840,10 +837,11 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
     * create). Runs driver-side at commit time; per-thread re-entrancy
     * guard as defense in depth behind the create-time cycle check.
     */
-  private def fireMaterializedViews(db: String, table: String, newFiles: Seq[Path]): Unit = {
-    if (newFiles.isEmpty) return
+  private def fireMaterializedViews(db: String, table: String, newFiles: => Seq[Path]): Unit = {
     val mvs = allMvs.filter(m => m.srcDb == db && m.srcTable == table)
     if (mvs.isEmpty) return
+    val block = newFiles
+    if (block.isEmpty) return
     val key = s"$db.$table"
     val firing = EmbeddedClickHouse.firingMvs.get()
     require(!firing.contains(key),
@@ -854,9 +852,10 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
       // semantics)
       val sink = sparkSchema(m.targetDb, m.targetTable)
       val out = statements.resolve(m.select,
-        block = Some(((db, table), newFiles)))
+        block = Some(((db, table), block)))
         .select(sink.fieldNames.map(org.apache.spark.sql.functions.col).toSeq: _*)
-      publishStaged(m.targetDb, m.targetTable, "mv", out, fire = true)(_ => ())
+      publishStaged(m.targetDb, m.targetTable, "mv", fire = true)(dir =>
+        out.write.parquet(dir.toString))
       MvRefresh.pending.add((connectionKey, m.targetDb, m.targetTable))
     } finally EmbeddedClickHouse.firingMvs.set(firing)
   }
@@ -1026,17 +1025,11 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
   private[client] def knownTables: Seq[(String, String)] =
     for (db <- listDatabases(); t <- listTables(db)) yield (db, t)
 
+  /** One block staged and landed at once ([[stageInsert]], [[land]]). */
   override def insert(db: String, table: String, schema: StructType, rows: Seq[Row]): Long = {
     rejectSystem(db, s"INSERT into $db.$table")
-    // one Native-protocol block = one atomically-moved parquet part file,
-    // written WITHOUT a SparkSession (ParquetBlockWriter drives parquet-mr
-    // directly), so inserts can run from DSv2 write tasks on executors —
-    // the per-partition streaming shape of the reference's sink
-    val (n, landed) = ParquetBlockWriter.writeBlockAt(
-      tablePath(db, table), sparkSchema(db, table), reorderToSink(db, table, schema, rows))
-    clock.tableChanged(db, table)
-    fireMaterializedViews(db, table, Seq(landed))
-    n
+    publishStaged(db, table, "insert", fire = true)(dir =>
+      stageInsert(db, table, schema, rows, dir.getFileName.toString))
   }
 
   /** `ALTER TABLE ... DELETE WHERE` analog: rewrites the table's parts
@@ -1103,9 +1096,9 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
       db: String, table: String,
       result: org.apache.spark.sql.DataFrame): Unit = {
     // snapshot the parts being rewritten BEFORE materializing the result
-    val snapshot = dataFiles(db, table)
-    publishStaged(db, table, "mutate", result, fire = false)(_ =>
-      snapshot.foreach(f => Files.deleteIfExists(Paths.get(f))))
+    val snapshot = dataFiles(db, table).map(Paths.get(_))
+    publishStaged(db, table, "mutate", replaces = snapshot, fire = false)(dir =>
+      result.write.parquet(dir.toString))
   }
 
   override def insertSelect(db: String, table: String, chSelectSql: String): Long = {
@@ -1128,7 +1121,8 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
     }
     // inserted-row count from the part-file footers (local metadata —
     // no second Spark job over data that was just written)
-    publishStaged(db, table, "copy", df.select(guarded: _*), fire = true) { dir =>
+    publishStaged(db, table, "copy", fire = true) { dir =>
+      df.select(guarded: _*).write.parquet(dir.toString)
       NioFiles.walk(dir).iterator
         .filter(p => p.getFileName.toString.endsWith(".parquet"))
         .map(p => partRowCount(p.toString)).sum
@@ -1154,22 +1148,19 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
       .map(n => s"unexpected column '$n'")
   }
 
-  /** Publish `df` into a table through the staged protocol: Spark
-    * writes parts executor-side into a fresh `<kind>-<uuid>` staging dir,
-    * `beforeCommit` sees that dir, and the commit renames the parts in
-    * atomically, firing views unless `fire` is false (mutations, merges).
-    * Any failure discards the staging dir.
+  /** Stage parts with `write` into a fresh `<kind>-<uuid>` staging dir
+    * and land them ([[land]]) in place of `replaces`, firing views when
+    * `fire` (inserts; not mutations, merges or ATTACH). Any failure
+    * discards the staging dir. Returns what `write` returned.
     */
   private def publishStaged[A](
       db: String, table: String, kind: String,
-      df: org.apache.spark.sql.DataFrame, fire: Boolean)(beforeCommit: Path => A): A = {
+      replaces: Seq[Path] = Nil, fire: Boolean)(write: Path => A): A = {
     val stagingId = s"$kind-${java.util.UUID.randomUUID}"
     val dir = stagingPath(db, table, stagingId)
-    Files.createDirectories(dir.getParent)
     try {
-      df.write.parquet(dir.toString)
-      val a = beforeCommit(dir)
-      commitStagedFire(db, table, stagingId, fire)
+      val a = write(dir)
+      land(db, table, Some(dir), replaces, fire)
       a
     } catch {
       case e: Throwable => abortStaged(db, table, stagingId); throw e
@@ -1197,34 +1188,51 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
       db: String, table: String, schema: StructType, rows: Seq[Row],
       stagingId: String): Long = {
     rejectSystem(db, s"INSERT into $db.$table")
-    val dir = stagingPath(db, table, stagingId)
-    Files.createDirectories(dir)
-    // no invalidate: staged parts are invisible (dataFiles only lists the
-    // table dir itself) until commitStaged renames them in
-    ParquetBlockWriter.writeBlock(dir, sparkSchema(db, table),
-      reorderToSink(db, table, schema, rows))
+    val sink = reorderToSink(db, table, schema, rows)
+    val dir = Files.createDirectories(stagingPath(db, table, stagingId))
+    // no stamp: staged parts are invisible (dataFiles only lists the
+    // table dir itself) until the landing moves them in
+    ParquetBlockWriter.writeBlock(dir, sparkSchema(db, table), sink)
   }
 
-  override def commitStaged(db: String, table: String, stagingId: String): Unit =
-    commitStagedFire(db, table, stagingId, fire = true)
-
-  /** `fire = false` for MUTATION part rewrites (DELETE/UPDATE/ALTER/
-    * OPTIMIZE ride the same staged publish but are not inserts — the
-    * server does not re-fire materialized views on mutations or merges).
-    */
-  private def commitStagedFire(
-      db: String, table: String, stagingId: String, fire: Boolean): Unit = {
+  /** A re-driven commit of a landed staging id finds no dir: a no-op. */
+  override def commitStaged(db: String, table: String, stagingId: String): Unit = {
     val dir = stagingPath(db, table, stagingId)
-    if (Files.isDirectory(dir)) {
-      val parts = NioFiles.list(dir).iterator
-        .filter(_.getFileName.toString.endsWith(".parquet")).toSeq.sorted
-      // parts without an insert sequence in their name (Spark-written
-      // mutation/copy outputs, part-00000-...) get one at publish, in
-      // staged-name order — so EVERY visible part carries its sequence
-      // and order-dependent collapses stay defined after rewrites
-      // (staged names part-00000 < part-00001 follow partition index,
-      // which follows seq-sorted input file order for narrow rewrites)
-      val planned = parts.map { p =>
+    if (Files.isDirectory(dir)) land(db, table, Some(dir), Nil, fire = true)
+  }
+
+  /** The landing step: every change to the part set in a table's dir
+    * goes through here (inserts, INSERT SELECT, view fires, mutations,
+    * merges, ATTACH, TRUNCATE), like a server committing every part with
+    * its projection parts whatever made it. In order:
+    *  1. each staged part is named with an insert sequence: a part
+    *     without one (Spark-written part-00000-..., ATTACH clones) gets a
+    *     fresh one in staged-name order, which follows partition index,
+    *     which follows seq-sorted input order for narrow rewrites; so
+    *     EVERY visible part carries its sequence and order-dependent
+    *     collapses stay defined after rewrites;
+    *  2. projection states build from the STAGED files, so a failed
+    *     build aborts with nothing visible and the old parts intact;
+    *  3. the `replaces` parts go;
+    *  4. the staged parts move in, each atomically (same-fs rename);
+    *  5. state dirs of parts no longer live are pruned;
+    *  6. the table is stamped;
+    *  7. and 8. [[settle]]: stale write dirs are reaped, and views fire
+    *     on the landed parts when `fire`.
+    * The epoch publish ([[commitEpochStaged]]) is the one landing outside
+    * this step: its exactly-once replay needs all-or-nothing visibility
+    * (one marker per epoch), so its parts stay in their epoch dir; it
+    * stamps through the marker and ends in [[settle]]. It builds no
+    * projection states: epoch part names are unique only through the
+    * block writer's uuid, and state dirs are keyed by part name, so
+    * reads of a table with epoch parts are served unswapped.
+    */
+  private def land(
+      db: String, table: String, staging: Option[Path],
+      replaces: Seq[Path], fire: Boolean): Unit = {
+    val planned = staging.filter(Files.isDirectory(_)).toSeq
+      .flatMap(NioFiles.list).filter(_.getFileName.toString.endsWith(".parquet"))
+      .sorted.map { p =>
         val name = p.getFileName.toString
         val outName =
           if (EmbeddedClickHouse.partSeqOf(name).isDefined) name
@@ -1232,31 +1240,37 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
             name.stripPrefix("part-")
         (p, outName)
       }
-      // projection states build from the STAGED files BEFORE anything
-      // lands: a failed build aborts the whole commit with nothing
-      // visible (every landing path — insert, mutation rewrite, merge —
-      // keeps its projections current, like a server rebuilding
-      // projections in mutations and merges)
-      val projs = listProjections(db, table)
-      projs.foreach(d => planned.foreach { case (p, outName) =>
-        buildProjectionPart(db, table, d, p, outName)
-      })
-      // same-filesystem renames: each part becomes visible atomically, and
-      // a re-driven commit of the same staging id is a no-op (dir empty)
-      val landed = planned.map { case (p, outName) =>
-        val t = tablePath(db, table).resolve(outName)
-        Files.move(p, t, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        t
-      }
-      NioFiles.deleteRecursively(dir)
-      // a failed job can orphan a staged dir when its task's commit
-      // message raced the failure and never reached BatchWrite.abort —
-      // the next successful write to the table reaps anything past TTL
-      reapStaleWriteDirs(db, table)
-      clock.tableChanged(db, table)
-      if (projs.nonEmpty) pruneProjectionOrphans(db, table)
-      if (fire) fireMaterializedViews(db, table, landed)
+    val projs = listProjections(db, table)
+    projs.foreach(d => planned.foreach { case (p, outName) =>
+      buildProjectionPart(db, table, d, p, outName)
+    })
+    replaces.foreach(Files.deleteIfExists)
+    val landed = planned.map { case (p, outName) =>
+      val t = tablePath(db, table).resolve(outName)
+      Files.move(p, t, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      t
     }
+    staging.foreach(NioFiles.deleteRecursively)
+    if (projs.nonEmpty) pruneProjectionOrphans(db, table)
+    clock.tableChanged(db, table)
+    settle(db, table, if (fire) landed else Nil)
+  }
+
+  /** The tail of every landing, the epoch publish's included: reap the
+    * write dirs left past the spill TTL (staging dirs of hard-crashed
+    * tasks, or of a failed job whose task commit message raced the
+    * failure and never reached BatchWrite.abort, and epoch dirs whose
+    * query never marked them), then fire the table's views on `landed`,
+    * which is listed only when a view reads the table (epoch commits run
+    * per streaming batch, so the no-view path stays free of file walks).
+    */
+  private def settle(db: String, table: String, landed: => Seq[Path]): Unit = {
+    val cutoff = System.currentTimeMillis() - EmbeddedReads.SpillTtlMillis
+    val dir = tablePath(db, table)
+    NioFiles.sweepStale(dir.resolve(".insert-staging"), cutoff)
+    NioFiles.sweepStale(dir.resolve(".epoch-parts"), cutoff,
+      p => !Files.exists(dir.resolve(".epochs").resolve(p.getFileName)))
+    fireMaterializedViews(db, table, landed)
   }
 
   override def abortStaged(db: String, table: String, stagingId: String): Unit =
@@ -1289,7 +1303,8 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
       s"invalid epoch marker: $epochMarker")
     val markerFile = tablePath(db, table).resolve(".epochs").resolve(epochMarker)
     val epochDir = tablePath(db, table).resolve(".epoch-parts").resolve(epochMarker)
-    if (Files.exists(markerFile)) {
+    val replay = Files.exists(markerFile)
+    if (replay) {
       staged.foreach { case (stagingId, _) => abortStaged(db, table, stagingId) }
     } else {
       NioFiles.deleteRecursively(epochDir) // unmarked partial-attempt debris
@@ -1301,29 +1316,12 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
             java.nio.file.StandardCopyOption.ATOMIC_MOVE)
       }
       tryMarkEpochCommitted(db, table, epochMarker)
-      // fire AFTER the marker: a crash-replay (marker present) aborts its
-      // re-staged parts above and must not double-fire — views see each
-      // epoch at most once (the server's own MV/insert non-atomicity).
-      // The walk only runs when a view is defined on this table — epoch
-      // commits are per-batch on streaming sinks, so the no-view path
-      // must stay metadata-free
-      if (allMvs.exists(m => m.srcDb == db && m.srcTable == table))
-        fireMaterializedViews(db, table, NioFiles.walk(epochDir)
-          .filter(_.getFileName.toString.endsWith(".parquet")))
     }
-    reapStaleWriteDirs(db, table)
-  }
-
-  /** Orphan reaping: staging dirs from hard-crashed tasks and epoch dirs
-    * whose query never completed (no marker) leak otherwise — anything
-    * inactive past the spill TTL goes.
-    */
-  private def reapStaleWriteDirs(db: String, table: String): Unit = {
-    val cutoff = System.currentTimeMillis() - EmbeddedReads.SpillTtlMillis
-    val dir = tablePath(db, table)
-    NioFiles.sweepStale(dir.resolve(".insert-staging"), cutoff)
-    NioFiles.sweepStale(dir.resolve(".epoch-parts"), cutoff,
-      p => !Files.exists(dir.resolve(".epochs").resolve(p.getFileName)))
+    // fire AFTER the marker: a crash-replay (marker present) aborts its
+    // re-staged parts above and must not double-fire — views see each
+    // epoch at most once (the server's own MV/insert non-atomicity)
+    settle(db, table, if (replay) Nil else NioFiles.walk(epochDir)
+      .filter(_.getFileName.toString.endsWith(".parquet")))
   }
 
   // store-open crash recovery: a process that died mid-EXCHANGE leaves a

@@ -120,7 +120,7 @@ private[client] final class EmbeddedStatements(store: EmbeddedClickHouse) {
     * `__ch_seq` (part insert order × row position within the part) under
     * [[seqViewName]] — what order-dependent collapses
     * (CollapsingMergeTree) read. Every part carries its sequence in its
-    * file name (ParquetBlockWriter / commitStagedFire / attach).
+    * file name (ParquetBlockWriter, or the landing step for the rest).
     */
   private def registerSeqView(child: SparkSession, db: String, t: String): Unit = {
     import org.apache.spark.sql.functions.{col, element_at, lit, map}
@@ -161,29 +161,43 @@ private[client] final class EmbeddedStatements(store: EmbeddedClickHouse) {
     df.createOrReplaceTempView(seqViewName(db, t))
   }
 
-  private def registerView(child: SparkSession, db: String, t: String): Unit = {
+  private def registerView(child: SparkSession, db: String, t: String): Unit =
+    tableFrame(child, db, t, withPart = false)
+      .createOrReplaceTempView(ChSqlTranslator.viewName(db, t))
+
+  /** A table's rows: one multi-file scan of its parts, or, for
+    * CollapsingMergeTree, a union of per-part reads in insert order.
+    * `withPart` adds the `_part` column, each row's part file name.
+    */
+  private def tableFrame(
+      child: SparkSession, db: String, t: String, withPart: Boolean): DataFrame = {
+    import org.apache.spark.sql.functions.{col, lit}
     val schema = store.sparkSchema(db, t)
     val files = store.dataFiles(db, t)
-    val df =
-      if (store.isSystem(db))
-        child.createDataFrame(store.systemRows(t).asJava, schema)
-      else if (files.isEmpty) emptyFrame(child, schema)
-      else if (store.readMeta(db, t)._2.getOrElse("engine", "").startsWith("CollapsingMergeTree"))
-        // insertion-ORDERED view: a multi-file parquet read bin-packs
-        // files by SIZE, which scrambles row order across parts — fatal
-        // for the one engine whose collapse is insertion-order-
-        // dependent. A union of per-file reads in sequence order keeps
-        // partition order = insertion order through every narrow plan,
-        // so mutation/ALTER rewrites republish rows in an order the
-        // next collapse can still trust (their staged part-0000N names
-        // follow partition index; publish stamps fresh seqs in that
-        // order). FINAL reads stay immune either way (explicit
-        // __ch_seq via the sequence view).
-        files.map(f => (f, insertSeq(db, t, f))).sortBy(_.swap)
-          .map { case (f, _) => child.read.schema(schema).parquet(f) }
-          .reduce(_ union _)
-      else child.read.schema(schema).parquet(files: _*)
-    df.createOrReplaceTempView(ChSqlTranslator.viewName(db, t))
+    def read(fs: String*): DataFrame = {
+      val df = child.read.schema(schema).parquet(fs: _*)
+      if (withPart) df.select(col("*"), col("_metadata.file_name").as("_part")) else df
+    }
+    def padded(df: DataFrame): DataFrame =
+      if (withPart) df.withColumn("_part", lit("")) else df
+    if (store.isSystem(db))
+      padded(child.createDataFrame(store.systemRows(t).asJava, schema))
+    else if (files.isEmpty) padded(emptyFrame(child, schema))
+    else if (store.readMeta(db, t)._2.getOrElse("engine", "").startsWith("CollapsingMergeTree"))
+      // insertion-ORDERED view: a multi-file parquet read bin-packs
+      // files by SIZE, which scrambles row order across parts — fatal
+      // for the one engine whose collapse is insertion-order-
+      // dependent. A union of per-file reads in sequence order keeps
+      // partition order = insertion order through every narrow plan,
+      // so mutation/ALTER rewrites republish rows in an order the
+      // next collapse can still trust (their staged part-0000N names
+      // follow partition index; the landing stamps fresh seqs in that
+      // order). FINAL reads stay immune either way (explicit
+      // __ch_seq via the sequence view).
+      files.map(f => (f, insertSeq(db, t, f))).sortBy(_.swap)
+        .map { case (f, _) => read(f) }
+        .reduce(_ union _)
+    else read(files: _*)
   }
 
   /** `FROM db.t FINAL`: the table's merged state on read, per engine —
@@ -568,19 +582,8 @@ private[client] final class EmbeddedStatements(store: EmbeddedClickHouse) {
   private def ensurePartView(
       entry: CachedServer, db: String, t: String): String = {
     val name = partViewName(db, t)
-    refreshView(entry, (s"__vpart__$db.$t", ""), (db, t)) {
-      val child = entry.session
-      import org.apache.spark.sql.functions.lit
-      val schema = store.sparkSchema(db, t)
-      val files = store.dataFiles(db, t)
-      val df =
-        if (files.isEmpty) emptyFrame(child, schema).withColumn("_part", lit(""))
-        else files.map { f =>
-          child.read.schema(schema).parquet(f).withColumn("_part",
-            lit(Paths.get(f).getFileName.toString))
-        }.reduce(_ unionByName _)
-      df.createOrReplaceTempView(name)
-    }
+    refreshView(entry, (s"__vpart__$db.$t", ""), (db, t))(
+      tableFrame(entry.session, db, t, withPart = true).createOrReplaceTempView(name))
     name
   }
 

@@ -1,11 +1,12 @@
 package graft.client
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path}
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.parquet.hadoop.ParquetWriter
 import org.apache.parquet.hadoop.api.WriteSupport
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.io.{LocalOutputFile, OutputFile}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
@@ -19,9 +20,9 @@ import org.apache.spark.sql.types.StructType
   * Uses Spark's own `ParquetWriteSupport` (public) directly over
   * parquet-mr, so a block can be written from ANY thread — including a
   * DSv2 write task on an executor — without a SparkSession or a Spark
-  * job. The file is written in a temp directory and moved atomically
-  * into the table directory, so concurrent inserts never observe a
-  * partial part.
+  * job. Blocks are written into a staging dir and become visible only
+  * when the store lands that dir (`EmbeddedClickHouse.land`), so readers
+  * never observe a partial part.
   */
 object ParquetBlockWriter {
 
@@ -38,8 +39,8 @@ object ParquetBlockWriter {
   def nextPartSeq(): Long = seqCounter.updateAndGet(prev =>
     math.max(prev + 1, System.currentTimeMillis() * 1000L))
 
-  private final class Builder(path: org.apache.hadoop.fs.Path)
-    extends ParquetWriter.Builder[org.apache.spark.sql.catalyst.InternalRow, Builder](path) {
+  private final class Builder(file: OutputFile)
+    extends ParquetWriter.Builder[org.apache.spark.sql.catalyst.InternalRow, Builder](file) {
     override def self(): Builder = this
     override def getWriteSupport(conf: Configuration)
       : WriteSupport[org.apache.spark.sql.catalyst.InternalRow] =
@@ -52,7 +53,6 @@ object ParquetBlockWriter {
   private def conf(schema: StructType): Configuration = {
     import org.apache.spark.sql.internal.SQLConf
     val c = new Configuration(false)
-    c.set("fs.file.impl", classOf[org.apache.hadoop.fs.RawLocalFileSystem].getName)
     ParquetWriteSupport.setSchema(schema, c)
     c.set(SQLConf.PARQUET_WRITE_LEGACY_FORMAT.key, "false")
     c.set(SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE.key, "TIMESTAMP_MICROS")
@@ -64,40 +64,25 @@ object ParquetBlockWriter {
     c
   }
 
-  /** Write `rows` (already in `schema` field order) to
-    * `targetDir/part-<uuid>.parquet`; returns the row count.
-    *
-    * Staged NEXT TO the table directory, not in java.io.tmpdir: /tmp is
-    * tmpfs on many distros and ATOMIC_MOVE across filesystems throws
-    * AtomicMoveNotSupportedException — same-directory staging guarantees
-    * a same-fs atomic rename.
+  /** Write `rows` (already in `schema` field order) as one part file
+    * `dir/part-<seq>-<uuid>.parquet`; returns the row count. `dir` is a
+    * staging dir no reader lists, so the file is written in place, and
+    * a failed write removes what it wrote.
     */
-  def writeBlock(targetDir: Path, schema: StructType, rows: Seq[Row]): Long =
-    writeBlockAt(targetDir, schema, rows)._1
-
-  /** Like [[writeBlock]] but also returns the published part path (for
-    * callers that post-process the landed block, e.g. MV triggers).
-    */
-  def writeBlockAt(targetDir: Path, schema: StructType, rows: Seq[Row]): (Long, Path) = {
+  def writeBlock(dir: Path, schema: StructType, rows: Seq[Row]): Long = {
     val ser = ExpressionEncoder(schema).resolveAndBind().createSerializer()
-    val tmpDir = Files.createDirectories(
-      targetDir.resolve(s".staging-${java.util.UUID.randomUUID}"))
-    val tmp = tmpDir.resolve("block.parquet")
+    val target = dir.resolve(
+      f"part-${nextPartSeq()}%016x-${java.util.UUID.randomUUID}.parquet")
     try {
-      val w = new Builder(new org.apache.hadoop.fs.Path(tmp.toUri))
+      val w = new Builder(new LocalOutputFile(target))
         .withConf(conf(schema))
         .withCompressionCodec(CompressionCodecName.SNAPPY)
         .build()
       try rows.foreach(r => w.write(ser(r)))
       finally w.close()
-      val target = targetDir.resolve(
-        f"part-${nextPartSeq()}%016x-${java.util.UUID.randomUUID}.parquet")
-      Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
-      (rows.length.toLong, target)
-    } finally {
-      if (Files.exists(tmp)) Files.delete(tmp)
-      NioFiles.list(tmpDir).foreach(Files.delete(_))
-      Files.delete(tmpDir)
+    } catch {
+      case e: Throwable => Files.deleteIfExists(target); throw e
     }
+    rows.length.toLong
   }
 }

@@ -195,20 +195,40 @@ object ClickHouseFunctionPushdown extends Rule[LogicalPlan] {
     }.headOption.flatten
   }
 
-  /** Memoized GLOBAL dim materializations: (connectionKey, data-version
-    * token, alpha-renamed dimSql) → rows. Re-planning the same join —
-    * interactively or across AQE stages — otherwise pays the count probe
-    * AND the full dim read per planning (VERDICT r12 item 7). Entries
-    * are only written under a [[ClickHouseClient.dataVersionToken]]
-    * (staleness must be detectable; wire transports re-probe), and the
-    * KEY alpha-renames the exprId-derived `c<id>` aliases by first
-    * occurrence — a rebuilt DataFrame mints fresh exprIds for the same
-    * query, and positional renaming makes those texts collide exactly
-    * when the statements are identical. Rows cache, not inline SQL:
-    * the inline rendering carries the CURRENT planning's aliases.
+  /** A bounded memo of values a store returned for a statement, per
+    * connection. A statement that reads table data is also keyed on the
+    * store's [[graft.client.ClickHouseClient.dataVersionToken]], read
+    * before the value is computed, so an entry is never served after a
+    * write; on a client without a token (wire transports) it is not
+    * memoized. A constant statement keys on its text alone. When `cap`
+    * entries are held the memo starts over.
     */
-  private val globalDimCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[org.apache.spark.sql.Row]]
+  private final class StoreMemo[V <: AnyRef](cap: Int) {
+    private val memo = new java.util.concurrent.ConcurrentHashMap[String, V]
+
+    def apply(client: graft.client.ClickHouseClient, stmt: String, readsData: Boolean)(
+        compute: => V): V = {
+      val key = (if (readsData) client.dataVersionToken else Some(""))
+        .map(tok => client.connectionKey + "\u0000" + tok + "\u0000" + stmt)
+      key.flatMap(k => Option(memo.get(k))).getOrElse {
+        val v = compute
+        key.foreach { k => if (memo.size >= cap) memo.clear(); memo.put(k, v) }
+        v
+      }
+    }
+  }
+
+  /** Memoized GLOBAL dim materializations, per alpha-renamed dimSql.
+    * Re-planning the same join — interactively or across AQE stages —
+    * otherwise pays the count probe AND the full dim read per planning
+    * (VERDICT r12 item 7). The KEY alpha-renames the exprId-derived
+    * `c<id>` aliases by first occurrence — a rebuilt DataFrame mints
+    * fresh exprIds for the same query, and positional renaming makes
+    * those texts collide exactly when the statements are identical.
+    * Rows cache, not inline SQL: the inline rendering carries the
+    * CURRENT planning's aliases.
+    */
+  private val globalDimMemo = new StoreMemo[Option[Seq[org.apache.spark.sql.Row]]](64)
 
   /** Test hook: number of plan-time dim probes that actually hit the
     * store (cache misses).
@@ -236,32 +256,20 @@ object ClickHouseFunctionPushdown extends Rule[LogicalPlan] {
     */
   private def globalDimRows(
       client: graft.client.ClickHouseClient,
-      dimSql: String): Option[Seq[org.apache.spark.sql.Row]] = {
-    val key = client.dataVersionToken.map(tok =>
-      client.connectionKey + " " + tok + " " + alphaRename(dimSql))
-    key.flatMap(k => Option(globalDimCache.get(k))) match {
-      case Some(rows) => Some(rows)
-      case None =>
-        globalDimProbes.incrementAndGet()
-        // count probe first: one row PER SHARD — fold with a sum. Decode
-        // defensively: a wire transport types count() as UInt64, which
-        // lands as Decimal(20,0), not Long
-        val n = client.query(s"SELECT count(*) AS n FROM ($dimSql) AS gcnt", 1)
-          ._2.flatten.map(_.get(0) match {
-            case v: Number => v.longValue()
-            case other => other.toString.toLong
-          }).sum
-        if (n <= 0 || n > GlobalDimRowCap) None
-        else {
-          val rows = client.query(dimSql, 1)._2.flatten
-          key.foreach { k =>
-            if (globalDimCache.size > 64) globalDimCache.clear()
-            globalDimCache.put(k, rows)
-          }
-          Some(rows)
-        }
+      dimSql: String): Option[Seq[org.apache.spark.sql.Row]] =
+    globalDimMemo(client, alphaRename(dimSql), readsData = true) {
+      globalDimProbes.incrementAndGet()
+      // count probe first: one row PER SHARD — fold with a sum. Decode
+      // defensively: a wire transport types count() as UInt64, which
+      // lands as Decimal(20,0), not Long
+      val n = client.query(s"SELECT count(*) AS n FROM ($dimSql) AS gcnt", 1)
+        ._2.flatten.map(_.get(0) match {
+          case v: Number => v.longValue()
+          case other => other.toString.toLong
+        }).sum
+      if (n <= 0 || n > GlobalDimRowCap) None
+      else Some(client.query(dimSql, 1)._2.flatten)
     }
-  }
 
   /** Render materialized dim rows as an inline UNION ALL literal table
     * whose first row CASTs every column to its declared ClickHouse type
@@ -667,9 +675,16 @@ object ClickHouseFunctionPushdown extends Rule[LogicalPlan] {
   // Memoized remote scalar folds: the rule re-runs on every optimizer
   // pass (and on each AQE re-plan), and each re-run repeated the blocking
   // remote round-trip. Volatile functions are excluded so e.g. now() is
-  // still re-evaluated per fold site rather than frozen for the JVM.
-  private val scalarCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), (Any, org.apache.spark.sql.types.DataType)]
+  // still re-evaluated per fold site rather than frozen for the JVM; a
+  // fold that reads a table keys on the store's data version.
+  private val scalarMemo = new StoreMemo[(Any, org.apache.spark.sql.types.DataType)](256)
+
+  /** Whether a compiled fold reads table data: a SELECT outside literals. */
+  private def readsTable(sql: String): Boolean = {
+    val lx = new graft.sql.ChLex(sql)
+    while (lx.next()) if (lx.isWord("SELECT")) return true
+    false
+  }
 
   // prefix-matched on call sites so now64(, rand32(, generateUUIDv4( and
   // friends are all caught, not just the bare names
@@ -688,24 +703,17 @@ object ClickHouseFunctionPushdown extends Rule[LogicalPlan] {
       scan <- scanOpt
       sql <- ChExprUnparser.compile(pt, Map.empty)
     } yield {
-      val key = (scan.chClient.connectionKey, sql)
-      val cacheable = volatileFnCall.findFirstIn(sql).isEmpty
-      val (v, dt) = {
-        val hit = if (cacheable) scalarCache.get(key) else null
-        if (hit != null) hit
-        else {
-          val evaluated =
-            try {
-              val (schema, parts) = scan.chClient.query(s"SELECT $sql AS v", 1)
-              (parts.flatten.headOption.map(_.get(0)).orNull, schema.fields(0).dataType)
-            } catch {
-              case e: Exception => throw new IllegalStateException(
-                s"remote evaluation of ClickHouse scalar failed for `$sql`: ${e.getMessage}", e)
-            }
-          if (cacheable) scalarCache.put(key, evaluated)
-          evaluated
+      def evaluate =
+        try {
+          val (schema, parts) = scan.chClient.query(s"SELECT $sql AS v", 1)
+          (parts.flatten.headOption.map(_.get(0)).orNull, schema.fields(0).dataType)
+        } catch {
+          case e: Exception => throw new IllegalStateException(
+            s"remote evaluation of ClickHouse scalar failed for `$sql`: ${e.getMessage}", e)
         }
-      }
+      val (v, dt) =
+        if (volatileFnCall.findFirstIn(sql).isDefined) evaluate
+        else scalarMemo(scan.chClient, sql, readsTable(sql))(evaluate)
       val lit = Literal.create(v, dt)
       if (lit.dataType == pt.dataType) lit
       else Cast(lit, pt.dataType, Some("UTC"))

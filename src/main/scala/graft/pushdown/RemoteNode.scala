@@ -89,26 +89,31 @@ case class ClickHouseRemoteExec(
     Map("numOutputRows" -> org.apache.spark.sql.execution.metric.SQLMetrics
       .createMetric(sparkContext, "number of output rows"))
 
-  override protected def doExecute(): RDD[InternalRow] = {
-    val expected = output.map(_.dataType)
-    val numOutputRows = longMetric("numOutputRows")
-    // plan-time: metadata-only handles; rows are pulled on the executors
+  /** The planned handles with the remote schema checked against the
+    * plan's: the same arity, every field widened to nullable, and whether
+    * a Cast projection must coerce a drifted type. With opt-out schema
+    * coercion (the reference's per-catalog toggle, builders.rs:131-135)
+    * wire-type drift is an error, not a silent per-batch Cast projection.
+    */
+  private def planChecked(): (StructType, Seq[graft.client.ChPartitionHandle], Boolean) = {
     val (remoteSchema, handles) = plan()
     require(remoteSchema.length == output.length,
       s"remote arity ${remoteSchema.length} != plan arity ${output.length} for: $sql")
     val remote = StructType(remoteSchema.fields.map(f => f.copy(nullable = true)))
-    // opt-out schema coercion (the reference's per-catalog toggle,
-    // builders.rs:131-135): OFF = wire-type drift is an error, not a
-    // silent per-batch Cast projection
-    if (!coerce) {
-      val drift = expected.zip(remote.fields).zipWithIndex.collect {
-        case ((dt, f), i) if f.dataType != dt => s"col $i: remote ${f.dataType} != plan $dt"
-      }
-      require(drift.isEmpty,
-        s"remote schema drift with coerce_schemas=false for $sql: ${drift.mkString("; ")}")
+    val drift = output.map(_.dataType).zip(remote.fields).zipWithIndex.collect {
+      case ((dt, f), i) if f.dataType != dt => s"col $i: remote ${f.dataType} != plan $dt"
     }
+    require(coerce || drift.isEmpty,
+      s"remote schema drift with coerce_schemas=false for $sql: ${drift.mkString("; ")}")
+    (remote, handles, drift.nonEmpty)
+  }
+
+  override protected def doExecute(): RDD[InternalRow] = {
+    val expected = output.map(_.dataType)
+    val numOutputRows = longMetric("numOutputRows")
+    // plan-time: metadata-only handles; rows are pulled on the executors
+    val (remote, handles, needsProjection) = planChecked()
     val cl = client
-    val needsProjection = expected.zip(remote.fields).exists { case (dt, f) => f.dataType != dt }
     sparkContext.parallelize(handles, math.max(1, handles.length)).mapPartitions { hs =>
       if (!needsProjection)
         // internal rows pass through untouched — the transport decoded
@@ -142,21 +147,10 @@ case class ClickHouseRemoteExec(
       : RDD[org.apache.spark.sql.vectorized.ColumnarBatch] = {
     val expected = output.map(_.dataType)
     val numOutputRows = longMetric("numOutputRows")
-    val (remoteSchema, handles) = plan()
-    require(remoteSchema.length == output.length,
-      s"remote arity ${remoteSchema.length} != plan arity ${output.length} for: $sql")
-    val remote = StructType(remoteSchema.fields.map(f => f.copy(nullable = true)))
-    if (!coerce) {
-      val drift = expected.zip(remote.fields).zipWithIndex.collect {
-        case ((dt, f), i) if f.dataType != dt => s"col $i: remote ${f.dataType} != plan $dt"
-      }
-      require(drift.isEmpty,
-        s"remote schema drift with coerce_schemas=false for $sql: ${drift.mkString("; ")}")
-    }
+    val (remote, handles, needsProjection) = planChecked()
     val cl = client
     val planSchema = StructType(
       output.map(a => StructField(a.name, a.dataType, nullable = true)))
-    val needsProjection = expected.zip(remote.fields).exists { case (dt, f) => f.dataType != dt }
     sparkContext.parallelize(handles, math.max(1, handles.length)).mapPartitions { hs =>
       if (!needsProjection)
         // the transport decodes straight to vectors (wire clients) or

@@ -76,21 +76,4 @@ object ChSql {
 
   private def binOp(attr: String, op: String, v: Any): Option[String] =
     literal(v).map(lit => s"${quoteIdent(attr)} $op $lit")
-
-  /** Build the scan SQL (mirrors sql.rs:160-193): projected columns (or
-    * `1` for an empty COUNT(*) projection, sql.rs:259-276), compiled
-    * filters, optional LIMIT.
-    */
-  def buildScanSql(
-      db: String,
-      table: String,
-      columns: Seq[String],
-      where: Seq[String],
-      limit: Option[Int]): String = {
-    val sel = if (columns.isEmpty) "1" else columns.map(quoteIdent).mkString(", ")
-    val base = s"SELECT $sel FROM ${quoteTable(db, table)}"
-    val withWhere =
-      if (where.isEmpty) base else s"$base WHERE ${where.mkString(" AND ")}"
-    limit.fold(withWhere)(n => s"$withWhere LIMIT $n")
-  }
 }

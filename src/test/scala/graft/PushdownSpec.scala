@@ -618,6 +618,26 @@ class PushdownSpec extends AnyFunSuite {
     assert(got == Set(("Alice", 2L), ("Bob", 2L)))
   }
 
+  test("a remote scalar fold that reads a table is not served after a write to it") {
+    import spark.implicits._
+    Seq(1, 9).toDF("lid").createOrReplaceTempView("fold_local")
+    val client = new EmbeddedClickHouse(root)
+    client.createTable("db", "fold_t", Seq("x" -> "Int32"), Map("engine" -> "MergeTree"))
+    def insert(x: Int): Unit =
+      client.insert("db", "fold_t", client.sparkSchema("db", "fold_t"), Seq(Row(x)))
+    // FULL OUTER pads both sides, so the reference-free expression has
+    // no hoist site and folds to a literal
+    def counts(): Set[Long] = spark.sql(
+      """SELECT p.id, l.lid,
+        |  clickhouse_eval('(SELECT count() FROM db.fold_t)', 'UInt64') AS n
+        |FROM chpd.db.people p FULL OUTER JOIN fold_local l ON p.id = l.lid""".stripMargin)
+      .collect().map(_.getDecimal(2).longValue).toSet
+    insert(1)
+    assert(counts() == Set(1L))
+    insert(2)
+    assert(counts() == Set(2L), "the fold returned a count from before the insert")
+  }
+
   test("arrayJoin passthrough expands rows remotely (e2e.rs:599, 615)") {
     val df = spark.sql(
       """SELECT id, clickhouse_fn('arrayJoin', names, 'Utf8') AS name

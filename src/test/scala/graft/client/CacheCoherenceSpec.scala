@@ -159,7 +159,10 @@ class CacheCoherenceSpec extends AnyFunSuite {
     for (seed <- 0 until Seeds) {
       val s = new Sequence(seed)
       s.setUp()
+      val swapped = client.projectionHitCount(s.db, "pj", "pg")
       s.reads.foreach { case (_, sql) => rows(sql) }
+      assert(client.projectionHitCount(s.db, "pj", "pg") == swapped + 1,
+        s"seed $seed: the first projection read after setup was not served by the projection")
       for (i <- 0 until Steps) {
         val prepared = s.reads.map { case (_, sql) =>
           EmbeddedClickHouse.sessionCache.get(client.connectionKey).dfCache.get(sql)

@@ -139,6 +139,27 @@ class PartReadSpec extends AnyFunSuite {
     }
   }
 
+  test("a _part read over 40 parts plans one parquet scan; a CollapsingMergeTree " +
+    "table keeps its ordered per-part union") {
+    val client = newStore()
+    client.createTable("db", "p40", Cols, Map("engine" -> "MergeTree", "order_by" -> "id"))
+    client.createTable("db", "c", Seq("k" -> "Int64", "sign" -> "Int8"),
+      Map("engine" -> "CollapsingMergeTree(sign)", "order_by" -> "k"))
+    (0 until 40).foreach(b =>
+      client.insert("db", "p40", client.sparkSchema("db", "p40"), block(b).take(5)))
+    (1 to 3).foreach(i =>
+      client.insert("db", "c", client.sparkSchema("db", "c"), Seq(Row(i.toLong, 1.toByte))))
+    def scans(sql: String): Int = client.statements.prepared(sql).queryExecution.sparkPlan
+      .collect { case s: org.apache.spark.sql.execution.FileSourceScanExec => s }.size
+    val sql = "SELECT `_part`, count(*) AS `n` FROM `db`.`p40` GROUP BY `_part`"
+    assert(scans(sql) == 1)
+    val parts = Files.list(Paths.get(client.root, "db", "p40")).iterator.asScala
+      .map(_.getFileName.toString).filter(_.endsWith(".parquet")).toSet
+    assert(client.query(sql, 2)._2.flatten.map(r => r.getString(0) -> r.getLong(1)).toMap ==
+      parts.map(_ -> 5L).toMap)
+    assert(scans("SELECT `_part`, `k` FROM `db`.`c`") == 3)
+  }
+
   test("footer row counts are read once per part: a second system.parts read " +
     "after one insert opens one footer") {
     val client = newStore()
