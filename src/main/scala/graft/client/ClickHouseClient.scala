@@ -434,20 +434,19 @@ trait ClickHouseClient extends Serializable {
   /** Publish a streaming epoch's staged inserts exactly-once, CONVERGING
     * under replay: a crash anywhere inside a commit must leave a state a
     * replayed commit repairs — neither losing the epoch's rows nor
-    * duplicating them. `staged` pairs each staging id with its partition
-    * id (the dedup key across attempts). The default is the naive
-    * marker-gated publish (exactly-once only if commit itself never
-    * crashes mid-way); transports with atomic renames/insert tokens
-    * override with a true converging protocol.
+    * duplicating them. `staged` holds this attempt's staging ids; the
+    * epoch marker is the dedup key across attempts. The default is the
+    * naive marker-gated publish (exactly-once only if commit itself
+    * never crashes mid-way); the embedded store overrides it with a
+    * converging one (it wipes an unmarked attempt's parts, then lands
+    * this attempt's with the marker).
     */
   def commitEpochStaged(
-      db: String, table: String, epochMarker: String,
-      staged: Seq[(String, Int)]): Unit = {
+      db: String, table: String, epochMarker: String, staged: Seq[String]): Unit =
     if (tryMarkEpochCommitted(db, table, epochMarker))
-      staged.foreach { case (id, _) => commitStaged(db, table, id) }
+      staged.foreach(commitStaged(db, table, _))
     else
-      staged.foreach { case (id, _) => abortStaged(db, table, id) }
-  }
+      staged.foreach(abortStaged(db, table, _))
 }
 
 /** One ALTER TABLE schema change. Types are ClickHouse type strings

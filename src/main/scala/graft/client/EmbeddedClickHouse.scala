@@ -495,15 +495,14 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
 
   /** TRUNCATE as wholesale part removal (metadata-speed like the
     * server — never a row-rewriting mutation). External attachments are
-    * read-only and reject; epoch markers clear with the parts so a
-    * replayed streaming epoch can land again post-truncate.
+    * read-only and reject. Every part file goes, an unmarked epoch's
+    * included, and the epoch markers clear with them so a replayed
+    * streaming epoch can land again post-truncate.
     */
   override def truncateTable(db: String, table: String): Unit = {
     ownedTable(db, table, "TRUNCATE TABLE")
-    val parts = dataFiles(db, table).map(Paths.get(_))
-    for (sub <- Seq(".epoch-parts", ".epochs"))
-      NioFiles.deleteRecursively(tablePath(db, table).resolve(sub))
-    land(db, table, None, replaces = parts, fire = false)
+    NioFiles.deleteRecursively(tablePath(db, table).resolve(".epochs"))
+    land(db, table, Nil, replaces = partFiles(db, table), fire = false)
   }
 
   /** Atomic-engine name swap: three same-filesystem moves through a temp
@@ -699,13 +698,13 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
   }
 
   /** Remove state dirs whose part no longer exists (mutations and
-    * merges land REWRITTEN parts and delete the originals).
+    * merges land REWRITTEN parts and delete the originals). A part of an
+    * epoch not yet marked is live: its landing built its states.
     */
   private def pruneProjectionOrphans(db: String, table: String): Unit = {
     val defs = listProjections(db, table)
     if (defs.isEmpty) return
-    val live = dataFiles(db, table)
-      .map(f => Paths.get(f).getFileName.toString).toSet
+    val live = partFiles(db, table).map(_.getFileName.toString).toSet
     defs.foreach { d =>
       val dir = projDataDir(db, table, d.name)
       if (Files.isDirectory(dir))
@@ -837,11 +836,9 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
     * create). Runs driver-side at commit time; per-thread re-entrancy
     * guard as defense in depth behind the create-time cycle check.
     */
-  private def fireMaterializedViews(db: String, table: String, newFiles: => Seq[Path]): Unit = {
+  private def fireMaterializedViews(db: String, table: String, block: Seq[Path]): Unit = {
     val mvs = allMvs.filter(m => m.srcDb == db && m.srcTable == table)
-    if (mvs.isEmpty) return
-    val block = newFiles
-    if (block.isEmpty) return
+    if (mvs.isEmpty || block.isEmpty) return
     val key = s"$db.$table"
     val firing = EmbeddedClickHouse.firingMvs.get()
     require(!firing.contains(key),
@@ -917,30 +914,36 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
       Some(dataFiles(db, table).map(partRowCount).sum)
     } catch { case _: Exception => None }
 
+  /** Every part file in the table dir, an unmarked epoch's included.
+    * A table dir that still holds the older layout's tree of epoch parts
+    * rejects: its rows would be missing from every read.
+    */
+  private def partFiles(db: String, table: String): Seq[Path] = {
+    val dir = tablePath(db, table)
+    if (!Files.isDirectory(dir)) return Seq.empty
+    val oldLayout = dir.resolve(".epoch-parts")
+    if (Files.exists(oldLayout)) throw new IllegalStateException(
+      s"$db.$table: $oldLayout holds streaming epoch parts in a layout this " +
+        "store no longer reads; land its rows again and remove the dir")
+    NioFiles.list(dir).filter(_.getFileName.toString.endsWith(".parquet")).sorted
+  }
+
+  /** The table's visible parts: its attached files, then its part files
+    * in insert order. A part an epoch landed is visible once that epoch's
+    * marker exists (the epoch's atomic visibility switch).
+    */
   private[client] def dataFiles(db: String, table: String): Seq[String] = {
     if (isSystem(db)) return Seq.empty
     val (_, _, ext) = readMeta(db, table)
-    val dir = tablePath(db, table)
-    val parts =
-      if (!Files.isDirectory(dir)) Seq.empty
-      else NioFiles.list(dir).iterator
-        .filter(_.getFileName.toString.endsWith(".parquet"))
-        .map(_.toString).toSeq.sorted
-    // streaming epoch publishes live under .epoch-parts/<marker>/p<id>/
-    // and are visible IFF their epoch marker exists (the converging
-    // commit's atomic visibility switch)
-    val epochRoot = dir.resolve(".epoch-parts")
-    val markerDir = dir.resolve(".epochs")
-    val epochParts =
-      if (!Files.isDirectory(epochRoot)) Seq.empty
-      else NioFiles.list(epochRoot).iterator
-        .filter(e => Files.exists(markerDir.resolve(e.getFileName)))
-        .flatMap(e => NioFiles.walk(e).iterator)
-        .filter(p => p.getFileName.toString.endsWith(".parquet"))
-        .map(_.toString).toSeq.sorted
-    ext ++ parts ++ epochParts
+    val marked = scala.collection.mutable.Map.empty[String, Boolean]
+    ext ++ partFiles(db, table).filter(p =>
+      EmbeddedClickHouse.epochOf(p.getFileName.toString).forall(m =>
+        marked.getOrElseUpdate(m, epochMarked(db, table, m))))
+      .map(_.toString)
   }
 
+  private def epochMarked(db: String, table: String, marker: String): Boolean =
+    Files.exists(tablePath(db, table).resolve(".epochs").resolve(marker))
 
   /** Synthesize a system table's rows from live store metadata. Runs
     * driver-side at view (re-)registration; rows are metadata-scale.
@@ -1160,7 +1163,7 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
     val dir = stagingPath(db, table, stagingId)
     try {
       val a = write(dir)
-      land(db, table, Some(dir), replaces, fire)
+      land(db, table, Seq(dir), replaces, fire)
       a
     } catch {
       case e: Throwable => abortStaged(db, table, stagingId); throw e
@@ -1198,78 +1201,78 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
   /** A re-driven commit of a landed staging id finds no dir: a no-op. */
   override def commitStaged(db: String, table: String, stagingId: String): Unit = {
     val dir = stagingPath(db, table, stagingId)
-    if (Files.isDirectory(dir)) land(db, table, Some(dir), Nil, fire = true)
+    if (Files.isDirectory(dir)) land(db, table, Seq(dir), Nil, fire = true)
   }
 
   /** The landing step: every change to the part set in a table's dir
-    * goes through here (inserts, INSERT SELECT, view fires, mutations,
-    * merges, ATTACH, TRUNCATE), like a server committing every part with
-    * its projection parts whatever made it. In order:
+    * goes through here (inserts, streaming epochs, INSERT SELECT, view
+    * fires, mutations, merges, ATTACH, TRUNCATE), like a server
+    * committing every part with its projection parts whatever made it.
+    * In order:
     *  1. each staged part is named with an insert sequence: a part
     *     without one (Spark-written part-00000-..., ATTACH clones) gets a
     *     fresh one in staged-name order, which follows partition index,
     *     which follows seq-sorted input order for narrow rewrites; so
     *     EVERY visible part carries its sequence and order-dependent
-    *     collapses stay defined after rewrites;
+    *     collapses stay defined after rewrites. An epoch's parts also
+    *     carry its marker's tag ([[EmbeddedClickHouse.epochPartName]]);
     *  2. projection states build from the STAGED files, so a failed
     *     build aborts with nothing visible and the old parts intact;
     *  3. the `replaces` parts go;
-    *  4. the staged parts move in, each atomically (same-fs rename);
-    *  5. state dirs of parts no longer live are pruned;
-    *  6. the table is stamped;
-    *  7. and 8. [[settle]]: stale write dirs are reaped, and views fire
-    *     on the landed parts when `fire`.
-    * The epoch publish ([[commitEpochStaged]]) is the one landing outside
-    * this step: its exactly-once replay needs all-or-nothing visibility
-    * (one marker per epoch), so its parts stay in their epoch dir; it
-    * stamps through the marker and ends in [[settle]]. It builds no
-    * projection states: epoch part names are unique only through the
-    * block writer's uuid, and state dirs are keyed by part name, so
-    * reads of a table with epoch parts are served unswapped.
+    *  4. the staged parts move in, each atomically (same-fs rename),
+    *     touched first so their age counts from the landing;
+    *  5. state dirs of parts no longer in the dir are pruned;
+    *  6. the table is stamped, or for an epoch its marker is created,
+    *     which stamps the table and makes the epoch's parts visible;
+    *  7. and 8. [[settle]]: stale write dirs and unmarked epoch parts are
+    *     reaped, and views fire on the landed parts when `fire`.
     */
   private def land(
-      db: String, table: String, staging: Option[Path],
-      replaces: Seq[Path], fire: Boolean): Unit = {
-    val planned = staging.filter(Files.isDirectory(_)).toSeq
+      db: String, table: String, staging: Seq[Path], replaces: Seq[Path],
+      fire: Boolean, epoch: Option[String] = None): Unit = {
+    val planned = staging.filter(Files.isDirectory(_))
       .flatMap(NioFiles.list).filter(_.getFileName.toString.endsWith(".parquet"))
       .sorted.map { p =>
         val name = p.getFileName.toString
-        val outName =
+        val sequenced =
           if (EmbeddedClickHouse.partSeqOf(name).isDefined) name
           else f"part-${ParquetBlockWriter.nextPartSeq()}%016x-" +
             name.stripPrefix("part-")
-        (p, outName)
+        (p, epoch.fold(sequenced)(EmbeddedClickHouse.epochPartName(sequenced, _)))
       }
     val projs = listProjections(db, table)
     projs.foreach(d => planned.foreach { case (p, outName) =>
       buildProjectionPart(db, table, d, p, outName)
     })
     replaces.foreach(Files.deleteIfExists)
+    val now = java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis())
     val landed = planned.map { case (p, outName) =>
       val t = tablePath(db, table).resolve(outName)
+      Files.setLastModifiedTime(p, now)
       Files.move(p, t, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
       t
     }
     staging.foreach(NioFiles.deleteRecursively)
     if (projs.nonEmpty) pruneProjectionOrphans(db, table)
-    clock.tableChanged(db, table)
+    epoch match {
+      case Some(marker) => tryMarkEpochCommitted(db, table, marker)
+      case None => clock.tableChanged(db, table)
+    }
     settle(db, table, if (fire) landed else Nil)
   }
 
-  /** The tail of every landing, the epoch publish's included: reap the
-    * write dirs left past the spill TTL (staging dirs of hard-crashed
-    * tasks, or of a failed job whose task commit message raced the
-    * failure and never reached BatchWrite.abort, and epoch dirs whose
-    * query never marked them), then fire the table's views on `landed`,
-    * which is listed only when a view reads the table (epoch commits run
-    * per streaming batch, so the no-view path stays free of file walks).
+  /** The tail of every landing: reap the staging dirs left past the
+    * spill TTL (of hard-crashed tasks, or of a failed job whose task
+    * commit message raced the failure and never reached
+    * BatchWrite.abort) and the parts of epochs that landed that long ago
+    * and were never marked, then fire the table's views on `landed`.
     */
-  private def settle(db: String, table: String, landed: => Seq[Path]): Unit = {
+  private def settle(db: String, table: String, landed: Seq[Path]): Unit = {
     val cutoff = System.currentTimeMillis() - EmbeddedReads.SpillTtlMillis
     val dir = tablePath(db, table)
     NioFiles.sweepStale(dir.resolve(".insert-staging"), cutoff)
-    NioFiles.sweepStale(dir.resolve(".epoch-parts"), cutoff,
-      p => !Files.exists(dir.resolve(".epochs").resolve(p.getFileName)))
+    NioFiles.sweepStale(dir, cutoff, p =>
+      EmbeddedClickHouse.epochOf(p.getFileName.toString).exists(!epochMarked(db, table, _)))
     fireMaterializedViews(db, table, landed)
   }
 
@@ -1277,7 +1280,7 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
     NioFiles.deleteRecursively(stagingPath(db, table, stagingId))
 
   override def tryMarkEpochCommitted(db: String, table: String, marker: String): Boolean = {
-    require(!marker.contains("/") && !marker.contains(".."), s"invalid marker: $marker")
+    EmbeddedClickHouse.checkMarker(marker)
     val dir = tablePath(db, table).resolve(".epochs")
     Files.createDirectories(dir)
     // the marker is the epoch's visibility switch (dataFiles)
@@ -1287,41 +1290,29 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
 
   /** Converging epoch publish, all-or-nothing per attempt: if the epoch
     * is already marked, this is a replay after a successful commit — drop
-    * everything re-staged. Otherwise any UNMARKED debris from a crashed
-    * prior attempt is wiped (it was never visible), this attempt's staged
-    * dirs rename in whole, and the marker flips visibility atomically
-    * (dataFiles only lists marked epochs). Wipe-then-fill rather than
-    * per-slot dedup: a replay may partition differently (stateless sinks
-    * re-plan across restarts), and mixing two attempts' partitionings
-    * would duplicate rows. Every crash point replays into the same
-    * terminal state: exactly one complete copy of the epoch.
+    * everything re-staged. Otherwise the parts a crashed prior attempt
+    * landed under this marker's tag are wiped (they were never visible),
+    * and this attempt's staged dirs land with the marker, which flips
+    * their visibility atomically. Wipe-then-fill rather than per-part
+    * dedup: a replay may partition differently (stateless sinks re-plan
+    * across restarts), and mixing two attempts' parts would duplicate
+    * rows. Every crash point replays into the same terminal state:
+    * exactly one complete copy of the epoch. Views fire after the marker,
+    * so they see each epoch at most once (the server's own MV/insert
+    * non-atomicity).
     */
   override def commitEpochStaged(
-      db: String, table: String, epochMarker: String,
-      staged: Seq[(String, Int)]): Unit = {
-    require(!epochMarker.contains("/") && !epochMarker.contains(".."),
-      s"invalid epoch marker: $epochMarker")
-    val markerFile = tablePath(db, table).resolve(".epochs").resolve(epochMarker)
-    val epochDir = tablePath(db, table).resolve(".epoch-parts").resolve(epochMarker)
-    val replay = Files.exists(markerFile)
-    if (replay) {
-      staged.foreach { case (stagingId, _) => abortStaged(db, table, stagingId) }
-    } else {
-      NioFiles.deleteRecursively(epochDir) // unmarked partial-attempt debris
-      Files.createDirectories(epochDir)
-      staged.foreach { case (stagingId, partitionId) =>
-        val src = stagingPath(db, table, stagingId)
-        if (Files.isDirectory(src))
-          Files.move(src, epochDir.resolve(s"p$partitionId"),
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      }
-      tryMarkEpochCommitted(db, table, epochMarker)
+      db: String, table: String, epochMarker: String, staged: Seq[String]): Unit = {
+    EmbeddedClickHouse.checkMarker(epochMarker)
+    if (epochMarked(db, table, epochMarker))
+      staged.foreach(abortStaged(db, table, _))
+    else {
+      partFiles(db, table)
+        .filter(p => EmbeddedClickHouse.epochOf(p.getFileName.toString).contains(epochMarker))
+        .foreach(Files.deleteIfExists)
+      land(db, table, staged.map(stagingPath(db, table, _)), Nil, fire = true,
+        Some(epochMarker))
     }
-    // fire AFTER the marker: a crash-replay (marker present) aborts its
-    // re-staged parts above and must not double-fire — views see each
-    // epoch at most once (the server's own MV/insert non-atomicity)
-    settle(db, table, if (replay) Nil else NioFiles.walk(epochDir)
-      .filter(_.getFileName.toString.endsWith(".parquet")))
   }
 
   // store-open crash recovery: a process that died mid-EXCHANGE leaves a
@@ -1481,5 +1472,32 @@ object EmbeddedClickHouse {
   private[client] def partSeqOf(name: String): Option[Long] =
     PartSeq.findFirstMatchIn(name)
       .map(m => java.lang.Long.parseUnsignedLong(m.group(1), 16))
+
+  /** An epoch marker names a file in the table's `.epochs` dir. */
+  private[client] def checkMarker(marker: String): Unit =
+    require(marker.nonEmpty && marker != "." && !marker.contains("/") &&
+      !marker.contains(".."), s"invalid epoch marker: $marker")
+
+  // an epoch part's tag, right after its sequence: the marker's UTF-8
+  // bytes in hex, so every marker has one tag, the tag ends at the first
+  // '_', and no other part name (a block writer uuid, a Spark task file,
+  // an ATTACH clone) has `epoch_` after its sequence
+  private val EpochTag = "^part-[0-9a-f]{16}-epoch_((?:[0-9a-f]{2})+)_".r
+
+  /** `name` (which carries an insert sequence) tagged with an epoch's
+    * marker: `part-<seq>-epoch_<hex marker>_<rest>`.
+    */
+  private[graft] def epochPartName(name: String, marker: String): String = {
+    require(partSeqOf(name).isDefined, s"part $name carries no insert sequence")
+    val hex = marker.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      .map(b => f"${b & 0xff}%02x").mkString
+    name.patch("part-0123456789abcdef-".length, s"epoch_${hex}_", 0)
+  }
+
+  /** The marker of the epoch that landed the part `name`, if one did. */
+  private[client] def epochOf(name: String): Option[String] =
+    EpochTag.findFirstMatchIn(name).map(m => new String(
+      m.group(1).grouped(2).map(Integer.parseInt(_, 16).toByte).toArray,
+      java.nio.charset.StandardCharsets.UTF_8))
 }
 

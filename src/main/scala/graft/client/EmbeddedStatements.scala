@@ -134,13 +134,6 @@ private[client] final class EmbeddedStatements(store: EmbeddedClickHouse) {
       if (files.isEmpty)
         emptyFrame(child, schema.add("__ch_seq", org.apache.spark.sql.types.LongType, nullable = false))
       else {
-        // the ordinal map keys on the basename, and epoch parts live in
-        // per-epoch subdirs: two parts with one name would share a key
-        files.groupBy(f => Paths.get(f).getFileName.toString).collectFirst {
-          case (n, same) if same.size > 1 => throw new IllegalStateException(
-            s"$db.$t: parts ${same.mkString(" and ")} share the file name $n — " +
-              "the insertion order of their rows is ambiguous")
-        }
         // ordinal over seq-sorted parts × parquet row position: dense and
         // overflow-free (seq values are wall-clock micros; shifting them
         // would overflow Long). The path breaks ties: two JVMs can mint

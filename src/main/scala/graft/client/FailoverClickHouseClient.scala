@@ -817,8 +817,7 @@ class FailoverClickHouseClient(
       db: String, table: String, marker: String): Boolean =
     primary.tryMarkEpochCommitted(db, table, marker)
   override def commitEpochStaged(
-      db: String, table: String, epochMarker: String,
-      staged: Seq[(String, Int)]): Unit =
+      db: String, table: String, epochMarker: String, staged: Seq[String]): Unit =
     primary.commitEpochStaged(db, table, epochMarker, staged)
 }
 

@@ -29,16 +29,17 @@ private[client] object NioFiles {
   def deleteRecursively(p: Path): Unit =
     if (Files.exists(p)) walk(p).reverse.foreach(Files.delete)
 
-  /** Delete every entry of `dir` last modified before `cutoffMillis` that
-    * `reap` accepts. An entry that cannot be read or deleted is left for
+  /** Delete every entry of `dir` that `reap` accepts (asked first, so a
+    * name test spares the stat) and that was last modified before
+    * `cutoffMillis`. An entry that cannot be read or deleted is left for
     * the next sweep.
     */
   def sweepStale(dir: Path, cutoffMillis: Long, reap: Path => Boolean = _ => true): Unit =
     if (Files.isDirectory(dir))
       list(dir).foreach { p =>
-        val stale =
+        def stale =
           try Files.getLastModifiedTime(p).toMillis < cutoffMillis
           catch { case _: Exception => false }
-        if (stale && reap(p)) try deleteRecursively(p) catch { case _: Exception => () }
+        if (reap(p) && stale) try deleteRecursively(p) catch { case _: Exception => () }
       }
 }

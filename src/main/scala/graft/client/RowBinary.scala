@@ -3,9 +3,8 @@ package graft.client
 import java.io.{DataInputStream, DataOutputStream, EOFException, InputStream, OutputStream}
 import java.nio.charset.StandardCharsets.UTF_8
 
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
 import org.apache.spark.sql.execution.vectorized.WritableColumnVector
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -919,59 +918,6 @@ object RowBinary {
     case l: Long => l
     case other => throw new IllegalArgumentException(
       s"cannot encode ${other.getClass.getName} as DateTime")
-  }
-
-  /** Catalyst-value variant of [[encoder]]: encodes InternalRow fields
-    * (the streaming write path hands us catalyst rows). `sparkType` is
-    * the field's Spark type — used to extract; `chType` still governs the
-    * wire width.
-    */
-  def internalEncoder(chType: String, sparkType: DataType): (DataOutputStream, InternalRow, Int) => Unit = {
-    val enc = encoder(chType)
-    val get: (InternalRow, Int) => Any = sparkType match {
-      case BooleanType => (r, i) => r.getBoolean(i)
-      case ByteType => (r, i) => r.getByte(i)
-      case ShortType => (r, i) => r.getShort(i)
-      case IntegerType => (r, i) => r.getInt(i)
-      case DateType => (r, i) => r.getInt(i)
-      case LongType => (r, i) => r.getLong(i)
-      case TimestampType | TimestampNTZType => (r, i) => r.getLong(i)
-      case FloatType => (r, i) => r.getFloat(i)
-      case DoubleType => (r, i) => r.getDouble(i)
-      case StringType => (r, i) => r.getUTF8String(i)
-      case BinaryType => (r, i) => r.getBinary(i)
-      case d: DecimalType => (r, i) => r.getDecimal(i, d.precision, d.scale)
-      case ArrayType(et, _) => (r, i) => catalystSeq(r.getArray(i), et)
-      case MapType(kt, vt, _) => (r, i) => {
-        val m = r.getMap(i)
-        catalystSeq(m.keyArray(), kt).zip(catalystSeq(m.valueArray(), vt)).toMap
-      }
-      case other => throw new IllegalArgumentException(
-        s"unsupported internal encode type $other")
-    }
-    (out, row, i) =>
-      if (row.isNullAt(i)) enc.write(out, null) else enc.write(out, get(row, i))
-  }
-
-  private def catalystSeq(arr: ArrayData, et: DataType): Seq[Any] = {
-    val n = arr.numElements()
-    (0 until n).map { j =>
-      if (arr.isNullAt(j)) null
-      else et match {
-        case BooleanType => arr.getBoolean(j)
-        case ByteType => arr.getByte(j)
-        case ShortType => arr.getShort(j)
-        case IntegerType | DateType => arr.getInt(j)
-        case LongType | TimestampType | TimestampNTZType => arr.getLong(j)
-        case FloatType => arr.getFloat(j)
-        case DoubleType => arr.getDouble(j)
-        case StringType => arr.getUTF8String(j)
-        case BinaryType => arr.getBinary(j)
-        case d: DecimalType => arr.getDecimal(j, d.precision, d.scale)
-        case other => throw new IllegalArgumentException(
-          s"unsupported array element type $other")
-      }
-    }
   }
 
   /** Catalyst DateType/TimestampType decode note: [[decoder]] returns

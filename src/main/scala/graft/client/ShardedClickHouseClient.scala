@@ -392,8 +392,7 @@ class ShardedClickHouseClient(
     * and cross-shard mixes repair themselves on the next replay.
     */
   override def commitEpochStaged(
-      db: String, table: String, epochMarker: String,
-      staged: Seq[(String, Int)]): Unit = {
+      db: String, table: String, epochMarker: String, staged: Seq[String]): Unit = {
     // per-shard convergence REQUIRES deterministic placement: a replayed
     // epoch must re-stage each row on the shard that may already hold
     // it. Round-robin placement re-routes replayed rows, so a partially

@@ -882,10 +882,11 @@ class ChWriteBuilder(
 
 /** Epoch-aware streaming sink over the staged-insert protocol. Spark may
   * REPLAY an epoch after a failure (including a crash MID-COMMIT): the
-  * client's converging commitEpochStaged publishes each task's staging
-  * into a per-partition epoch slot and flips visibility with an atomic
-  * marker — occupied slots drop replayed parts, unoccupied slots fill
-  * from the replay, so no crash point loses or duplicates rows.
+  * client's converging commitEpochStaged lands the tasks' staged parts
+  * tagged with the epoch's marker, invisible until the marker exists. A
+  * marked epoch drops a replay's parts; an unmarked one wipes the parts
+  * of the crashed attempt and lands the replay's, so no crash point
+  * loses or duplicates rows.
   */
 class ChStreamingWrite(
     client: ClickHouseClient,
@@ -906,13 +907,13 @@ class ChStreamingWrite(
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
     client.commitEpochStaged(db, table, s"$queryId-$epochId",
-      messages.toSeq.collect { case ChStagedCommit(id, _, pid) => (id, pid) })
+      messages.toSeq.collect { case ChStagedCommit(id, _) => id })
     ChMutations.drainMvRefresh(org.apache.spark.sql.SparkSession.active)
   }
 
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
     messages.foreach {
-      case ChStagedCommit(stagingId, _, _) => client.abortStaged(db, table, stagingId)
+      case ChStagedCommit(stagingId, _) => client.abortStaged(db, table, stagingId)
       case _ => ()
     }
 }
@@ -922,8 +923,7 @@ class ChStreamingDataWriterFactory(factory: ChDataWriterFactory)
   override def createWriter(
       partitionId: Int, taskId: Long, epochId: Long): DataWriter[InternalRow] =
     factory.createWriterWithId(
-      s"epoch-$epochId-task-$partitionId-$taskId-${java.util.UUID.randomUUID.toString.take(8)}",
-      partitionId)
+      s"epoch-$epochId-task-$partitionId-$taskId-${java.util.UUID.randomUUID.toString.take(8)}")
 }
 
 /** Sum-aggregated "rows inserted" metric reported by every write task. */
@@ -954,12 +954,12 @@ class ChBatchWrite(
   // ids + counts) crosses the driver.
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     messages.foreach {
-      case ChStagedCommit(stagingId, _, _) => client.commitStaged(db, table, stagingId)
+      case ChStagedCommit(stagingId, _) => client.commitStaged(db, table, stagingId)
       case _ => ()
     }
     // SQL-visible insert count (reference parity — see ChInsertCount)
     ChInsertCount.record(client.connectionKey, db, table,
-      messages.collect { case ChStagedCommit(_, rows, _) => rows }.sum)
+      messages.collect { case ChStagedCommit(_, rows) => rows }.sum)
     // commits may have fired materialized views into OTHER tables —
     // refresh their cached plans (Spark only invalidates THIS table)
     ChMutations.drainMvRefresh(org.apache.spark.sql.SparkSession.active)
@@ -967,12 +967,12 @@ class ChBatchWrite(
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
     messages.foreach {
-      case ChStagedCommit(stagingId, _, _) => client.abortStaged(db, table, stagingId)
+      case ChStagedCommit(stagingId, _) => client.abortStaged(db, table, stagingId)
       case _ => ()
     }
 }
 
-final case class ChStagedCommit(stagingId: String, rows: Long, partitionId: Int = -1)
+final case class ChStagedCommit(stagingId: String, rows: Long)
   extends WriterCommitMessage
 
 /** Streams bounded batches to the store from INSIDE each write task —
@@ -996,11 +996,9 @@ class ChDataWriterFactory(
     // task-ATTEMPT-scoped: retries/speculation get fresh ids, so an
     // abandoned attempt's staged parts can never be published
     createWriterWithId(
-      s"task-$partitionId-$taskId-${java.util.UUID.randomUUID.toString.take(8)}",
-      partitionId)
+      s"task-$partitionId-$taskId-${java.util.UUID.randomUUID.toString.take(8)}")
 
-  private[connector] def createWriterWithId(
-      id: String, partitionId: Int): DataWriter[InternalRow] =
+  private[connector] def createWriterWithId(id: String): DataWriter[InternalRow] =
     new DataWriter[InternalRow] {
       private val stagingId = id
       private val toRow =
@@ -1045,7 +1043,7 @@ class ChDataWriterFactory(
       override def commit(): WriterCommitMessage = {
         flush()
         while (inFlight.nonEmpty) written += inFlight.dequeue().get()
-        ChStagedCommit(stagingId, written, partitionId)
+        ChStagedCommit(stagingId, written)
       }
 
       override def abort(): Unit = {

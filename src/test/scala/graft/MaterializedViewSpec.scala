@@ -175,12 +175,12 @@ class MaterializedViewSpec extends AnyFunSuite {
     val sch = StructType(Seq(StructField("id", LongType, false),
       StructField("tag", StringType, false), StructField("v", LongType, false)))
     client.stageInsert("main", src, sch, Seq(Row(1L, "e", 4L)), "ep-t1")
-    client.commitEpochStaged("main", src, "epoch-1", Seq(("ep-t1", 0)))
+    client.commitEpochStaged("main", src, "epoch-1", Seq("ep-t1"))
     assert(tgtAgg(tgt) == Map("e" -> (1L, 4L)))
     // replay of the SAME epoch (crash between publish and driver ack):
     // staged parts are dropped and the view must NOT double-fire
     client.stageInsert("main", src, sch, Seq(Row(1L, "e", 4L)), "ep-t1r")
-    client.commitEpochStaged("main", src, "epoch-1", Seq(("ep-t1r", 0)))
+    client.commitEpochStaged("main", src, "epoch-1", Seq("ep-t1r"))
     assert(tgtAgg(tgt) == Map("e" -> (1L, 4L)), "replay must not re-fire")
   }
 

@@ -597,13 +597,13 @@ class ShardedClientSpec extends AnyFunSuite {
       "SELECT count(*) AS n FROM `main`.`ep_t`", 1)._2.flatten.map(_.getLong(0)).sum
     // epoch 1: normal publish, rows land exactly once across both shards
     stage("s1", 1, 100)
-    client.commitEpochStaged("main", "ep_t", "ep1", Seq(("s1", 0)))
+    client.commitEpochStaged("main", "ep_t", "ep1", Seq("s1"))
     assert(count() == 100)
     // epoch 1 REPLAYED (driver died after commit, before checkpoint):
     // the micro-batch re-stages under a fresh id; both shards hold the
     // marker, so every re-staged slice aborts — no duplicates
     stage("s2", 1, 100)
-    client.commitEpochStaged("main", "ep_t", "ep1", Seq(("s2", 0)))
+    client.commitEpochStaged("main", "ep_t", "ep1", Seq("s2"))
     assert(count() == 100, "replayed epoch must not duplicate")
     // epoch 2, PARTIAL crash: shard B published its slice and marked,
     // shard A crashed before publishing. The replay re-stages everything
@@ -611,9 +611,9 @@ class ShardedClientSpec extends AnyFunSuite {
     // ids are debris): shard B aborts the re-stage, shard A publishes —
     // the epoch lands exactly once overall
     stage("s3", 101, 200)
-    client.shards(1).commitEpochStaged("main", "ep_t", "ep2", Seq(("s3", 0)))
+    client.shards(1).commitEpochStaged("main", "ep_t", "ep2", Seq("s3"))
     stage("s4", 101, 200)
-    client.commitEpochStaged("main", "ep_t", "ep2", Seq(("s4", 0)))
+    client.commitEpochStaged("main", "ep_t", "ep2", Seq("s4"))
     assert(count() == 200,
       "partial-crash replay must repair to exactly-once: " + count())
   }
@@ -660,11 +660,11 @@ class ShardedClientSpec extends AnyFunSuite {
               client.stageInsert("main", "fz_t", schema, all, id)
               val sub = client.shards.zipWithIndex.filter(_ => rnd.nextBoolean())
               sub.foreach { case (s, _) =>
-                s.commitEpochStaged("main", "fz_t", s"ep$ep", Seq((id, 0)))
+                s.commitEpochStaged("main", "fz_t", s"ep$ep", Seq(id))
               }
             case _ => // clean attempt: stage everything, commit everywhere
               client.stageInsert("main", "fz_t", schema, all, id)
-              client.commitEpochStaged("main", "fz_t", s"ep$ep", Seq((id, 0)))
+              client.commitEpochStaged("main", "fz_t", s"ep$ep", Seq(id))
               committed = true
           }
         }

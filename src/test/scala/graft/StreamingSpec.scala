@@ -84,26 +84,25 @@ class StreamingSpec extends AnyFunSuite {
     client.stageInsert("db", "sink", schema, Seq(Row(999L, "replay")), "replay-stage-1")
     val sw = new graft.connector.ChStreamingWrite(
       client, "db", "sink", schema, 1, 100, "qidX")
-    sw.commit(7L, Array(graft.connector.ChStagedCommit("replay-stage-1", 1, 0)))
+    sw.commit(7L, Array(graft.connector.ChStagedCommit("replay-stage-1", 1)))
     val afterFirst = spark.table("chsws.db.sink").count()
     assert(afterFirst == batch + 1)
     client.stageInsert("db", "sink", schema, Seq(Row(999L, "replay")), "replay-stage-2")
-    sw.commit(7L, Array(graft.connector.ChStagedCommit("replay-stage-2", 1, 0)))
+    sw.commit(7L, Array(graft.connector.ChStagedCommit("replay-stage-2", 1)))
     assert(spark.table("chsws.db.sink").count() == batch + 1,
       "replayed epoch duplicated rows")
-    // crash MID-COMMIT: parts renamed into the epoch slot but no marker
+    // crash MID-COMMIT: a part landed under the epoch's tag but no marker
     // yet -> invisible; the replayed commit converges to exactly one copy
     client.stageInsert("db", "sink", schema, Seq(Row(1000L, "crash")), "crash-stage-1")
     val tableDir = java.nio.file.Paths.get(root, "db", "sink")
-    java.nio.file.Files.createDirectories(tableDir.resolve(".epoch-parts/qidX-8"))
-    java.nio.file.Files.move(
-      tableDir.resolve(".insert-staging/crash-stage-1"),
-      tableDir.resolve(".epoch-parts/qidX-8/p0"))
+    val staged = tableDir.resolve(".insert-staging/crash-stage-1")
+    staged.toFile.listFiles.foreach(f => java.nio.file.Files.move(f.toPath,
+      tableDir.resolve(EmbeddedClickHouse.epochPartName(f.getName, "qidX-8"))))
     graft.client.EmbeddedClickHouse.invalidate(root)
     assert(spark.table("chsws.db.sink").count() == batch + 1,
       "unmarked epoch parts must be invisible")
     client.stageInsert("db", "sink", schema, Seq(Row(1000L, "crash")), "crash-stage-2")
-    sw.commit(8L, Array(graft.connector.ChStagedCommit("crash-stage-2", 1, 0)))
+    sw.commit(8L, Array(graft.connector.ChStagedCommit("crash-stage-2", 1)))
     assert(spark.table("chsws.db.sink").count() == batch + 2,
       "replay after mid-commit crash must publish exactly one copy")
   }

@@ -6,9 +6,10 @@ import org.apache.spark.sql.{Row, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Every change to a table's part set lands through one step: raw
-  * inserts, ATTACH and TRUNCATE build and prune projection states like
-  * staged inserts and rewrites do, and every part they leave in the
-  * table dir carries an insert sequence in its name.
+  * inserts, streaming epochs, ATTACH and TRUNCATE build and prune
+  * projection states like staged inserts and rewrites do, and every part
+  * they leave in the table dir carries an insert sequence in its name.
+  * An epoch's parts carry its marker's tag and show once it exists.
   */
 class LandingSpec extends AnyFunSuite {
 
@@ -59,6 +60,38 @@ class LandingSpec extends AnyFunSuite {
       ._2.flatten.map(r => (r.getLong(0), r.getLong(1)))
     (rows, client.projectionHitCount("db", t, "pg") == before + 1)
   }
+
+  private def rows(t: String): Seq[(Long, Long)] =
+    client.query(s"SELECT `g`, `v` FROM `db`.`$t` ORDER BY `g`, `v`", 1)
+      ._2.flatten.map(r => (r.getLong(0), r.getLong(1)))
+
+  private def stage(t: String, id: String, rows: Row*): Unit =
+    client.stageInsert("db", t, client.sparkSchema("db", t), rows, id)
+
+  /** Commits `ids` as epoch `epoch` of query `q` (marker `q-<epoch>`). */
+  private def epochCommit(t: String, epoch: Long, ids: String*): Unit =
+    new graft.connector.ChStreamingWrite(
+      client, "db", t, client.sparkSchema("db", t), 1, 100, "q")
+      .commit(epoch, ids.map(graft.connector.ChStagedCommit(_, 1L)).toArray)
+
+  /** [[epochCommit]] that crashes after the parts moved in and before
+    * the marker exists: with `.epochs` a plain file, creating the
+    * marker throws.
+    */
+  private def crashBeforeMarker(t: String, epoch: Long, ids: String*): Unit = {
+    val markers = tableDir(t).resolve(".epochs")
+    val aside = tableDir(t).resolve("epochs-aside")
+    if (Files.exists(markers)) Files.move(markers, aside)
+    Files.createFile(markers)
+    try intercept[java.nio.file.FileAlreadyExistsException](epochCommit(t, epoch, ids: _*))
+    finally {
+      Files.delete(markers)
+      if (Files.exists(aside)) Files.move(aside, markers)
+    }
+  }
+
+  private def tagged(t: String, marker: String): Seq[String] =
+    partNames(t).filter(EmbeddedClickHouse.epochOf(_).contains(marker))
 
   private def assertSequenced(t: String): Unit = {
     assert(partNames(t).nonEmpty)
@@ -136,5 +169,101 @@ class LandingSpec extends AnyFunSuite {
     assert(partNames("all").toSet == before)
     assert(NioFiles.list(tableDir("all").resolve(".insert-staging")).isEmpty)
     assert(NioFiles.list(tableDir("all")).forall(p => !p.getFileName.toString.startsWith(".staging")))
+  }
+
+  test("a streaming epoch builds projection states: the first eligible aggregate " +
+    "is served by the projection, with every part covered") {
+    table("st", projected = true)
+    stage("st", "e0", Row(1L, 10L), Row(2L, 20L))
+    stage("st", "e0", Row(1L, 5L))
+    epochCommit("st", 0L, "e0")
+    assert(coverage("st") == (2L, 2L))
+    val (sum, swapped) = sums("st")
+    assert(sum == Seq((1L, 15L), (2L, 20L)))
+    assert(swapped, "the aggregate was not served by the projection")
+    assertSequenced("st")
+  }
+
+  test("an epoch landed but not marked is invisible to reads, system.parts and " +
+    "tableRowCount; its replay publishes exactly one copy") {
+    table("cr", projected = false)
+    insert("cr", Row(1L, 1L))
+    stage("cr", "c1", Row(2L, 2L))
+    crashBeforeMarker("cr", 5L, "c1")
+    val debris = tagged("cr", "q-5")
+    assert(debris.size == 1)
+    EmbeddedClickHouse.invalidate(root.toString)
+    assert(rows("cr") == Seq((1L, 1L)))
+    assert(client.tableRowCount("db", "cr").contains(1L))
+    val parts = client.query("SELECT `name` FROM `system`.`parts` " +
+      "WHERE `database` = 'db' AND `table` = 'cr'", 1)._2.flatten.map(_.getString(0))
+    assert(parts.size == 1 && !parts.contains(debris.head))
+    stage("cr", "c2", Row(2L, 2L))
+    epochCommit("cr", 5L, "c2")
+    assert(rows("cr") == Seq((1L, 1L), (2L, 2L)))
+    assert(tagged("cr", "q-5").size == 1 && !partNames("cr").contains(debris.head))
+    // a replay of the marked epoch drops what it staged
+    stage("cr", "c3", Row(2L, 2L))
+    epochCommit("cr", 5L, "c3")
+    assert(rows("cr") == Seq((1L, 1L), (2L, 2L)))
+    assert(client.tableRowCount("db", "cr").contains(2L))
+    assert(NioFiles.list(tableDir("cr").resolve(".insert-staging")).isEmpty)
+  }
+
+  test("TRUNCATE removes marked and unmarked epoch parts and their markers") {
+    table("tt", projected = true)
+    stage("tt", "t1", Row(1L, 1L))
+    epochCommit("tt", 0L, "t1")
+    stage("tt", "t2", Row(2L, 2L))
+    crashBeforeMarker("tt", 1L, "t2")
+    assert(tagged("tt", "q-0").size == 1 && tagged("tt", "q-1").size == 1)
+    client.truncateTable("db", "tt")
+    assert(partNames("tt").isEmpty)
+    assert(!Files.exists(tableDir("tt").resolve(".epochs")))
+    assert(NioFiles.list(tableDir("tt").resolve(".projections").resolve("pg")).isEmpty)
+    // with its marker gone, the epoch lands again
+    stage("tt", "t3", Row(1L, 1L))
+    epochCommit("tt", 0L, "t3")
+    assert(rows("tt") == Seq((1L, 1L)))
+  }
+
+  test("a landing between an epoch's move and its marker keeps that epoch's " +
+    "states; only unmarked parts past the TTL since they landed are reaped") {
+    table("mk", projected = true)
+    stage("mk", "m1", Row(1L, 10L))
+    // staged long ago: the part's age must count from its landing
+    NioFiles.list(tableDir("mk").resolve(".insert-staging").resolve("m1"))
+      .foreach(Files.setLastModifiedTime(_, java.nio.file.attribute.FileTime.fromMillis(0L)))
+    crashBeforeMarker("mk", 0L, "m1")
+    val states = tableDir("mk").resolve(".projections").resolve("pg")
+    val first = tagged("mk", "q-0")
+    assert(first.size == 1 && Files.isDirectory(states.resolve(first.head)))
+    insert("mk", Row(2L, 20L))
+    assert(partNames("mk").contains(first.head), "the landing reaped a fresh epoch part")
+    assert(Files.isDirectory(states.resolve(first.head)),
+      "the landing pruned the states of an epoch not yet marked")
+    assert(client.tryMarkEpochCommitted("db", "mk", "q-0"))
+    assert(coverage("mk") == (2L, 2L))
+    assert(sums("mk") == (Seq((1L, 10L), (2L, 20L)), true))
+    // past the TTL, the unmarked epoch's part goes and the marked one stays
+    stage("mk", "m2", Row(3L, 30L))
+    crashBeforeMarker("mk", 1L, "m2")
+    val old = java.nio.file.attribute.FileTime.fromMillis(0L)
+    (first ++ tagged("mk", "q-1")).foreach(n => Files.setLastModifiedTime(tableDir("mk").resolve(n), old))
+    insert("mk", Row(4L, 40L))
+    assert(tagged("mk", "q-1").isEmpty)
+    assert(partNames("mk").contains(first.head))
+    assert(rows("mk") == Seq((1L, 10L), (2L, 20L), (4L, 40L)))
+  }
+
+  test("a table dir holding the old .epoch-parts layout rejects reads, naming the dir") {
+    table("old", projected = false)
+    insert("old", Row(1L, 1L))
+    val oldLayout = tableDir("old").resolve(".epoch-parts")
+    Files.createDirectories(oldLayout.resolve("q-0").resolve("p0"))
+    EmbeddedClickHouse.invalidate(root.toString)
+    val e = intercept[Exception](rows("old"))
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+    assert(messages.exists(m => m != null && m.contains(oldLayout.toString)), e.toString)
   }
 }

@@ -181,24 +181,4 @@ class PartReadSpec extends AnyFunSuite {
     assert(client.tableRowCount("db", "t2").contains(2L))
     assert(opens.get - before == 1)
   }
-
-  test("two sequence-view parts with one file name reject at registration, naming both") {
-    val client = newStore()
-    client.createTable("db", "c", Seq("k" -> "Int64", "sign" -> "Int8"),
-      Map("engine" -> "CollapsingMergeTree(sign)", "order_by" -> "k"))
-    client.insert("db", "c", client.sparkSchema("db", "c"), Seq(Row(1L, 1.toByte)))
-    val dir = Paths.get(client.root, "db", "c")
-    val part = Files.list(dir).iterator.asScala.find(_.getFileName.toString.endsWith(".parquet")).get
-    val name = "part-00000000000000ff-dup.parquet"
-    val planted = Seq("e1", "e2").map { marker =>
-      val p = Files.createDirectories(dir.resolve(".epoch-parts").resolve(marker).resolve("p0"))
-      Files.createDirectories(dir.resolve(".epochs"))
-      Files.createFile(dir.resolve(".epochs").resolve(marker))
-      Files.copy(part, p.resolve(name)).toString
-    }
-    EmbeddedClickHouse.invalidate(client.root)
-    val e = intercept[IllegalStateException](client.planQuery("SELECT * FROM `db`.`c` FINAL", 1))
-    planted.foreach(p => assert(e.getMessage.contains(p), e.getMessage))
-    assert(e.getMessage.contains(name))
-  }
 }

@@ -441,15 +441,8 @@ class RowBinarySpec extends AnyFunSuite {
     for ((chType, sparkType, vals) <- specs) {
       val bos = new ByteArrayOutputStream()
       val out = new DataOutputStream(bos)
-      val enc = RowBinary.internalEncoder(chType, sparkType)
-      val src = new GenericInternalRow(1)
-      vals.foreach { v =>
-        src.update(0, v match {
-          case s: String => UTF8String.fromString(s)
-          case other => other
-        })
-        enc(out, src, 0)
-      }
+      val enc = RowBinary.encoder(chType)
+      vals.foreach(enc.write(out, _))
       out.flush()
       val vec = new OnHeapColumnVector(rows, sparkType)
       val d = RowBinary.decoder(chType)
